@@ -43,16 +43,41 @@ def pin(df: DataFrame, *, eager: bool = True) -> DataFrame:
     """
     if os.environ.get("SPARK_GRAFT_NO_PIN"):
         return df
-    spark = df.sparkSession
-    master = spark.sparkContext.master or ""
-    if master.startswith("local"):
+    mode = _mode(df)
+    if mode == "local":
         return df.localCheckpoint(eager=eager)
+    if mode == "reliable":
+        return df.checkpoint(eager=eager)
+    return df
+
+
+def pin_state(df: DataFrame) -> DataFrame:
+    """Materialize iterative loop state; ALWAYS truncates lineage.
+
+    ``pin`` may return ``df`` unchanged, which is safe for a frame with
+    a few consumers but not for superstep state: the next superstep
+    reads the state more than once (a semi-join on each edge endpoint),
+    so unpinned, round r's plan holds 2^r copies of round 1 and every
+    count re-runs all earlier rounds.  Hence no opt-out here
+    (``SPARK_GRAFT_NO_PIN`` is ignored): a reliable checkpoint on a
+    non-local master with a checkpoint dir, ``localCheckpoint``
+    otherwise — its blocks are lost with their executor, but without
+    the cut the loop's plan cannot stay bounded at all."""
+    if _mode(df) == "reliable":
+        return df.checkpoint()
+    return df.localCheckpoint()
+
+
+def _mode(df: DataFrame) -> str:
+    """'local' (local[*] master), 'reliable' (non-local master with a
+    checkpoint dir) or 'none'."""
+    spark = df.sparkSession
+    if (spark.sparkContext.master or "").startswith("local"):
+        return "local"
     try:
         has_dir = (
             spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
         )
     except Exception:  # pragma: no cover - py4j surface drift
         has_dir = False
-    if has_dir:
-        return df.checkpoint(eager=eager)
-    return df
+    return "reliable" if has_dir else "none"

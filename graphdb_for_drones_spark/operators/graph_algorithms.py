@@ -9,10 +9,11 @@ propagation over CROSSED_SIGNED edges
 delegation fabric, and degree centrality of issuers.
 
 Scale notes: each superstep is one shuffle keyed on dst (message
-aggregation).  Ranks/labels are checkpointed per iteration — same
-lineage discipline as the traversal kernel.  For billion-edge graphs,
-pre-partition edges by dst so the per-iteration shuffle degenerates to
-a local combine.
+aggregation).  Supersteps materialize per iteration to cut lineage;
+``settle`` (used by ``k_core``) keeps driver-sized outputs as local
+frames and pins larger ones through ``_pin.pin_state``.  For billion-edge
+graphs, pre-partition edges by dst so the per-iteration shuffle
+degenerates to a local combine.
 """
 
 from __future__ import annotations
@@ -20,6 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from graphdb_for_drones_spark import traversal
+from graphdb_for_drones_spark.operators._pin import pin, pin_state
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -412,6 +416,24 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
 
 
+def settle(df: DataFrame, bound: int) -> tuple[DataFrame, int, bool]:
+    """Materialize one superstep's output: ``(frame, n_rows, local)``.
+
+    ``bound`` is an upper bound on ``df``'s rows (e.g. the previous
+    round's count).  Within ``traversal.COLLECT_THRESHOLD`` the rows
+    come back to the driver in one collect and return as a local Arrow
+    frame (``local=True``: broadcast it into the next superstep) — the
+    collect is both the materialization and the halt signal, so no
+    separate count job runs.  Otherwise the output stays executor-side:
+    ``pin_state`` (always cuts lineage) plus one ``count()``."""
+    if bound <= traversal.COLLECT_THRESHOLD:
+        rows = df.collect()
+        local = traversal._local_df(df.sparkSession, rows, df.schema)
+        return local, len(rows), True
+    df = pin_state(df)
+    return df, df.count(), False
+
+
 def k_core(
     edges: DataFrame, k: int, max_rounds: int = 64, canonical: bool = False
 ) -> DataFrame:
@@ -427,32 +449,24 @@ def k_core(
     surviving nodes, where core_degree is the node's degree WITHIN the
     k-core.
 
-    Each peel round is one join (edges ⋈ survivors, pruning both
-    endpoints) + one distinct-neighbor count — the aggregateMessages
-    shape every other algorithm here uses; survivors checkpoint per
-    round (small id-only tables).  Peeling converges in at most
-    O(rounds-to-degeneracy) supersteps — typically a handful, because
-    every round removes the entire sub-threshold shell, not one node.
-    At 100 TB the survivors table shrinks monotonically, so each round's
-    join is cheaper than the last; pre-partitioning edges by src makes
-    the semi-joins local.  ``max_rounds`` is a lineage/runaway bound:
-    raising it never changes the result past convergence (guarded in
-    tests by asserting the fixpoint).
+    The edge list is pinned once (``_pin.pin``) and counted, which
+    bounds the first round's survivors; each peel round is one
+    semi-join of the doubled list against the survivors plus one
+    neighbor count, settled by :func:`settle` with the previous round's
+    count as the bound (driver-sized survivor sets broadcast into the
+    next round).  Survivors carry their degree, so at the fixpoint the
+    last round's rows ARE the answer.  Every round removes the whole
+    sub-threshold shell: peeling converges in a handful of rounds.  If
+    ``max_rounds`` runs out first, the answer is the last survivor set
+    with its degrees within that set, unfiltered.
 
     ``canonical=True`` asserts the input is ALREADY canonical (each
     undirected edge exactly once, no self-loops, no parallel edges —
     e.g. a distinct bipartite pair list) and skips the least/greatest
-    + distinct pass: that is a full extra shuffle of the edge list,
-    ~half the trade-graph entry's cost (5.4 -> 2.8 s at sf0.1).  The
-    doubled view is derived lazily from a localCheckpoint pin of the
-    HALF-size canonical list — the ~4 scans across peel rounds re-read
-    the pin, not the upstream join pipeline (and not a columnar cache
-    of the doubled edge list).
+    + distinct pass, a full extra shuffle of the edge list.
     """
     if canonical:
-        sym = edges.select(
-            F.col("src").alias("a"), F.col("dst").alias("b")
-        ).localCheckpoint()
+        sym = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     else:
         sym = (
             edges.select(
@@ -461,41 +475,37 @@ def k_core(
             )
             .filter(F.col("a") != F.col("b"))
             .distinct()
-            .localCheckpoint()
         )
+    sym = pin(sym, eager=False)  # materialized by the count below
     und = sym.unionByName(
         sym.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    deg = und.groupBy(F.col("a").alias("id")).agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
-    )
-    alive = deg.filter(F.col("deg") >= k).select("id").localCheckpoint()
-    n_alive = alive.count()
+
+    def peel(alive, local, min_deg, bound):
+        e = und
+        if alive is not None:
+            hint = F.broadcast if local else (lambda d: d)
+            for side in ("a", "b"):
+                ids = alive.select(F.col("id").alias(side))
+                e = e.join(hint(ids), side, "left_semi")
+        deg = e.groupBy(F.col("a").alias("id")).agg(
+            F.count(F.lit(1)).cast("long").alias("core_degree")
+        )
+        return settle(deg.filter(F.col("core_degree") >= min_deg), bound)
+
+    # a node of degree >= k ends >= k of the |sym| edges, so at most
+    # 2|sym|/k nodes pass the degree filter; later rounds only shrink
+    alive, n, local = peel(None, False, k, 2 * sym.count() // max(k, 1))
     for _ in range(max_rounds):
-        if n_alive == 0:
-            break
-        surv = (
-            und.join(alive.select(F.col("id").alias("a")), "a", "left_semi")
-            .join(alive.select(F.col("id").alias("b")), "b", "left_semi")
-        )
-        nxt_deg = surv.groupBy(F.col("a").alias("id")).agg(
-            F.count(F.lit(1)).cast("long").alias("deg")
-        )
-        nxt = nxt_deg.filter(F.col("deg") >= k).select("id").localCheckpoint()
-        n_nxt = nxt.count()
-        if n_nxt == n_alive:
-            # fixpoint: no node fell below k this round (peeling only
-            # ever removes nodes, so equal cardinality == equal set)
-            alive = nxt
-            break
-        alive, n_alive = nxt, n_nxt
-    core = (
-        und.join(alive.select(F.col("id").alias("a")), "a", "left_semi")
-        .join(alive.select(F.col("id").alias("b")), "b", "left_semi")
-        .groupBy(F.col("a").alias("id"))
-        .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
-    ).localCheckpoint()
-    return core
+        if n == 0:
+            return alive
+        nxt = peel(alive, local, k, n)
+        if nxt[1] == n:
+            # fixpoint: peeling only removes nodes, so equal cardinality
+            # is the equal set, and these degrees are within the core
+            return nxt[0]
+        alive, n, local = nxt
+    return peel(alive, local, 0, n)[0]  # out of rounds: unfiltered degrees
 
 
 def temporal_reach(

@@ -1849,7 +1849,13 @@ def q_trade_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the core).  Integer degrees make every peel round
     hash-deterministic; the oracle unrolls 8 peel rounds (the fixpoint
     is reached in <= 2 on this graph and re-peeling a fixpoint is
-    idempotent, asserted in tests/test_graph_algorithms.py)."""
+    idempotent, asserted in tests/test_graph_algorithms.py).
+
+    Plan build runs the kernel: one count of the pair list (which also
+    pins it), the degree filter and one peel round, each survivor set
+    (~8k rows at sf0.1) collected to the driver; the peel round that
+    finds the fixpoint returns its rows as the answer, a local Arrow
+    frame, so the collect only scans those rows."""
     from graphdb_for_drones_spark.operators.graph_algorithms import k_core
 
     cat = Catalog(spark, sf_dir)

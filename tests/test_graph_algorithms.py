@@ -277,12 +277,11 @@ def test_temporal_reach_hop_bound_and_tiebreak(spark):
     assert got1 == {"B": (1, 1), "C": (2, 1)}
 
 
-def test_k_core_matches_python_reference_on_random_graphs(spark):
-    """Differential: engine k-core vs brute-force peeling on seeded
-    random graphs across several densities and k values."""
+def _random_kcore_cases(spark):
+    """Seeded random canonical graphs across several densities, with
+    the brute-force peeled k-core for k in 2..4: yields (label, edges,
+    k, expected {id: core_degree})."""
     import random
-
-    from graphdb_for_drones_spark.operators.graph_algorithms import k_core
 
     rng = random.Random(99)
     for trial, (n, m) in enumerate([(12, 18), (20, 40), (25, 90)]):
@@ -306,15 +305,149 @@ def test_k_core_matches_python_reference_on_random_graphs(spark):
                 if nxt == alive:
                     break
                 alive = nxt
+            # brute-force peel keeps isolated survivors only if deg>=k,
+            # so every surviving node has core_degree >= k > 0
             expect = {
                 u: sum(1 for v in adj[u] if v in alive)
                 for u in alive
                 if sum(1 for v in adj[u] if v in alive) > 0
             }
-            # brute-force peel keeps isolated survivors only if deg>=k,
-            # so every surviving node has core_degree >= k > 0
-            got = {r.id: r.core_degree for r in k_core(e, k=k).collect()}
-            assert got == expect, (trial, k)
+            yield (trial, k), e, k, expect
+
+
+def test_k_core_matches_python_reference_on_random_graphs(spark):
+    """Differential: engine k-core vs brute-force peeling on seeded
+    random graphs across several densities and k values."""
+    from graphdb_for_drones_spark.operators.graph_algorithms import k_core
+
+    for label, e, k, expect in _random_kcore_cases(spark):
+        got = {r.id: r.core_degree for r in k_core(e, k=k).collect()}
+        assert got == expect, label
+
+
+@pytest.mark.parametrize("knob", ["collect_threshold_1", "no_pin"])
+def test_k_core_answer_is_knob_independent(spark, monkeypatch, knob):
+    """The same graphs as the differential test, with peel rounds
+    forced executor-side (survivor collect threshold 1: every survivor
+    set of two or more rows takes the pin_state + count branch) or with
+    pinning disabled: the answer must not move."""
+    from graphdb_for_drones_spark import traversal
+    from graphdb_for_drones_spark.operators import graph_algorithms as ga
+
+    pins = []
+    if knob == "collect_threshold_1":
+        monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", 1)
+        real_pin_state = ga.pin_state
+        monkeypatch.setattr(
+            ga, "pin_state", lambda df: pins.append(1) or real_pin_state(df)
+        )
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_NO_PIN", "1")
+    for label, e, k, expect in _random_kcore_cases(spark):
+        got = {r.id: r.core_degree for r in ga.k_core(e, k=k).collect()}
+        assert got == expect, label
+    if knob == "collect_threshold_1":
+        assert pins  # the executor-side branch ran
+
+
+def test_k_core_executor_side_state_cuts_lineage_unpinned(spark, monkeypatch):
+    """Executor-side peel rounds with pinning disabled: a 20-node path
+    at k=2 peels one node off each end per round (ten rounds).  Every
+    round's survivor state must still be a materialized scan — an
+    uncut state is read twice per round (one semi-join per endpoint),
+    so round r's plan would hold 2^r copies of round 1."""
+    from graphdb_for_drones_spark import traversal
+    from graphdb_for_drones_spark.operators import graph_algorithms as ga
+
+    monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", 1)
+    monkeypatch.setenv("SPARK_GRAFT_NO_PIN", "1")
+    real_settle = ga.settle
+    executor_side = []
+
+    def checked(df, bound):
+        out = real_settle(df, bound)
+        if not out[2]:
+            # checked as each round settles: an uncut plan fails here,
+            # before later rounds grow it exponentially
+            plan = out[0]._jdf.queryExecution().analyzed()
+            assert plan.nodeName() == "LogicalRDD", plan.toString()
+            executor_side.append(out[1])
+        return out
+
+    monkeypatch.setattr(ga, "settle", checked)
+    e = edges_df(spark, [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(19)])
+    assert ga.k_core(e, k=2).collect() == []
+    assert executor_side == [18, 16, 14, 12, 10, 8, 6, 4, 2, 0]
+
+
+def test_k_core_canonical_flag_gives_identical_answers(spark):
+    """On an already-canonical edge list (each undirected edge once, no
+    self-loops, no parallel edges) ``canonical=True`` skips only the
+    canonicalizing pass: both paths return the same core."""
+    from graphdb_for_drones_spark.operators.graph_algorithms import k_core
+
+    for label, e, k, expect in _random_kcore_cases(spark):
+        fast = {
+            r.id: r.core_degree for r in k_core(e, k=k, canonical=True).collect()
+        }
+        slow = {r.id: r.core_degree for r in k_core(e, k=k).collect()}
+        assert fast == slow == expect, label
+
+
+def test_k_core_max_rounds_exhaustion_returns_unfiltered_degrees(spark):
+    """When ``max_rounds`` runs out before the fixpoint, the answer is
+    every node of the last survivor set with its degree WITHIN that set,
+    not filtered by k (pinned before the peel loop was ported)."""
+    from graphdb_for_drones_spark.operators.graph_algorithms import k_core
+
+    # the cascading-peel graph: the degree filter drops E, round 1 drops
+    # D; C keeps its round-1 place but has one neighbor left
+    e = edges_df(
+        spark,
+        [
+            ("A", "B"), ("B", "C"), ("C", "D"), ("D", "E"),
+            ("X", "Y"), ("Y", "Z"), ("Z", "X"), ("A", "X"),
+        ],
+    )
+    core = {r.id: r.core_degree for r in k_core(e, k=2, max_rounds=1).collect()}
+    assert core == {"A": 2, "B": 2, "C": 1, "X": 3, "Y": 2, "Z": 2}
+    # no peel round at all: degrees within the degree-filtered set
+    core0 = {r.id: r.core_degree for r in k_core(e, k=2, max_rounds=0).collect()}
+    assert core0 == {"A": 2, "B": 2, "C": 2, "D": 1, "X": 3, "Y": 2, "Z": 2}
+
+
+def test_k_core_pins_only_through_pin_policy(spark, monkeypatch):
+    """Pin-policy guard: on a driver-sized graph, k_core materializes
+    only through ``_pin.pin`` — no direct localCheckpoint, which would
+    bypass the policy that is safe on a cluster."""
+    import sys
+
+    from graphdb_for_drones_spark.operators import _pin
+    from graphdb_for_drones_spark.operators.graph_algorithms import k_core
+
+    e = edges_df(
+        spark,
+        [
+            ("A", "B"), ("B", "C"), ("C", "D"), ("D", "E"),
+            ("X", "Y"), ("Y", "Z"), ("Z", "X"), ("A", "X"),
+        ],
+    )
+    cls = type(e)
+    real = cls.localCheckpoint
+    bypass = []
+
+    def counting(self, *args, **kwargs):
+        f = sys._getframe(1)
+        while f is not None and f.f_code is not _pin.pin.__code__:
+            f = f.f_back
+        if f is None:
+            bypass.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", counting)
+    core = {r.id: r.core_degree for r in k_core(e, k=2).collect()}
+    assert core == {"X": 2, "Y": 2, "Z": 2}
+    assert bypass == []
 
 
 def test_temporal_reach_matches_python_reference_on_random_graphs(spark):

@@ -5,7 +5,9 @@ encodes."""
 
 from __future__ import annotations
 
-from graphdb_for_drones_spark.operators._pin import pin
+import pytest
+
+from graphdb_for_drones_spark.operators._pin import pin, pin_state
 
 
 def test_pin_local_mode_checkpoints(spark):
@@ -24,10 +26,10 @@ def test_pin_opt_out_env(spark, monkeypatch):
     assert pin(df) is df
 
 
-def test_pin_nonlocal_without_checkpoint_dir_is_noop(spark, monkeypatch):
-    # simulate a cluster master: the policy must NOT localCheckpoint
-    # (irrecoverable on executor loss) and, with no checkpoint dir
-    # configured, must return the frame unpinned
+def _fake_cluster(monkeypatch, df, has_dir):
+    """Make ``df``'s session look like a non-local (cluster) master,
+    with or without a configured checkpoint dir."""
+
     class _FakeSC:
         master = "yarn"
 
@@ -40,13 +42,11 @@ def test_pin_nonlocal_without_checkpoint_dir_is_noop(spark, monkeypatch):
                         class _O:
                             @staticmethod
                             def isDefined():
-                                return False
+                                return has_dir
 
                         return _O()
 
                 return _S()
-
-    df = spark.range(5)
 
     class _FakeSession:
         sparkContext = _FakeSC()
@@ -54,4 +54,40 @@ def test_pin_nonlocal_without_checkpoint_dir_is_noop(spark, monkeypatch):
     monkeypatch.setattr(
         type(df), "sparkSession", property(lambda self: _FakeSession())
     )
+
+
+def test_pin_nonlocal_without_checkpoint_dir_is_noop(spark, monkeypatch):
+    # simulate a cluster master: the policy must NOT localCheckpoint
+    # (irrecoverable on executor loss) and, with no checkpoint dir
+    # configured, must return the frame unpinned
+    df = spark.range(5)
+    _fake_cluster(monkeypatch, df, has_dir=False)
     assert pin(df) is df
+
+
+def test_pin_state_cuts_lineage_under_opt_out(spark, monkeypatch):
+    # loop state is always materialized: SPARK_GRAFT_NO_PIN does not
+    # apply (an uncut superstep state grows the plan every round)
+    monkeypatch.setenv("SPARK_GRAFT_NO_PIN", "1")
+    out = pin_state(spark.range(10))
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan
+    assert sorted(r.id for r in out.collect()) == list(range(10))
+
+
+@pytest.mark.parametrize("has_dir", [True, False])
+def test_pin_state_nonlocal_always_truncates(spark, monkeypatch, has_dir):
+    # cluster master: a reliable checkpoint when a dir is configured,
+    # localCheckpoint otherwise — never the unpinned frame
+    df = spark.range(5)
+    calls = []
+    cls = type(df)
+    monkeypatch.setattr(
+        cls, "checkpoint", lambda self, *a, **k: calls.append("reliable") or "pinned"
+    )
+    monkeypatch.setattr(
+        cls, "localCheckpoint", lambda self, *a, **k: calls.append("local") or "pinned"
+    )
+    _fake_cluster(monkeypatch, df, has_dir=has_dir)
+    assert pin_state(df) == "pinned"
+    assert calls == ["reliable" if has_dir else "local"]
