@@ -16,6 +16,8 @@ from pyspark.sql.window import Window
 
 from graphdb_for_drones_spark.catalog import Catalog
 from graphdb_for_drones_spark.operators import curation
+from graphdb_for_drones_spark.streaming.util import drain, staged
+from graphdb_for_drones_spark.traversal import _local_df
 
 # DuckDB fragment: documents → whitespace word list (same normalization
 # as operators/dedup.normalize_text)
@@ -1683,65 +1685,38 @@ def q_source_drift_stats_streamed(
     the monitor's counts-are-the-only-state construction is
     driver-attested rather than pytest-only.
 
-    Mechanics: documents.parquet is staged behind a symlink dir
-    (FileStreamSource requires a directory), drained availableNow into
-    FRESH temp out/checkpoint dirs (the monitor truncates on a fresh
-    checkpoint — its lifecycle contract); the '__ref__' geometry row
-    is dropped from the report (the src0 stream row carries the same
-    counts by construction)."""
-    import os
-    import tempfile
-
+    Mechanics: documents.parquet is ``staged`` (streaming/util) and
+    drained availableNow into FRESH out/checkpoint dirs under the stage
+    root (the monitor truncates on a fresh checkpoint — its lifecycle
+    contract); the |sources|-row report is collected into a local frame
+    before the root is removed.  The '__ref__' geometry row is dropped
+    from the report (the src0 stream row carries the same counts by
+    construction)."""
     from graphdb_for_drones_spark.streaming.drift_monitor import (
-        drift_report,
-        start_drift_monitor,
+        drain_drift_report,
     )
 
     cat = Catalog(spark, sf_dir)
     ref = cat.documents.filter(F.col("source") == "src0")
-    # stage the table behind symlinks: FileStreamSource requires a
-    # DIRECTORY of plain files, and documents.parquet may be either a
-    # single file (driver testdata) or a Spark-written dataset dir
-    # (whose top-level subdir a batch/stream listing will not recurse)
-    src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    stage = tempfile.mkdtemp(prefix="drift_stream_src_")
-    if os.path.isdir(src):
-        for i, fname in enumerate(sorted(os.listdir(src))):
-            if fname.endswith(".parquet"):
-                os.symlink(
-                    os.path.join(src, fname),
-                    os.path.join(stage, f"part_{i}.parquet"),
-                )
-    else:
-        os.symlink(src, os.path.join(stage, "documents.parquet"))
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .parquet(stage)
-        .select("source", "n_chars")
-    )
-    work = tempfile.mkdtemp(prefix="drift_stream_mon_")
-    counts_dir = os.path.join(work, "counts")
-    # r13: measured with input-derived state partitions (the KS/W1
-    # drains' win) — 1.64 s @32 parts vs 4.53 s @1 vs 2.09 s @8: the
-    # monitor's foreachBatch ref-geometry work wants the cores, so the
-    # session partitioning stays (see OPTIMIZATION_r13.md)
-    query = start_drift_monitor(
-        stream,
-        ref,
-        out_dir=counts_dir,
-        checkpoint_dir=os.path.join(work, "ckpt"),
-        group_col="source",
-        value_col="n_chars",
-        n_bins=10,
-    )
-    query.awaitTermination()  # availableNow: terminates after the drain
-    return (
-        drift_report(spark, counts_dir)
-        .filter(F.col("g") != "__ref__")
-        .select(
-            F.col("g").alias("source"), "n_rows", "tvd", "chi2", "max_gap"
+    with staged(spark, sf_dir, "documents") as (stream, root):
+        # r13: measured with input-derived state partitions (the KS/W1
+        # drains' win) — 1.64 s @32 parts vs 4.53 s @1 vs 2.09 s @8: the
+        # monitor's foreachBatch ref-geometry work wants the cores, so
+        # the session partitioning stays (see OPTIMIZATION_r13.md)
+        report = (
+            drain_drift_report(
+                stream.select("source", "n_chars"),
+                ref,
+                root,
+                group_col="source",
+                value_col="n_chars",
+            )
+            .filter(F.col("g") != "__ref__")
+            .select(
+                F.col("g").alias("source"), "n_rows", "tvd", "chi2", "max_gap"
+            )
         )
-    )
+        return _local_df(spark, report.collect(), report.schema)
 
 
 def q_source_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1759,6 +1734,31 @@ def q_source_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ks_drift(cat.documents, "source", "n_chars", ref_group="src0")
 
 
+def _streamed_length_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Documents drained through a streaming (source, n_chars) COUNT
+    into an update-mode memory sink, reconciled to one (g, x, cg) row
+    per key: counts only grow, so latest-wins is MAX per (g, x)."""
+
+    def counts(stream: DataFrame) -> DataFrame:
+        return (
+            stream.select(
+                F.col("source").alias("g"),
+                F.col("n_chars").cast("long").alias("x"),
+            )
+            .filter(F.col("x").isNotNull())
+            .groupBy("g", "x")
+            .agg(F.count(F.lit(1)).cast("long").alias("cg"))
+        )
+
+    # r13 (guide §2.5): state partitions sized to the staged input, not
+    # the session constant — count-valued results are partitioning-
+    # independent, so the drain is cheaper, not different
+    updates = drain(
+        spark, sf_dir, "documents", counts, output_mode="update", sized_state=True
+    )
+    return updates.groupBy("g", "x").agg(F.max("cg").alias("cg"))
+
+
 def q_source_drift_ks_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT KS drift as a CONTINUOUS AGGREGATE, driver-attested: the
     KS grid needs only per-(group, value) counts, and counts are a
@@ -1772,60 +1772,11 @@ def q_source_drift_ks_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink is MAX per (group, value).  Completes the streaming drift
     story: binned (r11) and exact rank-based (r12) both stream==batch
     as driver-checked facts."""
-    import os
-    import tempfile
-    import uuid
-
     from graphdb_for_drones_spark.operators.stats import (
         ks_drift_from_counts,
     )
 
-    src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    stage_dir = tempfile.mkdtemp(prefix="ks_stream_src_")
-    if os.path.isdir(src):
-        for i, fname in enumerate(sorted(os.listdir(src))):
-            if fname.endswith(".parquet"):
-                os.symlink(
-                    os.path.join(src, fname),
-                    os.path.join(stage_dir, f"part_{i}.parquet"),
-                )
-    else:
-        os.symlink(src, os.path.join(stage_dir, "documents.parquet"))
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .parquet(stage_dir)
-        .select(
-            F.col("source").alias("g"),
-            F.col("n_chars").cast("long").alias("x"),
-        )
-        .filter(F.col("x").isNotNull())
-        .groupBy("g", "x")
-        .agg(F.count(F.lit(1)).cast("long").alias("cg"))
-    )
-    qn = f"ks_stream_{uuid.uuid4().hex}"
-    from graphdb_for_drones_spark.streaming.util import stream_state_scope
-
-    # r13 (guide §2.5): state partitions sized to the staged input, not
-    # the session constant — count-valued results are partitioning-
-    # independent, so the drain is cheaper, not different
-    with stream_state_scope(spark, stage_dir):
-        query = (
-            stream.writeStream.format("memory")
-            .queryName(qn)
-            .outputMode("update")
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="ks_stream_ckpt_"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-    query.awaitTermination()
-    counts = (
-        spark.table(qn)
-        .groupBy("g", "x")
-        .agg(F.max("cg").alias("cg"))
-    )
+    counts = _streamed_length_counts(spark, sf_dir)
     return ks_drift_from_counts(counts, "source", "src0").orderBy("source")
 
 
@@ -1917,60 +1868,11 @@ def q_source_drift_w1_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats.wasserstein_drift_from_counts (the SAME math half as the
     batch entry), gated against `source_drift_w1`'s oracle VERBATIM.
     The whole rank-based drift pair now streams exactly."""
-    import os
-    import tempfile
-    import uuid
-
     from graphdb_for_drones_spark.operators.stats import (
         wasserstein_drift_from_counts,
     )
 
-    src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    stage_dir = tempfile.mkdtemp(prefix="w1_stream_src_")
-    if os.path.isdir(src):
-        for i, fname in enumerate(sorted(os.listdir(src))):
-            if fname.endswith(".parquet"):
-                os.symlink(
-                    os.path.join(src, fname),
-                    os.path.join(stage_dir, f"part_{i}.parquet"),
-                )
-    else:
-        os.symlink(src, os.path.join(stage_dir, "documents.parquet"))
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .parquet(stage_dir)
-        .select(
-            F.col("source").alias("g"),
-            F.col("n_chars").cast("long").alias("x"),
-        )
-        .filter(F.col("x").isNotNull())
-        .groupBy("g", "x")
-        .agg(F.count(F.lit(1)).cast("long").alias("cg"))
-    )
-    qn = f"w1_stream_{uuid.uuid4().hex}"
-    from graphdb_for_drones_spark.streaming.util import stream_state_scope
-
-    # r13 (guide §2.5): state partitions sized to the staged input, not
-    # the session constant — count-valued results are partitioning-
-    # independent, so the drain is cheaper, not different
-    with stream_state_scope(spark, stage_dir):
-        query = (
-            stream.writeStream.format("memory")
-            .queryName(qn)
-            .outputMode("update")
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="w1_stream_ckpt_"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-    query.awaitTermination()
-    counts = (
-        spark.table(qn)
-        .groupBy("g", "x")
-        .agg(F.max("cg").alias("cg"))
-    )
+    counts = _streamed_length_counts(spark, sf_dir)
     return wasserstein_drift_from_counts(
         counts, "source", "src0"
     ).orderBy("source")

@@ -24,6 +24,7 @@ from graphdb_for_drones_spark.operators.similarity import (
     ivf_search,
 )
 from graphdb_for_drones_spark.operators.temporal import asof_join, session_stats
+from graphdb_for_drones_spark.streaming.util import drain
 
 # --------------------------------------------------------------------- #
 # TPC-H-shaped relational family
@@ -2961,54 +2962,22 @@ def q_event_hll_rollup_md5_streamed(
     (key, idx)) is the exact latest-wins reconciliation.  No watermark:
     a register table never grows with the data, the same reason the
     batch sketch replaces COUNT(DISTINCT) at serving time."""
-    import os
-    import tempfile
-    import uuid
-
     from graphdb_for_drones_spark.operators.sketches import (
         hll_md5_estimate,
         hll_md5_row_registers,
     )
 
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    stage_dir = tempfile.mkdtemp(prefix="hll_stream_src_")
-    if os.path.isdir(src):
-        for i, fname in enumerate(sorted(os.listdir(src))):
-            if fname.endswith(".parquet"):
-                os.symlink(
-                    os.path.join(src, fname),
-                    os.path.join(stage_dir, f"part_{i}.parquet"),
-                )
-    else:
-        os.symlink(src, os.path.join(stage_dir, "events.parquet"))
-    raw_schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .parquet(stage_dir)
-        .select("event_type", "user_id")
-    )
-    regs = hll_md5_row_registers(
-        stream, ["event_type"], "user_id"
-    ).groupBy("event_type", "idx").agg(F.max("rho").alias("rho"))
-    qn = f"hll_stream_{uuid.uuid4().hex}"
+    def registers(stream: DataFrame) -> DataFrame:
+        return hll_md5_row_registers(
+            stream.select("event_type", "user_id"), ["event_type"], "user_id"
+        ).groupBy("event_type", "idx").agg(F.max("rho").alias("rho"))
+
     # r13: measured with input-derived state partitions (the KS/W1
     # drains' win) — 1.91 s @32 parts vs 2.48 s @1 vs 1.80 s @8: the
     # md5 register computation is CPU work that wants the cores, so the
     # session partitioning stays (see OPTIMIZATION_r13.md)
-    query = (
-        regs.writeStream.format("memory")
-        .queryName(qn)
-        .outputMode("update")
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="hll_stream_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return hll_md5_estimate(
-        spark.table(qn), ["event_type"]
-    ).orderBy("event_type")
+    regs = drain(spark, sf_dir, "events", registers, output_mode="update")
+    return hll_md5_estimate(regs, ["event_type"]).orderBy("event_type")
 
 
 def q_event_hll_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3643,6 +3612,14 @@ FROM l
 """
 
 
+def _stream_ts(stream: DataFrame):
+    """A staged events stream's ``ts`` as TIMESTAMP: catalog.load_table's
+    NTZ cast, replicated because readStream bypasses the catalog."""
+    if stream.schema["ts"].dataType.simpleString() == "timestamp_ntz":
+        return F.col("ts").cast("timestamp")
+    return F.col("ts")
+
+
 def q_event_funnel_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream==batch FUNNEL as an ORACLE-checked fact (VERDICT r11 task
     #5 — the `source_drift_stats_streamed` pattern applied to the
@@ -3667,70 +3644,26 @@ def q_event_funnel_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over |users| rows; a static 3-row step frame left-joins
     the counts (zero-count steps must still report, as the oracle's
     COUNT(*) over empty CTEs does)."""
-    import os
-    import tempfile
-    import uuid
-
     from graphdb_for_drones_spark.streaming.stateful import streaming_funnel
 
     steps = ("view", "click", "purchase")
-    cat = Catalog(spark, sf_dir)
-    # stage behind symlinks: FileStreamSource needs a DIRECTORY of plain
-    # files (same dance as q_source_drift_stats_streamed)
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    stage_dir = tempfile.mkdtemp(prefix="funnel_stream_src_")
-    if os.path.isdir(src):
-        for i, fname in enumerate(sorted(os.listdir(src))):
-            if fname.endswith(".parquet"):
-                os.symlink(
-                    os.path.join(src, fname),
-                    os.path.join(stage_dir, f"part_{i}.parquet"),
-                )
-    else:
-        os.symlink(src, os.path.join(stage_dir, "events.parquet"))
-    raw_schema = spark.read.parquet(src).schema
-    ts_type = raw_schema["ts"].dataType.simpleString()
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .parquet(stage_dir)
-        .select(
+
+    def frontiers(stream: DataFrame) -> DataFrame:
+        events = stream.select(
             F.col("user_id").alias("user"),
-            # NTZ-safe micros extraction (catalog.load_table's cast,
-            # replicated here because readStream bypasses the catalog)
-            F.unix_micros(
-                F.col("ts").cast("timestamp")
-                if ts_type == "timestamp_ntz"
-                else F.col("ts")
-            ).alias("ms"),
+            F.unix_micros(_stream_ts(stream)).alias("ms"),
             F.col("event_type").alias("step"),
-        )
-        .filter(F.col("user").isNotNull() & F.col("ms").isNotNull())
-    )
-    qn = f"funnel_stream_{uuid.uuid4().hex}"
+        ).filter(F.col("user").isNotNull() & F.col("ms").isNotNull())
+        return streaming_funnel(events.groupBy("user"), steps)
+
     # r13: measured with input-derived state partitions (the KS/W1
     # drains' win) — 2.31 s @32 parts vs 4.16 s @1 vs 2.66 s @8: the
     # applyInPandasWithState tracker is per-user PYTHON work that wants
     # the cores, so the session partitioning stays
-    query = (
-        streaming_funnel(stream.groupBy("user"), steps)
-        .writeStream.format("memory")
-        .queryName(qn)
-        .outputMode("update")
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="funnel_stream_ckpt_"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    updates = drain(spark, sf_dir, "events", frontiers, output_mode="update")
     # memory sink keeps every frontier update; stage only advances, so
     # latest-wins == MAX per user
-    frontier = (
-        spark.table(qn)
-        .groupBy("user")
-        .agg(F.max("stage").alias("stage"))
-    )
+    frontier = updates.groupBy("user").agg(F.max("stage").alias("stage"))
     counts = (
         frontier.select(
             F.explode(F.sequence(F.lit(1), F.col("stage"))).alias("k")
@@ -3786,61 +3719,24 @@ def q_user_retention_cohorts_streamed(
     cohort_size binds back as a cohort-partitioned MAX window, retention
     is one IEEE division of exact longs rounded 9dp (the family
     contract)."""
-    import os
-    import tempfile
-
     from graphdb_for_drones_spark.streaming.stateful import (
         streaming_retention,
     )
 
-    cat = Catalog(spark, sf_dir)
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    stage_dir = tempfile.mkdtemp(prefix="retention_stream_src_")
-    if os.path.isdir(src):
-        for i, fname in enumerate(sorted(os.listdir(src))):
-            if fname.endswith(".parquet"):
-                os.symlink(
-                    os.path.join(src, fname),
-                    os.path.join(stage_dir, f"part_{i}.parquet"),
-                )
-    else:
-        os.symlink(src, os.path.join(stage_dir, "events.parquet"))
-    raw_schema = spark.read.parquet(src).schema
-    ts_type = raw_schema["ts"].dataType.simpleString()
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .parquet(stage_dir)
-        .select(
+    def emissions(stream: DataFrame) -> DataFrame:
+        events = stream.select(
             F.col("user_id").alias("user"),
-            F.unix_millis(
-                F.col("ts").cast("timestamp")
-                if ts_type == "timestamp_ntz"
-                else F.col("ts")
-            ).alias("ms"),
+            F.unix_millis(_stream_ts(stream)).alias("ms"),
+        ).filter(F.col("user").isNotNull() & F.col("ms").isNotNull())
+        return streaming_retention(
+            events.groupBy("user"), period_ms=604800000
         )
-        .filter(F.col("user").isNotNull() & F.col("ms").isNotNull())
-    )
-    import uuid
 
-    qn = f"retention_stream_{uuid.uuid4().hex}"
     # r13: measured with input-derived state partitions (the KS/W1
     # drains' win) — 1.92 s @32 parts vs 3.57 s @1 vs 2.20 s @8: the
     # tracker is per-user Python work; session partitioning stays
-    query = (
-        streaming_retention(stream.groupBy("user"), period_ms=604800000)
-        .writeStream.format("memory")
-        .queryName(qn)
-        .outputMode("append")
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="retention_stream_ckpt_"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     cells = (
-        spark.table(qn)
+        drain(spark, sf_dir, "events", emissions, output_mode="append")
         .groupBy("cohort_period", "period_offset")
         .agg(F.count(F.lit(1)).cast("long").alias("n_users"))
     )

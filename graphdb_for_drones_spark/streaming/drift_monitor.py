@@ -26,6 +26,7 @@ availableNow re-drains of the same source layout.
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -220,3 +221,26 @@ def drift_report(
                 f"drift_report was called with n_bins={n_bins}"
             )
     return drift_from_bin_counts(counts, "g", "__ref__", n_bins)
+
+
+def drain_drift_report(
+    stream_df: DataFrame,
+    ref_df: DataFrame,
+    work_dir: str,
+    group_col: str,
+    value_col: str,
+) -> DataFrame:
+    """One-shot drain: run a FRESH monitor over ``stream_df`` to
+    completion (availableNow), its counts and checkpoint under
+    ``work_dir``, and return ``drift_report`` over those counts (lazy:
+    it reads ``work_dir``, so materialize it before removing the dir)."""
+    counts_dir = os.path.join(work_dir, "counts")
+    start_drift_monitor(
+        stream_df,
+        ref_df,
+        out_dir=counts_dir,
+        checkpoint_dir=os.path.join(work_dir, "ckpt"),
+        group_col=group_col,
+        value_col=value_col,
+    ).awaitTermination()
+    return drift_report(stream_df.sparkSession, counts_dir)

@@ -110,9 +110,6 @@ def test_no_cartesian_or_nested_loop_joins_in_catalog(spark):
         "simhash_pairs",  # (1x1x1 scalar bind, the doc_tfidf_topk shape)
         # one-row reference min/max + one-row reference histogram binds
         "source_drift_stats",
-        # streamed twin: same one-row reference bind in drift_report
-        # (the monitor side runs availableNow during plan build)
-        "source_drift_stats_streamed",
         # one-row chance-agreement (pe) scalar bind
         "lang_id_kappa",
         # one-row reference-centroid bind (the drift-family shape)
