@@ -17,6 +17,7 @@ import os
 import re
 import sys
 import time
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -145,6 +146,70 @@ CALIBRATION_REF = {
 # previously un-benched entry cannot hide.  The floor is therefore
 # len(QUERIES): adding a catalog query automatically adds a bench entry.
 HEADLINE += [q for q in QUERIES if q not in HEADLINE]
+
+
+MAX_LINE = 1700  # < the 2000-char output tail that is parsed, with margin for a newline
+# r13: the cross-round comparison diffs the printed `queries` dict and
+# flags any name that disappears as "dropped_from_bench" (PERF_r12
+# listed 48 such artifacts when the r12 metric-line change shifted
+# the truncation point).  The names BENCH_r12 printed are therefore
+# pinned to print FIRST — a timing that grows a digit pushes out the
+# catalog extras, and pinned names only once they alone overflow — and
+# the remaining space is filled with the rest of the catalog in
+# HEADLINE order as before.
+# All 166 entries are still TIMED (sidecar file); only the printed
+# subset is capped by the 2000-char tail.
+PRINT_FIRST = (
+    "mission_count", "delegation_reachable", "path_count_diamond",
+    "wot_path_count", "abac_check", "pricing_summary", "top_customers",
+    "shipping_priority", "region_volume", "orders_rollup",
+    "latest_event_per_user", "event_type_stats", "cdc_apply_events",
+    "events_tumbling_hourly", "events_sliding_windows", "user_sessions",
+    "asof_signup_before_purchase", "events_in_windows",
+    "user_event_hash_chain", "min_price_supplier", "minhash_pairs",
+    "ngram_jaccard", "ngram_jaccard_prefix", "doc_token_stats",
+    "embedding_topk", "ann_topk", "ivf_topk",
+    "event_value_hist_quantiles", "doc_split_counts",
+    "corpus_curation_stats", "contamination_check",
+    "contamination_containment", "doc_pack_stats",
+    "doc_pack_greedy_stats", "mixture_weights", "doc_repetition",
+    "doc_quality_sample_stats", "embedding_dup_clusters",
+    "source_drift_ks", "source_drift_w1", "event_hll_rollup_md5",
+    "event_funnel_streamed", "user_retention_cohorts_streamed",
+    "event_hll_rollup_md5_streamed", "source_drift_ks_streamed",
+    "source_drift_w1_streamed", "user_funnel_counts",
+    "event_user_cm_counts",
+)
+
+
+def capped_line(
+    timings: dict[str, float], line_for: Callable[[dict[str, float]], str]
+) -> str:
+    """The printed result line, at most ``MAX_LINE`` characters:
+    ``line_for`` over the ``PRINT_FIRST`` timings, then as many further
+    HEADLINE entries as fit.  If the pinned names alone overflow (a
+    timing grew digits), trailing pinned names are dropped and named on
+    stderr."""
+    subset = {name: timings[name] for name in PRINT_FIRST if name in timings}
+    dropped = []
+    while subset and len(line_for(subset)) > MAX_LINE:
+        dropped.append(subset.popitem()[0])
+    if dropped:
+        print(
+            "bench: line cap dropped pinned entries "
+            + ", ".join(reversed(dropped)),
+            file=sys.stderr,
+        )
+        return line_for(subset)
+    for name in HEADLINE:
+        if name in subset:
+            continue
+        trial = dict(subset)
+        trial[name] = timings[name]
+        if len(line_for(trial)) > MAX_LINE:
+            break
+        subset = trial
+    return line_for(subset)
 
 
 def main() -> None:
@@ -345,49 +410,7 @@ def main() -> None:
             separators=(",", ":"),
         )
 
-    MAX_LINE = 1700  # < 2000-char driver tail, with margin for a trailing newline
-    # r13: the driver diffs the printed `queries` dict across rounds and
-    # flags any name that disappears as "dropped_from_bench" (PERF_r12
-    # listed 48 such artifacts when the r12 metric-line change shifted
-    # the truncation point).  The names BENCH_r12 printed are therefore
-    # pinned to print FIRST — they can never again fall out of the
-    # subset because a timing grew a digit — and the remaining space is
-    # filled with the rest of the catalog in HEADLINE order as before.
-    # All 166 entries are still TIMED (sidecar file); only the printed
-    # subset is capped by the driver's 2000-char tail.
-    PRINT_FIRST = (
-        "mission_count", "delegation_reachable", "path_count_diamond",
-        "wot_path_count", "abac_check", "pricing_summary", "top_customers",
-        "shipping_priority", "region_volume", "orders_rollup",
-        "latest_event_per_user", "event_type_stats", "cdc_apply_events",
-        "events_tumbling_hourly", "events_sliding_windows", "user_sessions",
-        "asof_signup_before_purchase", "events_in_windows",
-        "user_event_hash_chain", "min_price_supplier", "minhash_pairs",
-        "ngram_jaccard", "ngram_jaccard_prefix", "doc_token_stats",
-        "embedding_topk", "ann_topk", "ivf_topk",
-        "event_value_hist_quantiles", "doc_split_counts",
-        "corpus_curation_stats", "contamination_check",
-        "contamination_containment", "doc_pack_stats",
-        "doc_pack_greedy_stats", "mixture_weights", "doc_repetition",
-        "doc_quality_sample_stats", "embedding_dup_clusters",
-        "source_drift_ks", "source_drift_w1", "event_hll_rollup_md5",
-        "event_funnel_streamed", "user_retention_cohorts_streamed",
-        "event_hll_rollup_md5_streamed", "source_drift_ks_streamed",
-        "source_drift_w1_streamed", "user_funnel_counts",
-        "event_user_cm_counts",
-    )
-    subset: dict[str, float] = {
-        name: timings[name] for name in PRINT_FIRST if name in timings
-    }
-    for name in HEADLINE:
-        if name in subset:
-            continue
-        trial = dict(subset)
-        trial[name] = timings[name]
-        if len(line_for(trial)) > MAX_LINE:
-            break
-        subset = trial
-    print(line_for(subset))
+    print(capped_line(timings, line_for))
 
 
 if __name__ == "__main__":

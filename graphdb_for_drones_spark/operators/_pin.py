@@ -68,6 +68,22 @@ def pin_state(df: DataFrame) -> DataFrame:
     return df.localCheckpoint()
 
 
+def release(df: DataFrame) -> None:
+    """Drop the blocks behind a frame ``pin``/``pin_state`` returned,
+    once no consumer will scan it again (the frame is unusable after).
+
+    A pinned frame's logical plan is the ``LogicalRDD`` over the
+    checkpointed RDD; ``unpersist`` frees its executor-local blocks at
+    once instead of when Python GC drops the frame.  Any other plan —
+    an unpinned frame (``SPARK_GRAFT_NO_PIN``, a non-local master
+    without a checkpoint dir) or a driver-local frame — is left alone.
+    A reliable checkpoint keeps no blocks (its rows live in the
+    checkpoint dir), so there the call frees nothing."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def _mode(df: DataFrame) -> str:
     """'local' (local[*] master), 'reliable' (non-local master with a
     checkpoint dir) or 'none'."""

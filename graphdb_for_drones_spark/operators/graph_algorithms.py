@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from graphdb_for_drones_spark import traversal
-from graphdb_for_drones_spark.operators._pin import pin, pin_state
+from graphdb_for_drones_spark.operators._pin import pin, pin_state, release
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -458,7 +458,10 @@ def k_core(
     last round's rows ARE the answer.  Every round removes the whole
     sub-threshold shell: peeling converges in a handful of rounds.  If
     ``max_rounds`` runs out first, the answer is the last survivor set
-    with its degrees within that set, unfiltered.
+    with its degrees within that set, unfiltered.  Pinned blocks do not
+    outlive the call: each survivor set is released
+    (``_pin.release``) once the next one is settled, and the edge pin
+    when the answer is; the answer keeps its own block.
 
     ``canonical=True`` asserts the input is ALREADY canonical (each
     undirected edge exactly once, no self-loops, no parallel edges —
@@ -493,19 +496,28 @@ def k_core(
         )
         return settle(deg.filter(F.col("core_degree") >= min_deg), bound)
 
+    def done(answer, *spent):
+        # the answer is settled (collected or pinned on its own), so the
+        # edge pin and the replaced loop states can go
+        for df in (sym, *spent):
+            release(df)
+        return answer
+
     # a node of degree >= k ends >= k of the |sym| edges, so at most
     # 2|sym|/k nodes pass the degree filter; later rounds only shrink
     alive, n, local = peel(None, False, k, 2 * sym.count() // max(k, 1))
     for _ in range(max_rounds):
         if n == 0:
-            return alive
+            return done(alive)
         nxt = peel(alive, local, k, n)
         if nxt[1] == n:
             # fixpoint: peeling only removes nodes, so equal cardinality
             # is the equal set, and these degrees are within the core
-            return nxt[0]
+            return done(nxt[0], alive)
+        release(alive)
         alive, n, local = nxt
-    return peel(alive, local, 0, n)[0]  # out of rounds: unfiltered degrees
+    # out of rounds: unfiltered degrees
+    return done(peel(alive, local, 0, n)[0], alive)
 
 
 def temporal_reach(

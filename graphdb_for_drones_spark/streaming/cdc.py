@@ -147,27 +147,31 @@ def apply_cdc_batch(state: DataFrame, changes: DataFrame, seq_col: str = "ts_ms"
     its net per-key effect, then —
 
       net c → upsert row
-      net u → update if present (no resurrect)
+      net u → update if present (no resurrect); a null payload is set
+              like any other, as applying the events one at a time does
       net d → delete
 
     Returns the next state snapshot (MERGE-shaped plan: one broadcast
-    left join of base against the chunk, never a base-table shuffle)."""
-    latest = reduce_batch_per_key(changes, seq_col)
-    upserts = latest.filter(F.col("net_op") == "c").select("id", "payload")
-    updates = latest.filter(F.col("net_op") == "u").select(
-        "id", F.col("payload").alias("__new_payload")
+    left join of base against the chunk, never a base-table shuffle —
+    rows the chunk leaves alone or updates stay, net c rows are
+    appended)."""
+    latest = reduce_batch_per_key(changes, seq_col).withColumnRenamed(
+        "payload", "__new_payload"
     )
-    deletes = latest.filter(F.col("net_op") == "d").select("id")
-
-    out = state.join(F.broadcast(deletes.withColumn("__del", F.lit(True))), "id", "left")
-    out = out.filter(F.col("__del").isNull()).drop("__del")
-    out = out.join(F.broadcast(updates), "id", "left")
-    out = out.withColumn(
-        "payload", F.coalesce(F.col("__new_payload"), F.col("payload"))
-    ).drop("__new_payload")
-    # upserts replace existing rows and insert new ones
-    out = out.join(F.broadcast(upserts.select("id")), "id", "left_anti")
-    return out.unionByName(upserts)
+    op = F.col("net_op")
+    kept = (
+        state.join(F.broadcast(latest), "id", "left")
+        .filter(op.isNull() | (op == "u"))
+        .withColumn(
+            "payload",
+            F.when(op == "u", F.col("__new_payload")).otherwise(F.col("payload")),
+        )
+        .select(*state.columns)
+    )
+    upserts = latest.filter(op == "c").select(
+        "id", F.col("__new_payload").alias("payload")
+    )
+    return kept.unionByName(upserts)
 
 
 def poll_changes(

@@ -2,6 +2,7 @@
 the streaming availableNow drain (offline-recovery replay)."""
 
 import json
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -67,6 +68,19 @@ def test_apply_dedupes_to_latest(spark):
     assert got == {1: "resurrected"}
 
 
+def test_apply_update_to_null_payload(spark):
+    # a u carrying a null payload sets it, whether or not its c is in
+    # the same batch: applied one event at a time, both give null
+    state = state_df(spark, [(1, "one")])
+    later = apply_cdc_batch(state, changes_df(spark, [(1, None, "u", 10)]))
+    assert [tuple(r) for r in later.collect()] == [(1, None)]
+    same = apply_cdc_batch(
+        state_df(spark, [(9, "x")]),
+        changes_df(spark, [(1, "one", "c", 9), (1, None, "u", 10)]),
+    )
+    assert sorted(tuple(r) for r in same.collect()) == [(1, None), (9, "x")]
+
+
 def test_apply_idempotent(spark):
     # replaying the same batch leaves the state unchanged (C5)
     state = state_df(spark, [(1, "one"), (2, "two")])
@@ -104,3 +118,56 @@ def test_streaming_available_now_drain(spark, tmp_path):
     final = spark.read.parquet(state_path)
     got = {r.id: r.payload for r in final.collect()}
     assert got == {i: f"p{i}-upd" for i in range(k // 2)}
+
+
+def _replay(state: dict, events) -> dict:
+    """The sink's contract one event at a time, in ts_ms order: c/r
+    upsert, u updates a present row (payload included, null or not), d
+    deletes."""
+    out = dict(state)
+    for key, payload, op, _ts in sorted(events, key=lambda e: e[3]):
+        if op in ("c", "r"):
+            out[key] = payload
+        elif op == "u":
+            if key in out:
+                out[key] = payload
+        else:
+            out.pop(key, None)
+    return out
+
+
+def _random_log(rng, n_keys=30, n_events=90):
+    """A non-empty starting state and a change log over ``n_keys`` keys:
+    every op kind, updates of absent keys, deletes later re-created,
+    null payloads on every non-delete op (a delete carries none)."""
+    def payload():
+        return None if rng.random() < 0.2 else f"v{rng.randrange(10**6)}"
+
+    state = {k: payload() for k in rng.sample(range(n_keys), n_keys // 3)}
+    ts = rng.sample(range(10_000), n_events)
+    events = []
+    for t in ts:
+        op = rng.choice("ccrruuudd")
+        events.append((rng.randrange(n_keys), None if op == "d" else payload(), op, t))
+    return state, events
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_apply_chunked_matches_event_replay(spark, seed):
+    # differential check: the log applied in random chunks through
+    # apply_cdc_batch equals applying it one event at a time
+    rng = random.Random(seed)
+    state, events = _random_log(rng)
+    cur = state_df(spark, sorted(state.items()))
+    log = changes_df(spark, events)
+    ordered = sorted(e[3] for e in events)
+    start = 0
+    while start < len(ordered):
+        stop = min(len(ordered), start + rng.randint(1, 40))
+        lo, hi = ordered[start], ordered[stop - 1]
+        chunk = log.filter(F.col("ts_ms").between(lo, hi))
+        cur = apply_cdc_batch(cur, chunk).localCheckpoint()
+        start = stop
+    got = {r.id: r.payload for r in cur.collect()}
+    assert cur.count() == len(got)  # one row per key
+    assert got == _replay(state, events)

@@ -450,6 +450,31 @@ def test_k_core_pins_only_through_pin_policy(spark, monkeypatch):
     assert bypass == []
 
 
+@pytest.mark.parametrize("threshold", [None, 1])
+def test_k_core_leaves_no_pinned_blocks(spark, monkeypatch, threshold):
+    """k_core releases the edge pin and every replaced survivor set:
+    driver-side it leaves no persisted RDD, executor-side (collect
+    threshold 1, the ten-round path graph) only the answer's own."""
+    from graphdb_for_drones_spark import traversal
+    from graphdb_for_drones_spark.operators import graph_algorithms as ga
+
+    if threshold is not None:
+        monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", threshold)
+    e = edges_df(
+        spark,
+        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(19)]
+        + [("X", "Y"), ("Y", "Z"), ("Z", "X")],
+    )
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    core = ga.k_core(e, k=2)
+    assert len(persisted() - before) == (0 if threshold is None else 1)
+    assert {r.id: r.core_degree for r in core.collect()} == {"X": 2, "Y": 2, "Z": 2}
+
+
 def test_temporal_reach_matches_python_reference_on_random_graphs(spark):
     """Differential: engine earliest-arrival reachability vs a
     label-correcting Python reference on seeded random temporal

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from graphdb_for_drones_spark.operators._pin import pin, pin_state
+from graphdb_for_drones_spark.operators._pin import pin, pin_state, release
 
 
 def test_pin_local_mode_checkpoints(spark):
@@ -91,3 +91,29 @@ def test_pin_state_nonlocal_always_truncates(spark, monkeypatch, has_dir):
     _fake_cluster(monkeypatch, df, has_dir=has_dir)
     assert pin_state(df) == "pinned"
     assert calls == ["reliable" if has_dir else "local"]
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_release_frees_a_pinned_frames_blocks(spark):
+    before = _persisted(spark)
+    pinned = pin(spark.range(100))
+    assert len(_persisted(spark) - before) == 1
+    release(pinned)
+    assert _persisted(spark) - before == set()
+
+
+def test_release_leaves_unpinned_and_local_frames_alone(spark, monkeypatch):
+    from graphdb_for_drones_spark.traversal import _local_df
+
+    monkeypatch.setenv("SPARK_GRAFT_NO_PIN", "1")
+    unpinned = pin(spark.range(5))
+    local = _local_df(spark, [(1,), (2,)], "id long")
+    before = _persisted(spark)
+    release(unpinned)
+    release(local)
+    assert _persisted(spark) == before
+    assert sorted(r.id for r in unpinned.collect()) == list(range(5))
+    assert sorted(r.id for r in local.collect()) == [1, 2]
