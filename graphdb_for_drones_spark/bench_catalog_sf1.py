@@ -1,7 +1,7 @@
 """FULL-catalog sf0.1 → sf1 sweep (VERDICT r8 #4).
 
-`bench_sf1` covers the dedup / contamination / ANN families; the other
-130+ catalog entries had never run at sf1, and the round-8 ANN knee
+Before this sweep only the dedup / contamination / ANN families had
+run at sf1, and the round-8 ANN knee
 proved sf0.1 can hide saturation (a fixed LSH geometry looked fine at
 sf0.1 and fell off a 36× cliff at sf1).  This sweep times EVERY
 registered query at both tiers under the fresh-plan thunk protocol and
@@ -43,7 +43,12 @@ import time
 
 from pyspark.sql import SparkSession
 
-from graphdb_for_drones_spark.bench_sf1 import SF01_DIR, SF1_DIR
+from graphdb_for_drones_spark.catalog import DEFAULT_SF_DIR as SF01_DIR
+
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF1_DIR = os.environ.get(
+    "SPARK_GRAFT_SF1_DIR", os.path.join(_REPO_ROOT, "spark-warehouse", "sf1")
+)
 
 TIMEOUT_S = float(os.environ.get("SPARK_GRAFT_SWEEP_TIMEOUT", "600"))
 # entries whose sf1 wall is below this are overhead-bound: their ratio
@@ -51,7 +56,6 @@ TIMEOUT_S = float(os.environ.get("SPARK_GRAFT_SWEEP_TIMEOUT", "600"))
 FLOOR_SEC = 2.0
 FLAG_RATIO = 3.0
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RESULTS_PATH = os.path.join(_REPO_ROOT, "bench_catalog_sf1_results.json")
 
 
@@ -74,7 +78,7 @@ def ensure_sf1_full(spark: SparkSession, regen: bool = False) -> str:
 def timed_query(
     spark: SparkSession, fn, sf_dir: str, timeout_s: float = TIMEOUT_S
 ) -> dict:
-    """Warm run + timed run of a fresh plan each (the bench_sf1 thunk
+    """Warm run + timed run of a fresh plan each (the fresh-plan thunk
     protocol), under a cancellable job group.  Returns
     {sec, rows} | {error} | {error: 'timeout', sec}."""
     out: dict = {}

@@ -24,6 +24,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdb_for_drones_spark.operators._pin import pin, pin_state
 from graphdb_for_drones_spark.streaming.cdc import (
     apply_cdc_batch,
     encode_envelope,
@@ -102,9 +103,13 @@ def make_change_log(
     for i in range(n_delete):
         rows.append((cid, "d", i, None, t0_ms + cid))
         cid += 1
-    return spark.createDataFrame(
-        rows, "change_id long, op string, id long, payload string, ts_ms long"
-    ).coalesce(8).localCheckpoint()
+    # pinned JVM-side: the tuple frame is Python-RDD-backed, and every
+    # replay batch re-scans it
+    return pin(
+        spark.createDataFrame(
+            rows, "change_id long, op string, id long, payload string, ts_ms long"
+        ).coalesce(8)
+    )
 
 
 def bench_capture_apply(spark: SparkSession, runs: int = 3) -> dict:
@@ -178,7 +183,7 @@ def bench_recovery(spark: SparkSession, backlog: int = 5_000) -> dict:
         rows = chunk.select(F.max("change_id").alias("m"), F.count(F.lit(1)).alias("n")).first()
         if not rows.n:
             break
-        state = apply_cdc_batch(state, chunk, seq_col="ts_ms").localCheckpoint()
+        state = pin_state(apply_cdc_batch(state, chunk, seq_col="ts_ms"))
         applied += rows.n
         last_id = rows.m
     wall = time.time() - t0

@@ -19,12 +19,13 @@ from graphdb_for_drones_spark.functions.crypto import (
     canonical_json_bytes,
     make_keypair,
 )
+from graphdb_for_drones_spark.operators._pin import pin
 
 
 def _df(spark: SparkSession, rows, schema) -> DataFrame:
     # materialize JVM-side: fixture tables are scanned repeatedly by the
     # traversal loop and must not respawn Python workers per level
-    return spark.createDataFrame(rows, schema).coalesce(1).localCheckpoint()
+    return pin(spark.createDataFrame(rows, schema).coalesce(1))
 
 
 @dataclass
@@ -145,10 +146,8 @@ def flat_delegation_dist(
 ) -> DataFrame:
     """A3 star, engine-side: every drone points at one HQ."""
     p = partitions or _parts_for(n)
-    return (
-        spark.range(0, n, 1, p)
-        .selectExpr("id AS drone_id", f"'{hq_id}' AS hq_id")
-        .localCheckpoint()
+    return pin(
+        spark.range(0, n, 1, p).selectExpr("id AS drone_id", f"'{hq_id}' AS hq_id")
     )
 
 
@@ -160,14 +159,12 @@ def web_trust_chain_dist(
 ) -> DataFrame:
     """A4 linear chain e0→e1→…→e(n-1)→anchor, engine-side."""
     p = partitions or _parts_for(n)
-    return (
-        spark.range(0, n, 1, p)
-        .selectExpr(
+    return pin(
+        spark.range(0, n, 1, p).selectExpr(
             "concat('did:example:e', id) AS from_did",
             f"CASE WHEN id < {n - 1} THEN concat('did:example:e', id + 1) "
             f"ELSE '{anchor}' END AS to_did",
         )
-        .localCheckpoint()
     )
 
 
@@ -204,12 +201,8 @@ def delegation_hierarchy_edges_dist(
         f"pmod(id, {drones_per_squad})) AS child_id",
         "'Drone' AS child_type",
     )
-    return (
-        reg.unionByName(unit)
-        .unionByName(squad)
-        .unionByName(drone)
-        .repartition(p)
-        .localCheckpoint()
+    return pin(
+        reg.unionByName(unit).unionByName(squad).unionByName(drone).repartition(p)
     )
 
 
@@ -274,27 +267,25 @@ def abac_tables_dist(
         "concat('did:example:u', id) AS did"
     )
     return Abac(
-        user=users.localCheckpoint(),
-        group=spark.range(num_groups)
-        .selectExpr("concat('g', id) AS id")
-        .localCheckpoint(),
-        resource=spark.range(num_groups)
-        .selectExpr("concat('res', id) AS id")
-        .localCheckpoint(),
-        member=spark.range(0, num_users, 1, p)
-        .selectExpr(
-            "concat('did:example:u', id) AS user_did",
-            f"concat('g', pmod(id, {num_groups})) AS group_id",
-        )
-        .localCheckpoint(),
-        subgroup=spark.range(max(num_groups - 1, 0))
-        .selectExpr(
-            "concat('g', id) AS from_id", "concat('g', id + 1) AS to_id"
-        )
-        .localCheckpoint(),
-        permission=spark.range(num_groups)
-        .selectExpr(f"'{top}' AS group_id", "concat('res', id) AS resource_id")
-        .localCheckpoint(),
+        user=pin(users),
+        group=pin(spark.range(num_groups).selectExpr("concat('g', id) AS id")),
+        resource=pin(spark.range(num_groups).selectExpr("concat('res', id) AS id")),
+        member=pin(
+            spark.range(0, num_users, 1, p).selectExpr(
+                "concat('did:example:u', id) AS user_did",
+                f"concat('g', pmod(id, {num_groups})) AS group_id",
+            )
+        ),
+        subgroup=pin(
+            spark.range(max(num_groups - 1, 0)).selectExpr(
+                "concat('g', id) AS from_id", "concat('g', id + 1) AS to_id"
+            )
+        ),
+        permission=pin(
+            spark.range(num_groups).selectExpr(
+                f"'{top}' AS group_id", "concat('res', id) AS resource_id"
+            )
+        ),
     )
 
 
@@ -426,11 +417,47 @@ def skewed_corpus_dist(
     )
 
 
+def scaled_documents(spark: SparkSession, sf_dir: str, factor: int) -> DataFrame:
+    """``factor`` copies of a scale factor's ``documents`` table.  Copy 0
+    is verbatim; copy c>0 re-keys doc_ids by ``c * 10_000_000`` and
+    prefixes every word with a copy tag (``c7w…``), so within a copy the
+    shingle sets are a bijective renaming of the base corpus (every
+    exact-jaccard relationship holds copy by copy) and across copies no
+    two documents share a shingle: exact-semantics plans return exactly
+    ``factor ×`` the base rows, and every shingle's document frequency
+    stays unchanged as the corpus grows."""
+    import os as _os
+
+    from pyspark.sql import functions as F
+
+    base = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet"))
+    parts = []
+    for c in range(factor):
+        text = (
+            F.col("text")
+            if c == 0
+            else F.regexp_replace(F.col("text"), r"(\S+)", f"c{c}w$1")
+        )
+        parts.append(
+            base.select(
+                (F.col("doc_id") + F.lit(c * 10_000_000)).alias("doc_id"),
+                text.alias("text"),
+                "lang",
+                "source",
+                "n_chars",
+            )
+        )
+    df = parts[0]
+    for p in parts[1:]:
+        df = df.unionByName(p)
+    return df.repartition(32)
+
+
 def scaled_embeddings_dist(
     spark: SparkSession, sf_dir: str, factor: int, copy_stride: int = 10_000_000
 ) -> DataFrame:
     """``factor`` copies of a scale factor's ``embeddings`` table — the
-    embedding twin of ``bench_scale.scaled_documents``.  Copy 0 is
+    embedding twin of ``scaled_documents``.  Copy 0 is
     verbatim; copy c>0 re-keys vec_ids and flips coordinate signs by the
     WALSH-HADAMARD pattern ``(-1)^popcount(c & i)``.  A per-copy sign
     pattern cancels inside every within-copy dot product, so norms and
@@ -505,8 +532,6 @@ def write_scaled_sf(
     directories so every measurement reads from disk exactly like the
     driver testdata."""
     import os as _os
-
-    from graphdb_for_drones_spark.bench_scale import scaled_documents
 
     _os.makedirs(out_dir, exist_ok=True)
     scaled_documents(spark, base_sf_dir, factor).write.mode(

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphdb_for_drones_spark.operators._pin import pin
+
 
 def _keys_df(base: DataFrame, keys, key_col: str) -> DataFrame:
     if isinstance(keys, DataFrame):
@@ -174,7 +176,7 @@ def diff_as_changes(
     # window (a Window.orderBy with no partition funnels the whole diff
     # through one task): materialize the diff once, then assign the
     # bucketed distributed rank (ids are unique within a diff)
-    changes = changes.localCheckpoint()
+    changes = pin(changes)
     ranked, _total = bucketed_rank(changes.select("id"), "id")
     # plain equi join on id — AQE picks broadcast only when the diff is
     # actually small (a full-table diff is not)

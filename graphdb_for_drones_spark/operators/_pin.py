@@ -1,4 +1,4 @@
-"""Shared pinning policy for small, multiply-consumed aggregates.
+"""The one materialization policy: every engine pin goes through here.
 
 ReuseExchange dedups only the SHUFFLE below an aggregate: each plan
 consumer re-executes the post-shuffle aggregation, so posting/bucket
@@ -6,6 +6,21 @@ tables with 3-4 consumers pay the aggregate 3-4× (PERF.md round 8,
 simhash family 5.2 → 3.9 s isolated).  Pinning materializes the rows
 once so every consumer is a scan.  Row-based checkpoints, NOT
 ``.persist()`` — the columnar cache is ~20× slower on array columns.
+
+Which call a frame gets depends on why it is materialized:
+
+- ``pin`` when the pin only saves re-execution: fixture tables, static
+  edge lists, posting tables, per-batch guard frames.  Recomputing the
+  frame would give the same rows, so the policy may skip the pin (a
+  non-local master without a checkpoint dir, ``SPARK_GRAFT_NO_PIN``).
+- ``pin_state`` when correctness depends on the rows never being
+  recomputed: superstep and frontier state, churn snapshots, selections
+  frozen across rounds, CDC recovery state.  Always cuts lineage.
+- nothing for a frame that is already driver-local
+  (``traversal._local_df``): it is a local relation, re-read for free.
+
+No module outside this one calls ``localCheckpoint`` or ``checkpoint``
+(``tests/test_pin_policy.py`` enforces it).
 """
 
 from __future__ import annotations
@@ -52,13 +67,16 @@ def pin(df: DataFrame, *, eager: bool = True) -> DataFrame:
 
 
 def pin_state(df: DataFrame) -> DataFrame:
-    """Materialize iterative loop state; ALWAYS truncates lineage.
+    """Materialize rows that must not be recomputed; ALWAYS truncates
+    lineage.
 
     ``pin`` may return ``df`` unchanged, which is safe for a frame with
-    a few consumers but not for superstep state: the next superstep
-    reads the state more than once (a semi-join on each edge endpoint),
-    so unpinned, round r's plan holds 2^r copies of round 1 and every
-    count re-runs all earlier rounds.  Hence no opt-out here
+    a few consumers but not for state: superstep and frontier state (the
+    next superstep reads it more than once — a semi-join on each edge
+    endpoint — so unpinned, round r's plan holds 2^r copies of round 1
+    and every count re-runs all earlier rounds), a committed snapshot or
+    a selection that later rounds must see frozen while its source
+    changes, and the running CDC state.  Hence no opt-out here
     (``SPARK_GRAFT_NO_PIN`` is ignored): a reliable checkpoint on a
     non-local master with a checkpoint dir, ``localCheckpoint``
     otherwise — its blocks are lost with their executor, but without

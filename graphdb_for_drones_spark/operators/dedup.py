@@ -54,7 +54,7 @@ def _plan_has_shuffle(df: DataFrame) -> bool:
     return re.search(r"\bExchange\b", plan) is not None
 
 
-def _spread_input(df: DataFrame, *cols: str) -> DataFrame:
+def _spread_input(df: DataFrame, *cols: str, pin: bool = False) -> DataFrame:
     """Repartition a narrow projection up to the cluster's parallelism when
     the source arrives in fewer splits (a single small parquet file reads
     as ONE partition, which would serialize all shingle/hash CPU work onto
@@ -64,39 +64,28 @@ def _spread_input(df: DataFrame, *cols: str) -> DataFrame:
     The partition probe runs only on shuffle-free plans (scans, pinned
     frames): a post-shuffle frame is already at cluster parallelism, and
     probing it via ``.rdd`` would eagerly materialize its query stages
-    (ADVICE r12)."""
+    (ADVICE r12).
+
+    ``pin=True`` also pins the spread projection (``_pin.pin``), ONLY
+    when a spread actually occurred.  Why: predicate pushdown substitutes
+    projected aliases into filters and pushes them through Project AND
+    Repartition nodes, so a filter on a derived column (quality score,
+    gopher flags) re-evaluates the whole fold BELOW the spread exchange —
+    single-threaded on a 1-split source (profiled: a 1-task 1.4 s CPU
+    stage under curation_pipeline_stats while 31 cores idled).  Pinning
+    turns the spread into an ExistingRDD scan: pushed filters land on the
+    parallel materialized blocks, and multiple plan consumers (dedup
+    keyed/keepers, the pipeline's three legs) read the blocks instead of
+    re-scanning the source."""
     sel = df.select(*cols)
     target = df.sparkSession.sparkContext.defaultParallelism
     if not _plan_has_shuffle(sel) and sel.rdd.getNumPartitions() < target:
         sel = sel.repartition(target)
-    return sel
+        if pin:
+            # the keyword shadows the module-level ``pin``
+            from graphdb_for_drones_spark.operators._pin import pin as pin_df
 
-
-def _spread_pinned(df: DataFrame, *cols: str) -> DataFrame:
-    """``_spread_input`` + ``pin``, pinning ONLY when a spread actually
-    occurred (single-split source).
-
-    Why: predicate pushdown substitutes projected aliases into filters
-    and pushes them through Project AND Repartition nodes, so a filter
-    on a derived column (quality score, gopher flags) re-evaluates the
-    whole fold BELOW the spread exchange — single-threaded on a 1-split
-    source (profiled: a 1-task 1.4 s CPU stage under
-    curation_pipeline_stats while 31 cores idled).  Pinning the spread
-    projection turns it into an ExistingRDD scan: pushed filters land
-    on the parallel materialized blocks, and multiple plan consumers
-    (dedup keyed/keepers, the pipeline's three legs) read the blocks
-    instead of re-scanning the source.
-
-    Scale honesty: a source with >= cluster-parallelism splits (>= ~4 GB
-    at default maxPartitionBytes) never spreads, so nothing is ever
-    pinned at real corpus scale — this is a no-op there, exactly like
-    ``_spread_input`` itself."""
-    from graphdb_for_drones_spark.operators._pin import pin
-
-    sel = df.select(*cols)
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if not _plan_has_shuffle(sel) and sel.rdd.getNumPartitions() < target:
-        sel = pin(sel.repartition(target))
+            sel = pin_df(sel)
     return sel
 
 

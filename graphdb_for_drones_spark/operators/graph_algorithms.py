@@ -44,20 +44,17 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    cache_edges: bool = True,
 ) -> DataFrame:
     """Standard PageRank, one superstep per iteration:
     contribution = rank/out_degree flows along edges; new rank =
     (1-d) + d * Σ incoming.  Returns (id, rank) — un-normalized
     GraphX-convention ranks (sum ≈ N)."""
-    verts = (
+    verts = pin(
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint()
     )
-    if cache_edges:
-        edges = edges.select("src", "dst").persist()
+    edges = edges.select("src", "dst").persist()
     out_deg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -72,19 +69,16 @@ def pagerank(
             )
         )
         summed = contribs.groupBy("id").agg(F.sum("contrib").alias("s"))
-        ranks = (
-            verts.join(summed, "id", "left")
-            .select(
+        ranks = pin_state(
+            verts.join(summed, "id", "left").select(
                 "id",
                 (
                     F.lit(1 - damping)
                     + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
                 ).alias("rank"),
             )
-            .localCheckpoint()
         )
-    if cache_edges:
-        edges.unpersist()
+    edges.unpersist()
     return ranks
 
 
@@ -94,7 +88,6 @@ def pagerank_fixed_point(
     damping_num: int = 17,
     damping_den: int = 20,
     scale: int = 10**12,
-    cache_edges: bool = True,
 ) -> DataFrame:
     """PageRank in FIXED-POINT INTEGER arithmetic — the hash-checkable
     twin of :func:`pagerank`.
@@ -139,18 +132,17 @@ def pagerank_fixed_point(
     # the degree-annotated edge list materialized ONCE — it is static
     # across supersteps, so each iteration is left with exactly one
     # join (rank → edges on src) and one partial-aggregated Σ on dst
-    deg_edges = edges.select(
-        "src",
-        "dst",
-        F.count(F.lit(1)).over(Window.partitionBy("src")).alias("deg"),
+    deg_edges = pin(
+        edges.select(
+            "src",
+            "dst",
+            F.count(F.lit(1)).over(Window.partitionBy("src")).alias("deg"),
+        )
     )
-    if cache_edges:
-        deg_edges = deg_edges.localCheckpoint()
-    verts = (
+    verts = pin(
         deg_edges.select(F.col("src").alias("id"))
         .unionByName(deg_edges.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint()
     )
     base = (scale * (damping_den - damping_num)) // damping_den
     ranks = verts.withColumn("rank_fp", F.lit(scale).cast("long"))
@@ -173,7 +165,7 @@ def pagerank_fixed_point(
         # unrolled plan compiles into one job; eager per-iteration
         # checkpoints dominate wall-clock on dimension-sized graphs
         if (i + 1) % 4 == 0 and (i + 1) < iterations:
-            ranks = ranks.localCheckpoint()
+            ranks = pin_state(ranks)
     return ranks.select(
         "id",
         "rank_fp",
@@ -228,7 +220,6 @@ def _components_driver(edges: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 20,
-    cache_edges: bool = True,
     small_graph_edges: int = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """Label-propagation connected components (undirected): every node
@@ -244,20 +235,19 @@ def connected_components(
         # materialize once BEFORE the size probe: edges are typically an
         # expensive pair-join output, and both the probe and whichever
         # path wins would otherwise re-execute that plan (scalar-typed
-        # rows — the no-array-cache rule doesn't apply)
-        edges = edges.select("src", "dst").localCheckpoint()
+        # rows — the no-array-cache rule doesn't apply); the count
+        # below materializes the pin
+        edges = pin(edges.select("src", "dst"), eager=False)
         if edges.count() <= small_graph_edges:
             return _components_driver(edges)
     sym = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    if cache_edges:
-        sym = sym.persist()
-    labels = (
+    sym = sym.persist()
+    labels = pin_state(
         sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
-        .localCheckpoint()
     )
     for _ in range(max_iterations):
         nbr_min = (
@@ -266,16 +256,14 @@ def connected_components(
             .groupBy("id")
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_labels = (
-            labels.join(nbr_min, "id", "left")
-            .select(
+        new_labels = pin_state(
+            labels.join(nbr_min, "id", "left").select(
                 "id",
                 F.least(
                     F.col("component"),
                     F.coalesce(F.col("nbr_component"), F.col("component")),
                 ).alias("component"),
             )
-            .localCheckpoint()
         )
         changed = (
             new_labels.alias("n")
@@ -286,8 +274,7 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
-    if cache_edges:
-        sym.unpersist()
+    sym.unpersist()
     return labels
 
 
@@ -296,56 +283,22 @@ def trust_propagation(
     anchor: str,
     decay: float = 0.5,
     max_depth: int = 6,
-    early_exit: bool = True,
 ) -> DataFrame:
     """Web-of-trust scoring: trust flows OUT from the anchor along
     CROSSED_SIGNED edges with per-hop decay; a node's score is the max
     over paths (order-independent, idempotent — safe under the BFS's
     multiplicity).  Returns (id, trust) for reached nodes.
     The graph analog of the reference's path-count trust query
-    (04_web_of_trust/benchmark_scenario_d.py:200-203).
-
-    ``early_exit=False`` runs exactly ``max_depth`` fixed supersteps
-    with NO per-hop convergence actions: the frontier re-expands every
-    reached node each hop and ``best`` is a max-merge — identical
-    output (max over paths is monotone and idempotent), but each hop is
-    one join + one aggregation instead of join + improvement anti-join
-    + count action + two checkpoints.  The right mode for small fixed
-    depths (the catalog entry measured 4.3 → ~1.5 s at depth 4); keep
-    the default for deep/converging propagation where the shrinking
-    improved-frontier is the win."""
+    (04_web_of_trust/benchmark_scenario_d.py:200-203).  Each hop
+    expands only the nodes whose trust improved, and the loop stops
+    early once no node improves."""
     from graphdb_for_drones_spark.traversal import _local_df
 
     frontier = _local_df(
         edges.sparkSession, [(anchor, 1.0)], "id string, trust double"
-    ).localCheckpoint()
+    )
     edges = edges.select("src", "dst").persist()
     best = frontier
-    if not early_exit:
-        # each level is referenced TWICE (next hop's expansion + the
-        # final merge); Spark re-executes shared subplans per reference,
-        # so an uncheckpointed chain re-evaluates lower levels
-        # combinatorially — one eager localCheckpoint per level keeps
-        # the work linear (max_depth small jobs + one merge action)
-        levels = [frontier]
-        for _ in range(max_depth):
-            frontier = (
-                edges.join(F.broadcast(frontier), edges["src"] == frontier["id"])
-                .select(
-                    F.col("dst").alias("id"),
-                    (F.col("trust") * decay).alias("trust"),
-                )
-                .groupBy("id")
-                .agg(F.max("trust").alias("trust"))
-                .localCheckpoint()
-            )
-            levels.append(frontier)
-        best = levels[0]
-        for lv in levels[1:]:
-            best = best.unionByName(lv)
-        best = best.groupBy("id").agg(F.max("trust").alias("trust"))
-        edges.unpersist()
-        return best
     for _ in range(max_depth):
         nxt = (
             edges.join(F.broadcast(frontier), edges["src"] == frontier["id"])
@@ -357,18 +310,17 @@ def trust_propagation(
             .agg(F.max("trust").alias("trust"))
         )
         # keep only improvements over current best (monotone → terminates)
-        improved = (
+        improved = pin_state(
             nxt.alias("n")
             .join(best.alias("b"), "id", "left")
             .filter(
                 F.col("b.trust").isNull() | (F.col("n.trust") > F.col("b.trust"))
             )
             .select("id", F.col("n.trust").alias("trust"))
-            .localCheckpoint()
         )
         if improved.count() == 0:
             break
-        best = (
+        best = pin_state(
             best.alias("b")
             .join(improved.alias("i"), "id", "left")
             .select(
@@ -380,7 +332,6 @@ def trust_propagation(
             .unionByName(
                 improved.join(best.select("id"), "id", "left_anti")
             )
-            .localCheckpoint()
         )
         frontier = improved
     edges.unpersist()
@@ -557,9 +508,9 @@ def temporal_reach(
 
     frontier = _local_df(
         spark, [(anchor, -(1 << 62), 0)], "id string, arrival long, hops int"
-    ).localCheckpoint()
-    # defer the best-merge to ONE final aggregation (the fixed-depth
-    # trust_propagation lesson): per-level min-arrival frontiers are
+    )
+    # defer the best-merge to ONE final aggregation: per-level
+    # min-arrival frontiers are
     # exactly what the next hop must expand — an earlier arrival at a
     # node strictly dominates (every t > later is also > earlier) — and
     # the global earliest arrival per node is the min over levels, so
@@ -568,7 +519,7 @@ def temporal_reach(
     # hop + final merge).
     levels = [frontier]
     for _ in range(max_hops):
-        frontier = (
+        frontier = pin_state(
             e.join(F.broadcast(frontier), e["src"] == frontier["id"])
             .filter(F.col("__t") > F.col("arrival"))
             .groupBy(F.col("dst").alias("id"))
@@ -576,7 +527,6 @@ def temporal_reach(
                 F.min("__t").alias("arrival"),
                 (F.min(F.struct(F.col("__t"), (F.col("hops") + 1).alias("h")))["h"]).alias("hops"),
             )
-            .localCheckpoint()
         )
         levels.append(frontier)
     best = levels[0]
@@ -754,7 +704,7 @@ def cooccurrence_similarity(
     if n_items_hint is not None and n_items_hint <= dense_items_threshold:
         # match the posting path's null handling (collect_list drops
         # null items) before anything is counted or collected
-        e = e.filter(F.col("__i").isNotNull()).localCheckpoint()
+        e = pin(e.filter(F.col("__i").isNotNull()))
         # BOUNDED probe before any driver collect: a hint lying about a
         # 50M-item column must fall back without pulling the item set
         # (or anything item-sized) onto the driver
@@ -768,7 +718,7 @@ def cooccurrence_similarity(
                 e, k, items, e.schema["__i"].dataType
             )
     # ONE pass over the (possibly expensive) edge input: the unfiltered
-    # posting table is pinned via localCheckpoint and BOTH consumers —
+    # posting table is pinned once and BOTH consumers —
     # pair enumeration and item degrees — derive from it (a frame
     # referenced twice re-executes its upstream pipeline; the trade
     # entry's join+distinct source ran twice before, 6.7 → 6.0 s at
@@ -776,10 +726,8 @@ def cooccurrence_similarity(
     # this path is inherent: every one of the C(1000,2) supplier pairs
     # shares a customer on this graph.  The dense branch above removes
     # it when the item dimension is asserted small.)
-    posting_all = (
-        e.groupBy("__g")
-        .agg(F.sort_array(F.collect_list("__i")).alias("ids"))
-        .localCheckpoint()
+    posting_all = pin(
+        e.groupBy("__g").agg(F.sort_array(F.collect_list("__i")).alias("ids"))
     )
     if max_pairs is not None:
         # exact Σ_g C(d_g, 2) in one scan of the pinned posting table —
@@ -1038,21 +986,18 @@ def weighted_sssp(
     one join + one min-agg over the best-so-far table — node-bounded,
     never path-bounded (a recursive path enumeration explodes
     combinatorially on dense graphs; relaxation cannot).  The best
-    table localCheckpoints per round (small: one row per reached node).
+    table is loop state, pinned per round with ``pin_state`` (small: one
+    row per reached node).
     """
     spark = edges.sparkSession
     # pin the edge list once: it is re-referenced every round, and an
     # expensive upstream (join + groupBy weight derivation) would
     # otherwise re-execute per superstep (measured 5.4 → 3.5 s on the
     # trade entry at sf0.1)
-    e = edges.select(
-        "src", "dst", F.col("w").cast("long").alias("w")
-    ).localCheckpoint()
+    e = pin(edges.select("src", "dst", F.col("w").cast("long").alias("w")))
     from graphdb_for_drones_spark.traversal import _local_df
 
-    best = _local_df(
-        spark, [(source, 0)], "id string, cost long"
-    ).localCheckpoint()
+    best = _local_df(spark, [(source, 0)], "id string, cost long")
     # the best-so-far table is node-dimension-sized while e is the edge
     # table: broadcasting best makes each superstep's relaxation a
     # map-side join over the PINNED edges (no per-round edge shuffle;
@@ -1088,10 +1033,7 @@ def weighted_sssp(
             e.join(maybe_bcast(best, small), e["src"] == best["id"])
             .select(F.col("dst").alias("id"), (F.col("cost") + F.col("w")).alias("cost"))
         )
-        best = (
-            best.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("cost").alias("cost"))
-            .localCheckpoint()
+        best = pin_state(
+            best.unionByName(relaxed).groupBy("id").agg(F.min("cost").alias("cost"))
         )
     return best

@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from graphdb_for_drones_spark.operators._pin import pin
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -303,7 +305,7 @@ def fake_media_table(spark, n: int = 32, kind: str = "image") -> DataFrame:
         )
         for i in range(n)
     ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(1).localCheckpoint()
+    return pin(spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(1))
 
 
 RESIZED_SCHEMA = StructType(

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graphdb_for_drones_spark.operators._pin import pin
+
 
 def hll_build(
     df: DataFrame,
@@ -233,11 +235,11 @@ def bloom_probe_counts(
     Both the filter and the distinct probe set are referenced twice in
     this plan (join + key rows; positions + total) and both are
     sketch-/probe-sized by design, so they are pinned once with
-    localCheckpoint — without it the whole upstream build pipeline
+    ``_pin.pin`` — without it the whole upstream build pipeline
     (shingle + hash + bit-OR over the full corpus) re-executes per
     reference (re-execution measured ~1 s on the catalog entry; the shingle-string build dominated — see the entry's staging note)."""
-    bloom = bloom.localCheckpoint()
-    elems = probes.select(F.col(elem_col).alias("g")).distinct().localCheckpoint()
+    bloom = pin(bloom)
+    elems = pin(probes.select(F.col(elem_col).alias("g")).distinct())
     pos = elems.select(
         "g", _bloom_base(F.col("g"), family).alias("__h")
     ).select(

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graphdb_for_drones_spark.operators._pin import pin
+
 
 def asof_join(
     left: DataFrame,
@@ -243,9 +245,11 @@ def resample_counts(
     # frame, and an unpinned double reference re-scans the events
     # source twice (the multi-reference rule); post-aggregation it is
     # bucket-count sized
-    counts = df.select(
-        F.col(group_col).alias("grp"), bucket, *([value_col] if value_col else [])
-    ).groupBy("grp", "bucket_start").agg(*aggs).localCheckpoint()
+    counts = pin(
+        df.select(
+            F.col(group_col).alias("grp"), bucket, *([value_col] if value_col else [])
+        ).groupBy("grp", "bucket_start").agg(*aggs)
+    )
     bounds = counts.groupBy("grp").agg(
         F.min("bucket_start").alias("__lo"), F.max("bucket_start").alias("__hi")
     )

@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphdb_for_drones_spark.operators._pin import pin
+
 STOPWORDS = ("the", "a", "of", "and", "in", "to", "is")
 
 # tiny marker-word lists for the n-gram/marker language-ID heuristic;
@@ -513,7 +515,7 @@ def bpe_train_list(
     order; stops early if a round finds no pair.  Distribution shape
     (the classic trainer optimization): the corpus collapses ONCE to
     the distinct-word VOCABULARY with occurrence counts
-    (one shuffle, then localCheckpoint), and every round scans |vocab|
+    (one shuffle, then one pin), and every round scans |vocab|
     rows — not |corpus| tokens — weighting each word's pairs by its
     count.  At 100 TB the token stream is the corpus but the vocabulary
     is ~millions of rows: rounds cost O(|vocab|), the whole train is
@@ -525,11 +527,10 @@ def bpe_train_list(
     codegen replaces rather than materializing the vocab per round.
     Measured at sf0.1 (6 merges, local[32]): 3.3 s on the token stream
     → see PERF.md for the vocab-path number."""
-    vocab = (
+    vocab = pin(
         df.select(F.explode(_bpe_words(text_col)).alias("__word"))
         .groupBy("__word")
         .agg(F.count(F.lit(1)).cast("long").alias("__wc"))
-        .localCheckpoint()
     )
 
     # r12 optimization (guide §1.2 — remove unnecessary passes): each

@@ -1066,7 +1066,7 @@ def q_curation_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercising the round-5 operators as pipeline stages rather than
     stand-alone reports."""
     from graphdb_for_drones_spark.operators.dedup import (
-        _spread_pinned,
+        _spread_input,
         normalize_text,
     )
     from graphdb_for_drones_spark.operators.text import token_count
@@ -1079,8 +1079,8 @@ def q_curation_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # another 1-task scan.  One pinned spread projection feeds all
     # three legs: pushed filters land on the parallel materialized
     # blocks, and the corpus is scanned once, not three times.  No-op
-    # (no pin, no exchange) at real corpus scale — see _spread_pinned.
-    docs = _spread_pinned(cat.documents, "doc_id", "source", "text")
+    # (no pin, no exchange) at real corpus scale — see _spread_input.
+    docs = _spread_input(cat.documents, "doc_id", "source", "text", pin=True)
     ok = curation.gopher_rule_flags(docs).filter(
         F.col("pass_word_count")
         & F.col("pass_word_len")

@@ -1758,8 +1758,8 @@ FROM od FULL OUTER JOIN ind ON od.id = ind.id
 
 
 def q_trade_trust_from_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Web-of-trust scoring over the UNDIRECTED trade graph
-    (operators/graph_algorithms.trust_propagation): trust flows out
+    """Web-of-trust scoring over the UNDIRECTED trade graph, run on the
+    node-mode BFS kernel (``traversal.reachable_counts``): trust flows out
     from customer c1 with per-hop decay 1/2, a node's score is the max
     over paths = decay^(BFS min depth).  decay=0.5 makes every score an
     EXACT power of two (0.5·x is exact in IEEE) and max over exact
@@ -1771,8 +1771,8 @@ def q_trade_trust_from_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = Catalog(spark, sf_dir)
     # r12 optimization (guide §1.2): with decay < 1, max-over-paths ==
-    # decay^(BFS min depth) — exactly what the oracle computes — so the
-    # fixed-superstep trust_propagation (4 full-edge relaxations; every
+    # decay^(BFS min depth) — exactly what the oracle computes — so a
+    # fixed-superstep trust propagation (4 full-edge relaxations; every
     # hop re-expands every reached node) is replaced by the node-mode
     # BFS kernel (each node expanded ONCE, at its min level) plus the
     # exact 2^-level map (0.5^k is one exact IEEE value; the shiftleft

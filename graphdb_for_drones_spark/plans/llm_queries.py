@@ -1760,10 +1760,10 @@ def q_corpus_curation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exchange by alias substitution).  The pinned spread projection
     # parallelizes the pushed filter AND lets keyed's two consumers
     # (left side + keepers) share one materialization instead of two
-    # scans.  No-op at real corpus scale — see _spread_pinned.
-    from graphdb_for_drones_spark.operators.dedup import _spread_pinned
+    # scans.  No-op at real corpus scale — see _spread_input.
+    from graphdb_for_drones_spark.operators.dedup import _spread_input
 
-    scored = _spread_pinned(cat.documents, "doc_id", "text").filter(
+    scored = _spread_input(cat.documents, "doc_id", "text", pin=True).filter(
         quality_score(F.col("text")) >= 0.5
     )
     keyed = scored.withColumn("__h", F.md5(normalize_text(F.col("text"))))

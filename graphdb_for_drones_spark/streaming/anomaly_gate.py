@@ -8,7 +8,7 @@ moments, the batch entry's arithmetic) and flagged rows append to a
 quarantine table before the events reach downstream aggregates.
 
 Shape: the stats table is SMALL (one row per key) — pinned once with
-``localCheckpoint`` and re-joined (broadcastable) against each
+``_pin.pin`` and re-joined (broadcastable) against each
 micro-batch inside ``foreachBatch``.  No state accumulates beyond the
 written flags.  Writes are idempotent per micro-batch WITHIN one
 checkpoint lineage: each batch's flags land in a ``batch_id=<n>``
@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from graphdb_for_drones_spark.operators._pin import pin
 
 
 def reference_stats(
@@ -134,7 +136,7 @@ def start_anomaly_gate(
             "partition) quarantine files; mixing layouts makes the dir "
             "unreadable — point the gate at a fresh out_dir"
         )
-    pinned = stats.localCheckpoint()
+    pinned = pin(stats)
     apply_batch = make_apply_batch(
         pinned, out_dir, key_col, value_col, n_sigma
     )

@@ -25,6 +25,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdb_for_drones_spark.operators._pin import pin_state
 from graphdb_for_drones_spark.operators.sketches import hist_build, hll_build
 
 
@@ -42,7 +43,9 @@ def _merge_and_overwrite(
     # (A transactional table format — e.g. Delta — would make this a
     # real atomic commit; plain parquet gets the rename discipline.)
     tmp = f"{state_dir}.tmp.{os.getpid()}"
-    merged.localCheckpoint().write.mode("overwrite").parquet(tmp)
+    # the merged rollup is the running state: pin_state cuts its lineage
+    # to the live state dir, which the swap below moves aside
+    pin_state(merged).write.mode("overwrite").parquet(tmp)
     old = f"{state_dir}.old.{os.getpid()}"
     if os.path.exists(state_dir):
         os.rename(state_dir, old)

@@ -8,7 +8,7 @@ compared against the held-out eval set's shingle index, and flagged
 the documents ever reach a training shard.
 
 Shape: the eval index is STATIC and small (benchmarks are thousands of
-docs, not billions) — built once, ``localCheckpoint``-pinned, and
+docs, not billions) — built once, pinned with ``_pin.pin``, and
 re-joined against each micro-batch's freshly shingled side inside
 ``foreachBatch``.  Per-batch cost is one broadcastable join of batch
 shingles against the eval index; nothing is quadratic in corpus size
@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphdb_for_drones_spark.operators import curation
+from graphdb_for_drones_spark.operators._pin import pin
 
 
 def make_apply_batch(
@@ -99,9 +100,9 @@ def start_contamination_guard(
             "partition) quarantine files; mixing layouts makes the dir "
             "unreadable — point the guard at a fresh out_dir"
         )
-    ev = curation.shingle_index(
-        eval_docs, "eval_id", text_col, id_col, shingle_n
-    ).localCheckpoint()
+    ev = pin(
+        curation.shingle_index(eval_docs, "eval_id", text_col, id_col, shingle_n)
+    )
     apply_batch = make_apply_batch(
         ev, out_dir, threshold, shingle_n, text_col, id_col, metric
     )

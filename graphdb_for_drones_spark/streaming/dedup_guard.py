@@ -45,6 +45,7 @@ from graphdb_for_drones_spark.operators.dedup import (
     minhash_signature_from_hashes,
     with_shingle_hashes,
 )
+from graphdb_for_drones_spark.operators._pin import pin
 from graphdb_for_drones_spark.streaming.util import read_parquet_or_none
 
 
@@ -179,12 +180,10 @@ def make_apply_batch(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # batch-sized: pin it — referenced by self-pairs, the cross
-        # join, and both index appends (localCheckpoint, not columnar
-        # cache: the array-cache rule)
-        signed = _signed(
-            batch_df, text_col, id_col, num_hashes, shingle_n
-        ).localCheckpoint()
-        bkeys = _band_keys(signed, num_hashes, bands).localCheckpoint()
+        # join, and both index appends (a row pin, not columnar cache:
+        # the array-cache rule)
+        signed = pin(_signed(batch_df, text_col, id_col, num_hashes, shingle_n))
+        bkeys = pin(_band_keys(signed, num_hashes, bands))
         sets = signed.select("id", "sh")
 
         within = _verified(

@@ -47,6 +47,7 @@ from graphdb_for_drones_spark.operators.linkage import (
     _pattern_rows,
     substitution_neighborhood_pairs,
 )
+from graphdb_for_drones_spark.operators._pin import pin
 from graphdb_for_drones_spark.streaming.util import read_parquet_or_none
 
 
@@ -106,9 +107,7 @@ def make_apply_batch(
         # batch-sized: pin it — referenced by the within-batch sweep
         # is separate, but the pattern rows feed both the cross join
         # and the index append
-        bpat = _pattern_rows(
-            batch_df, id_col, key_col, max_subs, "r_"
-        ).localCheckpoint()
+        bpat = pin(_pattern_rows(batch_df, id_col, key_col, max_subs, "r_"))
 
         within = substitution_neighborhood_pairs(
             batch_df, id_col, key_col, max_subs

@@ -19,12 +19,12 @@ Execution model (designed for a 1000-executor cluster, tested on local):
 one Spark job per level; the driver only controls the loop — all data
 movement is executor-side joins.  Per level:
 
-* the new frontier is ``localCheckpoint``-ed eagerly: this materializes it
-  (so the loop's empty-frontier early-exit count is a cheap job over
-  cached blocks) AND truncates lineage, which otherwise makes deep
-  traversals quadratic in planning time.  On a long-lived production
-  cluster with executor churn, swap for reliable ``checkpoint()`` to a
-  checkpoint dir — same plan shape.
+* the new frontier is pinned eagerly with ``_pin.pin_state``: this
+  materializes it (so the loop's empty-frontier early-exit count is a
+  cheap job over materialized blocks) AND truncates lineage, which
+  otherwise makes deep traversals quadratic in planning time.  On a
+  non-local master with a checkpoint dir the policy takes a reliable
+  checkpoint instead — same plan shape.
 * frontiers under ``broadcast_threshold`` rows are broadcast so the
   expansion is a map-side join — no shuffle of the (huge) edge table.
   Above the threshold the join falls back to shuffle hash/SMJ, where
@@ -37,6 +37,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from graphdb_for_drones_spark.operators._pin import pin_state
 
 BROADCAST_THRESHOLD = 2_000_000  # frontier rows; ids are short strings
 
@@ -91,7 +93,7 @@ def reachable(
         edges = edges.persist()
     seed_df = _as_seed_df(edges, seeds)
 
-    frontier = (seed_df.distinct() if mode == "node" else seed_df).localCheckpoint()
+    frontier = pin_state(seed_df.distinct() if mode == "node" else seed_df)
     visited = frontier  # node-set mode only
     levels: list[DataFrame] = []
     if include_seed:
@@ -104,7 +106,7 @@ def reachable(
         nxt = expand(frontier, edges, broadcast_frontier=n <= broadcast_threshold)
         if mode == "node":
             nxt = nxt.distinct().join(visited, "node", "left_anti")
-        nxt = nxt.localCheckpoint()  # eager: materialize + cut lineage
+        nxt = pin_state(nxt)  # eager: materialize + cut lineage
         # (sparse checkpointing re-executes the un-materialized segment for
         # every count/broadcast build — measured quadratic; eager-per-level
         # is strictly faster)
@@ -114,7 +116,7 @@ def reachable(
         frontier = nxt
 
     if cache_edges:
-        # safe: every level is an eager localCheckpoint, so the result no
+        # safe: every level is an eager pin_state, so the result no
         # longer references the edge lineage
         edges.unpersist()
     if not levels:
@@ -298,7 +300,7 @@ def reachable_counts(
         return _local_df(spark, local_rows, out_schema)
 
     # distributed continuation: counts-typed variant of the checkpointing
-    # kernel (one job per level, eager localCheckpoint, broadcast frontier
+    # kernel (one job per level, eager pin_state, broadcast frontier
     # under threshold — see `reachable` for the measured rationale)
     edges = edges.persist()
     seeded_from_df = False
@@ -318,7 +320,7 @@ def reachable_counts(
             "node"
         ).agg((F.count(F.lit(1)) if mode == "path" else F.lit(1)).alias("cnt"))
         seeded_from_df = True
-    f_df = f_df.localCheckpoint()
+    f_df = pin_state(f_df)  # loop state, even when seeded from local rows
     parts = [_local_df(spark, local_rows, out_schema)]
     if seeded_from_df and include_seed:
         # level-0 rows for distributed seeds (driver-coordinated seeds put
@@ -347,7 +349,7 @@ def reachable_counts(
             nxt = nxt.select("node", F.lit(1).alias("cnt")).join(
                 visited_df, "node", "left_anti"
             )
-        nxt = nxt.localCheckpoint()
+        nxt = pin_state(nxt)
         if mode == "node":
             visited_df = visited_df.unionByName(nxt.select("node"))
         parts.append(

@@ -29,6 +29,7 @@ from graphdb_for_drones_spark.mutation import (
     bucketed_rank,
     redelegate,
 )
+from graphdb_for_drones_spark.operators._pin import pin_state
 from graphdb_for_drones_spark.snapshots import SnapshotStore
 
 
@@ -41,7 +42,7 @@ def _snapshot(df: DataFrame, store: SnapshotStore | None = None) -> DataFrame:
     # Each snapshot carries a monotonically increasing version so timed
     # reads can record WHICH committed state they measured (SURVEY
     # §7.4-5: the reference interleaves committed chunked updates with
-    # timed reads).  Default: in-session localCheckpoint + counter.
+    # timed reads).  Default: in-session ``pin_state`` + counter.
     # With ``store``, the round commits to the on-disk versioned parquet
     # store instead — the version pin survives a session restart and the
     # yielded DataFrame READS BACK from the committed files (so what the
@@ -51,7 +52,7 @@ def _snapshot(df: DataFrame, store: SnapshotStore | None = None) -> DataFrame:
         out = store.read(df.sparkSession, version)
         out.snapshot_version = version
         return out
-    out = df.localCheckpoint()
+    out = pin_state(df)
     out.snapshot_version = next(_SNAPSHOT_COUNTER)
     return out
 
@@ -98,7 +99,7 @@ def turn_taking(
     round is a durable on-disk version (see ``_snapshot``)."""
     current = _snapshot(delegation, store)
     ranked, total = ranked_keys(current, key_col)
-    ranked = ranked.localCheckpoint()  # selection frozen across rounds
+    ranked = pin_state(ranked)  # selection frozen across rounds
     n_upd = int(total * update_ratio)
     for r in range(rounds):
         target = hq_ids[r % len(hq_ids)]
@@ -122,7 +123,7 @@ def chain_churn(
     HQs, commit, and yield (depth, snapshot) for depth-d measurement."""
     current = _snapshot(delegation, store)
     ranked, total = ranked_keys(current, key_col)
-    ranked = ranked.localCheckpoint()
+    ranked = pin_state(ranked)  # selection frozen across rounds
     n_upd = int(total * update_ratio)
     for i, depth in enumerate(depth_cycle):
         target = hq_ids[i % len(hq_ids)]
@@ -150,7 +151,7 @@ def partition_reconcile(
     the main HQ.  Returns (partitioned_snapshot, reconciled_snapshot)."""
     current = _snapshot(delegation)
     ranked, total = ranked_keys(current, key_col)
-    ranked = ranked.localCheckpoint()
+    ranked = pin_state(ranked)  # selection frozen across rounds
     n_island = int(total * split_ratio)
 
     def island_chunks():

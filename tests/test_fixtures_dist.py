@@ -144,6 +144,19 @@ def test_write_scaled_sf_full_integrity(spark, tmp_path):
     ):
         assert rd(out, t).count() == 3 * rd(base, t).count(), t
 
+    # documents (fixtures.scaled_documents): copy 0 is the base table
+    # verbatim, and no word of a tagged copy c>0 occurs in copy 0, so
+    # the copies share no shingle and exact pair counts scale factor x
+    stride = 10_000_000
+    docs = {r.doc_id: r.text for r in rd(out, "documents").collect()}
+    base_docs = {r.doc_id: r.text for r in rd(base, "documents").collect()}
+    assert {i: t for i, t in docs.items() if i < stride} == base_docs
+    copy0_words = {w for t in base_docs.values() for w in t.split()}
+    shared = {
+        w for i, t in docs.items() if i >= stride for w in t.split()
+    } & copy0_words
+    assert not shared, sorted(shared)[:5]
+
     # keys stay unique after shifting
     for t, k in (
         ("customer", "c_custkey"), ("orders", "o_orderkey"),

@@ -158,27 +158,6 @@ def test_pagerank_fixed_point_rejects_bad_scale(spark):
         pagerank_fixed_point(e, scale=10**12 + 1)
 
 
-def test_trust_propagation_fixed_depth_equals_early_exit(spark):
-    # both modes must produce identical (id, trust) sets — max over
-    # paths is monotone and idempotent, so skipping the convergence
-    # machinery cannot change the fixpoint within the depth budget
-    pairs = [(f"n{i}", f"n{(i * 3 + 1) % 20}") for i in range(40)]
-    e = spark.createDataFrame(
-        pairs + [(b, a) for a, b in pairs], "src string, dst string"
-    ).localCheckpoint()
-    a = sorted(
-        (r.id, r.trust)
-        for r in trust_propagation(e, "n0", decay=0.5, max_depth=4).collect()
-    )
-    b = sorted(
-        (r.id, r.trust)
-        for r in trust_propagation(
-            e, "n0", decay=0.5, max_depth=4, early_exit=False
-        ).collect()
-    )
-    assert a == b
-
-
 def test_k_core_cascading_peel(spark):
     from graphdb_for_drones_spark.operators.graph_algorithms import k_core
 

@@ -1,8 +1,8 @@
 """Skewed-corpus exactness + crossover contract for the PPJoin prefix plan.
 
 VERDICT r3 #7: the prefix filter's win was documented but never measured.
-`bench_prefix.py` measures it; these tests pin the semantics the
-measurement relies on:
+A one-off harness measured it (PERF.md keeps the numbers); these tests
+pin the semantics that measurement relied on:
 
 * the skewed fixture really is two-point power-law in shingle df
   (boilerplate shingles at df = n_docs, the rest at df <= 2);

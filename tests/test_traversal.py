@@ -60,11 +60,17 @@ def test_node_min_level_on_shortcut(spark):
     assert rows == {("D", 1), ("B", 1)}
 
 
-def test_cycle_terminates_node_mode(cycle):
+def test_cycle_terminates_node_mode(cycle, monkeypatch):
     # node mode: seeds are visited, so the cycle closes without re-reporting
-    # A, and the empty frontier stops the loop well before max_depth
-    rows = {(r.node, r.level) for r in reachable(cycle, ["A"], 10).collect()}
-    assert rows == {("B", 1), ("C", 2)}
+    # A, and the empty frontier stops the loop well before max_depth.  The
+    # frontier is state (pin_state), so SPARK_GRAFT_NO_PIN changes nothing
+    for no_pin in (False, True):
+        if no_pin:
+            monkeypatch.setenv("SPARK_GRAFT_NO_PIN", "1")
+        else:
+            monkeypatch.delenv("SPARK_GRAFT_NO_PIN", raising=False)
+        rows = {(r.node, r.level) for r in reachable(cycle, ["A"], 10).collect()}
+        assert rows == {("B", 1), ("C", 2)}, no_pin
 
 
 def test_cycle_path_mode_bounded(cycle):

@@ -77,14 +77,24 @@ def test_no_driver_key_materialization(spark, monkeypatch):
     assert sizes and max(sizes) <= RANK_BUCKETS
 
 
-def test_snapshot_pinning_under_churn(spark, delegation):
-    # a yielded snapshot must be immune to later mutation rounds
-    gen = turn_taking(delegation, ["HQ2", "HQ3"], rounds=2, update_ratio=0.3)
-    s1 = next(gen)
-    n_hq2 = s1.filter(F.col("hq_id") == "HQ2").count()
-    assert n_hq2 == 30
-    s2 = next(gen)  # round 2 re-points the same drones at HQ3
-    assert s2.filter(F.col("hq_id") == "HQ3").count() == 30
-    # the pinned earlier snapshot still reads its own committed state
-    assert s1.filter(F.col("hq_id") == "HQ2").count() == n_hq2
-    assert s1.snapshot_version < s2.snapshot_version
+def test_snapshot_pinning_under_churn(spark, delegation, monkeypatch):
+    # a yielded snapshot must be immune to later mutation rounds.  The
+    # snapshots and the frozen key selection are state pins, so the
+    # SPARK_GRAFT_NO_PIN opt-out must not change a single answer
+    answers = []
+    for no_pin in (False, True):
+        if no_pin:
+            monkeypatch.setenv("SPARK_GRAFT_NO_PIN", "1")
+        else:
+            monkeypatch.delenv("SPARK_GRAFT_NO_PIN", raising=False)
+        gen = turn_taking(delegation, ["HQ2", "HQ3"], rounds=2, update_ratio=0.3)
+        s1 = next(gen)
+        n_hq2 = s1.filter(F.col("hq_id") == "HQ2").count()
+        assert n_hq2 == 30
+        s2 = next(gen)  # round 2 re-points the same drones at HQ3
+        assert s2.filter(F.col("hq_id") == "HQ3").count() == 30
+        # the pinned earlier snapshot still reads its own committed state
+        assert s1.filter(F.col("hq_id") == "HQ2").count() == n_hq2
+        assert s1.snapshot_version < s2.snapshot_version
+        answers.append([sorted(map(tuple, s.collect())) for s in (s1, s2)])
+    assert answers[0] == answers[1]
