@@ -25,6 +25,7 @@ from graphdb_for_drones_spark.graph import DroneGraph, testdata_graph
 from graphdb_for_drones_spark.traversal import (
     path_count_to,
     reachable,
+    reachable_count,
     reachable_counts,
 )
 
@@ -219,7 +220,7 @@ class DroneGraphEngine:
             F.col("hq_id").alias("src"),
             F.col("drone_id").cast("string").alias("dst"),
         )
-        return reachable(edges, [hq_id], depth, mode="path").count()
+        return reachable_count(edges, [hq_id], depth, mode="path")
 
     # -------------------------------------------------------------- #
     def benchmark(self, df: DataFrame, iterations: int = 100, **kw) -> BenchResult:

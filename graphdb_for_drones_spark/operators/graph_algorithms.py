@@ -5,8 +5,9 @@ join/agg form lets Catalyst fuse/optimize each superstep).
 
 These serve the reference's web-of-trust analytics surface: trust
 propagation over CROSSED_SIGNED edges
-(04_web_of_trust/setup_scenario_c.py:75-101), component analysis of the
-delegation fabric, and degree centrality of issuers.
+(04_web_of_trust/setup_scenario_c.py:75-101; a projection of the
+traversal kernel's BFS), component analysis of the delegation fabric,
+and degree centrality of issuers.
 
 Scale notes: each superstep is one shuffle keyed on dst (message
 aggregation).  Supersteps materialize per iteration to cut lineage;
@@ -17,6 +18,9 @@ degenerates to a local combine.
 """
 
 from __future__ import annotations
+
+import operator
+from itertools import accumulate
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -217,28 +221,24 @@ def _components_driver(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 20,
-    small_graph_edges: int = SMALL_GRAPH_EDGES,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFrame:
     """Label-propagation connected components (undirected): every node
     repeatedly adopts the min component id among itself and its
     neighbors; converges in O(diameter) supersteps with an early-exit
     convergence check.  Returns (id, component).
 
-    Edge sets ≤ ``small_graph_edges`` short-circuit to a driver
+    Edge sets ≤ ``SMALL_GRAPH_EDGES`` short-circuit to a driver
     union-find (threshold-guarded, like the traversal kernel's driver
     strategies) — identical result, none of the per-superstep job
     overhead that dominates dimension-sized pair graphs."""
-    if small_graph_edges:
+    if SMALL_GRAPH_EDGES:
         # materialize once BEFORE the size probe: edges are typically an
         # expensive pair-join output, and both the probe and whichever
         # path wins would otherwise re-execute that plan (scalar-typed
         # rows — the no-array-cache rule doesn't apply); the count
         # below materializes the pin
         edges = pin(edges.select("src", "dst"), eager=False)
-        if edges.count() <= small_graph_edges:
+        if edges.count() <= SMALL_GRAPH_EDGES:
             return _components_driver(edges)
     sym = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -286,56 +286,27 @@ def trust_propagation(
 ) -> DataFrame:
     """Web-of-trust scoring: trust flows OUT from the anchor along
     CROSSED_SIGNED edges with per-hop decay; a node's score is the max
-    over paths (order-independent, idempotent — safe under the BFS's
-    multiplicity).  Returns (id, trust) for reached nodes.
+    over paths of length ≤ ``max_depth`` (order-independent, idempotent).
+    Returns (id, trust) for reached nodes, the anchor at 1.0.
     The graph analog of the reference's path-count trust query
-    (04_web_of_trust/benchmark_scenario_d.py:200-203).  Each hop
-    expands only the nodes whose trust improved, and the loop stops
-    early once no node improves."""
-    from graphdb_for_drones_spark.traversal import _local_df
+    (04_web_of_trust/benchmark_scenario_d.py:200-203).
 
-    frontier = _local_df(
-        edges.sparkSession, [(anchor, 1.0)], "id string, trust double"
+    For 0 ≤ decay ≤ 1 the max over paths of decay^len is decay^(min
+    depth), so this is a projection of the node-mode BFS
+    (``traversal.reachable_counts``): each level maps to a driver-computed
+    literal, the product of ``level`` decays.  Outside [0, 1] a longer
+    path can score higher and the equivalence fails, so such a decay
+    raises ValueError."""
+    if not 0 <= decay <= 1:
+        raise ValueError(f"decay must lie in [0, 1], got {decay!r}")
+    trust = accumulate([decay] * max_depth, operator.mul, initial=1.0)
+    levels = traversal.reachable_counts(
+        edges, [anchor], max_depth, mode="node", include_seed=True
     )
-    edges = edges.select("src", "dst").persist()
-    best = frontier
-    for _ in range(max_depth):
-        nxt = (
-            edges.join(F.broadcast(frontier), edges["src"] == frontier["id"])
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("trust") * decay).alias("trust"),
-            )
-            .groupBy("id")
-            .agg(F.max("trust").alias("trust"))
-        )
-        # keep only improvements over current best (monotone → terminates)
-        improved = pin_state(
-            nxt.alias("n")
-            .join(best.alias("b"), "id", "left")
-            .filter(
-                F.col("b.trust").isNull() | (F.col("n.trust") > F.col("b.trust"))
-            )
-            .select("id", F.col("n.trust").alias("trust"))
-        )
-        if improved.count() == 0:
-            break
-        best = pin_state(
-            best.alias("b")
-            .join(improved.alias("i"), "id", "left")
-            .select(
-                "id",
-                F.greatest(
-                    F.col("b.trust"), F.coalesce(F.col("i.trust"), F.lit(0.0))
-                ).alias("trust"),
-            )
-            .unionByName(
-                improved.join(best.select("id"), "id", "left_anti")
-            )
-        )
-        frontier = improved
-    edges.unpersist()
-    return best
+    return levels.select(
+        F.col("node").alias("id"),
+        F.element_at(F.array(*map(F.lit, trust)), F.col("level") + 1).alias("trust"),
+    )
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:

@@ -28,11 +28,7 @@ from pyspark.sql.window import Window
 
 from graphdb_for_drones_spark.catalog import Catalog
 from graphdb_for_drones_spark.graph import testdata_graph
-from graphdb_for_drones_spark.traversal import (
-    path_count_to,
-    reachable,
-    reachable_counts,
-)
+from graphdb_for_drones_spark.traversal import path_count_to, reachable_counts
 
 # --------------------------------------------------------------------- #
 # shared sub-plans

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from graphdb_for_drones_spark.streaming.util import hadoop_fs, read_parquet_or_none
+
 # generic row payload: the reference's items(id, payload/name) table
 ROW_SCHEMA = StructType(
     [
@@ -246,17 +248,21 @@ def start_cdc_apply(
     spark = changes_stream.sparkSession
 
     def apply_batch(batch_df: DataFrame, batch_id: int):
-        try:
-            state = spark.read.parquet(state_path)
-        except Exception:
+        # only a missing state dir means "first batch": any other read
+        # failure (a corrupt part file) must fail the batch, not let it
+        # overwrite the state with its own changes alone
+        state = read_parquet_or_none(spark, state_path)
+        if state is None:
             state = spark.createDataFrame([], ROW_SCHEMA)
         new_state = apply_cdc_batch(state, batch_df)
         # two-phase write: parquet overwrite reads-then-writes the same
-        # path, so stage to a temp dir first
+        # path, so stage to a temp dir first, dropped once copied over
         tmp = state_path.rstrip("/") + f".tmp-{batch_id}"
         new_state.write.mode("overwrite").parquet(tmp)
         staged = spark.read.parquet(tmp)
         staged.write.mode("overwrite").parquet(state_path)
+        fs, jtmp = hadoop_fs(spark, tmp)
+        fs.delete(jtmp, True)
         # drop any cached relation serving the rewritten snapshot
         from graphdb_for_drones_spark.catalog import invalidate_path
 

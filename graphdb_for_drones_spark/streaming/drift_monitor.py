@@ -35,19 +35,13 @@ from graphdb_for_drones_spark.operators.stats import (
     bin_counts,
     drift_from_bin_counts,
 )
+from graphdb_for_drones_spark.streaming.util import hadoop_fs
 
 META_FILE = "_drift_meta.json"  # "_"-prefixed: invisible to parquet scans
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jpath
-
-
 def _write_meta(spark: SparkSession, out_dir: str, meta: dict) -> None:
-    fs, jpath = _hadoop_fs(spark, out_dir.rstrip("/") + "/" + META_FILE)
+    fs, jpath = hadoop_fs(spark, out_dir.rstrip("/") + "/" + META_FILE)
     stream = fs.create(jpath, True)
     try:
         stream.write(bytearray(json.dumps(meta).encode("utf-8")))
@@ -58,7 +52,7 @@ def _write_meta(spark: SparkSession, out_dir: str, meta: dict) -> None:
 def read_meta(spark: SparkSession, out_dir: str) -> dict | None:
     """The monitor's persisted geometry (n_bins, bounds, columns), or
     None for a pre-sidecar directory."""
-    fs, jpath = _hadoop_fs(spark, out_dir.rstrip("/") + "/" + META_FILE)
+    fs, jpath = hadoop_fs(spark, out_dir.rstrip("/") + "/" + META_FILE)
     if not fs.exists(jpath):
         return None
     stream = fs.open(jpath)
@@ -152,7 +146,7 @@ def start_drift_monitor(
     (the reference partition alone is dynamically replaced)."""
     spark = stream_df.sparkSession
     bounds, ref_counts = reference_geometry(ref_df, value_col, n_bins)
-    ckpt_fs, ckpt_path = _hadoop_fs(spark, checkpoint_dir)
+    ckpt_fs, ckpt_path = hadoop_fs(spark, checkpoint_dir)
     fresh_checkpoint = not ckpt_fs.exists(ckpt_path)
     # persist the reference counts beside the stream counts so the
     # report is self-contained (readable without re-deriving geometry)

@@ -3,9 +3,10 @@ lifecycle the catalog's streamed entries run their query under (stage
 the table's files in a fresh local temp root, drain availableNow into a
 memory sink, read the sink, then drop the sink view and remove the
 root); ``staged``, its staging half, for a drain into another sink (the
-drift monitor's foreachBatch); and persistent-index reads that
-distinguish "not created yet" from "broken" (dedup_guard,
-linkage_guard)."""
+drift monitor's foreachBatch); persistent-state reads that distinguish
+"not created yet" from "broken" (dedup_guard, linkage_guard, the CDC
+sink); and the Hadoop FileSystem handle for a path (drift_monitor, the
+CDC sink)."""
 
 from __future__ import annotations
 
@@ -153,3 +154,12 @@ def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
         if ex.getErrorClass() == "PATH_NOT_FOUND":
             return None
         raise
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` JVM handles for ``path`` under the
+    session's Hadoop configuration (local dirs and cluster URIs alike)."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, jpath

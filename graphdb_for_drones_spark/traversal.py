@@ -15,20 +15,27 @@ BOTH semantics exactly (SURVEY.md §7.4-1):
   → ``mode="node"``: per-level distinct + global visited anti-join
   (matches SQL recursive ``UNION`` semantics, terminates on cycles).
 
-Execution model (designed for a 1000-executor cluster, tested on local):
-one Spark job per level; the driver only controls the loop — all data
-movement is executor-side joins.  Per level:
+One BFS answers both: ``reachable_counts`` keeps a path counter per
+(node, level) — ``cnt`` paths reach ``node`` at ``level`` — so the
+frontier stays O(distinct nodes) even when the path count is
+combinatorial.  Every other traversal answer is a projection of its
+rows: ``reachable`` (the row per path), ``reachable_count``,
+``path_count_to`` / ``path_count_to_mitm`` and
+``graph_algorithms.trust_propagation``.
 
-* the new frontier is pinned eagerly with ``_pin.pin_state``: this
-  materializes it (so the loop's empty-frontier early-exit count is a
-  cheap job over materialized blocks) AND truncates lineage, which
-  otherwise makes deep traversals quadratic in planning time.  On a
-  non-local master with a checkpoint dir the policy takes a reliable
-  checkpoint instead — same plan shape.
-* frontiers under ``broadcast_threshold`` rows are broadcast so the
-  expansion is a map-side join — no shuffle of the (huge) edge table.
-  Above the threshold the join falls back to shuffle hash/SMJ, where
-  bucketing the edge table by ``src`` removes its shuffle side entirely.
+Execution model (designed for a 1000-executor cluster, tested on local):
+one Spark job per level at most.  Levels run in the driver while the
+frontier fits ``COLLECT_THRESHOLD`` (the frontier is a dict, each
+level's plan is rooted at literal values + the edge scan: no lineage
+growth, no checkpoints), then hand off to a distributed continuation in
+which the frontier stays in executors, pinned eagerly per level with
+``_pin.pin_state`` (materializes it, so the empty-frontier check is a
+cheap job, and cuts lineage, which otherwise makes deep traversals
+quadratic in planning time).  Both hop on ``expand``; a frontier under
+``BROADCAST_THRESHOLD`` rows is broadcast, so the expansion is a
+map-side join with no shuffle of the (huge) edge table.  Above it the
+join falls back to shuffle hash/SMJ, where bucketing the edge table by
+``src`` removes its shuffle side entirely.
 """
 
 from __future__ import annotations
@@ -41,90 +48,6 @@ from pyspark.sql import functions as F
 from graphdb_for_drones_spark.operators._pin import pin_state
 
 BROADCAST_THRESHOLD = 2_000_000  # frontier rows; ids are short strings
-
-
-def _as_seed_df(edges: DataFrame, seeds) -> DataFrame:
-    if isinstance(seeds, DataFrame):
-        col = seeds.columns[0]
-        return seeds.select(F.col(col).cast("string").alias("node"))
-    spark = edges.sparkSession
-    return _local_df(spark, [(str(s),) for s in seeds], "node string")
-
-
-def expand(
-    frontier: DataFrame, edges: DataFrame, broadcast_frontier: bool = True
-) -> DataFrame:
-    """One hop: frontier(node) ⋈ edges(src,dst) → next frontier(node).
-
-    The J1 edge-expansion join of the recursive member
-    (``FROM delegation d JOIN chain c ON d.hq_id = c.drone_id``,
-    reference common/bench_utils.py:26-30)."""
-    f = F.broadcast(frontier) if broadcast_frontier else frontier
-    return edges.join(f, edges["src"] == f["node"]).select(
-        edges["dst"].alias("node")
-    )
-
-
-def reachable(
-    edges: DataFrame,
-    seeds,
-    max_depth: int,
-    mode: str = "node",
-    include_seed: bool = False,
-    broadcast_threshold: int = BROADCAST_THRESHOLD,
-    cache_edges: bool = True,
-) -> DataFrame:
-    """Bounded BFS.  Returns DataFrame(node string, level int).
-
-    mode="node": each node appears once, at its minimum level
-      (recursive-CTE-with-UNION / reachability semantics).
-    mode="path": one row per distinct path, so nodes repeat with
-      multiplicity (recursive-CTE-with-UNION-ALL / Cypher path semantics).
-    """
-    if mode not in ("node", "path"):
-        raise ValueError(f"mode must be 'node' or 'path', got {mode!r}")
-    edges = edges.select("src", "dst")
-    if cache_edges:
-        # the loop scans edges once per level; persist so the (possibly
-        # expensive) edge derivation runs once.  MEMORY_AND_DISK default:
-        # spills rather than OOMs on huge edge tables; pass
-        # cache_edges=False when the caller manages caching or a single
-        # scan is cheaper than materialization.
-        edges = edges.persist()
-    seed_df = _as_seed_df(edges, seeds)
-
-    frontier = pin_state(seed_df.distinct() if mode == "node" else seed_df)
-    visited = frontier  # node-set mode only
-    levels: list[DataFrame] = []
-    if include_seed:
-        levels.append(frontier.select("node", F.lit(0).alias("level")))
-
-    for lvl in range(1, max_depth + 1):
-        n = frontier.count()  # cheap: frontier is checkpointed blocks
-        if n == 0:
-            break
-        nxt = expand(frontier, edges, broadcast_frontier=n <= broadcast_threshold)
-        if mode == "node":
-            nxt = nxt.distinct().join(visited, "node", "left_anti")
-        nxt = pin_state(nxt)  # eager: materialize + cut lineage
-        # (sparse checkpointing re-executes the un-materialized segment for
-        # every count/broadcast build — measured quadratic; eager-per-level
-        # is strictly faster)
-        if mode == "node":
-            visited = visited.unionByName(nxt)
-        levels.append(nxt.select("node", F.lit(lvl).alias("level")))
-        frontier = nxt
-
-    if cache_edges:
-        # safe: every level is an eager pin_state, so the result no
-        # longer references the edge lineage
-        edges.unpersist()
-    if not levels:
-        spark = edges.sparkSession
-        return spark.createDataFrame([], "node string, level int")
-    return reduce(DataFrame.unionByName, levels)
-
-
 COLLECT_THRESHOLD = 200_000  # frontier rows the driver will coordinate
 # frontier size worth inlining as an isin() predicate.  The literal IN
 # list costs ~0.4 ms/element of driver-side plan build (py4j literal
@@ -135,6 +58,58 @@ COLLECT_THRESHOLD = 200_000  # frontier rows the driver will coordinate
 # round-9 sf1 sweep caught flat_chain_count paying 2.6 s on a 5.7k
 # frontier under the old 10k threshold)
 ISIN_THRESHOLD = 512
+_FRONTIER = "node string, cnt long"
+
+
+def expand(
+    frontier: DataFrame, edges: DataFrame, broadcast_frontier: bool = True
+) -> DataFrame:
+    """One hop: frontier(node, ...) ⋈ edges(src,dst) → next frontier
+    (node, ...), one row per edge, carrying the frontier's other columns
+    (the path counter ``cnt``) along.
+
+    The J1 edge-expansion join of the recursive member
+    (``FROM delegation d JOIN chain c ON d.hq_id = c.drone_id``,
+    reference common/bench_utils.py:26-30)."""
+    f = F.broadcast(frontier) if broadcast_frontier else frontier
+    carried = [f[c] for c in frontier.columns if c != "node"]
+    return edges.join(f, edges["src"] == f["node"]).select(
+        edges["dst"].alias("node"), *carried
+    )
+
+
+def _hop(frontier: DataFrame, edges: DataFrame, broadcast_frontier: bool) -> DataFrame:
+    """Counter hop: the paths reaching each next node, summed executor-side."""
+    return (
+        expand(frontier, edges, broadcast_frontier)
+        .groupBy("node")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
+
+
+def reachable(
+    edges: DataFrame,
+    seeds,
+    max_depth: int,
+    mode: str = "node",
+    include_seed: bool = False,
+) -> DataFrame:
+    """Bounded BFS.  Returns DataFrame(node string, level int).
+
+    mode="node": each node appears once, at its minimum level
+      (recursive-CTE-with-UNION / reachability semantics).
+    mode="path": one row per distinct path, so nodes repeat with
+      multiplicity (recursive-CTE-with-UNION-ALL / Cypher path semantics).
+
+    A projection of ``reachable_counts``: node mode drops the counter
+    (always 1), path mode repeats each (node, level) row ``cnt`` times.
+    Counting questions should sum ``cnt`` there instead of exploding."""
+    counts = reachable_counts(edges, seeds, max_depth, mode, include_seed)
+    if mode == "node":
+        return counts.select("node", "level")
+    return counts.select(
+        "node", "level", F.explode(F.sequence(F.lit(1).cast("long"), "cnt"))
+    ).drop("col")
 
 
 def _local_df(spark, rows, schema) -> DataFrame:
@@ -157,16 +132,17 @@ def _local_df(spark, rows, schema) -> DataFrame:
     return spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema=schema)
 
 
-def _seed_counts(edges: DataFrame, seeds, mode: str, collect_threshold: int):
-    """Seeds → driver dict {node: path_count}, or None if too large."""
+def _seed_counts(seeds, mode: str):
+    """Seeds → driver dict {node: path_count}, or None if a seed
+    DataFrame holds more than ``COLLECT_THRESHOLD`` rows."""
     if isinstance(seeds, DataFrame):
         col = seeds.columns[0]
         rows = (
             seeds.select(F.col(col).cast("string").alias("node"))
-            .limit(collect_threshold + 1)
+            .limit(COLLECT_THRESHOLD + 1)
             .collect()
         )
-        if len(rows) > collect_threshold:
+        if len(rows) > COLLECT_THRESHOLD:
             return None
         it = (r.node for r in rows)
     else:
@@ -177,6 +153,39 @@ def _seed_counts(edges: DataFrame, seeds, mode: str, collect_threshold: int):
     return counts
 
 
+def _next_level(edges: DataFrame, frontier: dict, adj: dict | None):
+    """One driver-side level: the next ``{node: cnt}`` before the
+    node-mode visited filter, or None when it outgrows
+    ``COLLECT_THRESHOLD`` (hand off to the distributed continuation).
+    The hop's (dst, cnt) pairs come from the collected adjacency
+    ``adj``; else, for a frontier within ``ISIN_THRESHOLD``, from one
+    map-only job (inlined isin predicate — it pushes below
+    unions/aggregates into the scan, so derived edge tables only shuffle
+    the reachable slice — and a raw (src, dst) collect, no join, no
+    exchange); else from the broadcast frontier's hop aggregated
+    executor-side."""
+    pairs = None
+    if adj is not None:
+        pairs = [(d, c) for n, c in frontier.items() for d in adj.get(n, ())]
+    elif len(frontier) <= ISIN_THRESHOLD:
+        raw = (
+            edges.filter(F.col("src").isin(list(frontier)))
+            .limit(COLLECT_THRESHOLD + 1)
+            .collect()
+        )
+        if len(raw) <= COLLECT_THRESHOLD:
+            pairs = [(r.dst, frontier[r.src]) for r in raw]
+    if pairs is None:
+        fdf = _local_df(edges.sparkSession, sorted(frontier.items()), _FRONTIER)
+        pairs = _hop(fdf, edges, True).limit(COLLECT_THRESHOLD + 1).collect()
+        if len(pairs) > COLLECT_THRESHOLD:
+            return None
+    nxt: dict = {}
+    for n, c in pairs:
+        nxt[n] = nxt.get(n, 0) + c
+    return nxt
+
+
 def reachable_counts(
     edges: DataFrame,
     seeds,
@@ -184,134 +193,64 @@ def reachable_counts(
     mode: str = "path",
     include_seed: bool = False,
     collect_edges: bool = False,
-    collect_threshold: int = COLLECT_THRESHOLD,
-    isin_threshold: int = ISIN_THRESHOLD,
 ) -> DataFrame:
-    """Bounded BFS in the compact (node, level, cnt) representation:
-    ``cnt`` is the number of distinct paths reaching ``node`` at ``level``
-    (always 1 in node mode).  Semantically equal to ``reachable`` with
-    path rows aggregated — but the frontier stays O(distinct nodes) even
-    when the path count is combinatorial, which is what makes deep DAG
-    traversals tractable (path rows explode, counters don't).
+    """Bounded BFS in the compact (node, level int, cnt long)
+    representation: ``cnt`` is the number of distinct paths reaching
+    ``node`` at ``level`` (always 1 in node mode).  The engine's one
+    BFS; see the module docstring for the semantics.
 
-    Execution strategy, chosen adaptively (all three run on a cluster;
-    the difference is where the LOOP state lives, never where the edge
-    data lives — except (1), which is the traversal analogue of a
-    broadcast join):
+    Where the LOOP state lives is chosen adaptively (all of it runs on a
+    cluster; the edge data stays in executors except under
+    ``collect_edges``, the traversal analogue of a broadcast join):
 
-    1. ``collect_edges=True`` — the caller asserts the edge table is
-       dimension-sized (the reference's web-of-trust chain is 25 nodes,
-       its ABAC subgroup chain likewise).  One collect, pure-driver BFS,
-       one createDataFrame.  Running N distributed jobs over a 25-row
-       table is the wrong plan at any scale.
-    2. driver-coordinated frontier (default): the frontier dict lives in
-       the driver; each level is ONE job — edges filtered by an inlined
-       ``isin`` predicate on the frontier (pushed below distincts/unions
-       into the scan) joined to the broadcast frontier literal, grouped
-       by dst.  No lineage growth, no checkpoints, no caching needed:
-       every level's plan is rooted at literal values + the edge scan.
-    3. fully distributed: when a frontier outgrows ``collect_threshold``
-       the loop switches to the checkpointing kernel (frontier stays in
-       executors); driver only sees counts.
+    1. driver levels (``_next_level``) while seeds and frontiers fit
+       ``COLLECT_THRESHOLD``.  With ``collect_edges=True`` the caller
+       asserts the edge table is dimension-sized (the reference's
+       web-of-trust chain is 25 nodes, its ABAC subgroup chain
+       likewise): one collect, then every level is a dict lookup —
+       running N distributed jobs over a 25-row table is the wrong plan
+       at any scale.
+    2. the distributed continuation, once a frontier (or a seed
+       DataFrame) outgrows ``COLLECT_THRESHOLD``: the frontier stays in
+       executors; the driver only sees counts.
     """
     if mode not in ("node", "path"):
         raise ValueError(f"mode must be 'node' or 'path', got {mode!r}")
     spark = edges.sparkSession
-    edges = edges.select("src", "dst")
+    # string ids throughout: driver frontiers are keyed by the seeds'
+    # str() (a no-op cast on the usual string-typed edges)
+    edges = edges.select(*(F.col(c).cast("string").alias(c) for c in ("src", "dst")))
     out_schema = "node string, level int, cnt long"
 
-    if collect_edges:
-        frontier = _seed_counts(edges, seeds, mode, collect_threshold)
-        if frontier is None:
-            raise ValueError("collect_edges=True requires driver-sized seeds")
-        adj: dict[str, list[str]] = {}
+    frontier = _seed_counts(seeds, mode)
+    adj = None
+    if collect_edges and frontier is not None:
+        adj = {}
         for r in edges.collect():
             adj.setdefault(r.src, []).append(r.dst)
-        rows, visited = [], set(frontier)
-        if include_seed:
-            rows += [(n, 0, c) for n, c in sorted(frontier.items())]
-        for lvl in range(1, max_depth + 1):
-            nxt: dict[str, int] = {}
-            for n, c in frontier.items():
-                for d in adj.get(n, ()):
-                    nxt[d] = nxt.get(d, 0) + c
-            if mode == "node":
-                nxt = {n: 1 for n in nxt if n not in visited}
-                visited |= set(nxt)
-            if not nxt:
-                break
-            rows += [(n, lvl, c) for n, c in sorted(nxt.items())]
-            frontier = nxt
-        return _local_df(spark, rows, out_schema)
-
-    frontier = _seed_counts(edges, seeds, mode, collect_threshold)
     local_rows: list = []
-    visited: set = set(frontier) if (frontier is not None and mode == "node") else set()
+    visited = set(frontier or ())  # node mode only
     if frontier is not None and include_seed:
         local_rows += [(n, 0, c) for n, c in sorted(frontier.items())]
     lvl = 1
-    while frontier is not None and lvl <= max_depth:
-        if not frontier:
-            return _local_df(spark, local_rows, out_schema)
-        nxt = None
-        if len(frontier) <= isin_threshold:
-            # single map-only job: inlined isin predicate (pushes below
-            # unions/aggregates into the scan, so derived edge tables only
-            # shuffle the reachable slice) + raw (src,dst) collect; the
-            # counter fold happens in the driver — no join, no exchange
-            raw = (
-                edges.filter(F.col("src").isin(list(frontier)))
-                .limit(collect_threshold + 1)
-                .collect()
-            )
-            if len(raw) <= collect_threshold:
-                nxt = {}
-                for r in raw:
-                    c = frontier.get(r.src)
-                    if c is not None:
-                        nxt[r.dst] = nxt.get(r.dst, 0) + c
+    while frontier and lvl <= max_depth:
+        nxt = _next_level(edges, frontier, adj)
         if nxt is None:
-            # frontier too wide to inline (or raw expansion too big to
-            # fold in the driver): aggregate executor-side first
-            fdf = F.broadcast(
-                _local_df(
-                    spark, sorted(frontier.items()), "node string, cnt long"
-                )
-            )
-            nxt_df = (
-                edges.join(fdf, edges["src"] == fdf["node"])
-                .groupBy(edges["dst"])
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-            rows = nxt_df.limit(collect_threshold + 1).collect()
-            if len(rows) > collect_threshold:
-                frontier = None  # fall through to the distributed kernel
-                break
-            nxt = {r.dst: r.cnt for r in rows}
+            break
         if mode == "node":
             nxt = {n: 1 for n in nxt if n not in visited}
             visited |= set(nxt)
-        if not nxt:
-            return _local_df(spark, local_rows, out_schema)
         local_rows += [(n, lvl, c) for n, c in sorted(nxt.items())]
-        frontier = nxt
-        lvl += 1
-    if frontier is not None:  # completed within driver coordination
+        frontier, lvl = nxt, lvl + 1
+    if frontier is not None and (not frontier or lvl > max_depth):
         return _local_df(spark, local_rows, out_schema)
 
-    # distributed continuation: counts-typed variant of the checkpointing
-    # kernel (one job per level, eager pin_state, broadcast frontier
-    # under threshold — see `reachable` for the measured rationale)
+    # distributed continuation (one job per level, eager pin_state,
+    # broadcast frontier under threshold — see the module docstring)
     edges = edges.persist()
-    seeded_from_df = False
-    if local_rows or not isinstance(seeds, DataFrame):
-        f_df = _local_df(
-            spark,
-            [(n, c) for n, l, c in local_rows if l == lvl - 1]
-            if local_rows
-            else [(str(s), 1) for s in seeds],
-            "node string, cnt long",
-        )
+    parts = [_local_df(spark, local_rows, out_schema)]
+    if frontier is not None:
+        f_df = _local_df(spark, sorted(frontier.items()), _FRONTIER)
     else:
         # seeds DataFrame too large for driver coordination: the frontier
         # starts (and stays) executor-side
@@ -319,11 +258,9 @@ def reachable_counts(
         f_df = seeds.select(F.col(col).cast("string").alias("node")).groupBy(
             "node"
         ).agg((F.count(F.lit(1)) if mode == "path" else F.lit(1)).alias("cnt"))
-        seeded_from_df = True
     f_df = pin_state(f_df)  # loop state, even when seeded from local rows
-    parts = [_local_df(spark, local_rows, out_schema)]
-    if seeded_from_df and include_seed:
-        # level-0 rows for distributed seeds (driver-coordinated seeds put
+    if frontier is None and include_seed:
+        # level-0 rows for distributed seeds (driver-held seeds put
         # theirs into local_rows above)
         parts.append(
             f_df.select("node", F.lit(0).alias("level"), F.col("cnt").cast("long"))
@@ -331,7 +268,7 @@ def reachable_counts(
     visited_df = None
     if mode == "node":
         visited_df = _local_df(spark, [(n,) for n in sorted(visited)], "node string")
-        if seeded_from_df:
+        if frontier is None:
             # distributed seeds never entered the driver `visited` set; mark
             # them so a cycle back to a seed is not re-reported at level>=1
             visited_df = visited_df.unionByName(f_df.select("node"))
@@ -339,12 +276,7 @@ def reachable_counts(
         n = f_df.count()
         if n == 0:
             break
-        f = F.broadcast(f_df) if n <= BROADCAST_THRESHOLD else f_df
-        nxt = (
-            edges.join(f, edges["src"] == f["node"])
-            .groupBy(edges["dst"].alias("node"))
-            .agg(F.sum("cnt").alias("cnt"))
-        )
+        nxt = _hop(f_df, edges, n <= BROADCAST_THRESHOLD)
         if mode == "node":
             nxt = nxt.select("node", F.lit(1).alias("cnt")).join(
                 visited_df, "node", "left_anti"
@@ -362,8 +294,10 @@ def reachable_counts(
 
 def reachable_count(edges: DataFrame, seeds, max_depth: int, mode: str = "node") -> int:
     """A1 scalar count over the chain CTE
-    (``SELECT COUNT(*) FROM chain``, reference common/bench_utils.py:32)."""
-    return reachable(edges, seeds, max_depth, mode=mode).count()
+    (``SELECT COUNT(*) FROM chain``, reference common/bench_utils.py:32):
+    the sum of the path counters, never the exploded path rows."""
+    total = reachable_counts(edges, seeds, max_depth, mode).agg(F.sum("cnt"))
+    return total.first()[0] or 0
 
 
 def path_count_to(

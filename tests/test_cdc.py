@@ -118,6 +118,33 @@ def test_streaming_available_now_drain(spark, tmp_path):
     final = spark.read.parquet(state_path)
     got = {r.id: r.payload for r in final.collect()}
     assert got == {i: f"p{i}-upd" for i in range(k // 2)}
+    # each batch's staging copy is dropped once the state is rewritten
+    assert not list(tmp_path.glob("state.tmp-*"))
+
+
+@pytest.mark.slow
+def test_streaming_drain_fails_on_unreadable_state(spark, tmp_path):
+    # a state dir that exists but cannot be read is not a first batch:
+    # the drain must fail and leave the state files as they were,
+    # instead of overwriting them with the batch's changes alone
+    from pyspark.errors import StreamingQueryException
+
+    ch = changes_df(spark, [(1, "one", "c", 1)])
+    stream_dir = tmp_path / "stream"
+    stream_dir.mkdir()
+    env = encode_envelope(ch.select("op", "id", "payload", "ts_ms"))
+    lines = [r.value for r in env.collect()]
+    (stream_dir / "backlog.json").write_text("\n".join(lines))
+    state = tmp_path / "state"
+    state.mkdir()
+    corrupt = state / "part-00000.parquet"
+    corrupt.write_bytes(b"not a parquet file")
+
+    stream = read_cdc_file_stream(spark, str(stream_dir))
+    q = start_cdc_apply(stream, str(state), str(tmp_path / "ckpt"), available_now=True)
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert corrupt.read_bytes() == b"not a parquet file"
 
 
 def _replay(state: dict, events) -> dict:

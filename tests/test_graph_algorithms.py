@@ -67,6 +67,56 @@ def test_trust_propagation(spark):
     assert t["d"] == 0.125
 
 
+def _py_max_trust(pairs, anchor, decay, max_depth):
+    """Pure-Python trust loop: each hop relaxes the nodes whose trust
+    improved, a node keeps the max over paths of length <= max_depth."""
+    best = {anchor: 1.0}
+    frontier = dict(best)
+    for _ in range(max_depth):
+        nxt = {}
+        for s, d in pairs:
+            if s in frontier:
+                nxt[d] = max(nxt.get(d, 0.0), frontier[s] * decay)
+        frontier = {n: t for n, t in nxt.items() if n not in best or t > best[n]}
+        if not frontier:
+            break
+        best.update(frontier)
+    return best
+
+
+def test_trust_propagation_matches_max_over_paths(spark):
+    # random graphs with cycles, multi-edges, self-loops and edges back
+    # to the anchor; exact float equality with the reference loop
+    import random
+
+    rng = random.Random(7)
+    nodes = list("abcdefgh")
+    for case in range(8):
+        pairs = [
+            (rng.choice(nodes), rng.choice(nodes))
+            for _ in range(rng.randrange(1, 16))
+        ]
+        anchor = rng.choice(nodes)
+        decay = rng.choice([0.0, 0.3, 0.5, 0.7, 1.0])
+        depth = rng.randrange(0, 5)
+        got = {
+            r.id: r.trust
+            for r in trust_propagation(
+                edges_df(spark, pairs), anchor, decay=decay, max_depth=depth
+            ).collect()
+        }
+        want = _py_max_trust(pairs, anchor, decay, depth)
+        assert got == want, (case, pairs, anchor, decay, depth)
+
+
+@pytest.mark.parametrize("decay", [-0.1, 1.5])
+def test_trust_propagation_rejects_decay_outside_unit_interval(spark, decay):
+    # outside [0, 1] a longer path can score higher than the shortest
+    e = edges_df(spark, [("anchor", "a")])
+    with pytest.raises(ValueError, match="decay"):
+        trust_propagation(e, "anchor", decay=decay)
+
+
 def test_triangle_count_known(spark):
     # triangle a-b-c plus a pendant edge c-d (given in mixed orientation
     # and with a duplicate edge, which canonicalization must absorb)
@@ -92,7 +142,7 @@ def test_triangle_count_none(spark):
     assert triangle_count(chain).first().n_triangles == 0
 
 
-def test_connected_components_driver_vs_distributed_identical(spark):
+def test_connected_components_driver_vs_distributed_identical(spark, monkeypatch):
     # forest: chain 0-1-2-3, pair 10-11, isolated-by-edge 20-21, triangle 30-31-32
     edges = [(0, 1), (1, 2), (2, 3), (10, 11), (20, 21), (30, 31), (31, 32), (30, 32)]
     e = spark.createDataFrame(
@@ -102,10 +152,10 @@ def test_connected_components_driver_vs_distributed_identical(spark):
         (r.id, r.component)
         for r in connected_components(e).collect()  # small: driver path
     }
-    via_loop = {
-        (r.id, r.component)
-        for r in connected_components(e, small_graph_edges=0).collect()
-    }
+    from graphdb_for_drones_spark.operators import graph_algorithms as ga
+
+    monkeypatch.setattr(ga, "SMALL_GRAPH_EDGES", 0)
+    via_loop = {(r.id, r.component) for r in connected_components(e).collect()}
     assert via_driver == via_loop
     comp = dict(via_driver)
     assert comp["3"] == "0" and comp["11"] == "10" and comp["32"] == "30"

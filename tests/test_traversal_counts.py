@@ -3,11 +3,19 @@
 import pytest
 from pyspark.sql import functions as F
 
+from graphdb_for_drones_spark import traversal
 from graphdb_for_drones_spark.traversal import (
     path_count_to,
     reachable,
     reachable_counts,
 )
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """Every frontier (and seed DataFrame) "too big" for the driver: the
+    BFS runs the distributed continuation from the first level."""
+    monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", 0)
 
 
 @pytest.fixture(scope="module")
@@ -53,20 +61,13 @@ def test_collect_edges_strategy_equivalent(diamond):
     assert a == b
 
 
-def test_distributed_fallback_equivalent(diamond):
-    # force the fallback by making every frontier "too big" for the driver
-    got = _as_map(
-        reachable_counts(
-            diamond, ["a"], 3, mode="path", collect_threshold=0
-        )
-    )
+def test_distributed_fallback_equivalent(diamond, distributed):
+    got = _as_map(reachable_counts(diamond, ["a"], 3, mode="path"))
     assert got == {("b", 1): 1, ("c", 1): 1, ("d", 2): 2, ("e", 3): 2}
 
 
-def test_distributed_fallback_node_mode(diamond):
-    got = _as_map(
-        reachable_counts(diamond, ["a"], 3, mode="node", collect_threshold=0)
-    )
+def test_distributed_fallback_node_mode(diamond, distributed):
+    got = _as_map(reachable_counts(diamond, ["a"], 3, mode="node"))
     assert got == {("b", 1): 1, ("c", 1): 1, ("d", 2): 1, ("e", 3): 1}
 
 
@@ -158,15 +159,12 @@ def test_mitm_multi_edge_multiplicity(spark):
     assert path_count_to_mitm(g, ["a"], "c", 2).first().path_count == 2
 
 
-def test_distributed_df_seeds_include_seed(spark, diamond):
-    # DataFrame seeds + collect_threshold=0 → distributed-from-start path;
+def test_distributed_df_seeds_include_seed(spark, diamond, distributed):
+    # DataFrame seeds + COLLECT_THRESHOLD=0 → distributed-from-start path;
     # level-0 seed rows must survive (regression: they were dropped)
     seeds = spark.createDataFrame([("a",)], "node string")
     got = _as_map(
-        reachable_counts(
-            diamond, seeds, 3, mode="path", include_seed=True,
-            collect_threshold=0,
-        )
+        reachable_counts(diamond, seeds, 3, mode="path", include_seed=True)
     )
     assert got == {
         ("a", 0): 1,
@@ -177,22 +175,30 @@ def test_distributed_df_seeds_include_seed(spark, diamond):
     }
 
 
-def test_distributed_df_seeds_cycle_node_mode(spark):
+def test_distributed_df_seeds_cycle_node_mode(spark, distributed):
     # cycle back to a DataFrame seed must not re-report it at level>=1
     # (regression: distributed seeds were never marked visited)
     cyc = spark.createDataFrame(
         [("a", "b"), ("b", "a")], "src string, dst string"
     ).localCheckpoint()
     seeds = spark.createDataFrame([("a",)], "node string")
-    got = _as_map(
-        reachable_counts(cyc, seeds, 10, mode="node", collect_threshold=0)
-    )
+    got = _as_map(reachable_counts(cyc, seeds, 10, mode="node"))
     assert got == {("b", 1): 1}
 
 
-def test_distributed_df_seeds_duplicates_path(spark, diamond):
+def test_distributed_df_seeds_duplicates_path(spark, diamond, distributed):
     seeds = spark.createDataFrame([("a",), ("a",)], "node string")
-    got = _as_map(
-        reachable_counts(diamond, seeds, 1, mode="path", collect_threshold=0)
-    )
+    got = _as_map(reachable_counts(diamond, seeds, 1, mode="path"))
     assert got == {("b", 1): 2, ("c", 1): 2}
+
+
+@pytest.mark.parametrize("threshold", [traversal.COLLECT_THRESHOLD, 0])
+def test_integer_ids(spark, monkeypatch, threshold):
+    # integer-typed edges answer like their string twins, driver levels
+    # and distributed continuation alike
+    monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", threshold)
+    e = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 4), (3, 4)], "src long, dst long"
+    ).localCheckpoint()
+    got = _as_map(reachable_counts(e, [1], 2, mode="path"))
+    assert got == {("2", 1): 1, ("3", 1): 1, ("4", 2): 2}

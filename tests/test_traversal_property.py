@@ -3,13 +3,14 @@ self-loops included) against an independent pure-Python BFS counter.
 Catches semantics drift that example-based tests on hand-built graphs
 miss."""
 
-from collections import defaultdict
+import functools
+from collections import Counter, defaultdict
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from graphdb_for_drones_spark.traversal import reachable_counts
+from graphdb_for_drones_spark import traversal
 
 NODES = list("abcdefg")
 
@@ -52,6 +53,20 @@ edges_strategy = st.lists(
 seeds_strategy = st.lists(st.sampled_from(NODES), min_size=1, max_size=3)
 
 
+def _strategy(mp, strategy):
+    """Route the BFS through one strategy: driver levels (default), the
+    collected adjacency, or the distributed continuation from level 1.
+    ``reachable`` is patched through the module attribute it calls."""
+    if strategy == "collected":
+        mp.setattr(
+            traversal,
+            "reachable_counts",
+            functools.partial(traversal.reachable_counts, collect_edges=True),
+        )
+    elif strategy == "distributed":
+        mp.setattr(traversal, "COLLECT_THRESHOLD", 0)
+
+
 @pytest.mark.slow
 @settings(
     max_examples=25,
@@ -77,24 +92,17 @@ def test_reachable_counts_matches_reference(
         .limit(len(edges))
         .localCheckpoint()
     )
-    kw = {}
-    if strategy == "collected":
-        kw["collect_edges"] = True
-    elif strategy == "distributed":
-        kw["collect_threshold"] = 0
     seed_arg = seeds
     if seed_form == "df":
-        if strategy == "collected":
-            seed_arg = seeds  # collected strategy requires driver seeds
-        else:
-            seed_arg = spark.createDataFrame(
-                [(s,) for s in seeds], "node string"
-            ).localCheckpoint()
-    got = {
-        (r.node, r.level): r.cnt
-        for r in reachable_counts(
-            df, seed_arg, depth, mode=mode, include_seed=include_seed, **kw
-        ).collect()
-    }
+        seed_arg = spark.createDataFrame(
+            [(s,) for s in seeds], "node string"
+        ).localCheckpoint()
+    args = (df, seed_arg, depth, mode, include_seed)
     want = py_reachable_counts(edges, seeds, depth, mode, include_seed)
-    assert got == want
+    with pytest.MonkeyPatch.context() as mp:
+        _strategy(mp, strategy)
+        counts = traversal.reachable_counts(*args).collect()
+        # reachable's rows are the counters' projection: one row per path
+        rows = Counter((r.node, r.level) for r in traversal.reachable(*args).collect())
+    assert {(r.node, r.level): r.cnt for r in counts} == want
+    assert dict(rows) == want
