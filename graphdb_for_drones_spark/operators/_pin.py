@@ -20,14 +20,22 @@ Which call a frame gets depends on why it is materialized:
   (``traversal._local_df``): it is a local relation, re-read for free.
 
 No module outside this one calls ``localCheckpoint`` or ``checkpoint``
-(``tests/test_pin_policy.py`` enforces it).
+(``tests/test_pin_policy.py`` enforces it).  A ``scoped()`` block
+releases every pin taken inside it on exit — a streaming micro-batch's
+pins once its writes are done (``streaming/util.start_sink``).
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
+
+# the frames pinned inside the innermost open ``scoped`` block
+_held_by: ContextVar[list[DataFrame] | None] = ContextVar("_held_by", default=None)
 
 
 def pin(df: DataFrame, *, eager: bool = True) -> DataFrame:
@@ -60,9 +68,9 @@ def pin(df: DataFrame, *, eager: bool = True) -> DataFrame:
         return df
     mode = _mode(df)
     if mode == "local":
-        return df.localCheckpoint(eager=eager)
+        return _held(df.localCheckpoint(eager=eager))
     if mode == "reliable":
-        return df.checkpoint(eager=eager)
+        return _held(df.checkpoint(eager=eager))
     return df
 
 
@@ -82,8 +90,35 @@ def pin_state(df: DataFrame) -> DataFrame:
     otherwise — its blocks are lost with their executor, but without
     the cut the loop's plan cannot stay bounded at all."""
     if _mode(df) == "reliable":
-        return df.checkpoint()
-    return df.localCheckpoint()
+        return _held(df.checkpoint())
+    return _held(df.localCheckpoint())
+
+
+@contextlib.contextmanager
+def scoped() -> Iterator[None]:
+    """``release`` every frame ``pin``/``pin_state`` returns inside the
+    block (in this thread or context), on exit, success or failure.
+    For a block after which nothing scans those frames again — a
+    foreachBatch body whose writes are done — so its pins do not
+    outlive it waiting for Python GC.  Scopes nest; the innermost one
+    holds a pin."""
+    held: list[DataFrame] = []
+    token = _held_by.set(held)
+    try:
+        yield
+    finally:
+        _held_by.reset(token)
+        for df in held:
+            release(df)
+
+
+def _held(df: DataFrame) -> DataFrame:
+    """``df``, recorded for release by the innermost open ``scoped``
+    block, if any."""
+    held = _held_by.get()
+    if held is not None:
+        held.append(df)
+    return df
 
 
 def release(df: DataFrame) -> None:

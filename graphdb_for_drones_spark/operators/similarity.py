@@ -993,10 +993,20 @@ def ivf_write(index: DataFrame, centroids: list, path: str) -> None:
 
 
 def ivf_read(spark: SparkSession, path: str) -> tuple[DataFrame, list]:
-    """Load a persisted IVF index: (partition-pruned DataFrame, centroids)."""
+    """Load a persisted IVF index: (partition-pruned DataFrame, centroids).
+    Vectors streamed in since the build (``streaming/ivf_maintain``:
+    ``<path>/ingest``, partitioned by cluster then batch_id) are unioned
+    in when that dir exists; the built index's schema is passed to its
+    read, so a dir that holds no part file yet reads as empty."""
     with open(os.path.join(path, "centroids.json")) as fh:
         cents = [(int(cid), [float(x) for x in v]) for cid, v in json.load(fh)]
-    return spark.read.parquet(os.path.join(path, "index")), cents
+    index = spark.read.parquet(os.path.join(path, "index"))
+    ingest = os.path.join(path, "ingest")
+    if os.path.isdir(ingest):
+        index = index.unionByName(
+            spark.read.schema(index.schema).parquet(ingest).select(*index.columns)
+        )
+    return index, cents
 
 
 def near_pairs_path_for(

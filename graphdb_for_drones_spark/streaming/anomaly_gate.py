@@ -10,17 +10,9 @@ quarantine table before the events reach downstream aggregates.
 Shape: the stats table is SMALL (one row per key) — pinned once with
 ``_pin.pin`` and re-joined (broadcastable) against each
 micro-batch inside ``foreachBatch``.  No state accumulates beyond the
-written flags.  Writes are idempotent per micro-batch WITHIN one
-checkpoint lineage: each batch's flags land in a ``batch_id=<n>``
-partition via dynamic partition overwrite, so a micro-batch retried
-after the write but before the checkpoint commit (foreachBatch's
-at-least-once window) overwrites its own partition with identical rows
-instead of appending duplicates — exactly-once output given the gate's
-deterministic scoring.  A replay from a FRESH checkpoint is idempotent
-only when the source reproduces the same batch boundaries (true for
-``availableNow`` drains of a static directory with the same reader
-options); batching that groups the files differently leaves stale
-partitions from the earlier lineage behind.  Keys
+written flags, each batch's in its own ``batch_id=<n>`` partition
+(``streaming/util.start_sink`` states the delivery contract:
+exactly-once output given the gate's deterministic scoring).  Keys
 unseen in the reference window pass through unflagged (no stats row —
 the inner join drops them), mirroring how a production gate treats
 cold keys until the next stats refresh.
@@ -28,10 +20,11 @@ cold keys until the next stats refresh.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphdb_for_drones_spark.operators._pin import pin
+from graphdb_for_drones_spark.streaming.util import read_sink, start_sink, write_batch
 
 
 def reference_stats(
@@ -84,22 +77,15 @@ def make_apply_batch(
     value_col: str = "value",
     n_sigma: float = 3.0,
 ):
-    """The gate's per-micro-batch function, exposed at module level so
-    failure-injection tests can re-invoke it with the SAME batch_id —
-    simulating a foreachBatch retry after the quarantine write but
-    before the checkpoint commit (the at-least-once window)."""
+    """The gate's per-micro-batch function, module-level so
+    failure-injection tests can replay a batch_id (the at-least-once
+    window between the write and the checkpoint commit)."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Idempotent-per-batch: dynamic partition overwrite into a
-        # batch_id partition replaces (not duplicates) a retried batch's
-        # output — foreachBatch alone is only at-least-once.
-        (
-            flag_outliers(batch_df, pinned_stats, key_col, value_col, n_sigma)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
+        write_batch(
+            flag_outliers(batch_df, pinned_stats, key_col, value_col, n_sigma),
+            batch_id,
+            out_dir,
         )
 
     return apply_batch
@@ -117,36 +103,12 @@ def start_anomaly_gate(
 ):
     """Append events beyond ``n_sigma`` of their key's reference mean
     to ``out_dir``.  ``stats`` is pinned once (it is re-referenced per
-    micro-batch).
-
-    Layout note: output is parquet PARTITIONED BY ``batch_id`` (the
-    idempotency key).  A quarantine dir written by the pre-partitioned
-    flat-append layout cannot be mixed with this one — the mix only
-    fails at READ time (conflicting directory structures), so this
-    refuses at start instead."""
-    import glob as _glob
-    import os as _os
-
-    legacy_parts = _glob.glob(
-        _os.path.join(_glob.escape(out_dir), "part-*.parquet")
-    ) + _glob.glob(_os.path.join(_glob.escape(out_dir), "part-*.snappy.parquet"))
-    if legacy_parts:
-        raise ValueError(
-            f"out_dir {out_dir!r} holds flat-append (pre-batch_id-"
-            "partition) quarantine files; mixing layouts makes the dir "
-            "unreadable — point the gate at a fresh out_dir"
-        )
-    pinned = pin(stats)
-    apply_batch = make_apply_batch(
-        pinned, out_dir, key_col, value_col, n_sigma
+    micro-batch).  Output is parquet partitioned by ``batch_id``."""
+    apply_batch = make_apply_batch(pin(stats), out_dir, key_col, value_col, n_sigma)
+    return start_sink(
+        stream_events, apply_batch, checkpoint_dir, available_now,
+        partitioned=(out_dir,),
     )
-    writer = stream_events.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def read_quarantine(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(out_dir)
+read_quarantine = read_sink

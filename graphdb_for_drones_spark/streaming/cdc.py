@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from graphdb_for_drones_spark.streaming.util import hadoop_fs, read_parquet_or_none
+from graphdb_for_drones_spark.streaming.util import start_sink
 
 # generic row payload: the reference's items(id, payload/name) table
 ROW_SCHEMA = StructType(
@@ -268,11 +269,7 @@ def start_cdc_apply(
 
         invalidate_path(state_path)
 
-    writer = changes_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
+    return start_sink(
+        changes_stream, apply_batch, checkpoint_path, available_now,
+        poll="1 second",  # reference poll interval
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")  # reference poll interval
-    return writer.start()

@@ -13,7 +13,9 @@ the batch plus a merge shuffled on the rollup key, and the sketches'
 associativity makes the merge correct under any batch boundaries —
 replay/duplicated batches are the caller's concern (idempotence needs
 an exactly-once sink like Delta; with plain parquet, checkpointed
-sources give effectively-once for availableNow drains).
+sources give effectively-once for availableNow drains).  Both rollups
+start through ``streaming/util.start_sink``; a merge is not a
+``batch_id`` partition, so they keep their own swap commit.
 """
 
 from __future__ import annotations
@@ -27,11 +29,13 @@ from pyspark.sql import functions as F
 
 from graphdb_for_drones_spark.operators._pin import pin_state
 from graphdb_for_drones_spark.operators.sketches import hist_build, hll_build
+from graphdb_for_drones_spark.streaming.util import start_sink
 
 
-def _merge_and_overwrite(
-    existing: DataFrame | None, batch_rollup: DataFrame, merge_fn, state_dir: str
-) -> None:
+def _merge_and_overwrite(batch_rollup: DataFrame, merge_fn, state_dir: str) -> None:
+    """One micro-batch: merge ``batch_rollup`` into the state at
+    ``state_dir`` with ``merge_fn`` and commit the result."""
+    existing = _read_state(batch_rollup.sparkSession, state_dir)
     merged = batch_rollup if existing is None else merge_fn(
         existing.unionByName(batch_rollup)
     )
@@ -44,7 +48,8 @@ def _merge_and_overwrite(
     # real atomic commit; plain parquet gets the rename discipline.)
     tmp = f"{state_dir}.tmp.{os.getpid()}"
     # the merged rollup is the running state: pin_state cuts its lineage
-    # to the live state dir, which the swap below moves aside
+    # to the live state dir, which the swap below moves aside (start_sink
+    # releases the pin once the batch is done)
     pin_state(merged).write.mode("overwrite").parquet(tmp)
     old = f"{state_dir}.old.{os.getpid()}"
     if os.path.exists(state_dir):
@@ -87,18 +92,10 @@ def start_hll_continuous_rollup(
         )
 
     def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_rollup = hll_build(batch_df, keys, distinct_col, lgk)
-        _merge_and_overwrite(
-            _read_state(spark, state_dir), batch_rollup, merge, state_dir
-        )
+        rollup = hll_build(batch_df, keys, distinct_col, lgk)
+        _merge_and_overwrite(rollup, merge, state_dir)
 
-    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(stream_df, apply_batch, checkpoint_dir, available_now)
 
 
 def serve_hll_rollup(
@@ -134,15 +131,7 @@ def start_hist_continuous_rollup(
         return u.groupBy(*keys, "bucket").agg(F.sum("cnt").alias("cnt"))
 
     def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_rollup = hist_build(batch_df, keys, value_col, lo, hi, buckets)
-        _merge_and_overwrite(
-            _read_state(spark, state_dir), batch_rollup, merge, state_dir
-        )
+        rollup = hist_build(batch_df, keys, value_col, lo, hi, buckets)
+        _merge_and_overwrite(rollup, merge, state_dir)
 
-    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(stream_df, apply_batch, checkpoint_dir, available_now)

@@ -12,18 +12,18 @@ docs, not billions) — built once, pinned with ``_pin.pin``, and
 re-joined against each micro-batch's freshly shingled side inside
 ``foreachBatch``.  Per-batch cost is one broadcastable join of batch
 shingles against the eval index; nothing is quadratic in corpus size
-and no state accumulates beyond the appended flags.  Checkpointed
-sources + availableNow drains give effectively-once appends (same
-contract as streaming/continuous_agg).
+and no state accumulates beyond the written flags.  Started and written
+through ``streaming/util.start_sink`` / ``write_batch`` (the delivery
+contract is stated there).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from graphdb_for_drones_spark.operators import curation
 from graphdb_for_drones_spark.operators._pin import pin
+from graphdb_for_drones_spark.streaming.util import read_sink, start_sink, write_batch
 
 
 def make_apply_batch(
@@ -35,14 +35,9 @@ def make_apply_batch(
     id_col: str = "doc_id",
     metric: str = "jaccard",
 ):
-    """The guard's per-micro-batch function, exposed at module level so
-    failure-injection tests can re-invoke it with the SAME batch_id.
-    Flags land in a ``batch_id=<n>`` partition via dynamic partition
-    overwrite (the anomaly_gate contract): a micro-batch retried after
-    the quarantine write but before the checkpoint commit REPLACES its
-    own partition instead of appending duplicates — the previous blind
-    ``append`` was only clean-re-drain idempotent, not mid-batch-crash
-    idempotent."""
+    """The guard's per-micro-batch function, module-level so
+    failure-injection tests can replay a batch_id (the at-least-once
+    window between the write and the checkpoint commit)."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         tr = curation.shingle_index(
@@ -51,13 +46,7 @@ def make_apply_batch(
         flagged = curation.contamination_pairs_from_index(
             tr, eval_index, threshold=threshold, metric=metric
         )
-        (
-            flagged.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        write_batch(flagged, batch_id, out_dir)
 
     return apply_batch
 
@@ -84,37 +73,17 @@ def start_contamination_guard(
     the asymmetric gate that catches a short benchmark prompt quoted
     inside a long incoming document, which jaccard dilutes below any
     workable threshold)."""
-    import glob as _glob
-    import os as _os
-
-    # a quarantine dir written by the pre-batch_id flat-append layout
-    # cannot mix with the partitioned one — that mix only fails at READ
-    # time (conflicting directory structures), so refuse at start (the
-    # anomaly_gate contract)
-    legacy_parts = _glob.glob(
-        _os.path.join(_glob.escape(out_dir), "part-*.parquet")
-    ) + _glob.glob(_os.path.join(_glob.escape(out_dir), "part-*.snappy.parquet"))
-    if legacy_parts:
-        raise ValueError(
-            f"out_dir {out_dir!r} holds flat-append (pre-batch_id-"
-            "partition) quarantine files; mixing layouts makes the dir "
-            "unreadable — point the guard at a fresh out_dir"
-        )
     ev = pin(
         curation.shingle_index(eval_docs, "eval_id", text_col, id_col, shingle_n)
     )
     apply_batch = make_apply_batch(
         ev, out_dir, threshold, shingle_n, text_col, id_col, metric
     )
-    writer = stream_docs.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_sink(
+        stream_docs, apply_batch, checkpoint_dir, available_now,
+        partitioned=(out_dir,),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def read_quarantine(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The appended flag table: every (incoming doc, eval doc) overlap
-    the guard has seen."""
-    return spark.read.parquet(out_dir)
+# the flag table: every (incoming doc, eval doc) overlap the guard has seen
+read_quarantine = read_sink

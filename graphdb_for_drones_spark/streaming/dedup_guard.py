@@ -27,17 +27,14 @@ tests/test_dedup_guard.py), because every pair is either within one
 micro-batch or crosses two — and the crossing pair is caught when its
 second member arrives.
 
-Delivery contract: flags, signatures, and band keys all land in
-``batch_id=<n>`` partitions written with dynamic partition overwrite
-(the anomaly_gate pattern), so a micro-batch retried after a mid-batch
-crash REPLACES its own partitions instead of appending duplicates —
-effectively-once, not merely at-least-once with a clean-re-drain
-caveat.
+Flags, signatures and band keys are all written through
+``streaming/util.write_batch``, whose delivery contract
+(``start_sink``) makes a retried micro-batch REPLACE its own partitions.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphdb_for_drones_spark.operators.dedup import (
@@ -46,7 +43,9 @@ from graphdb_for_drones_spark.operators.dedup import (
     with_shingle_hashes,
 )
 from graphdb_for_drones_spark.operators._pin import pin
-from graphdb_for_drones_spark.streaming.util import read_parquet_or_none
+from graphdb_for_drones_spark.streaming.util import (
+    read_history, read_sink, start_sink, write_batch,
+)
 
 
 def _signed(
@@ -112,18 +111,6 @@ def _verified(cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame,
     )
 
 
-def _write_partitioned(df: DataFrame, batch_id: int, path: str) -> None:
-    """Idempotent under foreachBatch replay: the batch_id partition
-    replaces (not duplicates) a retried batch's output."""
-    (
-        df.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
-
-
 def start_neardup_guard(
     stream_docs: DataFrame,
     index_dir: str,
@@ -143,21 +130,13 @@ def start_neardup_guard(
     Flags (id_a, id_b, jaccard), id_a < id_b, append to ``out_dir``;
     the band index and signature store grow under ``index_dir``."""
     apply_batch = make_apply_batch(
-        index_dir,
-        out_dir,
-        num_hashes,
-        bands,
-        shingle_n,
-        jaccard_threshold,
-        text_col,
-        id_col,
+        index_dir, out_dir, num_hashes, bands, shingle_n, jaccard_threshold,
+        text_col, id_col,
     )
-    writer = stream_docs.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_sink(
+        stream_docs, apply_batch, checkpoint_dir, available_now,
+        partitioned=(out_dir, f"{index_dir}/bands", f"{index_dir}/sigs"),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def make_apply_batch(
@@ -170,10 +149,9 @@ def make_apply_batch(
     text_col: str = "text",
     id_col: str = "doc_id",
 ):
-    """The guard's per-micro-batch function, exposed at module level so
-    failure-injection tests can re-invoke it with the SAME batch_id —
-    simulating a foreachBatch retry after the flag/index writes but
-    before the checkpoint commit (the at-least-once window)."""
+    """The guard's per-micro-batch function, module-level so
+    failure-injection tests can replay a batch_id (the at-least-once
+    window between the writes and the checkpoint commit)."""
     bands_dir = f"{index_dir}/bands"
     sigs_dir = f"{index_dir}/sigs"
 
@@ -181,7 +159,7 @@ def make_apply_batch(
         spark = batch_df.sparkSession
         # batch-sized: pin it — referenced by self-pairs, the cross
         # join, and both index appends (a row pin, not columnar cache:
-        # the array-cache rule)
+        # the array-cache rule); start_sink releases it after the writes
         signed = pin(_signed(batch_df, text_col, id_col, num_hashes, shingle_n))
         bkeys = pin(_band_keys(signed, num_hashes, bands))
         sets = signed.select("id", "sh")
@@ -193,21 +171,11 @@ def make_apply_batch(
             jaccard_threshold,
         )
 
-        hist_bands = read_parquet_or_none(spark, bands_dir)
+        hist_bands = read_history(spark, bands_dir, batch_id)
         flags = within
         if hist_bands is not None:
-            # history = STRICTLY EARLIER batches only, so batch N's
-            # flags are a pure function of batches 0..N and any replay
-            # (crash retry or fresh-checkpoint reprocess) rewrites its
-            # partition with identical content
-            hist_bands = hist_bands.filter(
-                F.col("batch_id") < int(batch_id)
-            )
-            hist_sets = (
-                spark.read.parquet(sigs_dir)
-                .filter(F.col("batch_id") < int(batch_id))
-                .select("id", "sh")
-            )
+            # sigs are written before bands, so they exist here
+            hist_sets = read_history(spark, sigs_dir, batch_id).select("id", "sh")
             cross_cand = (
                 hist_bands.select(
                     "band", "band_hash", F.col("id").alias("id_a")
@@ -235,20 +203,17 @@ def make_apply_batch(
                 ["id_a", "id_b"]
             )
 
-        _write_partitioned(flags, batch_id, out_dir)
+        write_batch(flags, batch_id, out_dir)
         # sigs BEFORE bands still: replay overwrites both, but if the
         # process dies between the two writes the next run sees extra
         # signatures (harmless — candidates only ever come from the
         # band index) rather than band rows whose verification
         # signatures are missing
-        _write_partitioned(
-            signed.select("id", "sig", "sh"), batch_id, sigs_dir
-        )
-        _write_partitioned(bkeys, batch_id, bands_dir)
+        write_batch(signed.select("id", "sig", "sh"), batch_id, sigs_dir)
+        write_batch(bkeys, batch_id, bands_dir)
 
     return apply_batch
 
 
-def read_neardup_flags(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The appended flag table: every near-dup pair the guard has seen."""
-    return spark.read.parquet(out_dir)
+# the flag table: every near-dup pair the guard has seen
+read_neardup_flags = read_sink

@@ -16,11 +16,9 @@ the shared math half; the monitor never re-implements a fold).  No
 row-level state accumulates: state size is |groups| × n_bins counts
 regardless of ingest volume — the 100 TB property.
 
-Idempotence: each batch's counts overwrite their own ``batch_id``
-partition (dynamic partition overwrite, the anomaly-gate contract), so
-a foreachBatch retry inside the at-least-once window replaces identical
-rows instead of double-counting — effectively-once totals under
-availableNow re-drains of the same source layout.
+Idempotence: each batch's counts go through
+``streaming/util.write_batch`` (delivery contract: ``start_sink``), so
+a foreachBatch retry replaces identical rows instead of double-counting.
 """
 
 from __future__ import annotations
@@ -35,7 +33,7 @@ from graphdb_for_drones_spark.operators.stats import (
     bin_counts,
     drift_from_bin_counts,
 )
-from graphdb_for_drones_spark.streaming.util import hadoop_fs
+from graphdb_for_drones_spark.streaming.util import hadoop_fs, start_sink, write_batch
 
 META_FILE = "_drift_meta.json"  # "_"-prefixed: invisible to parquet scans
 
@@ -108,16 +106,10 @@ def make_apply_batch(
     window)."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            bin_counts(
-                batch_df, group_col, value_col, n_bins=n_bins, bounds=bounds
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
+        counts = bin_counts(
+            batch_df, group_col, value_col, n_bins=n_bins, bounds=bounds
         )
+        write_batch(counts, batch_id, out_dir)
 
     return apply_batch
 
@@ -141,21 +133,18 @@ def start_drift_monitor(
     with a FRESH checkpoint would restart ids at 0 and dynamic
     overwrite would leave a prior run's higher-numbered partitions
     inflating the totals.  A fresh checkpoint therefore TRUNCATES
-    out_dir (plain-overwrite reference write) instead of appending;
-    restarting with the existing checkpoint keeps accumulated batches
-    (the reference partition alone is dynamically replaced)."""
+    out_dir before the reference write instead of appending; restarting
+    with the existing checkpoint keeps accumulated batches (the
+    reference partition alone is dynamically replaced)."""
     spark = stream_df.sparkSession
     bounds, ref_counts = reference_geometry(ref_df, value_col, n_bins)
     ckpt_fs, ckpt_path = hadoop_fs(spark, checkpoint_dir)
-    fresh_checkpoint = not ckpt_fs.exists(ckpt_path)
+    if not ckpt_fs.exists(ckpt_path):
+        out_fs, out_path = hadoop_fs(spark, out_dir)
+        out_fs.delete(out_path, True)
     # persist the reference counts beside the stream counts so the
     # report is self-contained (readable without re-deriving geometry)
-    ref_writer = ref_counts.withColumn("batch_id", F.lit(-1)).write.mode(
-        "overwrite"
-    )
-    if not fresh_checkpoint:
-        ref_writer = ref_writer.option("partitionOverwriteMode", "dynamic")
-    ref_writer.partitionBy("batch_id").parquet(out_dir)
+    write_batch(ref_counts, -1, out_dir)
     _write_meta(
         spark,
         out_dir,
@@ -166,15 +155,11 @@ def start_drift_monitor(
             "value_col": value_col,
         },
     )
-    apply_batch = make_apply_batch(
-        bounds, out_dir, group_col, value_col, n_bins
+    apply_batch = make_apply_batch(bounds, out_dir, group_col, value_col, n_bins)
+    return start_sink(
+        stream_df, apply_batch, checkpoint_dir, available_now,
+        partitioned=(out_dir,),
     )
-    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def drift_report(

@@ -29,17 +29,15 @@ corpus (pinned in tests/test_linkage_guard.py), because every pair is
 either within one micro-batch or crosses two — and the crossing pair
 is caught when its second member arrives.
 
-Delivery contract: flags AND index both land in ``batch_id=<n>``
-partitions written with dynamic partition overwrite (the anomaly_gate
-pattern), so a micro-batch retried after a crash REPLACES its own
-partitions instead of appending duplicates — effectively-once even
-across a mid-batch failure, not just on a clean ``availableNow``
-re-drain.
+Flags AND index are both written through
+``streaming/util.write_batch``, whose delivery contract
+(``start_sink``) makes a micro-batch retried after a mid-batch crash
+REPLACE its own partitions, not just a clean ``availableNow`` re-drain.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphdb_for_drones_spark.operators.linkage import (
@@ -48,7 +46,9 @@ from graphdb_for_drones_spark.operators.linkage import (
     substitution_neighborhood_pairs,
 )
 from graphdb_for_drones_spark.operators._pin import pin
-from graphdb_for_drones_spark.streaming.util import read_parquet_or_none
+from graphdb_for_drones_spark.streaming.util import (
+    read_history, read_sink, start_sink, write_batch,
+)
 
 
 def start_linkage_guard(
@@ -66,15 +66,11 @@ def start_linkage_guard(
     ``stream_records``: streaming DataFrame with (id_col, key_col).
     Flags (id_a, id_b, key_a, key_b, hamming), id_a < id_b, append to
     ``out_dir``; the pattern index grows under ``index_dir``."""
-    apply_batch = make_apply_batch(
-        index_dir, out_dir, max_subs, id_col, key_col
+    apply_batch = make_apply_batch(index_dir, out_dir, max_subs, id_col, key_col)
+    return start_sink(
+        stream_records, apply_batch, checkpoint_dir, available_now,
+        partitioned=(out_dir, f"{index_dir}/patterns"),
     )
-    writer = stream_records.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def make_apply_batch(
@@ -84,44 +80,24 @@ def make_apply_batch(
     id_col: str = "id",
     key_col: str = "key",
 ):
-    """The guard's per-micro-batch function, exposed at module level so
-    failure-injection tests can re-invoke it with the SAME batch_id —
-    simulating a foreachBatch retry after the flag/index writes but
-    before the checkpoint commit (the at-least-once window)."""
+    """The guard's per-micro-batch function, module-level so
+    failure-injection tests can replay a batch_id (the at-least-once
+    window between the writes and the checkpoint commit)."""
     patterns_dir = f"{index_dir}/patterns"
     out_cols = ["id_a", "id_b", "key_a", "key_b", "hamming"]
-
-    def write_partitioned(df: DataFrame, batch_id: int, path: str) -> None:
-        # the batch_id partition replaces (not duplicates) a retried
-        # batch's output — idempotent under foreachBatch replay
-        (
-            df.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # batch-sized: pin it — referenced by the within-batch sweep
         # is separate, but the pattern rows feed both the cross join
-        # and the index append
+        # and the index append; start_sink releases it after the writes
         bpat = pin(_pattern_rows(batch_df, id_col, key_col, max_subs, "r_"))
 
         within = substitution_neighborhood_pairs(
             batch_df, id_col, key_col, max_subs
         ).select(*out_cols)
 
-        hist = read_parquet_or_none(spark, patterns_dir)
-        if hist is not None:
-            # history = STRICTLY EARLIER batches only: batch N's flags
-            # are then a pure function of batches 0..N, so any replay —
-            # a crash retry of batch N, or a full fresh-checkpoint
-            # reprocess over the already-populated index — rewrites
-            # partition N with identical content instead of picking up
-            # cross-matches that belong to later batches' partitions
-            hist = hist.filter(F.col("batch_id") < int(batch_id))
+        hist = read_history(spark, patterns_dir, batch_id)
         flags = within
         if hist is not None:
             cand = hist.select(
@@ -168,8 +144,8 @@ def make_apply_batch(
                 ["id_a", "id_b", "key_a", "key_b", "hamming"]
             )
 
-        write_partitioned(flags, batch_id, out_dir)
-        write_partitioned(
+        write_batch(flags, batch_id, out_dir)
+        write_batch(
             bpat.select(
                 "pos_key",
                 "pat",
@@ -183,6 +159,5 @@ def make_apply_batch(
     return apply_batch
 
 
-def read_linkage_flags(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The appended flag table: every fuzzy match the guard has seen."""
-    return spark.read.parquet(out_dir)
+# the flag table: every fuzzy match the guard has seen
+read_linkage_flags = read_sink

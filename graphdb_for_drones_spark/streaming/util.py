@@ -1,16 +1,19 @@
-"""Shared helpers for the streaming entries: ``drain``, the one
+"""Shared helpers for the streaming modules: ``drain``, the one
 lifecycle the catalog's streamed entries run their query under (stage
 the table's files in a fresh local temp root, drain availableNow into a
 memory sink, read the sink, then drop the sink view and remove the
 root); ``staged``, its staging half, for a drain into another sink (the
-drift monitor's foreachBatch); persistent-state reads that distinguish
-"not created yet" from "broken" (dedup_guard, linkage_guard, the CDC
-sink); and the Hadoop FileSystem handle for a path (drift_monitor, the
-CDC sink)."""
+drift monitor's foreachBatch); ``start_sink`` / ``write_batch``, the one
+foreachBatch skeleton every sink under ``streaming/`` starts and writes
+through (its docstring states the delivery contract); persistent-state
+reads that distinguish "not created yet" from "broken" (dedup_guard,
+linkage_guard, the CDC sink); and the Hadoop FileSystem handle for a
+path (drift_monitor, the CDC sink)."""
 
 from __future__ import annotations
 
 import contextlib
+import glob
 import os
 import shutil
 import tempfile
@@ -19,7 +22,10 @@ from collections.abc import Callable, Iterator
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
+from graphdb_for_drones_spark.operators import _pin
 from graphdb_for_drones_spark.session import ensure_package_shipped
 
 # Streaming aggregations/state stores are partitioned by
@@ -140,6 +146,85 @@ def drain(
             return spark.table(qn)
         finally:
             spark.catalog.dropTempView(qn)
+
+
+def start_sink(
+    stream: DataFrame, apply_batch: Callable[[DataFrame, int], None],
+    checkpoint_dir: str, available_now: bool, *,
+    partitioned: tuple[str, ...] = (), poll: str = "0 seconds",
+) -> StreamingQuery:
+    """Start ``stream`` into ``apply_batch`` through foreachBatch,
+    checkpointed at ``checkpoint_dir``: availableNow (drain the backlog,
+    then stop), else a batch every ``poll`` (``"0 seconds"`` is Spark's
+    default trigger).  The frames a batch pins through ``operators/_pin``
+    are released when it returns, so they do not pile up over a drain.
+
+    Delivery contract.  foreachBatch alone is at-least-once: a batch can
+    be retried after its writes land but before the checkpoint commit
+    records it.  So each batch writes its own ``batch_id=<n>``
+    partitions by dynamic overwrite (``write_batch``), and a retry
+    REPLACES them with identical rows instead of appending duplicates —
+    effectively-once output given a deterministic batch function.  A
+    sink that reads its own output back sees STRICTLY EARLIER batches
+    only (``read_history``).  Batch ids are checkpoint-relative: a
+    replay from a FRESH checkpoint is idempotent only when the source
+    reproduces the same batch boundaries (true for availableNow drains
+    of a static directory with the same reader options); batching that
+    groups the files differently leaves the earlier lineage's stale
+    partitions behind.
+
+    A ``partitioned`` dir holding top-level ``part-*.parquet`` files
+    (the pre-``batch_id`` flat-append layout) is refused at start: the
+    mixed layout only fails at READ time (conflicting directory
+    structures)."""
+    for path in partitioned:
+        if glob.glob(os.path.join(glob.escape(path), "part-*.parquet")):
+            raise ValueError(
+                f"{path!r} holds flat-append (pre-batch_id) part files: "
+                "mixed layouts are unreadable, point the sink at a fresh dir"
+            )
+
+    def released(batch_df: DataFrame, batch_id: int) -> None:
+        with _pin.scoped():
+            apply_batch(batch_df, batch_id)
+
+    trigger = {"availableNow": True} if available_now else {"processingTime": poll}
+    return (
+        stream.writeStream.foreachBatch(released)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(**trigger)
+        .start()
+    )
+
+
+def write_batch(df: DataFrame, batch_id: int, path: str, *by: str) -> None:
+    """One micro-batch's rows into ``path``, partitioned by ``(*by,
+    batch_id)`` under dynamic overwrite: ``start_sink``'s idempotent
+    write."""
+    (
+        df.withColumn("batch_id", F.lit(int(batch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*by, "batch_id")
+        .parquet(path)
+    )
+
+
+def read_history(spark: SparkSession, path: str, batch_id: int) -> DataFrame | None:
+    """What ``write_batch`` wrote to ``path`` for batches BEFORE
+    ``batch_id``, or None before the first write.  Batch n's output is
+    then a pure function of batches 0..n, so any replay — a crash retry
+    of batch n, or a full fresh-checkpoint reprocess over an
+    already-populated index — rewrites partition n with identical
+    content instead of picking up matches that belong to later batches'
+    partitions."""
+    hist = read_parquet_or_none(spark, path)
+    return None if hist is None else hist.filter(F.col("batch_id") < int(batch_id))
+
+
+def read_sink(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Every row a ``write_batch`` sink has written to ``out_dir``."""
+    return spark.read.parquet(out_dir)
 
 
 def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:

@@ -175,25 +175,149 @@ def test_contamination_guard_same_batch_replay(spark, tmp_path):
     assert again == once
 
 
-def test_contamination_guard_refuses_legacy_layout(spark, tmp_path):
-    """A flat-append quarantine dir (pre-batch_id layout) must be
-    refused at start, not discovered as a read-time layout conflict."""
-    from graphdb_for_drones_spark.streaming import decontam as dc
+def _start_guard(spark, guard, out, ckpt):
+    """Start ``guard`` over a rate stream shaped for it, writing its
+    flags to ``out`` (index dirs, where the guard has them, beside it)."""
+    from graphdb_for_drones_spark.streaming import (
+        anomaly_gate,
+        decontam,
+        dedup_guard,
+        linkage_guard,
+    )
 
+    rate = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    docs = rate.select(F.col("value").alias("doc_id"), F.lit("t").alias("text"))
+    index_dir = out + "_index"
+    if guard == "decontam":
+        ev = spark.createDataFrame([(1, "x y z")], "doc_id long, text string")
+        return decontam.start_contamination_guard(docs, ev, out, ckpt)
+    if guard == "anomaly_gate":
+        stats = spark.createDataFrame(
+            [("click", 5, 10.0, 1.0)],
+            "event_type string, n_ref long, ref_mean double, ref_std double",
+        )
+        events = rate.select(
+            F.lit("click").alias("event_type"), F.col("value").cast("double")
+        )
+        return anomaly_gate.start_anomaly_gate(events, stats, out, ckpt)
+    if guard == "dedup_guard":
+        return dedup_guard.start_neardup_guard(docs, index_dir, out, ckpt)
+    records = rate.select(F.col("value").alias("id"), F.lit("ABCDEF").alias("key"))
+    return linkage_guard.start_linkage_guard(records, index_dir, out, ckpt)
+
+
+@pytest.mark.parametrize(
+    "guard", ["decontam", "anomaly_gate", "dedup_guard", "linkage_guard"]
+)
+def test_contamination_guard_refuses_legacy_layout(spark, tmp_path, guard):
+    """A flat-append flag dir (pre-batch_id layout) must be refused at
+    start, not discovered as a read-time layout conflict."""
     out = tmp_path / "quarantine"
     out.mkdir()
     (out / "part-00000-legacy.snappy.parquet").write_bytes(b"PAR1")
-    ev = spark.createDataFrame([(1, "x y z")], "doc_id long, text string")
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-    ).select(F.col("value").alias("doc_id"), F.lit("t").alias("text"))
     with pytest.raises(ValueError, match="flat-append"):
-        dc.start_contamination_guard(
-            stream,
-            ev,
-            out_dir=str(out),
-            checkpoint_dir=str(tmp_path / "ckpt"),
+        q = _start_guard(spark, guard, str(out), str(tmp_path / "ckpt"))
+        q.stop()
+
+
+# --------------------------------------------------------------------- #
+# continuous IVF ingest
+# --------------------------------------------------------------------- #
+
+
+def test_ivf_ingest_same_batch_replay(spark, tmp_path):
+    """Crash between the ingest write and the checkpoint commit: drop
+    the last batch's commit marker, so the restarted query re-runs that
+    batch under the same batch_id.  Its vectors must land once."""
+    import json
+    import os
+
+    from graphdb_for_drones_spark.operators.similarity import ivf_open, ivf_read
+    from graphdb_for_drones_spark.streaming.ivf_maintain import start_ivf_ingest
+
+    schema = "vec_id long, embedding array<float>"
+    base = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0]), (3, [0.1, 0.9])],
+        schema,
+    ).localCheckpoint()
+    path = str(tmp_path / "ivf")
+    ivf_open(spark, base, path, k=2, iters=2)
+    src = tmp_path / "in"
+    src.mkdir()
+    for i, vec in enumerate([[0.98, 0.02], [0.02, 0.98]]):
+        f = src / f"b{i}.json"
+        f.write_text(json.dumps({"vec_id": 100 + i, "embedding": vec}))
+        os.utime(f, (1_700_000_000 + i * 60,) * 2)
+    ckpt = tmp_path / "ckpt"
+
+    def drain():
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
         )
+        start_ivf_ingest(stream, path, str(ckpt)).awaitTermination(120)
+
+    drain()
+    index, _ = ivf_read(spark, path)
+    assert index.count() == 6
+    (ckpt / "commits" / "1").unlink()  # batch 1 wrote, commit lost
+    (ckpt / "commits" / ".1.crc").unlink(missing_ok=True)
+    drain()  # re-runs batch 1
+    index, _ = ivf_read(spark, path)
+    assert sorted(r.vec_id for r in index.collect()) == [0, 1, 2, 3, 100, 101]
+
+
+# --------------------------------------------------------------------- #
+# per-batch pins
+# --------------------------------------------------------------------- #
+
+
+@pytest.mark.parametrize("guard", ["dedup_guard", "linkage_guard"])
+def test_guard_drain_releases_batch_pins(spark, tmp_path, guard):
+    """The frames a guard pins inside a micro-batch are released once
+    its writes are done: no persisted RDD the drain created outlives
+    it, so the session's persisted-RDD count after the drain equals the
+    count before (ids compared, so another test's frame freed by GC
+    meanwhile cannot mask a leak)."""
+    import json
+    import os
+
+    from graphdb_for_drones_spark.streaming import dedup_guard, linkage_guard
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for i in range(4):
+        rows = [
+            {"doc_id": 10 * i + j, "id": 10 * i + j,
+             "text": f"shared words here batch {i} row {j}", "key": f"KEY{i}{j}X"}
+            for j in range(3)
+        ]
+        f = src / f"b{i}.json"
+        f.write_text("\n".join(json.dumps(r) for r in rows))
+        os.utime(f, (1_700_000_000 + i * 60,) * 2)
+    stream = (
+        spark.readStream.schema("doc_id long, id long, text string, key string")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+    )
+    dirs = [str(tmp_path / d) for d in ("index", "flags", "ckpt")]
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    if guard == "dedup_guard":
+        q = dedup_guard.start_neardup_guard(stream, *dirs, jaccard_threshold=0.3)
+    else:
+        q = linkage_guard.start_linkage_guard(stream, *dirs)
+    q.awaitTermination(180)
+    assert q.exception() is None
+    # one index partition per micro-batch: all four batches ran
+    assert {p.name for p in (tmp_path / "index").glob("*/batch_id=*")} == {
+        f"batch_id={i}" for i in range(4)
+    }
+    assert persisted() - before == set()
 
 
 # --------------------------------------------------------------------- #
