@@ -10,16 +10,22 @@ traversal kernel's BFS), component analysis of the delegation fabric,
 and degree centrality of issuers.
 
 Scale notes: each superstep is one shuffle keyed on dst (message
-aggregation).  Supersteps materialize per iteration to cut lineage;
-``settle`` (used by ``k_core``) keeps driver-sized outputs as local
-frames and pins larger ones through ``_pin.pin_state``.  For billion-edge
-graphs, pre-partition edges by dst so the per-iteration shuffle
-degenerates to a local combine.
+aggregation).  Every loop that carries state between rounds (pagerank,
+connected_components, k_core, temporal_reach, weighted_sssp) pins its
+edge list lazily, counts a node bound once (materializing the pin) and
+settles each round through ``settle``: a driver-sized state comes back
+local and is broadcast into the next round, a larger one is pinned by
+``_pin.pin_state``.  Replaced states, and the edge pin once the answer
+is settled, are released (``_settled``).  ``pagerank_fixed_point`` is
+the exception: its unrolled plan cuts lineage only every few
+supersteps.  For billion-edge graphs, pre-partition edges by dst so the
+per-iteration shuffle degenerates to a local combine.
 """
 
 from __future__ import annotations
 
 import operator
+from functools import reduce
 from itertools import accumulate
 
 from pyspark.sql import DataFrame
@@ -52,38 +58,43 @@ def pagerank(
     """Standard PageRank, one superstep per iteration:
     contribution = rank/out_degree flows along edges; new rank =
     (1-d) + d * Σ incoming.  Returns (id, rank) — un-normalized
-    GraphX-convention ranks (sum ≈ N)."""
-    verts = pin(
+    GraphX-convention ranks (sum ≈ N).  Ranks settle with the vertex
+    count as the bound, and each round's ranks list the next's vertices."""
+    edges = pin(edges.select("src", "dst"), eager=False)
+    verts = (
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
-    edges = edges.select("src", "dst").persist()
     out_deg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("deg")
     )
-    ranks = verts.withColumn("rank", F.lit(1.0))
+    # the vertex count materializes the edge pin
+    ranks, n, local = settle(verts.withColumn("rank", F.lit(1.0)), verts.count())
     for _ in range(iterations):
+        r = F.broadcast(ranks) if local else ranks
         contribs = (
-            edges.join(ranks, edges["src"] == ranks["id"])
-            .join(out_deg, ranks["id"] == out_deg["id"])
+            edges.join(r, edges["src"] == r["id"])
+            .join(out_deg, r["id"] == out_deg["id"])
             .select(
                 edges["dst"].alias("id"),
                 (F.col("rank") / F.col("deg")).alias("contrib"),
             )
         )
         summed = contribs.groupBy("id").agg(F.sum("contrib").alias("s"))
-        ranks = pin_state(
-            verts.join(summed, "id", "left").select(
+        nxt, _, local = settle(
+            ranks.select("id").join(summed, "id", "left").select(
                 "id",
                 (
                     F.lit(1 - damping)
                     + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
                 ).alias("rank"),
-            )
+            ),
+            n,
         )
-    edges.unpersist()
-    return ranks
+        release(ranks)
+        ranks = nxt
+    return _settled(ranks, edges)
 
 
 def pagerank_fixed_point(
@@ -230,52 +241,56 @@ def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFram
     Edge sets ≤ ``SMALL_GRAPH_EDGES`` short-circuit to a driver
     union-find (threshold-guarded, like the traversal kernel's driver
     strategies) — identical result, none of the per-superstep job
-    overhead that dominates dimension-sized pair graphs."""
-    if SMALL_GRAPH_EDGES:
-        # materialize once BEFORE the size probe: edges are typically an
-        # expensive pair-join output, and both the probe and whichever
-        # path wins would otherwise re-execute that plan (scalar-typed
-        # rows — the no-array-cache rule doesn't apply); the count
-        # below materializes the pin
-        edges = pin(edges.select("src", "dst"), eager=False)
-        if edges.count() <= SMALL_GRAPH_EDGES:
-            return _components_driver(edges)
-    sym = edges.select("src", "dst").unionByName(
+    overhead that dominates dimension-sized pair graphs.  The loop
+    settles each round's labels with the node count as the bound."""
+    # materialize once BEFORE the size probe: edges are typically an
+    # expensive pair-join output, and both the probe and whichever path
+    # wins would otherwise re-execute that plan (scalar-typed rows — the
+    # no-array-cache rule doesn't apply); the first count materializes
+    # the pin
+    edges = pin(edges.select("src", "dst"), eager=False)
+    if SMALL_GRAPH_EDGES and edges.count() <= SMALL_GRAPH_EDGES:
+        return _settled(_components_driver(edges), edges)
+    sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    sym = sym.persist()
-    labels = pin_state(
+    labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
     )
+    labels, n, local = settle(labels, labels.count())
     for _ in range(max_iterations):
+        lb = F.broadcast(labels) if local else labels
         nbr_min = (
-            sym.join(labels, sym["src"] == labels["id"])
+            sym.join(lb, sym["src"] == lb["id"])
             .select(F.col("dst").alias("id"), F.col("component"))
             .groupBy("id")
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_labels = pin_state(
+        new_labels, _, local = settle(
             labels.join(nbr_min, "id", "left").select(
                 "id",
                 F.least(
                     F.col("component"),
                     F.coalesce(F.col("nbr_component"), F.col("component")),
                 ).alias("component"),
-            )
+            ),
+            n,
         )
+        # every node keeps its row, so the settled count is always n:
+        # only comparing the labels themselves detects the fixpoint
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "id")
             .filter(F.col("n.component") != F.col("o.component"))
             .count()
         )
+        release(labels)
         labels = new_labels
         if changed == 0:
             break
-    sym.unpersist()
-    return labels
+    return _settled(labels, edges)
 
 
 def trust_propagation(
@@ -356,6 +371,15 @@ def settle(df: DataFrame, bound: int) -> tuple[DataFrame, int, bool]:
     return df, df.count(), False
 
 
+def _settled(answer: DataFrame, *spent: DataFrame) -> DataFrame:
+    """``answer``, after releasing ``spent``: the answer is settled
+    (collected or pinned on its own), so a loop's edge pin and its
+    replaced states can go."""
+    for df in spent:
+        release(df)
+    return answer
+
+
 def k_core(
     edges: DataFrame, k: int, max_rounds: int = 64, canonical: bool = False
 ) -> DataFrame:
@@ -418,28 +442,21 @@ def k_core(
         )
         return settle(deg.filter(F.col("core_degree") >= min_deg), bound)
 
-    def done(answer, *spent):
-        # the answer is settled (collected or pinned on its own), so the
-        # edge pin and the replaced loop states can go
-        for df in (sym, *spent):
-            release(df)
-        return answer
-
     # a node of degree >= k ends >= k of the |sym| edges, so at most
     # 2|sym|/k nodes pass the degree filter; later rounds only shrink
     alive, n, local = peel(None, False, k, 2 * sym.count() // max(k, 1))
     for _ in range(max_rounds):
         if n == 0:
-            return done(alive)
+            return _settled(alive, sym)
         nxt = peel(alive, local, k, n)
         if nxt[1] == n:
             # fixpoint: peeling only removes nodes, so equal cardinality
             # is the equal set, and these degrees are within the core
-            return done(nxt[0], alive)
+            return _settled(nxt[0], sym, alive)
         release(alive)
         alive, n, local = nxt
     # out of rounds: unfiltered degrees
-    return done(peel(alive, local, 0, n)[0], alive)
+    return _settled(peel(alive, local, 0, n)[0], sym, alive)
 
 
 def temporal_reach(
@@ -470,45 +487,48 @@ def temporal_reach(
     equal arrival).  Each superstep is one frontier⋈edges join with the
     time predicate fused (Catalyst pushes it into the join), one
     min-aggregation keyed on dst — shuffle bounded by reached nodes,
-    never path multiplicity.
+    never path multiplicity.  Levels and the anchor-free answer hold
+    only edge dsts, so they settle with the distinct-dst count as bound.
     """
-    spark = edges.sparkSession
-    ts = F.col(ts_col).cast("long")
-    e = edges.select("src", "dst", ts.alias("__t")).persist()
-    from graphdb_for_drones_spark.traversal import _local_df
-
-    frontier = _local_df(
-        spark, [(anchor, -(1 << 62), 0)], "id string, arrival long, hops int"
-    )
+    # pinned: every hop re-reads the edges; the distinct-dst count materializes it
+    ts = F.col(ts_col).cast("long").alias("__t")
+    e = pin(edges.select("src", "dst", ts), eager=False)
+    bound = e.select("dst").distinct().count()
     # defer the best-merge to ONE final aggregation: per-level
-    # min-arrival frontiers are
-    # exactly what the next hop must expand — an earlier arrival at a
-    # node strictly dominates (every t > later is also > earlier) — and
-    # the global earliest arrival per node is the min over levels, so
-    # per-hop merging buys nothing but 2 extra shuffles + checkpoints a
-    # hop.  Each level checkpoints once (it is referenced twice: next
-    # hop + final merge).
-    levels = [frontier]
+    # min-arrival frontiers are exactly what the next hop must expand —
+    # an earlier arrival at a node strictly dominates (every t > later
+    # is also > earlier) — and the global earliest arrival per node is
+    # the min over levels, so per-hop merging buys nothing but 2 extra
+    # shuffles + settles a hop.  Each level settles once (it is
+    # referenced twice: next hop + final merge).
+    depart = -(1 << 62)  # the anchor's departure: -infinity
+    levels = [traversal._local_df(
+        edges.sparkSession, [(anchor, depart, 0)], "id string, arrival long, hops int"
+    )]
+    # the first hop reads the lone anchor row as literals: a filter on
+    # the edges, no broadcast job
+    step = e.filter(F.col("src") == anchor).select(
+        "dst", "__t", F.lit(depart).alias("arrival"), F.lit(0).alias("hops")
+    )
     for _ in range(max_hops):
-        frontier = pin_state(
-            e.join(F.broadcast(frontier), e["src"] == frontier["id"])
-            .filter(F.col("__t") > F.col("arrival"))
+        frontier, _, local = settle(
+            step.filter(F.col("__t") > F.col("arrival"))
             .groupBy(F.col("dst").alias("id"))
             .agg(
                 F.min("__t").alias("arrival"),
                 (F.min(F.struct(F.col("__t"), (F.col("hops") + 1).alias("h")))["h"]).alias("hops"),
-            )
+            ),
+            bound,
         )
         levels.append(frontier)
-    best = levels[0]
-    for lv in levels[1:]:
-        best = best.unionByName(lv)
-    best = best.groupBy("id").agg(
+        f = F.broadcast(frontier) if local else frontier
+        step = e.join(f, e["src"] == f["id"])
+    best = reduce(DataFrame.unionByName, levels).groupBy("id").agg(
         F.min(F.struct("arrival", "hops"))["arrival"].alias("arrival"),
         F.min(F.struct("arrival", "hops"))["hops"].alias("hops"),
     )
-    e.unpersist()
-    return best.filter(F.col("id") != anchor)
+    best = settle(best.filter(F.col("id") != anchor), bound)[0]
+    return _settled(best, e, *levels)
 
 
 def _cooccurrence_dense(
@@ -935,13 +955,7 @@ def cooccurrence_similarity_sampled(
     )
 
 
-def weighted_sssp(
-    edges: DataFrame,
-    source: str,
-    rounds: int = 4,
-    broadcast_best: bool | None = None,
-    broadcast_threshold: int = 1_000_000,
-) -> DataFrame:
+def weighted_sssp(edges: DataFrame, source: str, rounds: int = 4) -> DataFrame:
     """Single-source shortest paths with nonnegative integer weights by
     bounded Bellman-Ford relaxation: ``rounds`` supersteps of
     d_k(v) = min(d_{k-1}(v), min over edges (d_{k-1}(u) + w(u,v))) —
@@ -957,54 +971,39 @@ def weighted_sssp(
     one join + one min-agg over the best-so-far table — node-bounded,
     never path-bounded (a recursive path enumeration explodes
     combinatorially on dense graphs; relaxation cannot).  The best
-    table is loop state, pinned per round with ``pin_state`` (small: one
-    row per reached node).
+    table is loop state, settled per round with the distinct-dst count
+    + 1 as the bound (reached nodes are the source and edge dsts).  A
+    driver-sized table is broadcast into the next relaxation — a
+    map-side join over the pinned edges, no per-round edge shuffle (the
+    checkpointed frame's stats don't reliably trigger AQE's broadcast on
+    their own); a larger one stays executor-side and the join shuffles
+    (the table grows with the reached set, and an unconditional hint
+    would trade that shuffle for a driver or executor OOM).
     """
-    spark = edges.sparkSession
     # pin the edge list once: it is re-referenced every round, and an
     # expensive upstream (join + groupBy weight derivation) would
     # otherwise re-execute per superstep (measured 5.4 → 3.5 s on the
-    # trade entry at sf0.1)
-    e = pin(edges.select("src", "dst", F.col("w").cast("long").alias("w")))
-    from graphdb_for_drones_spark.traversal import _local_df
-
-    best = _local_df(spark, [(source, 0)], "id string, cost long")
-    # the best-so-far table is node-dimension-sized while e is the edge
-    # table: broadcasting best makes each superstep's relaxation a
-    # map-side join over the PINNED edges (no per-round edge shuffle;
-    # the checkpointed frame's stats don't reliably trigger AQE's
-    # broadcast on their own).  But best GROWS with the reached-node
-    # set, so an unconditional hint trades the shuffle for a
-    # driver/executor OOM on large graphs.  Default (None) is a
-    # per-round BOUNDED probe on the just-checkpointed table — a
-    # limit-count over materialized partitions, the dense-cooccurrence
-    # gating pattern — that falls back to the shuffle join the first
-    # round the frontier outgrows ``broadcast_threshold``.  Explicit
-    # True/False skips the probe (the cataloged trade queries pass
-    # True: nation-dimension graphs, probe would cost more than it
-    # saves).
-    def maybe_bcast(d, small):
-        return F.broadcast(d) if small else d
-
-    small = bool(broadcast_best)
-    probing = broadcast_best is None
-    if probing:
-        small = True  # best is exactly the single source row pre-round-1
-    for rnd in range(rounds):
-        if probing and rnd > 0:
-            small = (
-                best.limit(broadcast_threshold + 1).count()
-                <= broadcast_threshold
-            )
-            if not small:
-                # best only grows round-over-round: once it outgrows the
-                # threshold it never shrinks back, so stop paying the probe
-                probing = False
-        relaxed = (
-            e.join(maybe_bcast(best, small), e["src"] == best["id"])
-            .select(F.col("dst").alias("id"), (F.col("cost") + F.col("w")).alias("cost"))
+    # trade entry at sf0.1); the distinct-dst count materializes the pin
+    e = pin(
+        edges.select("src", "dst", F.col("w").cast("long").alias("w")),
+        eager=False,
+    )
+    bound = e.select("dst").distinct().count() + 1
+    best = traversal._local_df(edges.sparkSession, [(source, 0)], "id string, cost long")
+    # the first relaxation reads the lone source row as literals: a
+    # filter on the edges, no broadcast job
+    relaxed = e.filter(F.col("src") == source).select(
+        F.col("dst").alias("id"), F.col("w").alias("cost")
+    )
+    for _ in range(rounds):
+        nxt, _, local = settle(
+            best.unionByName(relaxed).groupBy("id").agg(F.min("cost").alias("cost")),
+            bound,
         )
-        best = pin_state(
-            best.unionByName(relaxed).groupBy("id").agg(F.min("cost").alias("cost"))
+        release(best)
+        best = nxt
+        b = F.broadcast(best) if local else best
+        relaxed = e.join(b, e["src"] == b["id"]).select(
+            F.col("dst").alias("id"), (F.col("cost") + F.col("w")).alias("cost")
         )
-    return best
+    return _settled(best, e)

@@ -985,7 +985,7 @@ def q_trade_cheapest_route(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
         )
     )
-    best = weighted_sssp(edges, "c1", rounds=4, broadcast_best=True)
+    best = weighted_sssp(edges, "c1", rounds=4)
     return best.filter(F.col("id") != "c1")
 
 
@@ -1972,17 +1972,21 @@ def q_trade_temporal_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # r12 (guide §2.4): pin before the symmetrizing union — the kernel's
-    # persist() materializes BOTH legs, which re-ran the join+distinct
+    # edge pin materializes BOTH legs, which re-ran the join+distinct
     # derivation twice; the pin runs it once and the union reads rows.
-    from graphdb_for_drones_spark.operators._pin import pin
+    # Lazy: the kernel's first count materializes it, and the answer is
+    # settled, so the pin goes when the kernel returns.
+    from graphdb_for_drones_spark.operators._pin import pin, release
 
-    pairs = pin(pairs)
+    pairs = pin(pairs, eager=False)
     edges = pairs.unionByName(
         pairs.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "ts"
         )
     )
-    return temporal_reach(edges, anchor="c1", max_hops=3)
+    reach = temporal_reach(edges, anchor="c1", max_hops=3)
+    release(pairs)
+    return reach
 
 
 # chained stages AS MATERIALIZED (each l_k feeds both l_{k+1} and u,

@@ -354,12 +354,14 @@ def test_k_core_matches_python_reference_on_random_graphs(spark):
         assert got == expect, label
 
 
-@pytest.mark.parametrize("knob", ["collect_threshold_1", "no_pin"])
-def test_k_core_answer_is_knob_independent(spark, monkeypatch, knob):
-    """The same graphs as the differential test, with peel rounds
-    forced executor-side (survivor collect threshold 1: every survivor
-    set of two or more rows takes the pin_state + count branch) or with
-    pinning disabled: the answer must not move."""
+KNOBS = ["default", "collect_threshold_1", "no_pin"]
+
+
+def _set_knob(monkeypatch, knob):
+    """Apply a knob the answer must not depend on: ``collect_threshold_1``
+    forces every settled state of two or more rows executor-side
+    (``pin_state`` + count), ``no_pin`` disables ``_pin.pin``.  Returns
+    the list ``pin_state`` calls append to under ``collect_threshold_1``."""
     from graphdb_for_drones_spark import traversal
     from graphdb_for_drones_spark.operators import graph_algorithms as ga
 
@@ -370,8 +372,20 @@ def test_k_core_answer_is_knob_independent(spark, monkeypatch, knob):
         monkeypatch.setattr(
             ga, "pin_state", lambda df: pins.append(1) or real_pin_state(df)
         )
-    else:
+    elif knob == "no_pin":
         monkeypatch.setenv("SPARK_GRAFT_NO_PIN", "1")
+    return pins
+
+
+@pytest.mark.parametrize("knob", KNOBS[1:])
+def test_k_core_answer_is_knob_independent(spark, monkeypatch, knob):
+    """The same graphs as the differential test, with peel rounds
+    forced executor-side (survivor collect threshold 1: every survivor
+    set of two or more rows takes the pin_state + count branch) or with
+    pinning disabled: the answer must not move."""
+    from graphdb_for_drones_spark.operators import graph_algorithms as ga
+
+    pins = _set_knob(monkeypatch, knob)
     for label, e, k, expect in _random_kcore_cases(spark):
         got = {r.id: r.core_degree for r in ga.k_core(e, k=k).collect()}
         assert got == expect, label
@@ -479,40 +493,114 @@ def test_k_core_pins_only_through_pin_policy(spark, monkeypatch):
     assert bypass == []
 
 
+def _leak_graph(spark, n):
+    """A path n0..n{n-1} (edge i weighs 1 and departs at t=i) plus the
+    triangle X-Y-Z, as (src, dst, w, ts) edges."""
+    return spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}", 1, i) for i in range(n - 1)]
+        + [("X", "Y", 1, 0), ("Y", "Z", 1, 0), ("Z", "X", 1, 0)],
+        "src string, dst string, w long, ts long",
+    ).coalesce(1).localCheckpoint()
+
+
+def _leak_cases():
+    """kernel -> (path length of the leak graph, call, answer reader,
+    expected answer).  k_core peels the twenty-node path for ten rounds;
+    the other kernels run on an eight-node path."""
+    from graphdb_for_drones_spark.operators import graph_algorithms as ga
+
+    path = {f"n{i}": "n0" for i in range(8)}
+    tri = {"X": "X", "Y": "X", "Z": "X"}
+    components = (
+        8,
+        ga.connected_components,
+        lambda rows: {r.id: r.component for r in rows},
+        {**path, **tri},
+    )
+    return {
+        "k_core": (
+            20,
+            lambda e: ga.k_core(e, k=2),
+            lambda rows: {r.id: r.core_degree for r in rows},
+            {"X": 2, "Y": 2, "Z": 2},
+        ),
+        "pagerank": (
+            8,
+            lambda e: ga.pagerank(e, iterations=3),
+            lambda rows: {r.id for r in rows},
+            set(path) | set(tri),
+        ),
+        "weighted_sssp": (
+            8,
+            lambda e: ga.weighted_sssp(e, "n0", rounds=3),
+            lambda rows: {r.id: r.cost for r in rows},
+            {"n0": 0, "n1": 1, "n2": 2, "n3": 3},
+        ),
+        "temporal_reach": (
+            8,
+            lambda e: ga.temporal_reach(e, "n0", max_hops=3),
+            lambda rows: {r.id: (r.arrival, r.hops) for r in rows},
+            {"n1": (0, 1), "n2": (1, 2), "n3": (2, 3)},
+        ),
+        "components_driver": components,
+        "components_loop": components,
+    }
+
+
 @pytest.mark.parametrize("threshold", [None, 1])
-def test_k_core_leaves_no_pinned_blocks(spark, monkeypatch, threshold):
-    """k_core releases the edge pin and every replaced survivor set:
-    driver-side it leaves no persisted RDD, executor-side (collect
-    threshold 1, the ten-round path graph) only the answer's own."""
+@pytest.mark.parametrize(
+    "kernel",
+    [
+        "k_core",
+        "pagerank",
+        "weighted_sssp",
+        "temporal_reach",
+        "components_driver",
+        "components_loop",
+    ],
+)
+def test_graph_loop_leaves_no_pinned_blocks(spark, monkeypatch, kernel, threshold):
+    """Every state-carrying loop releases its edge pin and every
+    replaced state: with the state driver-side it leaves no persisted
+    RDD, executor-side (collect threshold 1) only the answer's own.
+    The components driver path (union-find over one collect) is
+    driver-side at either threshold; ``components_loop`` forces the
+    distributed loop (``SMALL_GRAPH_EDGES=0``)."""
     from graphdb_for_drones_spark import traversal
     from graphdb_for_drones_spark.operators import graph_algorithms as ga
 
     if threshold is not None:
         monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", threshold)
-    e = edges_df(
-        spark,
-        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(19)]
-        + [("X", "Y"), ("Y", "Z"), ("Z", "X")],
-    )
+    if kernel == "components_loop":
+        monkeypatch.setattr(ga, "SMALL_GRAPH_EDGES", 0)
+    size, call, read, expect = _leak_cases()[kernel]
+    e = _leak_graph(spark, size)
 
     def persisted():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     before = persisted()
-    core = ga.k_core(e, k=2)
-    assert len(persisted() - before) == (0 if threshold is None else 1)
-    assert {r.id: r.core_degree for r in core.collect()} == {"X": 2, "Y": 2, "Z": 2}
+    out = call(e)
+    executor_side = threshold is not None and kernel != "components_driver"
+    assert len(persisted() - before) == (1 if executor_side else 0)
+    assert read(out.collect()) == expect
 
 
-def test_temporal_reach_matches_python_reference_on_random_graphs(spark):
+@pytest.mark.parametrize("knob", KNOBS)
+def test_temporal_reach_matches_python_reference_on_random_graphs(
+    spark, monkeypatch, knob
+):
     """Differential: engine earliest-arrival reachability vs a
     label-correcting Python reference on seeded random temporal
-    graphs (multi-edges, cycles, duplicate timestamps)."""
+    graphs (multi-edges, cycles, duplicate timestamps), under each
+    knob the answer must not depend on."""
     import random
 
     from graphdb_for_drones_spark.operators.graph_algorithms import (
         temporal_reach,
     )
+
+    pins = _set_knob(monkeypatch, knob)
 
     rng = random.Random(7)
     for trial in range(3):
@@ -551,16 +639,22 @@ def test_temporal_reach_matches_python_reference_on_random_graphs(spark):
             for r in temporal_reach(e, anchor, hops).collect()
         }
         assert got == expect, trial
+    if knob == "collect_threshold_1":
+        assert pins  # the executor-side branch ran
 
 
-def test_weighted_sssp_matches_python_bellman_ford(spark):
+@pytest.mark.parametrize("knob", KNOBS)
+def test_weighted_sssp_matches_python_bellman_ford(spark, monkeypatch, knob):
     """Differential: bounded-relaxation SSSP vs a python reference on
-    random weighted digraphs (cycles, multi-edges, unreachable nodes)."""
+    random weighted digraphs (cycles, multi-edges, unreachable nodes),
+    under each knob the answer must not depend on."""
     import random
 
     from graphdb_for_drones_spark.operators.graph_algorithms import (
         weighted_sssp,
     )
+
+    pins = _set_knob(monkeypatch, knob)
 
     rng = random.Random(7)
     nodes = list("abcdef")
@@ -585,6 +679,8 @@ def test_weighted_sssp_matches_python_bellman_ford(spark):
                     nxt[d] = best[s] + w
             best = nxt
         assert got == best, (trial, edges)
+    if knob == "collect_threshold_1":
+        assert pins  # the executor-side branch ran
 
 
 def test_weighted_sssp_exact_at_hop_diameter(spark):

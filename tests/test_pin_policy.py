@@ -4,9 +4,11 @@
 materialized: ``localCheckpoint`` on local[*], a reliable checkpoint on a
 cluster master with a checkpoint dir, no pin (``pin`` only) without one
 or under ``SPARK_GRAFT_NO_PIN``.  A direct ``.localCheckpoint()`` or
-``.checkpoint()`` anywhere else bypasses that policy.  This test parses
-every module of the package and fails on any such attribute outside
-``_pin.py``, naming each file and line.  Pure AST — no SparkSession.
+``.checkpoint()`` anywhere else bypasses that policy, and so does the
+columnar cache (``.persist()`` / ``.cache()``), which ``_pin.py`` rules
+out (~20× slower on array columns).  These tests parse every module of
+the package and fail on any such attribute outside ``_pin.py`` (or the
+cache allowlist), naming each file and line.  Pure AST — no SparkSession.
 """
 
 import ast
@@ -16,7 +18,14 @@ import graphdb_for_drones_spark
 
 PACKAGE_DIR = os.path.dirname(graphdb_for_drones_spark.__file__)
 POLICY = os.path.join("operators", "_pin.py")
-BANNED = {"localCheckpoint", "checkpoint"}
+
+#: modules still on the columnar cache, each with the reason it is left
+CACHE_ALLOWED = {
+    "traversal.py": (
+        "reachable_counts' distributed continuation caches its edges; it "
+        "is on the write_path benchmark's read, left for a later change"
+    ),
+}
 
 
 def _modules():
@@ -29,17 +38,35 @@ def _modules():
                     yield rel, path
 
 
-def test_only_the_pin_policy_checkpoints():
+def _hits(banned, allowed=()):
+    """``file:line .attr`` for every attribute named in ``banned``,
+    outside ``_pin.py`` and the ``allowed`` modules."""
     hits = []
     for rel, path in _modules():
+        if rel in allowed:
+            continue
         with open(path) as fh:
             tree = ast.parse(fh.read(), filename=rel)
         hits += [
             f"{rel}:{node.lineno} .{node.attr}"
             for node in ast.walk(tree)
-            if isinstance(node, ast.Attribute) and node.attr in BANNED
+            if isinstance(node, ast.Attribute) and node.attr in banned
         ]
+    return sorted(hits)
+
+
+def test_only_the_pin_policy_checkpoints():
+    hits = _hits({"localCheckpoint", "checkpoint"})
     assert not hits, (
         "materialize through operators/_pin.py (pin for reuse, pin_state "
-        "for rows that must not be recomputed):\n" + "\n".join(sorted(hits))
+        "for rows that must not be recomputed):\n" + "\n".join(hits)
+    )
+
+
+def test_no_columnar_cache_outside_the_allowlist():
+    hits = _hits({"persist", "cache"}, CACHE_ALLOWED)
+    assert not hits, (
+        "pin through operators/_pin.py instead of the columnar cache "
+        "(or add the module to CACHE_ALLOWED with its reason):\n"
+        + "\n".join(hits)
     )
