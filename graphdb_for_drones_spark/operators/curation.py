@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graphdb_for_drones_spark.operators import _index_store
 from graphdb_for_drones_spark.operators.dedup import shingle_hash_array
 from graphdb_for_drones_spark.operators.text import token_count
 
@@ -170,14 +171,15 @@ def bucketed_shingle_table_open(
     deleted (a possible active scan) — instead the open DETOURS to a
     ``-respec`` sibling dir so callers keep serving through the window,
     and the aged sweep collects the legacy dir later.  Cold builds
-    stage in a ``_private_tmp``
-    dir + rename, so concurrent builders never interleave writes in
-    the live directory (the persisted-index race contract,
+    publish through ``_index_store.build_once`` (private tmp dir +
+    rename), so concurrent builders never interleave writes in the live
+    directory (the persisted-index race contract,
     ``tests/test_failure_injection.py``).
     ``build_params`` records semantic build constants (shingle_n,
     max_df, …) in the sidecar and is asserted the same way — callers
     must ALSO encode every build param in ``path``/``table`` (the
-    ``*_path_for`` contract) so distinct param sets never share a dir.
+    ``_index_store.path_for`` contract) so distinct param sets never
+    share a dir.
 
     Two sides bucketed on ``h`` with the same bucket count join with NO
     shuffle exchange on either side: at 100 TB this converts the
@@ -188,14 +190,6 @@ def bucketed_shingle_table_open(
     import json as _json
     import os as _os
     import shutil as _shutil
-    import time as _time
-
-    from graphdb_for_drones_spark.operators.similarity import (
-        _newest_mtime,
-        _private_tmp,
-        _sweep_stale_fingerprints,
-        _sweep_stale_tmp,
-    )
 
     spec_file = _os.path.join(path, "_bucket_spec.json")
     # Normalize through one JSON round-trip BEFORE both writing and
@@ -217,13 +211,13 @@ def bucketed_shingle_table_open(
         # but only once AGED: a young spec-less dir may still be
         # mid-scan in another session (deleting under an active reader
         # fails ITS job), and age is how every sweep here stays safe
-        if _time.time() - _newest_mtime(path) < 3600.0:
+        if not _index_store.aged(path):
             # DEGRADED PATH, not an availability cliff (round-8 ADVICE):
             # build under a sibling dir and leave the legacy one for the
             # aged sweep — a mid-upgrade session keeps serving instead
             # of hard-failing for up to an hour.  Deterministic suffix,
-            # so concurrent detours race on ONE dir (the staged-build
-            # contract below resolves that race as usual).
+            # so concurrent detours race on ONE dir (build_once
+            # resolves that race as usual).
             return bucketed_shingle_table_open(
                 spark,
                 builder,
@@ -234,26 +228,18 @@ def bucketed_shingle_table_open(
             )
         _shutil.rmtree(path)
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-    if not _os.path.isdir(path):
-        from graphdb_for_drones_spark.sources.io import write_bucketed
+    from graphdb_for_drones_spark.sources.io import write_bucketed
 
-        # CONCURRENT-BUILDER SAFE, the _private_tmp contract the other
-        # persisted indexes use: stage the bucketed files in a private
-        # tmp dir under a throwaway table name, then rename into place —
-        # two racing cold builds never interleave writes in the live
-        # dir, the loser's rename fails cleanly and it opens the
-        # winner's identical (deterministic builder) index below.
-        _sweep_stale_tmp(path)
-        tmp = _private_tmp(path)
+    def write(tmp: str) -> None:
+        # CONCURRENT-BUILDER SAFE: the bucketed files are staged in the
+        # private tmp dir under a throwaway table name — two racing cold
+        # builds never interleave writes in the live dir, the loser's
+        # rename fails cleanly and it opens the winner's identical
+        # (deterministic builder) index below.
         tmp_table = f"{table}__stage_{_os.path.basename(tmp).split('.')[-1]}"
         try:
             write_bucketed(
-                builder(),
-                tmp_table,
-                ["h"],
-                num_buckets,
-                sort_cols=["h"],
-                path=tmp,
+                builder(), tmp_table, ["h"], num_buckets, sort_cols=["h"], path=tmp
             )
         finally:
             # metadata points at the tmp location; the real table is
@@ -261,16 +247,11 @@ def bucketed_shingle_table_open(
             spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
         with open(_os.path.join(tmp, "_bucket_spec.json"), "w") as fh:
             _json.dump(want, fh)
-        try:
-            _os.rename(tmp, path)
-        except OSError:
-            _shutil.rmtree(tmp, ignore_errors=True)
-            if not _os.path.isdir(path):  # pragma: no cover - IO failure
-                raise
-        # drop dead index dirs of the SAME source's older corpus states
-        # (path carries <...>-<source id>-<content fingerprint>, the
-        # *_path_for naming contract the sweep keys on)
-        _sweep_stale_fingerprints(path)
+
+    # path carries <...>-<source id>-<content fingerprint>, so the
+    # publish also drops dead index dirs of the SAME source's older
+    # corpus states
+    _index_store.build_once(path, write)
     with open(spec_file) as fh:
         spec = _json.load(fh)
     if spec != want:
@@ -313,17 +294,14 @@ def bucketed_shingle_table_open(
 def sweep_legacy_shidx_dirs(root: str) -> None:
     """One-time migration sweep for PRE-param-token bucketed-index dirs
     (``shidx-<name>-<8 hex sid>-<16 hex fp>``): the round-8 naming puts
-    the build params between name and sid, so ``_sweep_stale_
-    fingerprints``'s prefix keying can never collect the old dirs —
-    without this they leak forever in a shared index root.  Same age
-    guard as every index sweep (never delete under a possible active
-    reader)."""
+    the build params between name and sid, so the prefix keying of
+    ``_index_store._sweep_stale_fingerprints`` can never collect the old
+    dirs — without this they leak forever in a shared index root.  Same
+    age guard as every index sweep (never delete under a possible
+    active reader)."""
     import os as _os
     import re as _re
     import shutil as _shutil
-    import time as _time
-
-    from graphdb_for_drones_spark.operators.similarity import _newest_mtime
 
     if not _os.path.isdir(root):
         return
@@ -333,7 +311,7 @@ def sweep_legacy_shidx_dirs(root: str) -> None:
         if (
             legacy_pat.fullmatch(entry)
             and _os.path.isdir(d)
-            and _time.time() - _newest_mtime(d) >= 3600.0
+            and _index_store.aged(d)
         ):
             _shutil.rmtree(d, ignore_errors=True)
 

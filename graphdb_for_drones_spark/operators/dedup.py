@@ -1283,32 +1283,6 @@ def simhash_pairs(
 # ---------------------------------------------------------------------------
 
 
-def ngram_pairs_path_for(
-    source_path: str,
-    shingle_n: int = 3,
-    threshold: float = 0.1,
-) -> str:
-    """Deterministic pair-graph directory for (source data, params):
-    ``ngpairs-<params>-<source id>-<content fingerprint>`` — the
-    ``ivf_path_for`` naming contract, so the same stale-fingerprint
-    sweep applies (a rewritten corpus rebuilds automatically; dead
-    graphs of the old corpus state are swept)."""
-    import os as _os
-
-    from graphdb_for_drones_spark.operators.similarity import (
-        _index_root,
-        _source_fingerprint,
-        _source_id,
-    )
-
-    sid = _source_id(source_path)
-    fp = _source_fingerprint(source_path)
-    t = str(threshold).replace(".", "_")
-    return _os.path.join(
-        _index_root(), f"ngpairs-n{shingle_n}-t{t}-{sid}-{fp}"
-    )
-
-
 def ngram_pairs_open(
     spark,
     documents: DataFrame,

@@ -16,10 +16,11 @@ edge list lazily, counts a node bound once (materializing the pin) and
 settles each round through ``settle``: a driver-sized state comes back
 local and is broadcast into the next round, a larger one is pinned by
 ``_pin.pin_state``.  Replaced states, and the edge pin once the answer
-is settled, are released (``_settled``).  ``pagerank_fixed_point`` is
-the exception: its unrolled plan cuts lineage only every few
-supersteps.  For billion-edge graphs, pre-partition edges by dst so the
-per-iteration shuffle degenerates to a local combine.
+is settled, are released (``_settled``).  ``pagerank_fixed_point``
+settles only its answer: its unrolled plan cuts lineage every few
+supersteps, not every one.  For billion-edge graphs, pre-partition
+edges by dst so the per-iteration shuffle degenerates to a local
+combine.
 """
 
 from __future__ import annotations
@@ -133,7 +134,9 @@ def pagerank_fixed_point(
 
     Plan shape per superstep: one equi join rank→edges on ``src`` (both
     sides pre-partitionable on src), one shuffle keyed on ``dst`` for
-    the partial-aggregated Σ — identical to the double path.
+    the partial-aggregated Σ — identical to the double path.  The
+    answer settles (:func:`settle`, the vertex count as the bound), and
+    then the edge and vertex pins and any mid-loop state are released.
 
     Returns (id, rank_fp long, rank double) where ``rank`` is the single
     IEEE division ``rank_fp / scale`` (exact-input, engine-stable).
@@ -152,15 +155,20 @@ def pagerank_fixed_point(
             "src",
             "dst",
             F.count(F.lit(1)).over(Window.partitionBy("src")).alias("deg"),
-        )
+        ),
+        eager=False,
     )
     verts = pin(
         deg_edges.select(F.col("src").alias("id"))
         .unionByName(deg_edges.select(F.col("dst").alias("id")))
-        .distinct()
+        .distinct(),
+        eager=False,
     )
+    # the vertex count bounds the answer and materializes both pins
+    n = verts.count()
     base = (scale * (damping_den - damping_num)) // damping_den
     ranks = verts.withColumn("rank_fp", F.lit(scale).cast("long"))
+    states = []
     for i in range(iterations):
         contribs = deg_edges.join(ranks, deg_edges["src"] == ranks["id"]).select(
             deg_edges["dst"].alias("id"),
@@ -181,11 +189,16 @@ def pagerank_fixed_point(
         # checkpoints dominate wall-clock on dimension-sized graphs
         if (i + 1) % 4 == 0 and (i + 1) < iterations:
             ranks = pin_state(ranks)
-    return ranks.select(
-        "id",
-        "rank_fp",
-        (F.col("rank_fp") / F.lit(float(scale))).alias("rank"),
+            states.append(ranks)
+    answer, _, _ = settle(
+        ranks.select(
+            "id",
+            "rank_fp",
+            (F.col("rank_fp") / F.lit(float(scale))).alias("rank"),
+        ),
+        n,
     )
+    return _settled(answer, deg_edges, verts, *states)
 
 
 # edge sets at or below this size resolve driver-side: near-dup pair

@@ -19,15 +19,14 @@ literal array per plane (64 floats), built once driver-side.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
-import shutil
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdb_for_drones_spark.operators._index_store import build_once
 from graphdb_for_drones_spark.operators._pin import pin
 
 
@@ -757,17 +756,10 @@ def ivf_index(
     )
 
 
-def ivf_search(
-    index: DataFrame,
-    centroids: list,
-    query_vec,
-    k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe the ``n_probe`` centroids nearest the query (same rounded-
-    cosine order), then exact cosine top-k within those clusters only."""
+def _probe_clusters(query_vec, centroids: list, n_probe: int) -> list:
+    """The ``n_probe`` cluster ids whose centroids are nearest the query
+    by rounded cosine, ties to the lower id — the coarse probe every
+    IVF search shares."""
 
     def cos_py(a, b):
         # sequential fold, same order as the engine/oracle folds
@@ -781,9 +773,24 @@ def ivf_search(
         return round(dot / ((na**0.5) * (nb**0.5)), 6)
 
     ranked = sorted(
-        ((cos_py(query_vec, v), -int(cid)) for cid, v in centroids), reverse=True
+        ((cos_py(query_vec, v), -int(cid)) for cid, v in centroids),
+        reverse=True,
     )
-    probes = [-neg for _, neg in ranked[:n_probe]]
+    return [-neg for _, neg in ranked[:n_probe]]
+
+
+def ivf_search(
+    index: DataFrame,
+    centroids: list,
+    query_vec,
+    k: int = 10,
+    n_probe: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Probe the ``n_probe`` centroids nearest the query (same rounded-
+    cosine order), then exact cosine top-k within those clusters only."""
+    probes = _probe_clusters(query_vec, centroids, n_probe)
     score = F.round(cosine(F.col(vec_col), _vec_lit(query_vec)), 6)
     return (
         index.filter(F.col("cluster").isin(probes))
@@ -804,192 +811,8 @@ def ivf_search(
 # freshly built one.  The persisted contents are bit-identical to a fresh
 # ``kmeans_centroids`` + ``ivf_index`` run (everything is deterministic and
 # parquet float round-trips are exact), so oracle checks hold either way.
+# Where an index lives and how it is published: ``_index_store``.
 # ---------------------------------------------------------------------------
-
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _index_root() -> str:
-    """Where persisted indexes live.  Defaults inside the repo's
-    (gitignored) spark-warehouse; override with SPARK_GRAFT_INDEX_DIR —
-    on a cluster this would be a shared object-store prefix."""
-    return os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(_REPO_ROOT, "spark-warehouse", "indexes"),
-    )
-
-
-def _source_id(source_path: str) -> str:
-    """8-hex digest of the source's ABSOLUTE PATH only — stable across
-    rewrites of the same source, distinct between sources.  Embedded in
-    index names so the stale-fingerprint sweep can tell "this source was
-    rewritten" (safe to delete) from "that's a different source's live
-    index" (must keep)."""
-    return hashlib.sha256(
-        os.path.abspath(source_path).encode()
-    ).hexdigest()[:8]
-
-
-def _source_fingerprint(source_path: str) -> str:
-    """Digest of the source parquet's file names + sizes + mtimes, so a
-    rewritten source yields a different index path (stale indexes are
-    simply never read again)."""
-    h = hashlib.sha256()
-    p = os.path.abspath(source_path)
-    h.update(p.encode())
-    if os.path.isdir(p):
-        for root, _dirs, files in sorted(os.walk(p)):
-            for f in sorted(files):
-                fp = os.path.join(root, f)
-                st = os.stat(fp)
-                h.update(f"{f}:{st.st_size}:{st.st_mtime_ns}".encode())
-    elif os.path.exists(p):
-        st = os.stat(p)
-        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:16]
-
-
-def ivf_path_for(
-    source_path: str, k: int = 8, iters: int = 2, seed: int = 42
-) -> str:
-    """Deterministic index directory for (source data, build params):
-    ``ivf-<params>-<source id>-<content fingerprint>``."""
-    sid = _source_id(source_path)
-    fp = _source_fingerprint(source_path)
-    return os.path.join(
-        _index_root(), f"ivf-k{k}-i{iters}-s{seed}-{sid}-{fp}"
-    )
-
-
-def _newest_mtime(root: str) -> float:
-    """Newest mtime anywhere under ``root`` — the top-level dir's mtime
-    goes stale while a parquet job keeps writing files DEEPER in the
-    tree (index trees are small: a few dozen part files)."""
-    newest = 0.0
-    for r, _dirs, files in os.walk(root):
-        for entry in [r] + [os.path.join(r, f) for f in files]:
-            try:
-                newest = max(newest, os.stat(entry).st_mtime)
-            except OSError:
-                pass
-    return newest
-
-
-def _private_tmp(path: str) -> str:
-    """A tmp dir name no other builder can share: pid alone is NOT
-    unique across concurrent builders in one process (threads share
-    it), and two builders writing one tmp dir corrupt the live index —
-    the loser's parquet tasks keep writing through the renamed inode
-    INTO the winner's published path.  pid + thread id + random token
-    gives every builder a private staging dir; the loser then fails its
-    rename cleanly and reads the winner's identical index."""
-    import threading
-    import uuid
-
-    return (
-        f"{path}.tmp.{os.getpid()}.{threading.get_ident()}."
-        f"{uuid.uuid4().hex[:8]}"
-    )
-
-
-def _sweep_stale_tmp(path: str, min_age_s: float = 3600.0) -> None:
-    """Remove crash leftovers: sibling ``<path>.tmp.<pid>`` dirs a
-    builder that died between its parquet write and the rename leaked.
-    Only dirs OLDER than ``min_age_s`` are swept — a live concurrent
-    builder's in-progress tmp (same deterministic index, different pid)
-    is minutes old at most, and deleting it mid-write would fail ITS
-    parquet job, not fall into the rename-race branch."""
-    import glob as _glob
-    import time as _time
-
-    now = _time.time()
-    for leftover in _glob.glob(_glob.escape(path) + ".tmp.*"):
-        try:
-            if now - _newest_mtime(leftover) < min_age_s:
-                continue
-        except OSError:
-            continue
-        shutil.rmtree(leftover, ignore_errors=True)
-
-
-def _sweep_stale_fingerprints(path: str) -> None:
-    """After a fresh build at ``path``
-    (= ``<params>-<source id>-<content fingerprint>``), drop sibling
-    index dirs with the SAME params AND SAME source id but a DIFFERENT
-    content fingerprint: that combination arises exactly when THIS
-    source was rewritten, so those dirs can never be opened again
-    (``*_path_for`` will never produce their name for any live source
-    state).  Without this, every source rewrite (e.g. each
-    degenerate-fixture test run) leaks one dead index dir forever.
-
-    The source-id segment is what makes the sweep safe in a SHARED
-    index root: two different sources (sf0.01 gate data and sf0.1 bench
-    data) indexed with the same params differ in source id, so neither
-    build sweeps the other's live index.  Only engages for
-    ``*_path_for``-shaped names (``<params>-<8 hex>-<16 hex>``) and
-    only removes siblings of that exact shape — a hand-chosen path like
-    ``/indexes/ivf-test`` never triggers a sweep."""
-    import re as _re
-
-    base = os.path.basename(path)
-    m = _re.fullmatch(r"(.+)-([0-9a-f]{8})-([0-9a-f]{16})", base)
-    if not m:
-        return
-    prefix, sid = m.group(1), m.group(2)
-    parent = os.path.dirname(path) or "."
-    if not os.path.isdir(parent):
-        return
-    same_source_stale = _re.escape(prefix) + "-" + sid + r"-[0-9a-f]{16}"
-    # pre-source-id legacy names (<params>-<16 hex>) can never be
-    # produced or opened by THIS code again — sweep them too.  Both
-    # classes are age-guarded: a dir touched within the last hour may
-    # still be mid-read by a session that opened it before the source
-    # rewrite (or, for legacy names, by a not-yet-upgraded process in a
-    # shared index root) — deleting under an active reader fails its
-    # in-flight scan.  Crash leftovers and genuinely dead indexes age
-    # past the guard and go on the next build.
-    legacy = _re.escape(prefix) + r"-[0-9a-f]{16}"
-    import time as _time
-
-    now = _time.time()
-    for entry in os.listdir(parent):
-        if entry == base or not (
-            _re.fullmatch(same_source_stale, entry)
-            or _re.fullmatch(legacy, entry)
-        ):
-            continue
-        sibling = os.path.join(parent, entry)
-        if not os.path.isdir(sibling):
-            continue
-        try:
-            if now - _newest_mtime(sibling) < 3600.0:
-                continue
-        except OSError:
-            continue
-        shutil.rmtree(sibling, ignore_errors=True)
-
-
-def ivf_write(index: DataFrame, centroids: list, path: str) -> None:
-    """Persist an IVF index atomically: parquet partitioned by ``cluster``
-    (a probe's ``cluster IN (...)`` filter becomes directory pruning) plus
-    the k·dim centroid list as JSON.  Writes land in a temp dir that is
-    renamed into place, so readers never observe a partial index; if a
-    concurrent builder won the rename race, its (identical, deterministic)
-    index is kept.  Stale ``.tmp.*`` leftovers from a crashed builder are
-    swept first, so they can't accumulate forever."""
-    _sweep_stale_tmp(path)
-    tmp = _private_tmp(path)
-    index.write.mode("overwrite").partitionBy("cluster").parquet(
-        os.path.join(tmp, "index")
-    )
-    with open(os.path.join(tmp, "centroids.json"), "w") as fh:
-        json.dump([[int(cid), list(map(float, v))] for cid, v in centroids], fh)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.isdir(path):  # pragma: no cover - genuine IO failure
-            raise
 
 
 def ivf_read(spark: SparkSession, path: str) -> tuple[DataFrame, list]:
@@ -1009,27 +832,6 @@ def ivf_read(spark: SparkSession, path: str) -> tuple[DataFrame, list]:
     return index, cents
 
 
-def near_pairs_path_for(
-    source_path: str,
-    dim: int,
-    threshold: float = 0.3,
-    n_planes: int = 16,
-    bands: int = 4,
-    seed: int = 42,
-) -> str:
-    """Deterministic eps-graph directory for (source data, LSH params):
-    ``npairs-<params>-<source id>-<content fingerprint>`` — the
-    ``ivf_path_for`` naming contract, so the same stale-fingerprint
-    sweep applies."""
-    sid = _source_id(source_path)
-    fp = _source_fingerprint(source_path)
-    t = str(threshold).replace(".", "_")
-    return os.path.join(
-        _index_root(),
-        f"npairs-d{dim}-t{t}-p{n_planes}-b{bands}-s{seed}-{sid}-{fp}",
-    )
-
-
 def persisted_pairs(spark: SparkSession, path: str, builder) -> DataFrame:
     """The shared pair-graph materialization kernel (the ``ivf_open``
     contract): load the persisted pair table at ``path`` if present,
@@ -1039,17 +841,12 @@ def persisted_pairs(spark: SparkSession, path: str, builder) -> DataFrame:
     rename, concurrent-builder safe, stale-sibling sweep) and load.
     At 100 TB this is the difference between one corpus-scale pair
     enumeration per INDEX BUILD and one per QUERY."""
-    if not os.path.isdir(path):
-        _sweep_stale_tmp(path)
-        tmp = _private_tmp(path)
-        builder().write.mode("overwrite").parquet(os.path.join(tmp, "pairs"))
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(path):  # pragma: no cover - genuine IO failure
-                raise
-        _sweep_stale_fingerprints(path)
+    build_once(
+        path,
+        lambda tmp: builder().write.mode("overwrite").parquet(
+            os.path.join(tmp, "pairs")
+        ),
+    )
     return spark.read.parquet(os.path.join(path, "pairs"))
 
 
@@ -1075,22 +872,6 @@ def near_pairs_open(
         lambda: ann_near_pairs(
             embeddings, dim, threshold, n_planes, bands, id_col, vec_col, seed
         ),
-    )
-
-
-def blocked_pairs_path_for(
-    source_path: str,
-    block_col: str,
-    threshold: float = 0.3,
-    seed: int = 42,
-) -> str:
-    """Deterministic directory for a materialized ``cosine_pairs_blocked``
-    graph — the ``ivf_path_for`` naming contract."""
-    sid = _source_id(source_path)
-    fp = _source_fingerprint(source_path)
-    t = str(threshold).replace(".", "_")
-    return os.path.join(
-        _index_root(), f"bpairs-{block_col}-t{t}-s{seed}-{sid}-{fp}"
     )
 
 
@@ -1135,11 +916,20 @@ def ivf_open(
 ) -> tuple[DataFrame, list]:
     """Load the index at ``path`` if present, else build from
     ``embeddings`` (seeded k-means + nearest-centroid assignment), persist,
-    and load.  Queries amortize the Lloyd iterations across every probe."""
-    if not os.path.isdir(path):
+    and load.  Queries amortize the Lloyd iterations across every probe.
+    The persisted index is parquet partitioned by ``cluster`` (a probe's
+    ``cluster IN (...)`` filter becomes directory pruning) plus the k·dim
+    centroid list as JSON."""
+
+    def write(tmp: str) -> None:
         cents = kmeans_centroids(embeddings, k, iters, seed, id_col, vec_col)
-        ivf_write(ivf_index(embeddings, cents, id_col, vec_col), cents, path)
-        _sweep_stale_fingerprints(path)
+        ivf_index(embeddings, cents, id_col, vec_col).write.mode(
+            "overwrite"
+        ).partitionBy("cluster").parquet(os.path.join(tmp, "index"))
+        with open(os.path.join(tmp, "centroids.json"), "w") as fh:
+            json.dump([[int(cid), list(map(float, v))] for cid, v in cents], fh)
+
+    build_once(path, write)
     return ivf_read(spark, path)
 
 
@@ -1287,42 +1077,34 @@ def pq_adc_topk(
 
     At scale the scan reads ONLY the m code bytes per row (here codes
     are computed inline from the raw vectors; a materialized variant
-    would persist ``pq_encode``'s output like ``ivf_write``).  Returns
+    persists ``pq_encode``'s output: ``pq_open``).  Returns
     (id, adist long) ordered by (adist, id), ascending."""
     codes = pq_encode(embeddings, codebooks, id_col, vec_col)
     return pq_adc_topk_from_codes(codes, query_vec, codebooks, k, id_col)
 
 
-def pq_path_for(source_path: str, m: int = 8, ksub: int = 16, seed: int = 42) -> str:
-    """Deterministic PQ code-table directory for (source data, params):
-    ``pq-<params>-<source id>-<content fingerprint>``."""
-    sid = _source_id(source_path)
-    fp = _source_fingerprint(source_path)
-    return os.path.join(
-        _index_root(), f"pq-m{m}-k{ksub}-s{seed}-{sid}-{fp}"
-    )
+def _codes_open(
+    spark: SparkSession, path: str, build, partition_by: str | None = None
+) -> tuple[DataFrame, list]:
+    """The PQ code-table store shared by ``pq_open`` and
+    ``ivfpq_residual_open``: load ``(codes, codebooks)`` from ``path``,
+    publishing ``build()``'s output first when absent — the code table
+    as parquet (m small ints per vector, the RAM-sized stand-in for
+    dim·4 bytes; partitioned by ``partition_by`` if given) plus the
+    codebooks as JSON."""
 
+    def write(tmp: str) -> None:
+        codes, books = build()
+        writer = codes.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(os.path.join(tmp, "codes"))
+        with open(os.path.join(tmp, "codebooks.json"), "w") as fh:
+            json.dump(
+                [[[float(x) for x in cw] for cw in book] for book in books], fh
+            )
 
-def pq_write(codes: DataFrame, codebooks: list, path: str) -> None:
-    """Persist PQ codes atomically (the ivf_write rename contract):
-    the code table as parquet — m small ints per vector, the RAM-sized
-    stand-in for dim·4 bytes — plus the codebooks as JSON."""
-    _sweep_stale_tmp(path)
-    tmp = _private_tmp(path)
-    codes.write.mode("overwrite").parquet(os.path.join(tmp, "codes"))
-    with open(os.path.join(tmp, "codebooks.json"), "w") as fh:
-        json.dump(
-            [[[float(x) for x in cw] for cw in book] for book in codebooks], fh
-        )
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.isdir(path):  # pragma: no cover - genuine IO failure
-            raise
-
-
-def pq_read(spark: SparkSession, path: str) -> tuple[DataFrame, list]:
+    build_once(path, write)
     with open(os.path.join(path, "codebooks.json")) as fh:
         books = json.load(fh)
     return spark.read.parquet(os.path.join(path, "codes")), books
@@ -1342,11 +1124,12 @@ def pq_open(
     (seeded codebooks + encode), persist, and load — queries amortize
     the encode pass exactly like ``ivf_open`` amortizes Lloyd; an ADC
     probe then reads ONLY the m code bytes per row."""
-    if not os.path.isdir(path):
+
+    def build():
         books = pq_codebooks(embeddings, m, ksub, seed, id_col, vec_col)
-        pq_write(pq_encode(embeddings, books, id_col, vec_col), books, path)
-        _sweep_stale_fingerprints(path)
-    return pq_read(spark, path)
+        return pq_encode(embeddings, books, id_col, vec_col), books
+
+    return _codes_open(spark, path, build)
 
 
 def pq_query_table(query_vec, codebooks: list) -> list:
@@ -1396,23 +1179,7 @@ def ivfpq_topk(
     Cost shape at 100 TB: probe = n_probe/k of the code table (cluster
     directory pruning), each row m integer lookups + one integer sum —
     the scan that keeps a billion-vector index interactive."""
-
-    def cos_py(a, b):
-        # sequential fold, same order as the engine/oracle folds
-        dot = 0.0
-        na = 0.0
-        nb = 0.0
-        for x, y in zip(a, b):
-            dot += float(x) * float(y)
-            na += float(x) * float(x)
-            nb += float(y) * float(y)
-        return round(dot / ((na**0.5) * (nb**0.5)), 6)
-
-    ranked = sorted(
-        ((cos_py(query_vec, v), -int(cid)) for cid, v in centroids),
-        reverse=True,
-    )
-    probes = [-neg for _, neg in ranked[:n_probe]]
+    probes = _probe_clusters(query_vec, centroids, n_probe)
     cand = ivf_index.filter(F.col("cluster").isin(probes)).select(id_col)
     dt = pq_query_table(query_vec, codebooks)
     m = len(codebooks)
@@ -1482,24 +1249,6 @@ def ivfpq_residual_build(
     return codes, books
 
 
-def ivfpq_residual_path_for(
-    source_path: str,
-    k: int = 8,
-    iters: int = 2,
-    m: int = 8,
-    ksub: int = 16,
-    seed: int = 42,
-) -> str:
-    """Deterministic residual-code directory for (source data, coarse +
-    PQ params) — the ``ivf_path_for`` naming contract."""
-    sid = _source_id(source_path)
-    fp = _source_fingerprint(source_path)
-    return os.path.join(
-        _index_root(),
-        f"ivfpqr-k{k}-i{iters}-m{m}-c{ksub}-s{seed}-{sid}-{fp}",
-    )
-
-
 def ivfpq_residual_open(
     spark: SparkSession,
     embeddings: DataFrame,
@@ -1514,34 +1263,18 @@ def ivfpq_residual_open(
     """Load the persisted residual-code table at ``path`` if present,
     else build (``ivfpq_residual_build``), persist atomically — codes
     parquet PARTITIONED BY cluster (a probe's ``cluster IN`` filter
-    becomes directory pruning, the ivf_write layout) plus the residual
+    becomes directory pruning, the ``ivf_open`` layout) plus the residual
     codebooks as JSON — and load.  Deterministic, so bit-identical to a
     fresh build; probes amortize the residual + encode pass exactly
     like ``pq_open`` amortizes the raw encode."""
-    if not os.path.isdir(path):
-        _sweep_stale_tmp(path)
-        codes, books = ivfpq_residual_build(
+    return _codes_open(
+        spark,
+        path,
+        lambda: ivfpq_residual_build(
             embeddings, centroids, m, ksub, seed, id_col, vec_col
-        )
-        tmp = _private_tmp(path)
-        codes.write.mode("overwrite").partitionBy("cluster").parquet(
-            os.path.join(tmp, "codes")
-        )
-        with open(os.path.join(tmp, "codebooks.json"), "w") as fh:
-            json.dump(
-                [[[float(x) for x in cw] for cw in book] for book in books],
-                fh,
-            )
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(path):  # pragma: no cover - genuine IO failure
-                raise
-        _sweep_stale_fingerprints(path)
-    with open(os.path.join(path, "codebooks.json")) as fh:
-        books = json.load(fh)
-    return spark.read.parquet(os.path.join(path, "codes")), books
+        ),
+        partition_by="cluster",
+    )
 
 
 def ivfpq_residual_search(
@@ -1561,22 +1294,7 @@ def ivfpq_residual_search(
     Residual ADC approximates the same ||q − x||² as raw ADC
     (‖(q−c) − (x−c)‖²) with tighter quantization — the reason FAISS
     defaults to it.  All integer micro-unit sums — hash-checkable."""
-
-    def cos_py(a, b):
-        dot = 0.0
-        na = 0.0
-        nb = 0.0
-        for x, y in zip(a, b):
-            dot += float(x) * float(y)
-            na += float(x) * float(x)
-            nb += float(y) * float(y)
-        return round(dot / ((na**0.5) * (nb**0.5)), 6)
-
-    ranked = sorted(
-        ((cos_py(query_vec, v), -int(cid)) for cid, v in centroids),
-        reverse=True,
-    )
-    probes = [-neg for _, neg in ranked[:n_probe]]
+    probes = _probe_clusters(query_vec, centroids, n_probe)
     cent = {int(cid): [float(x) for x in v] for cid, v in centroids}
     tables = {
         p: pq_query_table(

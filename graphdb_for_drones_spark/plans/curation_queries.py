@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graphdb_for_drones_spark.catalog import Catalog
-from graphdb_for_drones_spark.operators import curation
+from graphdb_for_drones_spark.operators import _index_store, curation
 from graphdb_for_drones_spark.streaming.util import drain, staged
 from graphdb_for_drones_spark.traversal import _local_df
 
@@ -112,36 +112,33 @@ def q_contamination_check_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
     sweeps zip pre-sorted buckets instead of re-shuffling the corpus."""
     import os as _os
 
-    from graphdb_for_drones_spark.operators.similarity import (
-        _index_root,
-        _source_fingerprint,
-        _source_id,
-    )
-
     cat = Catalog(spark, sf_dir)
     docs = cat.documents
     src = _os.path.join(sf_dir, "documents.parquet")
-    sid, fp = _source_id(src), _source_fingerprint(src)
-    root = _index_root()
 
     num_buckets = 16
 
     # one-time migration: pre-round-8 dirs were named without the param
     # token; the sweep idiom lives beside the open layer
-    curation.sweep_legacy_shidx_dirs(root)
+    curation.sweep_legacy_shidx_dirs(_index_store.root())
 
     def side(name: str, builder, **params):
-        # every build param is IN the path/table name (the *_path_for
+        # every build param is IN the path/table name (the path_for
         # contract): a param change lands in a fresh dir instead of
         # silently warm-opening files with a different layout/cap, and
         # the sidecar spec asserts the same on open
-        tok = "-".join(f"{k}{v}" for k, v in sorted(params.items()))
-        tok = f"{tok}-b{num_buckets}" if tok else f"b{num_buckets}"
+        path = _index_store.path_for(
+            "shidx",
+            src,
+            name,
+            *(f"{k}{v}" for k, v in sorted(params.items())),
+            f"b{num_buckets}",
+        )
         return curation.bucketed_shingle_table_open(
             spark,
             builder,
-            table=f"shidx_{name}_{tok.replace('-', '_')}_{sid}_{fp}",
-            path=_os.path.join(root, f"shidx-{name}-{tok}-{sid}-{fp}"),
+            table=_os.path.basename(path).replace("-", "_"),
+            path=path,
             num_buckets=num_buckets,
             build_params=params,
         )
@@ -408,18 +405,17 @@ def q_embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graphdb_for_drones_spark.operators.graph_algorithms import (
         connected_components,
     )
-    from graphdb_for_drones_spark.operators.similarity import (
-        blocked_pairs_open,
-        blocked_pairs_path_for,
-    )
+    from graphdb_for_drones_spark.operators.similarity import blocked_pairs_open
 
     cat = Catalog(spark, sf_dir)
     # dim=64 is the embeddings-table vector width (TESTDATA.md); passing
     # it skips the one-row dim probe.  Blocks here are far below
     # MAX_EXACT_BLOCK at test scale, so the exact leg runs and the oracle
     # is bit-exact; at 100 TB oversized blocks route through the LSH leg.
-    path = blocked_pairs_path_for(
-        _os.path.join(sf_dir, "embeddings.parquet"), "label", threshold=0.3
+    path = _index_store.path_for(
+        "bpairs",
+        _os.path.join(sf_dir, "embeddings.parquet"),
+        "label", "t0.3", "s42",
     )
     pairs = blocked_pairs_open(
         spark, cat.embeddings, path, block_col="label", threshold=0.3, dim=64

@@ -17,12 +17,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graphdb_for_drones_spark.catalog import Catalog
+from graphdb_for_drones_spark.operators import _index_store
 from graphdb_for_drones_spark.operators.graph_algorithms import triangle_count
-from graphdb_for_drones_spark.operators.similarity import (
-    ivf_open,
-    ivf_path_for,
-    ivf_search,
-)
+from graphdb_for_drones_spark.operators.similarity import ivf_open, ivf_search
 from graphdb_for_drones_spark.operators.temporal import asof_join, session_stats
 from graphdb_for_drones_spark.streaming.util import drain
 
@@ -1766,7 +1763,7 @@ def q_trade_trust_from_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
     values is reduction-order-independent — so even this float
     iterative algorithm is driver-hash-checkable; the oracle computes
     1.0 / (1 << min_depth) from a bounded recursive CTE."""
-    from graphdb_for_drones_spark.operators._pin import pin
+    from graphdb_for_drones_spark.operators._pin import pin, release
     from graphdb_for_drones_spark.traversal import reachable_counts
 
     cat = Catalog(spark, sf_dir)
@@ -1785,6 +1782,9 @@ def q_trade_trust_from_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     r = reachable_counts(edges, ["c1"], 4, mode="node", include_seed=True)
+    # the levels are a local frame or pinned, so `pairs` is never read
+    # again
+    release(pairs)
     return r.select(
         F.col("node").alias("id"),
         F.expr(
@@ -2108,8 +2108,8 @@ def _ivf_open_for_sf(spark: SparkSession, sf_dir: str):
 
     cat = Catalog(spark, sf_dir)
     data = cat.embeddings.filter(F.col("vec_id") != 0)
-    path = ivf_path_for(
-        _os.path.join(sf_dir, "embeddings.parquet"), k=8, iters=2, seed=42
+    path = _index_store.path_for(
+        "ivf", _os.path.join(sf_dir, "embeddings.parquet"), "k8", "i2", "s42"
     )
     return ivf_open(spark, data, path, k=8, iters=2, seed=42)
 
@@ -2250,14 +2250,13 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graphdb_for_drones_spark.operators.similarity import (
         ivfpq_topk,
         pq_open,
-        pq_path_for,
     )
 
     cat = Catalog(spark, sf_dir)
     data = cat.embeddings.filter(F.col("vec_id") != 0)
     idx, centroids = _ivf_open_for_sf(spark, sf_dir)
-    pq_path = pq_path_for(
-        _os.path.join(sf_dir, "embeddings.parquet"), m=8, ksub=16, seed=42
+    pq_path = _index_store.path_for(
+        "pq", _os.path.join(sf_dir, "embeddings.parquet"), "m8", "k16", "s42"
     )
     codes, books = pq_open(spark, data, pq_path, m=8, ksub=16, seed=42)
     q = [
@@ -2340,15 +2339,16 @@ def q_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from graphdb_for_drones_spark.operators.similarity import (
         ivfpq_residual_open,
-        ivfpq_residual_path_for,
         ivfpq_residual_search,
     )
 
     cat = Catalog(spark, sf_dir)
     data = cat.embeddings.filter(F.col("vec_id") != 0)
     _idx, centroids = _ivf_open_for_sf(spark, sf_dir)
-    path = ivfpq_residual_path_for(
-        _os.path.join(sf_dir, "embeddings.parquet"), k=8, iters=2, m=8, ksub=16
+    path = _index_store.path_for(
+        "ivfpqr",
+        _os.path.join(sf_dir, "embeddings.parquet"),
+        "k8", "i2", "m8", "c16", "s42",
     )
     codes, books = ivfpq_residual_open(
         spark, data, centroids, path, m=8, ksub=16, seed=42
@@ -2776,13 +2776,10 @@ def _ngram_pairs_for_sf(spark: SparkSession, sf_dir: str, cat: Catalog) -> DataF
     rebuilds automatically (`dedup.ngram_pairs_open`)."""
     import os as _os
 
-    from graphdb_for_drones_spark.operators.dedup import (
-        ngram_pairs_open,
-        ngram_pairs_path_for,
-    )
+    from graphdb_for_drones_spark.operators.dedup import ngram_pairs_open
 
-    path = ngram_pairs_path_for(
-        _os.path.join(sf_dir, "documents.parquet"), shingle_n=3, threshold=0.1
+    path = _index_store.path_for(
+        "ngpairs", _os.path.join(sf_dir, "documents.parquet"), "n3", "t0.1"
     )
     return ngram_pairs_open(spark, cat.documents, path)
 

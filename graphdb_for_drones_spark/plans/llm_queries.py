@@ -25,6 +25,7 @@ from graphdb_for_drones_spark.functions.crypto import (
     sign_ed25519_udf,
     verify_ed25519_udf,
 )
+from graphdb_for_drones_spark.operators import _index_store
 from graphdb_for_drones_spark.operators import dedup as D
 from graphdb_for_drones_spark.operators._pin import pin
 from graphdb_for_drones_spark.operators import similarity as S
@@ -1151,7 +1152,6 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graphdb_for_drones_spark.operators.similarity import (
         pq_adc_topk_from_codes,
         pq_open,
-        pq_path_for,
     )
 
     cat = Catalog(spark, sf_dir)
@@ -1164,8 +1164,8 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ivf_open amortization applied to PQ): probes read m small ints
     # per row, never the raw vectors; the fingerprinted path rebuilds
     # on source change, and the oracle still re-derives every code
-    path = pq_path_for(
-        _os.path.join(sf_dir, "embeddings.parquet"), m=8, ksub=16, seed=42
+    path = _index_store.path_for(
+        "pq", _os.path.join(sf_dir, "embeddings.parquet"), "m8", "k16", "s42"
     )
     codes, books = pq_open(spark, data, path, m=8, ksub=16, seed=42)
     return pq_adc_topk_from_codes(codes, q, books, k=10)
@@ -1489,11 +1489,10 @@ def q_embedding_dbscan_cores_fixed16(
     import os as _os
 
     cat = Catalog(spark, sf_dir)
-    path = S.near_pairs_path_for(
+    path = _index_store.path_for(
+        "npairs",
         _os.path.join(sf_dir, "embeddings.parquet"),
-        dim=64,
-        threshold=0.3,
-        n_planes=16,
+        "d64", "t0.3", "p16", "b4", "s42",
     )
     pairs = S.near_pairs_open(
         spark, cat.embeddings, path, dim=64, threshold=0.3, n_planes=16
@@ -1549,8 +1548,8 @@ def q_embedding_dbscan_cores(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = cat.embeddings.select("vec_id").count()
     n_planes = S.auto_band_width(n) * 4
     src = _os.path.join(sf_dir, "embeddings.parquet")
-    path = S.near_pairs_path_for(
-        src, dim=64, threshold=0.3, n_planes=n_planes
+    path = _index_store.path_for(
+        "npairs", src, "d64", "t0.3", f"p{n_planes}", "b4", "s42"
     )
     pairs = S.near_pairs_open(
         spark, cat.embeddings, path, dim=64, threshold=0.3,

@@ -411,7 +411,7 @@ def test_persisted_pairs_concurrent_builders(spark, tmp_path):
 
 
 def test_ivf_open_concurrent_builders(spark, tmp_path, monkeypatch):
-    """Same race through ivf_open/ivf_write: barrier inside the
+    """Same race through ivf_open: barrier inside the
     (monkeypatched) centroid trainer holds both threads in the build
     path; one rename wins, the loser reads the winner's index."""
     import glob
@@ -446,7 +446,8 @@ def test_ivf_open_concurrent_builders(spark, tmp_path, monkeypatch):
 def test_ivfpq_residual_open_concurrent_builders(spark, tmp_path, monkeypatch):
     """Same race for the residual-code index: barrier inside the
     (monkeypatched) build step; single readable index, no leftovers,
-    both racers read identical codes + codebooks."""
+    both racers read identical codes + codebooks, and a later open is
+    warm (its build step raises if run)."""
     import glob
     import os
     import threading
@@ -478,10 +479,18 @@ def test_ivfpq_residual_open_concurrent_builders(spark, tmp_path, monkeypatch):
     assert os.path.isdir(path)
     assert glob.glob(path + ".tmp.*") == []
 
+    # the published index re-reads clean: the build step must not run
+    def boom(*a, **kw):  # pragma: no cover - the assertion is the point
+        raise AssertionError("build step ran on a warm open")
+
+    monkeypatch.setattr(sim, "ivfpq_residual_build", boom)
+    work(0)
+    assert results[0] == results[1]
+
 
 def test_bucketed_shingle_table_open_concurrent_builders(spark, tmp_path):
     """The bucketed decontamination index's cold build stages in a
-    _private_tmp dir + rename (round 8) — race it like the other
+    private tmp dir + rename (round 8) — race it like the other
     persisted indexes: a barrier inside the builder holds both threads
     in the cold path, so both write staging dirs and exactly one
     rename wins.  One readable bucketed table, zero .tmp.* leftovers,
@@ -542,8 +551,9 @@ def test_bucketed_shingle_table_open_concurrent_builders(spark, tmp_path):
 
 def test_pq_open_concurrent_builders(spark, tmp_path, monkeypatch):
     """The remaining persisted-index sibling: two pq_open builds race
-    one path through pq_write's private-tmp + rename; one readable
-    code table + codebooks, zero leftovers, identical reads."""
+    one path through the index store's private tmp + rename; one
+    readable code table + codebooks, zero leftovers, identical reads,
+    and a later open is warm (its build step raises if run)."""
     import glob
     import os
     import threading
@@ -571,3 +581,11 @@ def test_pq_open_concurrent_builders(spark, tmp_path, monkeypatch):
     assert len(results[0][0]) == 32 and len(results[0][1]) == 4
     assert os.path.isdir(path)
     assert glob.glob(path + ".tmp.*") == []
+
+    # the published index re-reads clean: the build step must not run
+    def boom(*a, **kw):  # pragma: no cover - the assertion is the point
+        raise AssertionError("build step ran on a warm open")
+
+    monkeypatch.setattr(sim, "pq_codebooks", boom)
+    work(0)
+    assert results[0] == results[1]

@@ -530,6 +530,13 @@ def _leak_cases():
             lambda rows: {r.id for r in rows},
             set(path) | set(tri),
         ),
+        # five iterations, so the mid-loop lineage cut runs
+        "pagerank_fixed_point": (
+            8,
+            lambda e: ga.pagerank_fixed_point(e, iterations=5),
+            lambda rows: {r.id for r in rows},
+            set(path) | set(tri),
+        ),
         "weighted_sssp": (
             8,
             lambda e: ga.weighted_sssp(e, "n0", rounds=3),
@@ -553,6 +560,7 @@ def _leak_cases():
     [
         "k_core",
         "pagerank",
+        "pagerank_fixed_point",
         "weighted_sssp",
         "temporal_reach",
         "components_driver",

@@ -1,7 +1,8 @@
 """The trade graph's long-id pair base (plans/extra_queries._trade_keys):
 the decoded pairs are the string pairs the trade entries always used,
 the 40-core computed on long ids equals the one on strings, and the
-dedup runs after the exchange, not map-side."""
+dedup runs after the exchange, not map-side.  The trade graph entries
+leave no pinned blocks behind."""
 
 from __future__ import annotations
 
@@ -69,3 +70,20 @@ def test_trade_keys_dedup_runs_after_the_exchange(cat):
     assert "src" in lines[exchange] and "dst" in lines[exchange]
     assert any("HashAggregate" in line for line in lines[:exchange])
     assert not any("HashAggregate" in line for line in lines[exchange:])
+
+
+@pytest.mark.parametrize("entry", ["trade_trust_from_anchor", "supplier_pagerank"])
+def test_trade_entry_leaves_no_pinned_blocks(cat, entry):
+    """An entry's answer is driver-local here (both are far below
+    ``traversal.COLLECT_THRESHOLD`` at sf0.01), so once the entry
+    returns no pin it took may hold blocks: not the pair list, the
+    degree-annotated edges, the vertex list or a mid-loop state."""
+    spark = cat.spark
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    out = getattr(eq, f"q_{entry}")(spark, cat.sf_dir)
+    assert persisted() - before == set()
+    assert out.count() > 0
