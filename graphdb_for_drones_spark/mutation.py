@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graphdb_for_drones_spark.operators._pin import pin
+from graphdb_for_drones_spark.traversal import _empty_df
 
 
 def _keys_df(base: DataFrame, keys, key_col: str) -> DataFrame:
@@ -124,8 +125,7 @@ def bucketed_rank(
     }
     total = sum(counts.values())
     if not counts:
-        spark = df.sparkSession
-        empty = spark.createDataFrame([], keys.schema).select(
+        empty = _empty_df(df.sparkSession, keys.schema).select(
             key_col, F.lit(0).cast("int").alias("__rank")
         )
         return empty, 0

@@ -86,8 +86,9 @@ def md5_rank(
     }
     total = sum(counts.values())
     if not counts:
-        spark = df.sparkSession
-        empty = spark.createDataFrame([], keys.schema).select(
+        from graphdb_for_drones_spark.traversal import _empty_df
+
+        empty = _empty_df(df.sparkSession, keys.schema).select(
             key_col, F.lit(0).cast("int").alias("__rank")
         )
         return empty, 0
@@ -177,10 +178,11 @@ def negative_pairs(
     Returns (key_col, neg_<key_col>, j) with j in [0, k)."""
     idx, n = md5_rank(ids.select(key_col), key_col)
     if n < 2:
-        spark = ids.sparkSession
+        from graphdb_for_drones_spark.traversal import _empty_df
+
         kt = ids.schema[key_col].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"{key_col} {kt}, neg_{key_col} {kt}, j int"
+        return _empty_df(
+            ids.sparkSession, f"{key_col} {kt}, neg_{key_col} {kt}, j int"
         )
     left = idx.select(
         F.col(key_col),

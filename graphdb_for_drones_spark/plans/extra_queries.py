@@ -1874,10 +1874,15 @@ def q_trade_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent, asserted in tests/test_graph_algorithms.py).
 
     Plan build runs the kernel: one count of the pair list (which also
-    pins it), the degree filter and one peel round, each survivor set
-    (~8k rows at sf0.1) collected to the driver; the peel round that
-    finds the fixpoint returns its rows as the answer, a local Arrow
-    frame, so the collect only scans those rows.
+    pins it), then, the pair list being within the kernel's
+    ``SMALL_GRAPH_EDGES`` (587k pairs at sf0.1), one ``toArrow()``
+    collect of it and the degree filter and peel rounds in numpy on
+    the driver; the answer (~8k rows at sf0.1) is a local Arrow frame,
+    so the collect only scans those rows.  Five Spark jobs per call,
+    all in plan build (four to build, pin and count the pair list, one
+    Arrow collect), down from nine when the peel ran as Spark rounds;
+    perfbench ``graph_traversal`` (local[4] on a 4-core host, 20
+    interleaved pairs) went 1.14 → 0.82 s per pass, median.
 
     The peel runs on :func:`_trade_keys`' long ids, and only the ~8k
     answer rows are decoded to 'c'/'s' strings: the pinned pair list,

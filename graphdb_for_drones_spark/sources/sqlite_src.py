@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from graphdb_for_drones_spark.traversal import _empty_df
+
 
 def _affinity(decl: str | None) -> T.DataType:
     """SQLite type-affinity rules (sqlite.org/datatype3.html §3.1) →
@@ -112,7 +114,7 @@ def read_sqlite(
         ).fetchone()
     lo, hi = row
     if lo is None:  # empty table
-        return spark.createDataFrame([], schema)
+        return _empty_df(spark, schema)
 
     n = max(1, min(num_partitions, hi - lo + 1))
     span = (hi - lo + 1 + n - 1) // n

@@ -8,7 +8,9 @@ moments, the batch entry's arithmetic) and flagged rows append to a
 quarantine table before the events reach downstream aggregates.
 
 Shape: the stats table is SMALL (one row per key) — pinned once with
-``_pin.pin`` and re-joined (broadcastable) against each
+``_pin.pin`` (``streaming/util.start_guard``: after the start is
+allowed, released when the query terminates) and re-joined
+(broadcastable) against each
 micro-batch inside ``foreachBatch``.  No state accumulates beyond the
 written flags, each batch's in its own ``batch_id=<n>`` partition
 (``streaming/util.start_sink`` states the delivery contract:
@@ -23,8 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphdb_for_drones_spark.operators._pin import pin
-from graphdb_for_drones_spark.streaming.util import read_sink, start_sink, write_batch
+from graphdb_for_drones_spark.streaming.util import read_sink, start_guard, write_batch
 
 
 def reference_stats(
@@ -104,10 +105,11 @@ def start_anomaly_gate(
     """Append events beyond ``n_sigma`` of their key's reference mean
     to ``out_dir``.  ``stats`` is pinned once (it is re-referenced per
     micro-batch).  Output is parquet partitioned by ``batch_id``."""
-    apply_batch = make_apply_batch(pin(stats), out_dir, key_col, value_col, n_sigma)
-    return start_sink(
-        stream_events, apply_batch, checkpoint_dir, available_now,
-        partitioned=(out_dir,),
+    return start_guard(
+        stream_events,
+        stats,
+        lambda ref: make_apply_batch(ref, out_dir, key_col, value_col, n_sigma),
+        out_dir, checkpoint_dir, available_now,
     )
 
 

@@ -8,13 +8,14 @@ compared against the held-out eval set's shingle index, and flagged
 the documents ever reach a training shard.
 
 Shape: the eval index is STATIC and small (benchmarks are thousands of
-docs, not billions) — built once, pinned with ``_pin.pin``, and
-re-joined against each micro-batch's freshly shingled side inside
+docs, not billions) — built once, pinned with ``_pin.pin`` once the
+start is allowed, released when the query terminates, and re-joined
+against each micro-batch's freshly shingled side inside
 ``foreachBatch``.  Per-batch cost is one broadcastable join of batch
 shingles against the eval index; nothing is quadratic in corpus size
 and no state accumulates beyond the written flags.  Started and written
-through ``streaming/util.start_sink`` / ``write_batch`` (the delivery
-contract is stated there).
+through ``streaming/util.start_guard`` / ``write_batch`` (the delivery
+contract is stated at ``start_sink``).
 """
 
 from __future__ import annotations
@@ -22,8 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from graphdb_for_drones_spark.operators import curation
-from graphdb_for_drones_spark.operators._pin import pin
-from graphdb_for_drones_spark.streaming.util import read_sink, start_sink, write_batch
+from graphdb_for_drones_spark.streaming.util import read_sink, start_guard, write_batch
 
 
 def make_apply_batch(
@@ -73,15 +73,13 @@ def start_contamination_guard(
     the asymmetric gate that catches a short benchmark prompt quoted
     inside a long incoming document, which jaccard dilutes below any
     workable threshold)."""
-    ev = pin(
-        curation.shingle_index(eval_docs, "eval_id", text_col, id_col, shingle_n)
-    )
-    apply_batch = make_apply_batch(
-        ev, out_dir, threshold, shingle_n, text_col, id_col, metric
-    )
-    return start_sink(
-        stream_docs, apply_batch, checkpoint_dir, available_now,
-        partitioned=(out_dir,),
+    return start_guard(
+        stream_docs,
+        curation.shingle_index(eval_docs, "eval_id", text_col, id_col, shingle_n),
+        lambda ev: make_apply_batch(
+            ev, out_dir, threshold, shingle_n, text_col, id_col, metric
+        ),
+        out_dir, checkpoint_dir, available_now,
     )
 
 

@@ -5,7 +5,10 @@ memory sink, read the sink, then drop the sink view and remove the
 root); ``staged``, its staging half, for a drain into another sink (the
 drift monitor's foreachBatch); ``start_sink`` / ``write_batch``, the one
 foreachBatch skeleton every sink under ``streaming/`` starts and writes
-through (its docstring states the delivery contract); persistent-state
+through (its docstring states the delivery contract), and
+``start_guard``, its form for a guard whose batches read one pinned
+reference frame (pinned after the start is allowed, released when the
+query terminates); persistent-state
 reads that distinguish "not created yet" from "broken" (dedup_guard,
 linkage_guard, the CDC sink); and the Hadoop FileSystem handle for a
 path (drift_monitor, the CDC sink)."""
@@ -17,13 +20,14 @@ import glob
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 from collections.abc import Callable, Iterator
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
 from graphdb_for_drones_spark.operators import _pin
 from graphdb_for_drones_spark.session import ensure_package_shipped
@@ -177,12 +181,7 @@ def start_sink(
     (the pre-``batch_id`` flat-append layout) is refused at start: the
     mixed layout only fails at READ time (conflicting directory
     structures)."""
-    for path in partitioned:
-        if glob.glob(os.path.join(glob.escape(path), "part-*.parquet")):
-            raise ValueError(
-                f"{path!r} holds flat-append (pre-batch_id) part files: "
-                "mixed layouts are unreadable, point the sink at a fresh dir"
-            )
+    _refuse_flat_append(*partitioned)
 
     def released(batch_df: DataFrame, batch_id: int) -> None:
         with _pin.scoped():
@@ -195,6 +194,80 @@ def start_sink(
         .trigger(**trigger)
         .start()
     )
+
+
+def _refuse_flat_append(*paths: str) -> None:
+    """Raise if a ``partitioned`` dir holds top-level part files."""
+    for path in paths:
+        if glob.glob(os.path.join(glob.escape(path), "part-*.parquet")):
+            raise ValueError(
+                f"{path!r} holds flat-append (pre-batch_id) part files: "
+                "mixed layouts are unreadable, point the sink at a fresh dir"
+            )
+
+
+def start_guard(
+    stream: DataFrame, reference: DataFrame,
+    make_batch: Callable[[DataFrame], Callable[[DataFrame, int], None]],
+    out_dir: str, checkpoint_dir: str, available_now: bool,
+) -> StreamingQuery:
+    """``start_sink`` for a guard whose every batch reads one
+    ``reference`` frame (an eval index, per-key stats) and writes
+    ``out_dir`` through ``write_batch``.  The reference is pinned only
+    once ``out_dir`` passes the flat-append refusal, ``make_batch``
+    builds the batch function over the pinned frame, and the pin is
+    released when the query terminates, however it ends (at once if the
+    start itself fails)."""
+    _refuse_flat_append(out_dir)
+    pinned = _pin.pin(reference)
+    try:
+        query = start_sink(
+            stream, make_batch(pinned), checkpoint_dir, available_now
+        )
+    except BaseException:
+        _pin.release(pinned)
+        raise
+    _release_on_termination(stream.sparkSession, query, pinned)
+    return query
+
+
+def _release_on_termination(
+    spark: SparkSession, query: StreamingQuery, *frames: DataFrame
+) -> None:
+    """Release ``frames`` once ``query`` terminates: a listener on the
+    session's streams, removed when it fires.  A query that is already
+    done when the listener is added (its termination event may have
+    gone out first) releases here."""
+    lock = threading.Lock()
+    done: list[bool] = []
+
+    def release() -> None:
+        with lock:
+            if done:
+                return
+            done.append(True)
+        for df in frames:
+            _pin.release(df)
+        spark.streams.removeListener(listener)
+
+    class OnTermination(StreamingQueryListener):
+        def onQueryStarted(self, event) -> None:
+            pass
+
+        def onQueryProgress(self, event) -> None:
+            pass
+
+        def onQueryIdle(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            if str(event.id) == query.id:
+                release()
+
+    listener = OnTermination()
+    spark.streams.addListener(listener)
+    if not query.isActive:
+        release()
 
 
 def write_batch(df: DataFrame, batch_id: int, path: str, *by: str) -> None:

@@ -122,7 +122,7 @@ def _local_df(spark, rows, schema) -> DataFrame:
     DDL string or a StructType."""
     rows = list(rows)
     if not rows:
-        return spark.createDataFrame([], schema)
+        return _empty_df(spark, schema)
     import pandas as pd
 
     if isinstance(schema, str):
@@ -130,6 +130,24 @@ def _local_df(spark, rows, schema) -> DataFrame:
     else:
         cols = list(schema.fieldNames())
     return spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema=schema)
+
+
+def _empty_df(spark, schema) -> DataFrame:
+    """A zero-row frame of ``schema`` (a DDL string or a StructType),
+    built JVM-side: an empty Arrow table becomes an empty
+    ``LocalRelation``, which the optimizer folds away in a union, where
+    ``spark.createDataFrame([], schema)`` is a Python-RDD scan that
+    starts Python workers for every query that reads it (measured at
+    local[4]: a ``union().count()`` over it cost 250-300 ms warm, over
+    this frame 60-100 ms)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    empty = pa.Table.from_pylist([], schema=to_arrow_schema(schema))
+    return spark.createDataFrame(empty, schema=schema)
 
 
 def _seed_counts(seeds, mode: str):

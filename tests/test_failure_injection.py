@@ -215,9 +215,56 @@ def test_contamination_guard_refuses_legacy_layout(spark, tmp_path, guard):
     out = tmp_path / "quarantine"
     out.mkdir()
     (out / "part-00000-legacy.snappy.parquet").write_bytes(b"PAR1")
+    before = _persisted(spark)
     with pytest.raises(ValueError, match="flat-append"):
         q = _start_guard(spark, guard, str(out), str(tmp_path / "ckpt"))
         q.stop()
+    # refused before anything is pinned
+    assert _persisted(spark) - before == set()
+
+
+def _persisted(spark):
+    """Ids of the session's persisted RDDs (a fresh snapshot per call)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize("guard", ["decontam", "anomaly_gate"])
+def test_guard_reference_pin_released_on_termination(spark, tmp_path, guard):
+    """A guard pins its reference (eval index, stats) for its batches
+    and releases it once the query terminates: after an availableNow
+    drain no persisted RDD the start created is left.  The release runs
+    on the streams listener, so the probe waits for it."""
+    import json
+    import time
+
+    from graphdb_for_drones_spark.streaming import anomaly_gate, decontam
+
+    src = tmp_path / "in"
+    src.mkdir()
+    rows = [{"doc_id": i, "text": "x y z w", "event_type": "click",
+             "value": 10.0 + 10 * i} for i in range(3)]
+    (src / "b0.json").write_text("\n".join(json.dumps(r) for r in rows))
+    stream = spark.readStream.schema(
+        "doc_id long, text string, event_type string, value double"
+    ).json(str(src))
+    out, ckpt = str(tmp_path / "flags"), str(tmp_path / "ckpt")
+    before = _persisted(spark)
+    if guard == "decontam":
+        ev = spark.createDataFrame([(1, "x y z")], "doc_id long, text string")
+        q = decontam.start_contamination_guard(stream, ev, out, ckpt)
+    else:
+        stats = spark.createDataFrame(
+            [("click", 5, 10.0, 1.0)],
+            "event_type string, n_ref long, ref_mean double, ref_std double",
+        )
+        q = anomaly_gate.start_anomaly_gate(stream, stats, out, ckpt)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert spark.read.parquet(out).count() > 0  # the batch read the pin
+    deadline = time.time() + 30
+    while _persisted(spark) - before and time.time() < deadline:
+        time.sleep(0.2)
+    assert _persisted(spark) - before == set()
 
 
 # --------------------------------------------------------------------- #

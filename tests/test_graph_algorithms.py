@@ -161,6 +161,43 @@ def test_connected_components_driver_vs_distributed_identical(spark, monkeypatch
     assert comp["3"] == "0" and comp["11"] == "10" and comp["32"] == "30"
 
 
+def test_connected_components_driver_matches_loop_on_random_graphs(
+    spark, monkeypatch
+):
+    """Differential on seeded random forests with string ids that order
+    differently as strings and as numbers ("10" < "9"): the driver step
+    (codes in sorted id order) and the distributed loop both label each
+    node with the string-min id of its component, as a Python
+    union-find does."""
+    import random
+
+    from graphdb_for_drones_spark.operators import graph_algorithms as ga
+
+    rng = random.Random(3)
+    for n, m in [(30, 20), (60, 45)]:
+        pairs = [(str(rng.randrange(n)), str(rng.randrange(n))) for _ in range(m)]
+        pairs.append(("9", "10"))
+        parent = {}
+
+        def find(x):
+            while parent.setdefault(x, x) != x:
+                x = parent[x]
+            return x
+
+        for a, b in pairs:
+            ra, rb = sorted((find(a), find(b)))
+            parent[rb] = ra
+        expect = {x: find(x) for x in list(parent)}
+        assert expect["10"] == expect["9"] <= "10"
+        e = edges_df(spark, pairs)
+        driver = ga.connected_components(e).collect()
+        with monkeypatch.context() as mp:
+            mp.setattr(ga, "SMALL_GRAPH_EDGES", 0)
+            loop = ga.connected_components(e).collect()
+        for out in (driver, loop):
+            assert {r.id: r.component for r in out} == expect, (n, m)
+
+
 def test_pagerank_fixed_point_matches_double_path(spark):
     # same graph through both kernels: the fixed-point ranks must agree
     # with the double ranks to well under one fixed-point ulp-per-step
@@ -306,52 +343,73 @@ def test_temporal_reach_hop_bound_and_tiebreak(spark):
     assert got1 == {"B": (1, 1), "C": (2, 1)}
 
 
+def _py_k_core(pairs, k, max_rounds):
+    """Reference peel with ``k_core``'s documented answer: the degree
+    filter at k, then rounds until the survivor set stops changing; out
+    of rounds, degrees within the last survivor set, unfiltered.  A node
+    is listed only while one of its edges survives."""
+    adj = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+
+    def degrees(alive):
+        d = {u: sum(1 for v in adj[u] if v in alive) for u in alive}
+        return {u: c for u, c in d.items() if c > 0}
+
+    alive = {u for u, c in degrees(set(adj)).items() if c >= k}
+    for _ in range(max_rounds):
+        deg = degrees(alive)
+        nxt = {u for u, c in deg.items() if c >= k}
+        if nxt == alive:
+            return {u: deg[u] for u in nxt}
+        alive = nxt
+    return degrees(alive)
+
+
 def _random_kcore_cases(spark):
-    """Seeded random canonical graphs across several densities, with
-    the brute-force peeled k-core for k in 2..4: yields (label, edges,
-    k, expected {id: core_degree})."""
+    """Seeded random canonical graphs across several densities, on
+    string ids and on long ids, plus an empty edge list; for k in 0..3,
+    each with a ``max_rounds`` of 64 (the fixpoint), 0 or 1 in turn:
+    yields (label, edges, k, max_rounds, expected {id: core_degree})."""
     import random
 
     rng = random.Random(99)
-    for trial, (n, m) in enumerate([(12, 18), (20, 40), (25, 90)]):
+    graphs = [(12, 18, "string"), (20, 40, "long"), (25, 90, "string"),
+              (16, 40, "long"), (0, 0, "string")]
+    for trial, (n, m, ids) in enumerate(graphs):
         pairs = set()
         while len(pairs) < m:
             a, b = rng.randrange(n), rng.randrange(n)
             if a != b:
-                pairs.add((f"n{min(a,b)}", f"n{max(a,b)}"))
-        adj = {}
-        for a, b in pairs:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-        e = edges_df(spark, sorted(pairs))
-        for k in (2, 3, 4):
-            alive = set(adj)
-            while True:
-                nxt = {
-                    u for u in alive
-                    if sum(1 for v in adj[u] if v in alive) >= k
-                }
-                if nxt == alive:
-                    break
-                alive = nxt
-            # brute-force peel keeps isolated survivors only if deg>=k,
-            # so every surviving node has core_degree >= k > 0
-            expect = {
-                u: sum(1 for v in adj[u] if v in alive)
-                for u in alive
-                if sum(1 for v in adj[u] if v in alive) > 0
-            }
-            yield (trial, k), e, k, expect
+                pairs.add((min(a, b), max(a, b)))
+        if ids == "string":
+            pairs = {(f"n{a}", f"n{b}") for a, b in pairs}
+        e = spark.createDataFrame(
+            sorted(pairs), f"src {ids}, dst {ids}"
+        ).coalesce(1).localCheckpoint()
+        for k in (0, 1, 2, 3):
+            max_rounds = (64, 0, 1)[(trial + k) % 3]
+            expect = _py_k_core(pairs, k, max_rounds)
+            yield (trial, ids, k, max_rounds), e, k, max_rounds, expect
 
 
-def test_k_core_matches_python_reference_on_random_graphs(spark):
-    """Differential: engine k-core vs brute-force peeling on seeded
-    random graphs across several densities and k values."""
-    from graphdb_for_drones_spark.operators.graph_algorithms import k_core
+def test_k_core_matches_python_reference_on_random_graphs(spark, monkeypatch):
+    """Differential: engine k-core vs a Python peel on seeded random
+    graphs across several densities, id types, k values and round
+    budgets, on the driver-side step (the default ``SMALL_GRAPH_EDGES``)
+    and on the distributed loop (``SMALL_GRAPH_EDGES=0``).  Both paths
+    give the same output schema too."""
+    from graphdb_for_drones_spark.operators import graph_algorithms as ga
 
-    for label, e, k, expect in _random_kcore_cases(spark):
-        got = {r.id: r.core_degree for r in k_core(e, k=k).collect()}
-        assert got == expect, label
+    for label, e, k, rounds, expect in _random_kcore_cases(spark):
+        driver = ga.k_core(e, k=k, max_rounds=rounds)
+        with monkeypatch.context() as m:
+            m.setattr(ga, "SMALL_GRAPH_EDGES", 0)
+            loop = ga.k_core(e, k=k, max_rounds=rounds)
+        assert driver.schema == loop.schema, label
+        for out in (driver, loop):
+            assert {r.id: r.core_degree for r in out.collect()} == expect, label
 
 
 KNOBS = ["default", "collect_threshold_1", "no_pin"]
@@ -379,16 +437,18 @@ def _set_knob(monkeypatch, knob):
 
 @pytest.mark.parametrize("knob", KNOBS[1:])
 def test_k_core_answer_is_knob_independent(spark, monkeypatch, knob):
-    """The same graphs as the differential test, with peel rounds
-    forced executor-side (survivor collect threshold 1: every survivor
-    set of two or more rows takes the pin_state + count branch) or with
-    pinning disabled: the answer must not move."""
+    """The same graphs as the differential test, on the distributed
+    loop, with peel rounds forced executor-side (survivor collect
+    threshold 1: every survivor set of two or more rows takes the
+    pin_state + count branch) or with pinning disabled: the answer must
+    not move."""
     from graphdb_for_drones_spark.operators import graph_algorithms as ga
 
     pins = _set_knob(monkeypatch, knob)
-    for label, e, k, expect in _random_kcore_cases(spark):
-        got = {r.id: r.core_degree for r in ga.k_core(e, k=k).collect()}
-        assert got == expect, label
+    monkeypatch.setattr(ga, "SMALL_GRAPH_EDGES", 0)  # the loop's rounds
+    for label, e, k, rounds, expect in _random_kcore_cases(spark):
+        got = ga.k_core(e, k=k, max_rounds=rounds).collect()
+        assert {r.id: r.core_degree for r in got} == expect, label
     if knob == "collect_threshold_1":
         assert pins  # the executor-side branch ran
 
@@ -403,6 +463,7 @@ def test_k_core_executor_side_state_cuts_lineage_unpinned(spark, monkeypatch):
     from graphdb_for_drones_spark.operators import graph_algorithms as ga
 
     monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", 1)
+    monkeypatch.setattr(ga, "SMALL_GRAPH_EDGES", 0)
     monkeypatch.setenv("SPARK_GRAFT_NO_PIN", "1")
     real_settle = ga.settle
     executor_side = []
@@ -429,11 +490,10 @@ def test_k_core_canonical_flag_gives_identical_answers(spark):
     canonicalizing pass: both paths return the same core."""
     from graphdb_for_drones_spark.operators.graph_algorithms import k_core
 
-    for label, e, k, expect in _random_kcore_cases(spark):
-        fast = {
-            r.id: r.core_degree for r in k_core(e, k=k, canonical=True).collect()
-        }
-        slow = {r.id: r.core_degree for r in k_core(e, k=k).collect()}
+    for label, e, k, rounds, expect in _random_kcore_cases(spark):
+        fast = k_core(e, k=k, max_rounds=rounds, canonical=True).collect()
+        slow = k_core(e, k=k, max_rounds=rounds).collect()
+        fast, slow = ({r.id: r.core_degree for r in o} for o in (fast, slow))
         assert fast == slow == expect, label
 
 
@@ -505,8 +565,8 @@ def _leak_graph(spark, n):
 
 def _leak_cases():
     """kernel -> (path length of the leak graph, call, answer reader,
-    expected answer).  k_core peels the twenty-node path for ten rounds;
-    the other kernels run on an eight-node path."""
+    expected answer).  k_core peels the twenty-node path (for ten rounds
+    on the loop); the other kernels run on an eight-node path."""
     from graphdb_for_drones_spark.operators import graph_algorithms as ga
 
     path = {f"n{i}": "n0" for i in range(8)}
@@ -517,13 +577,15 @@ def _leak_cases():
         lambda rows: {r.id: r.component for r in rows},
         {**path, **tri},
     )
+    k_core = (
+        20,
+        lambda e: ga.k_core(e, k=2),
+        lambda rows: {r.id: r.core_degree for r in rows},
+        {"X": 2, "Y": 2, "Z": 2},
+    )
     return {
-        "k_core": (
-            20,
-            lambda e: ga.k_core(e, k=2),
-            lambda rows: {r.id: r.core_degree for r in rows},
-            {"X": 2, "Y": 2, "Z": 2},
-        ),
+        "k_core": k_core,
+        "k_core_driver": k_core,
         "pagerank": (
             8,
             lambda e: ga.pagerank(e, iterations=3),
@@ -559,6 +621,7 @@ def _leak_cases():
     "kernel",
     [
         "k_core",
+        "k_core_driver",
         "pagerank",
         "pagerank_fixed_point",
         "weighted_sssp",
@@ -571,15 +634,16 @@ def test_graph_loop_leaves_no_pinned_blocks(spark, monkeypatch, kernel, threshol
     """Every state-carrying loop releases its edge pin and every
     replaced state: with the state driver-side it leaves no persisted
     RDD, executor-side (collect threshold 1) only the answer's own.
-    The components driver path (union-find over one collect) is
-    driver-side at either threshold; ``components_loop`` forces the
+    The driver-side graph step (``k_core_driver``,
+    ``components_driver``: numpy over one Arrow collect) is driver-side
+    at either threshold; ``k_core`` and ``components_loop`` force the
     distributed loop (``SMALL_GRAPH_EDGES=0``)."""
     from graphdb_for_drones_spark import traversal
     from graphdb_for_drones_spark.operators import graph_algorithms as ga
 
     if threshold is not None:
         monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", threshold)
-    if kernel == "components_loop":
+    if kernel in ("k_core", "components_loop"):
         monkeypatch.setattr(ga, "SMALL_GRAPH_EDGES", 0)
     size, call, read, expect = _leak_cases()[kernel]
     e = _leak_graph(spark, size)
@@ -589,7 +653,7 @@ def test_graph_loop_leaves_no_pinned_blocks(spark, monkeypatch, kernel, threshol
 
     before = persisted()
     out = call(e)
-    executor_side = threshold is not None and kernel != "components_driver"
+    executor_side = threshold is not None and not kernel.endswith("_driver")
     assert len(persisted() - before) == (1 if executor_side else 0)
     assert read(out.collect()) == expect
 
