@@ -24,6 +24,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdb_for_drones_spark.local_frame import local_frame
 from graphdb_for_drones_spark.operators._pin import pin, pin_state
 from graphdb_for_drones_spark.streaming.cdc import (
     apply_cdc_batch,
@@ -31,7 +32,6 @@ from graphdb_for_drones_spark.streaming.cdc import (
     parse_envelope,
     poll_changes,
 )
-from graphdb_for_drones_spark.traversal import _empty_df
 
 N_INSERT, N_UPDATE, N_DELETE = 10_000, 5_000, 5_000
 N_E2E = 5_000
@@ -125,7 +125,7 @@ def bench_capture_apply(spark: SparkSession, runs: int = 3) -> dict:
         decoded = parse_envelope(encoded).withColumn(
             "ts_ms", F.col("ts_ms").cast("long")
         )
-        state = _empty_df(spark, "id long, payload string")
+        state = local_frame(spark, "id long, payload string")
         state = apply_cdc_batch(state, decoded, seq_col="ts_ms")
         final_rows = state.count()
         rates.append((N_INSERT + N_UPDATE + N_DELETE) / (time.time() - t0))
@@ -151,7 +151,7 @@ def bench_e2e_latency(spark: SparkSession, n: int = N_E2E) -> dict:
     encoded = encode_envelope(log.select("op", "id", "payload", "ts_ms"))
     decoded = parse_envelope(encoded)
     state = apply_cdc_batch(
-        _empty_df(spark, "id long, payload string"),
+        local_frame(spark, "id long, payload string"),
         decoded.withColumn("ts_ms", F.col("ts_ms").cast("long")),
         seq_col="ts_ms",
     )
@@ -176,7 +176,7 @@ def bench_recovery(spark: SparkSession, backlog: int = 5_000) -> dict:
     order in REPLAY_BATCH chunks (the reference's BATCH_SIZE=500 loop)
     until applied == backlog."""
     log = make_change_log(spark, n_insert=backlog, n_update=0, n_delete=0)
-    state = _empty_df(spark, "id long, payload string")
+    state = local_frame(spark, "id long, payload string")
     last_id, applied = -1, 0
     t0 = time.time()
     while applied < backlog:

@@ -18,8 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphdb_for_drones_spark.local_frame import local_frame
 from graphdb_for_drones_spark.operators._pin import pin
-from graphdb_for_drones_spark.traversal import _empty_df
 
 
 def _keys_df(base: DataFrame, keys, key_col: str) -> DataFrame:
@@ -125,7 +125,7 @@ def bucketed_rank(
     }
     total = sum(counts.values())
     if not counts:
-        empty = _empty_df(df.sparkSession, keys.schema).select(
+        empty = local_frame(df.sparkSession, keys.schema).select(
             key_col, F.lit(0).cast("int").alias("__rank")
         )
         return empty, 0

@@ -17,7 +17,7 @@ Which call a frame gets depends on why it is materialized:
   recomputed: superstep and frontier state, churn snapshots, selections
   frozen across rounds, CDC recovery state.  Always cuts lineage.
 - nothing for a frame that is already driver-local
-  (``traversal._local_df``): it is a local relation, re-read for free.
+  (``local_frame.local_frame``): it is a local relation, re-read for free.
 
 No module outside this one calls ``localCheckpoint`` or ``checkpoint``
 (``tests/test_pin_policy.py`` enforces it).  A ``scoped()`` block

@@ -29,7 +29,7 @@ pinned edge list anyway; at most ``SMALL_GRAPH_EDGES`` rows go to the
 driver-side graph step instead: one ``toArrow()`` collect
 (``_driver_graph``: ids encoded to dense int codes in sorted id order),
 the loop vectorised in numpy, and the answer back as a local Arrow
-frame (``_arrow_frame``).  No Row objects, no per-edge Python loop.
+frame (``local_frame``).  No Row objects, no per-edge Python loop.
 """
 
 from __future__ import annotations
@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from graphdb_for_drones_spark import traversal
+from graphdb_for_drones_spark.local_frame import local_frame
 from graphdb_for_drones_spark.operators._pin import pin, pin_state, release
 
 
@@ -228,11 +229,15 @@ def pagerank_fixed_point(
 #   2M      2.30 / 6.05            1.94 / 30.20               176 / 211 MB
 #   4M      4.68 / 11.77           4.09 / 40.18               320 / 443 MB
 #
-# The driver step wins at every measured size (2.5x and 10x at 4M), so
-# the crossover lies above 4M; the bound is the largest size measured,
-# where the driver holds under half a GB.  (The loop's 0.5M row is slower
-# than its 1M row: its 125k-node survivor sets fit ``settle``'s collect
-# threshold and come back as Rows, the larger ones stay pinned.)
+# (The loop's 0.5M row is slower than its 1M row: its 125k-node
+# survivor sets fit ``settle``'s collect threshold and come back as
+# Rows, the larger ones stay pinned.)  The driver step wins at every
+# measured size (2.5x and 10x at 4M), so no crossover was found: the
+# bound is the largest size measured, where the driver holds under half
+# a GB, not a measured break-even.  The distributed loops are kept only
+# as the capacity path for edge lists too large for the driver.  No
+# benchmark workload runs above the bound, so the bound and the loops
+# stay as they are until one does and the crossover is measured there.
 SMALL_GRAPH_EDGES = 4_000_000
 
 
@@ -264,17 +269,6 @@ def _driver_graph(edges: DataFrame):
     return enc.dictionary.take(order), codes[: len(a)], codes[len(a):]
 
 
-def _arrow_frame(spark, schema: T.StructType, *columns) -> DataFrame:
-    """The driver-side graph step's answer: Arrow columns, one per field
-    of ``schema``, as a local frame (a ``LocalRelation``: no Python
-    rows, no Python-RDD scan)."""
-    import pyarrow as pa
-
-    return spark.createDataFrame(
-        pa.table(list(columns), names=schema.fieldNames()), schema=schema
-    )
-
-
 def _components_driver(edges: DataFrame) -> DataFrame:
     """Connected components of a dimension-sized edge list on the
     driver; the same answer as the distributed loop (component = min
@@ -304,7 +298,7 @@ def _components_driver(edges: DataFrame) -> DataFrame:
                 break
             parent = jumped
     t = edges.schema[0].dataType
-    return _arrow_frame(
+    return local_frame(
         edges.sparkSession,
         T.StructType([T.StructField("id", t), T.StructField("component", t)]),
         ids,
@@ -487,7 +481,7 @@ def _k_core_driver(sym: DataFrame, k: int, max_rounds: int) -> DataFrame:
 
     def answer(keep, deg):
         kept = ids.take(np.flatnonzero(keep))
-        return _arrow_frame(
+        return local_frame(
             sym.sparkSession, schema, kept, deg[keep].astype(np.int64)
         )
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphdb_for_drones_spark.local_frame import local_frame
+
 DEFAULT_SPLITS = (("train", 0.8), ("val", 0.1), ("test", 0.1))
 
 
@@ -86,9 +88,7 @@ def md5_rank(
     }
     total = sum(counts.values())
     if not counts:
-        from graphdb_for_drones_spark.traversal import _empty_df
-
-        empty = _empty_df(df.sparkSession, keys.schema).select(
+        empty = local_frame(df.sparkSession, keys.schema).select(
             key_col, F.lit(0).cast("int").alias("__rank")
         )
         return empty, 0
@@ -178,10 +178,8 @@ def negative_pairs(
     Returns (key_col, neg_<key_col>, j) with j in [0, k)."""
     idx, n = md5_rank(ids.select(key_col), key_col)
     if n < 2:
-        from graphdb_for_drones_spark.traversal import _empty_df
-
         kt = ids.schema[key_col].dataType.simpleString()
-        return _empty_df(
+        return local_frame(
             ids.sparkSession, f"{key_col} {kt}, neg_{key_col} {kt}, j int"
         )
     left = idx.select(

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from graphdb_for_drones_spark.traversal import _empty_df
+from graphdb_for_drones_spark.local_frame import local_frame
 
 
 def _affinity(decl: str | None) -> T.DataType:
@@ -114,7 +114,7 @@ def read_sqlite(
         ).fetchone()
     lo, hi = row
     if lo is None:  # empty table
-        return _empty_df(spark, schema)
+        return local_frame(spark, schema)
 
     n = max(1, min(num_partitions, hi - lo + 1))
     span = (hi - lo + 1 + n - 1) // n

@@ -7,11 +7,11 @@ reference statistics (mean/stddev computed offline from exact decimal
 moments, the batch entry's arithmetic) and flagged rows append to a
 quarantine table before the events reach downstream aggregates.
 
-Shape: the stats table is SMALL (one row per key) — pinned once with
-``_pin.pin`` (``streaming/util.start_guard``: after the start is
-allowed, released when the query terminates) and re-joined
-(broadcastable) against each
-micro-batch inside ``foreachBatch``.  No state accumulates beyond the
+Shape: the stats table is SMALL (one row per key) — settled once by
+``streaming/util.start_guard`` (after the start is allowed: a
+driver-local frame, or a pin released when the query run terminates
+if it outgrows the collect threshold) and re-joined (broadcastable)
+against each micro-batch inside ``foreachBatch``.  No state accumulates beyond the
 written flags, each batch's in its own ``batch_id=<n>`` partition
 (``streaming/util.start_sink`` states the delivery contract:
 exactly-once output given the gate's deterministic scoring).  Keys
@@ -103,7 +103,7 @@ def start_anomaly_gate(
     available_now: bool = True,
 ):
     """Append events beyond ``n_sigma`` of their key's reference mean
-    to ``out_dir``.  ``stats`` is pinned once (it is re-referenced per
+    to ``out_dir``.  ``stats`` is settled once (it is re-referenced per
     micro-batch).  Output is parquet partitioned by ``batch_id``."""
     return start_guard(
         stream_events,

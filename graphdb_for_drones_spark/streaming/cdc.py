@@ -29,9 +29,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from graphdb_for_drones_spark.local_frame import local_frame
 from graphdb_for_drones_spark.streaming.util import hadoop_fs, read_parquet_or_none
 from graphdb_for_drones_spark.streaming.util import start_sink
-from graphdb_for_drones_spark.traversal import _empty_df
 
 # generic row payload: the reference's items(id, payload/name) table
 ROW_SCHEMA = StructType(
@@ -255,7 +255,7 @@ def start_cdc_apply(
         # overwrite the state with its own changes alone
         state = read_parquet_or_none(spark, state_path)
         if state is None:
-            state = _empty_df(spark, ROW_SCHEMA)
+            state = local_frame(spark, ROW_SCHEMA)
         new_state = apply_cdc_batch(state, batch_df)
         # two-phase write: parquet overwrite reads-then-writes the same
         # path, so stage to a temp dir first, dropped once copied over

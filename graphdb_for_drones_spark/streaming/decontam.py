@@ -8,10 +8,11 @@ compared against the held-out eval set's shingle index, and flagged
 the documents ever reach a training shard.
 
 Shape: the eval index is STATIC and small (benchmarks are thousands of
-docs, not billions) — built once, pinned with ``_pin.pin`` once the
-start is allowed, released when the query terminates, and re-joined
-against each micro-batch's freshly shingled side inside
-``foreachBatch``.  Per-batch cost is one broadcastable join of batch
+docs, not billions) — built once when the start is allowed, settled
+by ``streaming/util.start_guard`` (a driver-local frame when it fits
+the collect threshold, else a pin released when the query run
+terminates), and re-joined against each micro-batch's freshly shingled
+side inside ``foreachBatch``.  Per-batch cost is one broadcastable join of batch
 shingles against the eval index; nothing is quadratic in corpus size
 and no state accumulates beyond the written flags.  Started and written
 through ``streaming/util.start_guard`` / ``write_batch`` (the delivery

@@ -6,9 +6,9 @@ root); ``staged``, its staging half, for a drain into another sink (the
 drift monitor's foreachBatch); ``start_sink`` / ``write_batch``, the one
 foreachBatch skeleton every sink under ``streaming/`` starts and writes
 through (its docstring states the delivery contract), and
-``start_guard``, its form for a guard whose batches read one pinned
-reference frame (pinned after the start is allowed, released when the
-query terminates); persistent-state
+``start_guard``, its form for a guard whose batches read one reference
+frame (settled after the start is allowed: driver-local when small,
+else pinned and released when the query run terminates); persistent-state
 reads that distinguish "not created yet" from "broken" (dedup_guard,
 linkage_guard, the CDC sink); and the Hadoop FileSystem handle for a
 path (drift_monitor, the CDC sink)."""
@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
+from graphdb_for_drones_spark import traversal
+from graphdb_for_drones_spark.local_frame import local_frame
 from graphdb_for_drones_spark.operators import _pin
 from graphdb_for_drones_spark.session import ensure_package_shipped
 
@@ -213,12 +215,21 @@ def start_guard(
 ) -> StreamingQuery:
     """``start_sink`` for a guard whose every batch reads one
     ``reference`` frame (an eval index, per-key stats) and writes
-    ``out_dir`` through ``write_batch``.  The reference is pinned only
-    once ``out_dir`` passes the flat-append refusal, ``make_batch``
-    builds the batch function over the pinned frame, and the pin is
-    released when the query terminates, however it ends (at once if the
-    start itself fails)."""
+    ``out_dir`` through ``write_batch``.  The reference is settled once
+    ``out_dir`` passes the flat-append refusal, and ``make_batch``
+    builds the batch function over the settled frame.  Within
+    ``traversal.COLLECT_THRESHOLD`` rows it comes back to the driver
+    in one Arrow collect as a ``local_frame``, which holds no blocks.
+    A larger one is pinned, and the pin is released when this run of
+    the query terminates, however it ends (at once if the start itself
+    fails)."""
     _refuse_flat_append(out_dir)
+    spark = stream.sparkSession
+    bound = traversal.COLLECT_THRESHOLD
+    head = reference.limit(bound + 1).toArrow()
+    if head.num_rows <= bound:
+        local = local_frame(spark, reference.schema, *head.columns)
+        return start_sink(stream, make_batch(local), checkpoint_dir, available_now)
     pinned = _pin.pin(reference)
     try:
         query = start_sink(
@@ -227,17 +238,20 @@ def start_guard(
     except BaseException:
         _pin.release(pinned)
         raise
-    _release_on_termination(stream.sparkSession, query, pinned)
+    _release_on_termination(spark, query, pinned)
     return query
 
 
 def _release_on_termination(
     spark: SparkSession, query: StreamingQuery, *frames: DataFrame
 ) -> None:
-    """Release ``frames`` once ``query`` terminates: a listener on the
-    session's streams, removed when it fires.  A query that is already
-    done when the listener is added (its termination event may have
-    gone out first) releases here."""
+    """Release ``frames`` once this run of ``query`` terminates: a
+    listener on the session's streams, removed when it fires.  It
+    matches the run id, not the query id: a restart from the same
+    checkpoint keeps the query id, and the earlier run's termination
+    event, delivered asynchronously, may reach the new run's listener.
+    A query that is already done when the listener is added (its
+    termination event may have gone out first) releases here."""
     lock = threading.Lock()
     done: list[bool] = []
 
@@ -261,7 +275,7 @@ def _release_on_termination(
             pass
 
         def onQueryTerminated(self, event) -> None:
-            if str(event.id) == query.id:
+            if str(event.runId) == str(query.runId):
                 release()
 
     listener = OnTermination()

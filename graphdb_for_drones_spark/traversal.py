@@ -45,6 +45,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphdb_for_drones_spark.local_frame import local_frame
 from graphdb_for_drones_spark.operators._pin import pin_state
 
 BROADCAST_THRESHOLD = 2_000_000  # frontier rows; ids are short strings
@@ -113,41 +114,11 @@ def reachable(
 
 
 def _local_df(spark, rows, schema) -> DataFrame:
-    """Local rows → DataFrame via the Arrow path (pandas input): the
-    plain tuple path is Python-RDD-backed, so every downstream scan
-    respawns Python workers — measured ~2.4× slower per consuming query
-    on a 3 k-row frontier (and a single materialization of a tuple-backed
-    frame pays one worker spawn PER PARTITION — profiled as 32-task
-    zero-JVM-CPU stages inside the iterative kernels).  ``schema`` is a
-    DDL string or a StructType."""
-    rows = list(rows)
-    if not rows:
-        return _empty_df(spark, schema)
-    import pandas as pd
-
-    if isinstance(schema, str):
-        cols = [f.strip().split()[0] for f in schema.split(",")]
-    else:
-        cols = list(schema.fieldNames())
-    return spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema=schema)
-
-
-def _empty_df(spark, schema) -> DataFrame:
-    """A zero-row frame of ``schema`` (a DDL string or a StructType),
-    built JVM-side: an empty Arrow table becomes an empty
-    ``LocalRelation``, which the optimizer folds away in a union, where
-    ``spark.createDataFrame([], schema)`` is a Python-RDD scan that
-    starts Python workers for every query that reads it (measured at
-    local[4]: a ``union().count()`` over it cost 250-300 ms warm, over
-    this frame 60-100 ms)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType, _parse_datatype_string
-
-    if not isinstance(schema, StructType):
-        schema = _parse_datatype_string(schema)
-    empty = pa.Table.from_pylist([], schema=to_arrow_schema(schema))
-    return spark.createDataFrame(empty, schema=schema)
+    """Local rows → a local frame (``local_frame``: one Arrow table, no
+    Python-RDD scan — the plain tuple path respawns Python workers for
+    every downstream scan, measured ~2.4× slower per consuming query on
+    a 3 k-row frontier).  ``schema`` is a DDL string or a StructType."""
+    return local_frame(spark, schema, *zip(*rows))
 
 
 def _seed_counts(seeds, mode: str):

@@ -1,12 +1,12 @@
-"""Zero-row frames are built JVM-side, never as a Python-RDD scan.
+"""Driver-local frames are built JVM-side, never as a Python-RDD scan.
 
 ``spark.createDataFrame([], schema)`` is an ``ExistingRDD`` scan over a
 Python RDD: every query that reads it starts Python workers.  The engine
-builds its empty frames through ``traversal._empty_df`` (an empty Arrow
-table, i.e. an empty ``LocalRelation``) instead.  These tests check the
-plans of the helper and of the empty branches routed through it, that
-their answers equal the Python-RDD frame's, and that no engine module
-builds an empty frame the old way.
+builds its local frames, empty ones included, through
+``local_frame.local_frame`` (one Arrow table, i.e. a ``LocalRelation``)
+instead.  These tests check the plans of the helper and of the empty
+branches routed through it, that their answers equal the Python-RDD
+frame's, and that no engine module builds an empty frame the old way.
 """
 
 import ast
@@ -16,6 +16,7 @@ import pytest
 
 import graphdb_for_drones_spark
 from graphdb_for_drones_spark import traversal
+from graphdb_for_drones_spark.local_frame import local_frame
 
 PKG_DIR = os.path.dirname(graphdb_for_drones_spark.__file__)
 
@@ -32,20 +33,44 @@ def _no_python_scan(df):
 
 
 @pytest.mark.parametrize("schema", SCHEMAS)
-def test_empty_df_is_a_local_relation_with_the_same_answers(spark, schema):
+def test_empty_local_frame_is_a_local_relation_with_the_same_answers(
+    spark, schema
+):
     from pyspark.sql.types import _parse_datatype_string
 
     old = spark.createDataFrame([], schema)
     for given in (schema, _parse_datatype_string(schema)):
-        new = traversal._empty_df(spark, given)
+        new = local_frame(spark, given)
         assert new._jdf.queryExecution().logical().nodeName() == "LocalRelation"
         _no_python_scan(new)
         assert new.schema == old.schema
         assert new.collect() == old.collect() == []
     # an empty frame as one side of a union: the same rows either way
     rows = old.limit(0).union(old).collect()
-    assert traversal._empty_df(spark, schema).union(old).collect() == rows
+    assert local_frame(spark, schema).union(old).collect() == rows
     assert traversal._local_df(spark, [], schema).schema == old.schema
+
+
+def test_local_rows_give_the_python_rdd_frames_answers(spark):
+    """``traversal._local_df`` rows (every type of the wide schema,
+    nulls, a naive timestamp read in the session time zone) come back
+    as the tuple-built frame's rows, from a local relation."""
+    import datetime
+    import decimal
+
+    from pyspark.sql import Row
+
+    rows = [
+        ("a", 1, [1.5, None], {"x": 2}, Row(a=1, b="b"),
+         decimal.Decimal("1.2500000000"), datetime.datetime(2020, 1, 2, 3, 4, 5),
+         datetime.date(2020, 1, 2)),
+        (None, 2, None, None, None, None, None, None),
+    ]
+    old = spark.createDataFrame(rows, SCHEMAS[1])
+    new = traversal._local_df(spark, rows, SCHEMAS[1])
+    _no_python_scan(new)
+    assert new.schema == old.schema
+    assert new.collect() == old.collect()
 
 
 def test_empty_rank_branches_build_no_python_scan(spark):
@@ -84,4 +109,4 @@ def test_no_module_builds_an_empty_frame_from_a_python_list():
                     and not node.args[0].elts
                 ):
                     hits.append(f"{os.path.relpath(path, PKG_DIR)}:{node.lineno}")
-    assert not hits, f"use traversal._empty_df: {hits}"
+    assert not hits, f"use local_frame.local_frame: {hits}"

@@ -228,43 +228,146 @@ def _persisted(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
-@pytest.mark.parametrize("guard", ["decontam", "anomaly_gate"])
-def test_guard_reference_pin_released_on_termination(spark, tmp_path, guard):
-    """A guard pins its reference (eval index, stats) for its batches
-    and releases it once the query terminates: after an availableNow
-    drain no persisted RDD the start created is left.  The release runs
-    on the streams listener, so the probe waits for it."""
+def _write_events(src, name, values):
+    """One JSON file of guard input rows, a document and an event per
+    value (the gate flags values beyond 3 sigma of 10 +- 1)."""
     import json
-    import time
 
+    rows = [{"doc_id": int(v), "text": "x y z w", "event_type": "click",
+             "value": float(v)} for v in values]
+    (src / name).write_text("\n".join(json.dumps(r) for r in rows))
+
+
+def _start_reference_guard(spark, guard, src, out, ckpt, available_now=True):
+    """``guard`` (decontam or anomaly_gate) over the JSON files in
+    ``src``, with a one-row reference (eval doc, click stats)."""
     from graphdb_for_drones_spark.streaming import anomaly_gate, decontam
 
-    src = tmp_path / "in"
-    src.mkdir()
-    rows = [{"doc_id": i, "text": "x y z w", "event_type": "click",
-             "value": 10.0 + 10 * i} for i in range(3)]
-    (src / "b0.json").write_text("\n".join(json.dumps(r) for r in rows))
     stream = spark.readStream.schema(
         "doc_id long, text string, event_type string, value double"
     ).json(str(src))
-    out, ckpt = str(tmp_path / "flags"), str(tmp_path / "ckpt")
-    before = _persisted(spark)
     if guard == "decontam":
         ev = spark.createDataFrame([(1, "x y z")], "doc_id long, text string")
-        q = decontam.start_contamination_guard(stream, ev, out, ckpt)
-    else:
-        stats = spark.createDataFrame(
-            [("click", 5, 10.0, 1.0)],
-            "event_type string, n_ref long, ref_mean double, ref_std double",
+        return decontam.start_contamination_guard(
+            stream, ev, out, ckpt, available_now=available_now
         )
-        q = anomaly_gate.start_anomaly_gate(stream, stats, out, ckpt)
+    stats = spark.createDataFrame(
+        [("click", 5, 10.0, 1.0)],
+        "event_type string, n_ref long, ref_mean double, ref_std double",
+    )
+    return anomaly_gate.start_anomaly_gate(
+        stream, stats, out, ckpt, available_now=available_now
+    )
+
+
+def _wait_persisted(spark, before, at_most, seconds=30):
+    """Poll until at most ``at_most`` persisted RDDs beyond ``before``
+    are left (termination listeners release asynchronously); returns
+    what is left."""
+    import time
+
+    deadline = time.time() + seconds
+    while len(_persisted(spark) - before) > at_most and time.time() < deadline:
+        time.sleep(0.2)
+    return _persisted(spark) - before
+
+
+@pytest.mark.parametrize("reference", ["local", "pinned"])
+@pytest.mark.parametrize("guard", ["decontam", "anomaly_gate"])
+def test_guard_reference_pin_released_on_termination(
+    spark, tmp_path, monkeypatch, guard, reference
+):
+    """A guard's reference (eval index, stats) within the collect
+    threshold is a driver-local frame and persists nothing; past it
+    (threshold 0 here) it is pinned for the batches and released once
+    the query terminates, on the streams listener, so the probe waits
+    for that.  Either way an availableNow drain leaves no persisted
+    RDD behind."""
+    from graphdb_for_drones_spark import traversal
+
+    if reference == "pinned":
+        monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", 0)
+    src = tmp_path / "in"
+    src.mkdir()
+    _write_events(src, "b0.json", [10, 20, 30])
+    out = str(tmp_path / "flags")
+    before = _persisted(spark)
+    q = _start_reference_guard(spark, guard, src, out, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     assert q.exception() is None
-    assert spark.read.parquet(out).count() > 0  # the batch read the pin
-    deadline = time.time() + 30
-    while _persisted(spark) - before and time.time() < deadline:
-        time.sleep(0.2)
+    assert spark.read.parquet(out).count() > 0  # the batch read the reference
+    if reference == "local":
+        assert _persisted(spark) - before == set()
+    assert _wait_persisted(spark, before, 0) == set()
+
+
+def test_guard_release_matches_the_run_not_the_query(spark):
+    """A restart from the same checkpoint keeps the query id, and the
+    earlier run's termination event arrives asynchronously: delivered
+    to the new run's listener, it must not release the new run's pin.
+    Only the event of the listener's own run does."""
+    from types import SimpleNamespace
+
+    from graphdb_for_drones_spark.operators import _pin
+    from graphdb_for_drones_spark.streaming import util
+
+    listeners = []
+    session = SimpleNamespace(streams=SimpleNamespace(
+        addListener=listeners.append, removeListener=listeners.remove
+    ))
+    run = SimpleNamespace(id="query", runId="run-2", isActive=True)
+    before = _persisted(spark)
+    pinned = _pin.pin(spark.range(3))
+    util._release_on_termination(session, run, pinned)
+    (listener,) = listeners
+    listener.onQueryTerminated(SimpleNamespace(id="query", runId="run-1"))
+    assert len(_persisted(spark) - before) == 1
+    assert pinned.count() == 3
+    listener.onQueryTerminated(SimpleNamespace(id="query", runId="run-2"))
     assert _persisted(spark) - before == set()
+    assert listeners == []
+
+
+def test_guard_restart_on_same_checkpoint_keeps_its_reference(
+    spark, tmp_path, monkeypatch
+):
+    """The gate restarted on its checkpoint with new input right after
+    the first run terminates: the first run's pin is released, the
+    second run's batches still read their own pinned reference (before
+    and after that release), and stopping the second run frees its
+    pin."""
+    from graphdb_for_drones_spark import traversal
+
+    monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", 0)
+    src = tmp_path / "in"
+    src.mkdir()
+    out, ckpt = str(tmp_path / "flags"), str(tmp_path / "ckpt")
+
+    def flagged():
+        return {r.doc_id for r in spark.read.parquet(out).collect()}
+
+    before = _persisted(spark)
+    _write_events(src, "b0.json", [10, 50])
+    q1 = _start_reference_guard(spark, "anomaly_gate", src, out, ckpt)
+    q1.awaitTermination(120)
+    assert q1.exception() is None and flagged() == {50}
+    _write_events(src, "b1.json", [11, 60])
+    q2 = _start_reference_guard(
+        spark, "anomaly_gate", src, out, ckpt, available_now=False
+    )
+    try:
+        assert q2.runId != q1.runId and q2.id == q1.id
+        q2.processAllAvailable()
+        assert flagged() == {50, 60}
+        # the first run's release has landed; the second run's pin stays
+        assert len(_wait_persisted(spark, before, 1)) == 1
+        _write_events(src, "b2.json", [12, 70])
+        q2.processAllAvailable()
+        assert q2.exception() is None and q2.isActive
+        assert flagged() == {50, 60, 70}
+    finally:
+        q2.stop()
+    assert _wait_persisted(spark, before, 0) == set()
 
 
 # --------------------------------------------------------------------- #

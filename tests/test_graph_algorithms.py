@@ -367,16 +367,20 @@ def _py_k_core(pairs, k, max_rounds):
     return degrees(alive)
 
 
-def _random_kcore_cases(spark):
+def _random_kcore_cases(spark, budgets=False):
     """Seeded random canonical graphs across several densities, on
-    string ids and on long ids, plus an empty edge list; for k in 0..3,
-    each with a ``max_rounds`` of 64 (the fixpoint), 0 or 1 in turn:
-    yields (label, edges, k, max_rounds, expected {id: core_degree})."""
+    string ids and on long ids, plus an empty edge list.  Each graph
+    runs to the fixpoint (``max_rounds`` 64) for every k in 0..4; with
+    ``budgets``, also with a ``max_rounds`` of 0 and of 1 for k in 2..3.
+    Yields (label, edges, k, max_rounds, expected {id: core_degree})."""
     import random
 
     rng = random.Random(99)
     graphs = [(12, 18, "string"), (20, 40, "long"), (25, 90, "string"),
-              (16, 40, "long"), (0, 0, "string")]
+              (0, 0, "long")]
+    runs = [(k, 64) for k in range(5)]
+    if budgets:
+        runs += [(k, r) for k in (2, 3) for r in (0, 1)]
     for trial, (n, m, ids) in enumerate(graphs):
         pairs = set()
         while len(pairs) < m:
@@ -388,8 +392,7 @@ def _random_kcore_cases(spark):
         e = spark.createDataFrame(
             sorted(pairs), f"src {ids}, dst {ids}"
         ).coalesce(1).localCheckpoint()
-        for k in (0, 1, 2, 3):
-            max_rounds = (64, 0, 1)[(trial + k) % 3]
+        for k, max_rounds in runs:
             expect = _py_k_core(pairs, k, max_rounds)
             yield (trial, ids, k, max_rounds), e, k, max_rounds, expect
 
@@ -402,7 +405,7 @@ def test_k_core_matches_python_reference_on_random_graphs(spark, monkeypatch):
     give the same output schema too."""
     from graphdb_for_drones_spark.operators import graph_algorithms as ga
 
-    for label, e, k, rounds, expect in _random_kcore_cases(spark):
+    for label, e, k, rounds, expect in _random_kcore_cases(spark, budgets=True):
         driver = ga.k_core(e, k=k, max_rounds=rounds)
         with monkeypatch.context() as m:
             m.setattr(ga, "SMALL_GRAPH_EDGES", 0)
@@ -484,17 +487,21 @@ def test_k_core_executor_side_state_cuts_lineage_unpinned(spark, monkeypatch):
     assert executor_side == [18, 16, 14, 12, 10, 8, 6, 4, 2, 0]
 
 
-def test_k_core_canonical_flag_gives_identical_answers(spark):
+def test_k_core_canonical_flag_gives_identical_answers(spark, monkeypatch):
     """On an already-canonical edge list (each undirected edge once, no
     self-loops, no parallel edges) ``canonical=True`` skips only the
-    canonicalizing pass: both paths return the same core."""
-    from graphdb_for_drones_spark.operators.graph_algorithms import k_core
+    canonicalizing pass: both paths return the same core, on the
+    driver-side step (the default ``SMALL_GRAPH_EDGES``) and on the
+    distributed loop (``SMALL_GRAPH_EDGES=0``)."""
+    from graphdb_for_drones_spark.operators import graph_algorithms as ga
 
-    for label, e, k, rounds, expect in _random_kcore_cases(spark):
-        fast = k_core(e, k=k, max_rounds=rounds, canonical=True).collect()
-        slow = k_core(e, k=k, max_rounds=rounds).collect()
-        fast, slow = ({r.id: r.core_degree for r in o} for o in (fast, slow))
-        assert fast == slow == expect, label
+    for bound in (ga.SMALL_GRAPH_EDGES, 0):
+        monkeypatch.setattr(ga, "SMALL_GRAPH_EDGES", bound)
+        for label, e, k, rounds, expect in _random_kcore_cases(spark):
+            fast = ga.k_core(e, k=k, max_rounds=rounds, canonical=True).collect()
+            slow = ga.k_core(e, k=k, max_rounds=rounds).collect()
+            fast, slow = ({r.id: r.core_degree for r in o} for o in (fast, slow))
+            assert fast == slow == expect, (bound, label)
 
 
 def test_k_core_max_rounds_exhaustion_returns_unfiltered_degrees(spark):
