@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphdb_for_drones_spark.local_frame import local_frame
-from graphdb_for_drones_spark.operators._pin import pin, pin_state
+from graphdb_for_drones_spark.operators._pin import pin_state
 from graphdb_for_drones_spark.streaming.cdc import (
     apply_cdc_batch,
     encode_envelope,
@@ -93,23 +93,17 @@ def make_change_log(
     """The reference capture workload as a change-log DataFrame: inserts
     for ids 0..n_insert, then updates and deletes over the low ids, in
     change_id order with 1 ms event spacing."""
-    rows = []
-    cid = 0
-    for i in range(n_insert):
-        rows.append((cid, "c", i, f"item-{i}", t0_ms + cid))
-        cid += 1
-    for i in range(n_update):
-        rows.append((cid, "u", i, f"item-{i}-v2", t0_ms + cid))
-        cid += 1
-    for i in range(n_delete):
-        rows.append((cid, "d", i, None, t0_ms + cid))
-        cid += 1
-    # pinned JVM-side: the tuple frame is Python-RDD-backed, and every
-    # replay batch re-scans it
-    return pin(
-        spark.createDataFrame(
-            rows, "change_id long, op string, id long, payload string, ts_ms long"
-        ).coalesce(8)
+    n = n_insert + n_update + n_delete
+    return local_frame(
+        spark,
+        "change_id long, op string, id long, payload string, ts_ms long",
+        range(n),
+        ["c"] * n_insert + ["u"] * n_update + ["d"] * n_delete,
+        [*range(n_insert), *range(n_update), *range(n_delete)],
+        [f"item-{i}" for i in range(n_insert)]
+        + [f"item-{i}-v2" for i in range(n_update)]
+        + [None] * n_delete,
+        range(t0_ms, t0_ms + n),
     )
 
 

@@ -4,7 +4,8 @@ expected traversal counts.  Id formats copy the reference exactly
 R{i:03d}, U{i:04d}, S{i:05d}, D{squad:05d}_{j:02d}, M{i:06d}.
 
 Generators build plain Python rows (deterministic, seed-free round-robin
-like the reference) and return JVM-materialized DataFrames.
+like the reference) and return them as local frames (``local_rows``:
+one Arrow ``LocalRelation``, re-read without a pin or a Python worker).
 """
 
 from __future__ import annotations
@@ -19,13 +20,8 @@ from graphdb_for_drones_spark.functions.crypto import (
     canonical_json_bytes,
     make_keypair,
 )
+from graphdb_for_drones_spark.local_frame import local_rows
 from graphdb_for_drones_spark.operators._pin import pin
-
-
-def _df(spark: SparkSession, rows, schema) -> DataFrame:
-    # materialize JVM-side: fixture tables are scanned repeatedly by the
-    # traversal loop and must not respawn Python workers per level
-    return pin(spark.createDataFrame(rows, schema).coalesce(1))
 
 
 @dataclass
@@ -67,11 +63,11 @@ def delegation_hierarchy(
         )
     ]
     return Hierarchy(
-        hq=_df(spark, [("HQ1",)], "id string"),
-        delegation_relation=_df(
+        hq=local_rows(spark, [("HQ1",)], "id string"),
+        delegation_relation=local_rows(
             spark, edges, "parent_id string, child_id string, child_type string"
         ),
-        mission_test=_df(
+        mission_test=local_rows(
             spark,
             missions,
             "mission_id string, drone_id string, cid string, payload string",
@@ -102,7 +98,7 @@ def flat_delegation(spark: SparkSession, n: int = 1000, hq_id: str = "HQ1") -> D
     """A3 star: delegation(drone_id, hq_id) all pointing at one HQ
     (02_topology_dynamic/setup_scenario_a.py:51-56).  The textbook skew
     key: one hq value over every row."""
-    return _df(
+    return local_rows(
         spark,
         [(i, hq_id) for i in range(n)],
         "drone_id long, hq_id string",
@@ -112,7 +108,7 @@ def flat_delegation(spark: SparkSession, n: int = 1000, hq_id: str = "HQ1") -> D
 def chain_delegation(spark: SparkSession, n: int = 50) -> DataFrame:
     """A3 chain variant: rows (i+1 → i) so level-k frontiers stay
     non-empty — guards the §7.4-1 'accidentally right' pitfall."""
-    return _df(
+    return local_rows(
         spark,
         [(i, str(i + 1)) for i in range(n)],
         "drone_id long, hq_id string",
@@ -124,7 +120,7 @@ def web_trust_chain(spark: SparkSession, n: int = 30, anchor: str = "did:example
     (04_web_of_trust/setup_scenario_a.py:74-91)."""
     dids = [f"did:example:e{i}" for i in range(n)] + [anchor]
     rows = [(dids[i], dids[i + 1]) for i in range(n)]
-    return _df(spark, rows, "from_did string, to_did string")
+    return local_rows(spark, rows, "from_did string, to_did string")
 
 
 # --------------------------------------------------------------------- #
@@ -230,20 +226,20 @@ def abac_tables(
     groups = [f"g{i}" for i in range(num_groups)]
     resources = [f"res{i}" for i in range(num_groups)]
     return Abac(
-        user=_df(spark, [(u,) for u in users], "did string"),
-        group=_df(spark, [(g,) for g in groups], "id string"),
-        resource=_df(spark, [(r,) for r in resources], "id string"),
-        member=_df(
+        user=local_rows(spark, [(u,) for u in users], "did string"),
+        group=local_rows(spark, [(g,) for g in groups], "id string"),
+        resource=local_rows(spark, [(r,) for r in resources], "id string"),
+        member=local_rows(
             spark,
             [(u, groups[i % num_groups]) for i, u in enumerate(users)],
             "user_did string, group_id string",
         ),
-        subgroup=_df(
+        subgroup=local_rows(
             spark,
             [(groups[i], groups[i + 1]) for i in range(num_groups - 1)],
             "from_id string, to_id string",
         ),
-        permission=_df(
+        permission=local_rows(
             spark,
             [(groups[-1], r) for r in resources],
             "group_id string, resource_id string",
@@ -346,17 +342,17 @@ def vc_tables(spark: SparkSession, num_subjects: int = 50) -> VcTables:
         for i, s in enumerate(subjects)
     ]
     return VcTables(
-        did_issuer=_df(
+        did_issuer=local_rows(
             spark,
             [(issuer, json.dumps({"publicKeyHex": pk.hex()}))],
             "did string, public_key string",
         ),
-        did_subject=_df(
+        did_subject=local_rows(
             spark,
             [(s, "{}") for s in subjects],
             "did string, public_key string",
         ),
-        vc_test=_df(
+        vc_test=local_rows(
             spark,
             vcs,
             "vc_id string, issuer_did string, subject_did string, vc_json string",

@@ -1,12 +1,16 @@
 """Driver-local frames: columns the driver holds, as a Spark frame.
 
-``local_frame`` is the one builder.  Its columns become one Arrow table
-and the frame a ``LocalRelation``: no Python rows and no Python-RDD
-scan.  ``spark.createDataFrame(tuples)`` is Python-RDD-backed, so every
-query that reads such a frame starts Python workers (measured at
-local[4]: a ``union().count()`` over an empty one cost 250-300 ms warm,
-over an empty ``local_frame`` 60-100 ms, and a single materialization
-paid one worker spawn per partition inside the iterative kernels).
+``local_frame`` is the one builder, and ``local_rows`` its form for row
+tuples (fixture tables, a collected frontier, a short literal table).
+The columns become one Arrow table and the frame a ``LocalRelation``:
+no Python-RDD scan, and re-read for free, so such a frame is never
+pinned (``_pin``'s third case).  ``spark.createDataFrame(tuples)`` is
+Python-RDD-backed, so every query that reads such a frame starts Python
+workers (measured at local[4]: a ``union().count()`` over an empty one
+cost 250-300 ms warm, over an empty ``local_frame`` 60-100 ms, and a
+single materialization paid one worker spawn per partition inside the
+iterative kernels).  No other module in the package calls
+``createDataFrame`` (``tests/test_local_frame_policy.py``).
 """
 
 from __future__ import annotations
@@ -39,3 +43,9 @@ def local_frame(spark: SparkSession, schema, *columns) -> DataFrame:
     return spark.createDataFrame(
         pa.table(arrays, names=schema.fieldNames()), schema=schema
     )
+
+
+def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
+    """Row tuples (one value per field of ``schema``) as a local frame:
+    ``local_frame`` over their columns.  No rows means zero rows."""
+    return local_frame(spark, schema, *zip(*rows))

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from graphdb_for_drones_spark.local_frame import local_frame
 from graphdb_for_drones_spark.operators._pin import pin
+from graphdb_for_drones_spark.operators.split import offset_rank
 
 
 def _keys_df(base: DataFrame, keys, key_col: str) -> DataFrame:
@@ -27,7 +28,7 @@ def _keys_df(base: DataFrame, keys, key_col: str) -> DataFrame:
         return keys.select(F.col(keys.columns[0]).alias(key_col))
     spark = base.sparkSession
     field = next(f for f in base.schema.fields if f.name == key_col)
-    return spark.createDataFrame([(k,) for k in keys], f"{key_col} {field.dataType.simpleString()}")
+    return local_frame(spark, f"{key_col} {field.dataType.simpleString()}", list(keys))
 
 
 def delete_by_keys(base: DataFrame, keys, key_col: str, extra_pred: Column | None = None) -> DataFrame:
@@ -108,37 +109,13 @@ def bucketed_rank(
 ) -> tuple[DataFrame, int]:
     """Deterministic 0-based dense rank over a key column WITHOUT a
     single-partition global window and WITHOUT a driver key list: keys
-    hash into ``buckets`` groups, ranks are per-group windows (each
-    ~n/buckets rows), and only the ``buckets`` group counts reach the
-    driver, where they become rank offsets inlined as a literal map.
-    The order is bucket-major / key-minor — a fixed deterministic
-    permutation.  Returns (DataFrame(key_col, __rank), total)."""
-    from itertools import chain as _ichain
-
-    from pyspark.sql.window import Window
-
+    hash into ``buckets`` groups and ``split.offset_rank`` ranks them,
+    so only the ``buckets`` group counts reach the driver.  The order is
+    bucket-major / key-minor — a fixed deterministic permutation.
+    Returns (DataFrame(key_col, __rank), total)."""
     b = F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(buckets))
-    keys = df.select(F.col(key_col), b.alias("__b"))
-    counts = {
-        r["__b"]: r["n"]
-        for r in keys.groupBy("__b").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    total = sum(counts.values())
-    if not counts:
-        empty = local_frame(df.sparkSession, keys.schema).select(
-            key_col, F.lit(0).cast("int").alias("__rank")
-        )
-        return empty, 0
-    offsets, acc = {}, 0
-    for grp in sorted(counts):
-        offsets[grp] = acc
-        acc += counts[grp]
-    off_map = F.create_map(
-        *_ichain.from_iterable((F.lit(g), F.lit(o)) for g, o in offsets.items())
-    )
-    w = Window.partitionBy("__b").orderBy(key_col)
-    rank = off_map[F.col("__b")] + F.row_number().over(w) - 1
-    return keys.select(key_col, rank.alias("__rank")), total
+    ranked, total = offset_rank(df.select(key_col, b.alias("__b")), "__b", key_col)
+    return ranked.select(key_col, "__rank"), total
 
 
 def diff_as_changes(

@@ -9,15 +9,26 @@ once so every consumer is a scan.  Row-based checkpoints, NOT
 
 Which call a frame gets depends on why it is materialized:
 
-- ``pin`` when the pin only saves re-execution: fixture tables, static
-  edge lists, posting tables, per-batch guard frames.  Recomputing the
-  frame would give the same rows, so the policy may skip the pin (a
-  non-local master without a checkpoint dir, ``SPARK_GRAFT_NO_PIN``).
+- ``pin`` when the pin only saves re-execution: engine-built fixture
+  tables (``fixtures.*_dist``), static edge lists, posting tables,
+  per-batch guard frames.  Recomputing the frame would give the same
+  rows, so the policy may skip the pin (a non-local master without a
+  checkpoint dir, ``SPARK_GRAFT_NO_PIN``).
 - ``pin_state`` when correctness depends on the rows never being
   recomputed: superstep and frontier state, churn snapshots, selections
-  frozen across rounds, CDC recovery state.  Always cuts lineage.
+  frozen across rounds, CDC recovery state, a guard's reference.
+  Always cuts lineage.
 - nothing for a frame that is already driver-local
-  (``local_frame.local_frame``): it is a local relation, re-read for free.
+  (``local_frame.local_frame`` / ``local_rows``): it is a local
+  relation, re-read for free.
+
+``settle`` is the one place a result is brought back to the driver
+instead: a frame that fits ``COLLECT_THRESHOLD`` rows comes back in one
+Arrow collect as a ``local_frame`` (the driver-local case above, no
+pin); a larger one is state and gets ``pin_state``.  Every loop that
+carries state between rounds and every guard reference settles
+through it, so the threshold lives here once (Pregelix's choice of
+physical plan by the size of the active state).
 
 No module outside this one calls ``localCheckpoint`` or ``checkpoint``
 (``tests/test_pin_policy.py`` enforces it).  A ``scoped()`` block
@@ -33,6 +44,12 @@ from collections.abc import Iterator
 from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
+
+from graphdb_for_drones_spark.local_frame import local_frame
+
+# rows a settled frame (a frontier, a superstep state, a guard's
+# reference) may hold and still come back to the driver
+COLLECT_THRESHOLD = 200_000
 
 # the frames pinned inside the innermost open ``scoped`` block
 _held_by: ContextVar[list[DataFrame] | None] = ContextVar("_held_by", default=None)
@@ -92,6 +109,28 @@ def pin_state(df: DataFrame) -> DataFrame:
     if _mode(df) == "reliable":
         return _held(df.checkpoint())
     return _held(df.localCheckpoint())
+
+
+def settle(df: DataFrame, bound: int | None = None) -> tuple[DataFrame, int, bool]:
+    """Materialize ``df`` once: ``(frame, n_rows, local)``.
+
+    ``bound`` is a known upper bound on ``df``'s rows (e.g. the previous
+    superstep's count).  Within ``COLLECT_THRESHOLD`` the rows come back
+    in one ``toArrow()`` collect and return as a ``local_frame``
+    (``local=True``: broadcast it into the next superstep); the collect
+    is both the materialization and the halt signal, so no count job
+    runs.  With no bound, one ``limit(COLLECT_THRESHOLD + 1)`` collect
+    is the probe and, when it fits, the answer.  Otherwise the rows
+    stay executor-side: ``pin_state`` (every reader sees the same rows)
+    plus one ``count()``."""
+    if bound is None or bound <= COLLECT_THRESHOLD:
+        probe = df if bound is not None else df.limit(COLLECT_THRESHOLD + 1)
+        tbl = probe.toArrow()
+        if tbl.num_rows <= COLLECT_THRESHOLD:
+            local = local_frame(df.sparkSession, df.schema, *tbl.columns)
+            return local, tbl.num_rows, True
+    df = pin_state(df)
+    return df, df.count(), False
 
 
 @contextlib.contextmanager

@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from graphdb_for_drones_spark.operators import _index_store
 from graphdb_for_drones_spark.operators.dedup import shingle_hash_array
+from graphdb_for_drones_spark.operators.split import offset_rank
 from graphdb_for_drones_spark.operators.text import token_count
 
 
@@ -1388,11 +1389,11 @@ def equal_frequency_bins(
     difficulty-bucketing step a curriculum-ordered training pipeline
     runs on a per-document score (token count, quality, loss proxy).
 
-    NO single-partition global window: the rank is computed with the
-    ``bucketed_rank`` trick keyed on the VALUE itself — per-value counts
-    (one row per distinct value) come to the driver, become cumulative
-    offsets inlined as a literal map, and the residual window partitions
-    by value and orders by id, so every window group is one value's rows.
+    NO single-partition global window: the rank is ``split.offset_rank``
+    keyed on the VALUE itself — per-value counts (one row per distinct
+    value) come to the driver, become cumulative offsets, and the
+    residual window partitions by value and orders by id, so every
+    window group is one value's rows.
     This is exact for bounded integer-ish score domains (token counts,
     rubric scores); for unbounded/continuous keys, pre-discretize or use
     sampled range cutpoints.  The bin formula ``floor(rank·k/N)`` is
@@ -1406,41 +1407,18 @@ def equal_frequency_bins(
     null placement in ORDER BY (Spark NULLS FIRST vs DuckDB NULLS
     LAST), so ranking them would make the bins engine-dependent.
     """
-    from itertools import chain as _ichain
-
     vals = df.select(
         F.col(id_col).alias("__id"), F.col(value_col).alias("__v")
     ).filter(F.col("__v").isNotNull())
-    counts = {
-        r["__v"]: r["n"]
-        for r in vals.groupBy("__v").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    total = sum(counts.values())
-    if total == 0:
-        return vals.select(
-            F.col("__id").alias(id_col),
-            F.col("__v").alias(value_col),
-            F.lit(0).cast("int").alias("bin"),
-        ).limit(0)
-    offsets, acc = {}, 0
-    for v in sorted(counts):
-        offsets[v] = acc
-        acc += counts[v]
-    off_map = F.create_map(
-        *_ichain.from_iterable((F.lit(v), F.lit(o)) for v, o in offsets.items())
-    )
-    w = Window.partitionBy("__v").orderBy("__id")
-    rank = off_map[F.col("__v")] + F.row_number().over(w) - 1
+    ranked, total = offset_rank(vals, "__v", "__id")
     # DIV (not /): double division truncated to int can land one off the
-    # integer-arithmetic floor the oracle computes; DIV is exact
-    return vals.select(
+    # integer-arithmetic floor the oracle computes; DIV is exact.  An
+    # empty input bins no rows: max(total, 1) only keeps the divisor
+    # literal nonzero
+    return ranked.select(
         F.col("__id").alias(id_col),
         F.col("__v").alias(value_col),
-        rank.cast("long").alias("__rank"),
-    ).select(
-        id_col,
-        value_col,
-        F.expr(f"CAST((__rank * {int(k)}) DIV {int(total)} AS INT)").alias(
-            "bin"
-        ),
+        F.expr(
+            f"CAST((CAST(__rank AS BIGINT) * {int(k)}) DIV {max(total, 1)} AS INT)"
+        ).alias("bin"),
     )

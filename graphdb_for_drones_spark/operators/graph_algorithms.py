@@ -13,14 +13,15 @@ Scale notes: each superstep is one shuffle keyed on dst (message
 aggregation).  Every loop that carries state between rounds (pagerank,
 connected_components, k_core, temporal_reach, weighted_sssp) pins its
 edge list lazily, counts a node bound once (materializing the pin) and
-settles each round through ``settle``: a driver-sized state comes back
-local and is broadcast into the next round, a larger one is pinned by
-``_pin.pin_state``.  Replaced states, and the edge pin once the answer
-is settled, are released (``_settled``).  ``pagerank_fixed_point``
-settles only its answer: its unrolled plan cuts lineage every few
-supersteps, not every one.  For billion-edge graphs, pre-partition
-edges by dst so the per-iteration shuffle degenerates to a local
-combine.
+settles each round through ``_pin.settle``: a state within
+``_pin.COLLECT_THRESHOLD`` rows comes back in one Arrow collect as a
+local frame and is broadcast into the next round, a larger one is
+pinned by ``_pin.pin_state``.  Replaced states, and the edge pin once
+the answer is settled, are released (``_settled``).
+``pagerank_fixed_point`` settles only its answer: its unrolled plan
+cuts lineage every few supersteps, not every one.  For billion-edge
+graphs, pre-partition edges by dst so the per-iteration shuffle
+degenerates to a local combine.
 
 Dimension-sized graphs skip the supersteps altogether (Pregelix's
 choice of physical plan by the size of the active state, applied to
@@ -30,6 +31,8 @@ driver-side graph step instead: one ``toArrow()`` collect
 (``_driver_graph``: ids encoded to dense int codes in sorted id order),
 the loop vectorised in numpy, and the answer back as a local Arrow
 frame (``local_frame``).  No Row objects, no per-edge Python loop.
+Short literal tables (a seed row, the dense co-occurrence answer) are
+``local_rows`` frames.
 """
 
 from __future__ import annotations
@@ -43,8 +46,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from graphdb_for_drones_spark import traversal
-from graphdb_for_drones_spark.local_frame import local_frame
-from graphdb_for_drones_spark.operators._pin import pin, pin_state, release
+from graphdb_for_drones_spark.local_frame import local_frame, local_rows
+from graphdb_for_drones_spark.operators._pin import pin, pin_state, release, settle
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -427,24 +430,6 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
 
 
-def settle(df: DataFrame, bound: int) -> tuple[DataFrame, int, bool]:
-    """Materialize one superstep's output: ``(frame, n_rows, local)``.
-
-    ``bound`` is an upper bound on ``df``'s rows (e.g. the previous
-    round's count).  Within ``traversal.COLLECT_THRESHOLD`` the rows
-    come back to the driver in one collect and return as a local Arrow
-    frame (``local=True``: broadcast it into the next superstep) — the
-    collect is both the materialization and the halt signal, so no
-    separate count job runs.  Otherwise the output stays executor-side:
-    ``pin_state`` (always cuts lineage) plus one ``count()``."""
-    if bound <= traversal.COLLECT_THRESHOLD:
-        rows = df.collect()
-        local = traversal._local_df(df.sparkSession, rows, df.schema)
-        return local, len(rows), True
-    df = pin_state(df)
-    return df, df.count(), False
-
-
 def _settled(answer: DataFrame, *spent: DataFrame) -> DataFrame:
     """``answer``, after releasing ``spent``: the answer is settled
     (collected or pinned on its own), so a loop's edge pin and its
@@ -629,7 +614,7 @@ def temporal_reach(
     # shuffles + settles a hop.  Each level settles once (it is
     # referenced twice: next hop + final merge).
     depart = -(1 << 62)  # the anchor's departure: -infinity
-    levels = [traversal._local_df(
+    levels = [local_rows(
         edges.sparkSession, [(anchor, depart, 0)], "id string, arrival long, hops int"
     )]
     # the first hop reads the lone anchor row as literals: a filter on
@@ -741,11 +726,7 @@ def _cooccurrence_dense(
             T.StructField("jaccard", T.DoubleType()),
         ]
     )
-    # Arrow local-rows path: the tuple form is Python-RDD-backed and
-    # spawns one Python worker per partition per scan (r12 profiling)
-    from graphdb_for_drones_spark.traversal import _local_df
-
-    return _local_df(spark, rows, schema).orderBy(
+    return local_rows(spark, rows, schema).orderBy(
         F.desc("n_common"), F.asc("id_a"), F.asc("id_b")
     )
 
@@ -823,15 +804,14 @@ def cooccurrence_similarity(
         # match the posting path's null handling (collect_list drops
         # null items) before anything is counted or collected
         e = pin(e.filter(F.col("__i").isNotNull()))
-        # BOUNDED probe before any driver collect: a hint lying about a
-        # 50M-item column must fall back without pulling the item set
+        # BOUNDED probe, which is also the item list: a hint lying about
+        # a 50M-item column must fall back without pulling the item set
         # (or anything item-sized) onto the driver
-        distinct_items = e.select("__i").distinct()
-        if (
-            distinct_items.limit(dense_items_threshold + 1).count()
-            <= dense_items_threshold
-        ):
-            items = sorted(r[0] for r in distinct_items.collect())
+        head = (
+            e.select("__i").distinct().limit(dense_items_threshold + 1).toArrow()
+        )
+        if head.num_rows <= dense_items_threshold:
+            items = sorted(head.column(0).to_pylist())
             return _cooccurrence_dense(
                 e, k, items, e.schema["__i"].dataType
             )
@@ -1116,7 +1096,7 @@ def weighted_sssp(edges: DataFrame, source: str, rounds: int = 4) -> DataFrame:
         eager=False,
     )
     bound = e.select("dst").distinct().count() + 1
-    best = traversal._local_df(edges.sparkSession, [(source, 0)], "id string, cost long")
+    best = local_rows(edges.sparkSession, [(source, 0)], "id string, cost long")
     # the first relaxation reads the lone source row as literals: a
     # filter on the edges, no broadcast job
     relaxed = e.filter(F.col("src") == source).select(

@@ -31,7 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from graphdb_for_drones_spark.operators._pin import pin
+from graphdb_for_drones_spark.local_frame import local_rows
 
 MEDIA_SCHEMA = StructType(
     [
@@ -305,7 +305,7 @@ def fake_media_table(spark, n: int = 32, kind: str = "image") -> DataFrame:
         )
         for i in range(n)
     ]
-    return pin(spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(1))
+    return local_rows(spark, rows, MEDIA_SCHEMA)
 
 
 RESIZED_SCHEMA = StructType(

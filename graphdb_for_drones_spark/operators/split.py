@@ -14,8 +14,11 @@ reproducible in any engine (the DuckDB oracle replays it exactly);
 
 from __future__ import annotations
 
+from itertools import accumulate, chain
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from graphdb_for_drones_spark.local_frame import local_frame
 
@@ -65,43 +68,45 @@ def _md5_60bit(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
+def offset_rank(
+    keys: DataFrame, bucket_col: str, *order_cols: str
+) -> tuple[DataFrame, int]:
+    """0-based rank of ``keys``' rows in the total order (``bucket_col``,
+    ``*order_cols``) WITHOUT a single-partition global window: only the
+    per-bucket counts reach the driver, where they become cumulative
+    offsets inlined as a literal map, and each row's rank is its
+    bucket's offset plus a per-bucket ``row_number`` (every window group
+    is one bucket's rows).  Returns (``keys`` plus ``__rank``, total);
+    no rows gives an empty local frame and 0."""
+    counts = dict(keys.groupBy(bucket_col).agg(F.count(F.lit(1))).collect())
+    if not counts:
+        empty = local_frame(keys.sparkSession, keys.schema)
+        return empty.withColumn("__rank", F.lit(0)), 0
+    order = sorted(counts)
+    offsets = accumulate((counts[b] for b in order), initial=0)
+    off_map = F.create_map(
+        *chain.from_iterable((F.lit(b), F.lit(o)) for b, o in zip(order, offsets))
+    )
+    w = Window.partitionBy(bucket_col).orderBy(*order_cols)
+    rank = off_map[F.col(bucket_col)] + F.row_number().over(w) - 1
+    return keys.withColumn("__rank", rank), sum(counts.values())
+
+
 def md5_rank(
     df: DataFrame, key_col: str, buckets: int = 64, seed: int = 0
 ) -> tuple["DataFrame", int]:
     """Deterministic 0-based dense rank in md5 order, computed WITHOUT a
-    single-partition window: hash-bucketed per-group windows + driver-side
-    bucket offsets (the ``mutation.bucketed_rank`` pattern, but over an
-    ENGINE-NEUTRAL order — total order is (h % buckets, h, key) with
+    single-partition window (``offset_rank`` over md5 buckets, the
+    ``mutation.bucketed_rank`` pattern, but over an ENGINE-NEUTRAL
+    order — total order is (h % buckets, h, key) with
     h = md5_60bit("{key}:r{seed}"), which a SQL twin reproduces as one
     ROW_NUMBER).  Returns (DataFrame(key_col, __rank), total)."""
-    from itertools import chain as _ichain
-
-    from pyspark.sql.window import Window
-
     h = _md5_60bit(F.concat(F.col(key_col).cast("string"), F.lit(f":r{seed}")))
     keys = df.select(
         F.col(key_col), h.alias("__h"), F.pmod(h, F.lit(buckets)).alias("__b")
     )
-    counts = {
-        r["__b"]: r["n"]
-        for r in keys.groupBy("__b").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    total = sum(counts.values())
-    if not counts:
-        empty = local_frame(df.sparkSession, keys.schema).select(
-            key_col, F.lit(0).cast("int").alias("__rank")
-        )
-        return empty, 0
-    offsets, acc = {}, 0
-    for grp in sorted(counts):
-        offsets[grp] = acc
-        acc += counts[grp]
-    off_map = F.create_map(
-        *_ichain.from_iterable((F.lit(g), F.lit(o)) for g, o in offsets.items())
-    )
-    w = Window.partitionBy("__b").orderBy("__h", key_col)
-    rank = off_map[F.col("__b")] + F.row_number().over(w) - 1
-    return keys.select(key_col, rank.alias("__rank")), total
+    ranked, total = offset_rank(keys, "__b", "__h", key_col)
+    return ranked.select(key_col, "__rank"), total
 
 
 def stratified_sample(

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphdb_for_drones_spark.local_frame import local_rows
 from graphdb_for_drones_spark.operators._pin import pin
 
 STOPWORDS = ("the", "a", "of", "and", "in", "to", "is")
@@ -604,9 +605,7 @@ def bpe_train(
     text_col: str = "text",
 ) -> DataFrame:
     """`bpe_train_list` as a DataFrame (rank, pair, pair_count)."""
-    from graphdb_for_drones_spark.traversal import _local_df
-
-    return _local_df(
+    return local_rows(
         df.sparkSession,
         bpe_train_list(df, n_merges, text_col),
         "rank int, pair string, pair_count long",

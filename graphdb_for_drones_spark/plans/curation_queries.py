@@ -16,8 +16,8 @@ from pyspark.sql.window import Window
 
 from graphdb_for_drones_spark.catalog import Catalog
 from graphdb_for_drones_spark.operators import _index_store, curation
+from graphdb_for_drones_spark.operators._pin import settle
 from graphdb_for_drones_spark.streaming.util import drain, staged
-from graphdb_for_drones_spark.traversal import _local_df
 
 # DuckDB fragment: documents → whitespace word list (same normalization
 # as operators/dedup.normalize_text)
@@ -1684,8 +1684,8 @@ def q_source_drift_stats_streamed(
     Mechanics: documents.parquet is ``staged`` (streaming/util) and
     drained availableNow into FRESH out/checkpoint dirs under the stage
     root (the monitor truncates on a fresh checkpoint — its lifecycle
-    contract); the |sources|-row report is collected into a local frame
-    before the root is removed.  The '__ref__' geometry row is dropped
+    contract); the |sources|-row report is settled (``_pin.settle``:
+    one Arrow collect into a local frame) before the root is removed.  The '__ref__' geometry row is dropped
     from the report (the src0 stream row carries the same counts by
     construction)."""
     from graphdb_for_drones_spark.streaming.drift_monitor import (
@@ -1712,7 +1712,7 @@ def q_source_drift_stats_streamed(
                 F.col("g").alias("source"), "n_rows", "tvd", "chi2", "max_gap"
             )
         )
-        return _local_df(spark, report.collect(), report.schema)
+        return settle(report)[0]
 
 
 def q_source_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,8 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
-from graphdb_for_drones_spark import traversal
-from graphdb_for_drones_spark.local_frame import local_frame
 from graphdb_for_drones_spark.operators import _pin
 from graphdb_for_drones_spark.session import ensure_package_shipped
 
@@ -217,28 +215,23 @@ def start_guard(
     ``reference`` frame (an eval index, per-key stats) and writes
     ``out_dir`` through ``write_batch``.  The reference is settled once
     ``out_dir`` passes the flat-append refusal, and ``make_batch``
-    builds the batch function over the settled frame.  Within
-    ``traversal.COLLECT_THRESHOLD`` rows it comes back to the driver
-    in one Arrow collect as a ``local_frame``, which holds no blocks.
-    A larger one is pinned, and the pin is released when this run of
-    the query terminates, however it ends (at once if the start itself
-    fails)."""
+    builds the batch function over the settled frame (``_pin.settle``:
+    within ``_pin.COLLECT_THRESHOLD`` rows it comes back to the driver
+    in one Arrow collect as a ``local_frame``, which holds no blocks).
+    A larger one is ``pin_state``d, because every batch must read the
+    same rows, and the pin is released when this run of the query
+    terminates, however it ends (at once if the start itself fails)."""
     _refuse_flat_append(out_dir)
-    spark = stream.sparkSession
-    bound = traversal.COLLECT_THRESHOLD
-    head = reference.limit(bound + 1).toArrow()
-    if head.num_rows <= bound:
-        local = local_frame(spark, reference.schema, *head.columns)
-        return start_sink(stream, make_batch(local), checkpoint_dir, available_now)
-    pinned = _pin.pin(reference)
+    settled, _, local = _pin.settle(reference)
     try:
         query = start_sink(
-            stream, make_batch(pinned), checkpoint_dir, available_now
+            stream, make_batch(settled), checkpoint_dir, available_now
         )
     except BaseException:
-        _pin.release(pinned)
+        _pin.release(settled)  # a local frame holds nothing to release
         raise
-    _release_on_termination(spark, query, pinned)
+    if not local:
+        _release_on_termination(stream.sparkSession, query, settled)
     return query
 
 

@@ -25,7 +25,7 @@ rows: ``reachable`` (the row per path), ``reachable_count``,
 
 Execution model (designed for a 1000-executor cluster, tested on local):
 one Spark job per level at most.  Levels run in the driver while the
-frontier fits ``COLLECT_THRESHOLD`` (the frontier is a dict, each
+frontier fits ``_pin.COLLECT_THRESHOLD`` (the frontier is a dict, each
 level's plan is rooted at literal values + the edge scan: no lineage
 growth, no checkpoints), then hand off to a distributed continuation in
 which the frontier stays in executors, pinned eagerly per level with
@@ -45,11 +45,11 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphdb_for_drones_spark.local_frame import local_frame
+from graphdb_for_drones_spark.local_frame import local_rows
+from graphdb_for_drones_spark.operators import _pin
 from graphdb_for_drones_spark.operators._pin import pin_state
 
 BROADCAST_THRESHOLD = 2_000_000  # frontier rows; ids are short strings
-COLLECT_THRESHOLD = 200_000  # frontier rows the driver will coordinate
 # frontier size worth inlining as an isin() predicate.  The literal IN
 # list costs ~0.4 ms/element of driver-side plan build (py4j literal
 # shipping + codegen), linear in frontier size, while the broadcast-join
@@ -113,14 +113,6 @@ def reachable(
     ).drop("col")
 
 
-def _local_df(spark, rows, schema) -> DataFrame:
-    """Local rows → a local frame (``local_frame``: one Arrow table, no
-    Python-RDD scan — the plain tuple path respawns Python workers for
-    every downstream scan, measured ~2.4× slower per consuming query on
-    a 3 k-row frontier).  ``schema`` is a DDL string or a StructType."""
-    return local_frame(spark, schema, *zip(*rows))
-
-
 def _seed_counts(seeds, mode: str):
     """Seeds → driver dict {node: path_count}, or None if a seed
     DataFrame holds more than ``COLLECT_THRESHOLD`` rows."""
@@ -128,10 +120,10 @@ def _seed_counts(seeds, mode: str):
         col = seeds.columns[0]
         rows = (
             seeds.select(F.col(col).cast("string").alias("node"))
-            .limit(COLLECT_THRESHOLD + 1)
+            .limit(_pin.COLLECT_THRESHOLD + 1)
             .collect()
         )
-        if len(rows) > COLLECT_THRESHOLD:
+        if len(rows) > _pin.COLLECT_THRESHOLD:
             return None
         it = (r.node for r in rows)
     else:
@@ -159,15 +151,15 @@ def _next_level(edges: DataFrame, frontier: dict, adj: dict | None):
     elif len(frontier) <= ISIN_THRESHOLD:
         raw = (
             edges.filter(F.col("src").isin(list(frontier)))
-            .limit(COLLECT_THRESHOLD + 1)
+            .limit(_pin.COLLECT_THRESHOLD + 1)
             .collect()
         )
-        if len(raw) <= COLLECT_THRESHOLD:
+        if len(raw) <= _pin.COLLECT_THRESHOLD:
             pairs = [(r.dst, frontier[r.src]) for r in raw]
     if pairs is None:
-        fdf = _local_df(edges.sparkSession, sorted(frontier.items()), _FRONTIER)
-        pairs = _hop(fdf, edges, True).limit(COLLECT_THRESHOLD + 1).collect()
-        if len(pairs) > COLLECT_THRESHOLD:
+        fdf = local_rows(edges.sparkSession, sorted(frontier.items()), _FRONTIER)
+        pairs = _hop(fdf, edges, True).limit(_pin.COLLECT_THRESHOLD + 1).collect()
+        if len(pairs) > _pin.COLLECT_THRESHOLD:
             return None
     nxt: dict = {}
     for n, c in pairs:
@@ -217,10 +209,10 @@ def reachable_counts(
         adj = {}
         for r in edges.collect():
             adj.setdefault(r.src, []).append(r.dst)
-    local_rows: list = []
+    driver_rows: list = []
     visited = set(frontier or ())  # node mode only
     if frontier is not None and include_seed:
-        local_rows += [(n, 0, c) for n, c in sorted(frontier.items())]
+        driver_rows += [(n, 0, c) for n, c in sorted(frontier.items())]
     lvl = 1
     while frontier and lvl <= max_depth:
         nxt = _next_level(edges, frontier, adj)
@@ -229,17 +221,17 @@ def reachable_counts(
         if mode == "node":
             nxt = {n: 1 for n in nxt if n not in visited}
             visited |= set(nxt)
-        local_rows += [(n, lvl, c) for n, c in sorted(nxt.items())]
+        driver_rows += [(n, lvl, c) for n, c in sorted(nxt.items())]
         frontier, lvl = nxt, lvl + 1
     if frontier is not None and (not frontier or lvl > max_depth):
-        return _local_df(spark, local_rows, out_schema)
+        return local_rows(spark, driver_rows, out_schema)
 
     # distributed continuation (one job per level, eager pin_state,
     # broadcast frontier under threshold — see the module docstring)
     edges = edges.persist()
-    parts = [_local_df(spark, local_rows, out_schema)]
+    parts = [local_rows(spark, driver_rows, out_schema)]
     if frontier is not None:
-        f_df = _local_df(spark, sorted(frontier.items()), _FRONTIER)
+        f_df = local_rows(spark, sorted(frontier.items()), _FRONTIER)
     else:
         # seeds DataFrame too large for driver coordination: the frontier
         # starts (and stays) executor-side
@@ -250,13 +242,13 @@ def reachable_counts(
     f_df = pin_state(f_df)  # loop state, even when seeded from local rows
     if frontier is None and include_seed:
         # level-0 rows for distributed seeds (driver-held seeds put
-        # theirs into local_rows above)
+        # theirs into driver_rows above)
         parts.append(
             f_df.select("node", F.lit(0).alias("level"), F.col("cnt").cast("long"))
         )
     visited_df = None
     if mode == "node":
-        visited_df = _local_df(spark, [(n,) for n in sorted(visited)], "node string")
+        visited_df = local_rows(spark, [(n,) for n in sorted(visited)], "node string")
         if frontier is None:
             # distributed seeds never entered the driver `visited` set; mark
             # them so a cycle back to a seed is not re-reported at level>=1
@@ -345,7 +337,7 @@ def path_count_to_mitm(
     ).select(
         F.col("node"), F.col("level").alias("lb"), F.col("cnt").alias("cb")
     )
-    combos = _local_df(
+    combos = local_rows(
         spark,
         sorted({(min(t, half), t - min(t, half)) for t in range(1, max_len + 1)}),
         "lf int, lb int",

@@ -24,11 +24,7 @@ from itertools import count
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphdb_for_drones_spark.mutation import (
-    RANK_BUCKETS,
-    bucketed_rank,
-    redelegate,
-)
+from graphdb_for_drones_spark.mutation import bucketed_rank, redelegate
 from graphdb_for_drones_spark.operators._pin import pin_state
 from graphdb_for_drones_spark.snapshots import SnapshotStore
 
@@ -57,20 +53,6 @@ def _snapshot(df: DataFrame, store: SnapshotStore | None = None) -> DataFrame:
     return out
 
 
-def ranked_keys(
-    current: DataFrame, key_col: str, buckets: int = RANK_BUCKETS
-) -> tuple[DataFrame, int]:
-    """Deterministic dense rank over the key set WITHOUT a driver-side
-    key list (the reference collects its id lists — S4 — and so did
-    earlier rounds here; at 100× the drone table that collect is a
-    driver OOM): delegates to ``mutation.bucketed_rank`` — hash-bucketed
-    per-group windows, only ``buckets`` counters reach the driver.  The
-    fixed bucket-major/key-minor permutation is exactly what the
-    workload's "first n_upd keys" selection and chunked commits need.
-    Returns (DataFrame(key_col, __rank), total_keys)."""
-    return bucketed_rank(current.select(key_col), key_col, buckets)
-
-
 def _rank_chunks(
     ranked: DataFrame, key_col: str, start: int, stop: int, chunk_size: int
 ) -> Iterator[DataFrame]:
@@ -95,10 +77,11 @@ def turn_taking(
 ) -> Iterator[DataFrame]:
     """Yield one committed snapshot per round; round r re-points the first
     ``update_ratio`` fraction of drones (under the deterministic
-    ``ranked_keys`` order) at ``hq_ids[r % len]``.  With ``store`` each
-    round is a durable on-disk version (see ``_snapshot``)."""
+    ``mutation.bucketed_rank`` order) at ``hq_ids[r % len]``.  With
+    ``store`` each round is a durable on-disk version (see
+    ``_snapshot``)."""
     current = _snapshot(delegation, store)
-    ranked, total = ranked_keys(current, key_col)
+    ranked, total = bucketed_rank(current, key_col)
     ranked = pin_state(ranked)  # selection frozen across rounds
     n_upd = int(total * update_ratio)
     for r in range(rounds):
@@ -122,7 +105,7 @@ def chain_churn(
     """Per depth in the cycle: churn a ratio of drones round-robin across
     HQs, commit, and yield (depth, snapshot) for depth-d measurement."""
     current = _snapshot(delegation, store)
-    ranked, total = ranked_keys(current, key_col)
+    ranked, total = bucketed_rank(current, key_col)
     ranked = pin_state(ranked)  # selection frozen across rounds
     n_upd = int(total * update_ratio)
     for i, depth in enumerate(depth_cycle):
@@ -150,7 +133,7 @@ def partition_reconcile(
     churn the island for ``churn_rounds``, then reconcile everyone back to
     the main HQ.  Returns (partitioned_snapshot, reconciled_snapshot)."""
     current = _snapshot(delegation)
-    ranked, total = ranked_keys(current, key_col)
+    ranked, total = bucketed_rank(current, key_col)
     ranked = pin_state(ranked)  # selection frozen across rounds
     n_island = int(total * split_ratio)
 

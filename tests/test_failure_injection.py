@@ -283,10 +283,10 @@ def test_guard_reference_pin_released_on_termination(
     the query terminates, on the streams listener, so the probe waits
     for that.  Either way an availableNow drain leaves no persisted
     RDD behind."""
-    from graphdb_for_drones_spark import traversal
+    from graphdb_for_drones_spark.operators import _pin
 
     if reference == "pinned":
-        monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", 0)
+        monkeypatch.setattr(_pin, "COLLECT_THRESHOLD", 0)
     src = tmp_path / "in"
     src.mkdir()
     _write_events(src, "b0.json", [10, 20, 30])
@@ -336,9 +336,9 @@ def test_guard_restart_on_same_checkpoint_keeps_its_reference(
     second run's batches still read their own pinned reference (before
     and after that release), and stopping the second run frees its
     pin."""
-    from graphdb_for_drones_spark import traversal
+    from graphdb_for_drones_spark.operators import _pin
 
-    monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", 0)
+    monkeypatch.setattr(_pin, "COLLECT_THRESHOLD", 0)
     src = tmp_path / "in"
     src.mkdir()
     out, ckpt = str(tmp_path / "flags"), str(tmp_path / "ckpt")

@@ -423,15 +423,14 @@ def _set_knob(monkeypatch, knob):
     forces every settled state of two or more rows executor-side
     (``pin_state`` + count), ``no_pin`` disables ``_pin.pin``.  Returns
     the list ``pin_state`` calls append to under ``collect_threshold_1``."""
-    from graphdb_for_drones_spark import traversal
-    from graphdb_for_drones_spark.operators import graph_algorithms as ga
+    from graphdb_for_drones_spark.operators import _pin
 
     pins = []
     if knob == "collect_threshold_1":
-        monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", 1)
-        real_pin_state = ga.pin_state
+        monkeypatch.setattr(_pin, "COLLECT_THRESHOLD", 1)
+        real_pin_state = _pin.pin_state
         monkeypatch.setattr(
-            ga, "pin_state", lambda df: pins.append(1) or real_pin_state(df)
+            _pin, "pin_state", lambda df: pins.append(1) or real_pin_state(df)
         )
     elif knob == "no_pin":
         monkeypatch.setenv("SPARK_GRAFT_NO_PIN", "1")
@@ -462,10 +461,10 @@ def test_k_core_executor_side_state_cuts_lineage_unpinned(spark, monkeypatch):
     round's survivor state must still be a materialized scan — an
     uncut state is read twice per round (one semi-join per endpoint),
     so round r's plan would hold 2^r copies of round 1."""
-    from graphdb_for_drones_spark import traversal
+    from graphdb_for_drones_spark.operators import _pin
     from graphdb_for_drones_spark.operators import graph_algorithms as ga
 
-    monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", 1)
+    monkeypatch.setattr(_pin, "COLLECT_THRESHOLD", 1)
     monkeypatch.setattr(ga, "SMALL_GRAPH_EDGES", 0)
     monkeypatch.setenv("SPARK_GRAFT_NO_PIN", "1")
     real_settle = ga.settle
@@ -645,11 +644,11 @@ def test_graph_loop_leaves_no_pinned_blocks(spark, monkeypatch, kernel, threshol
     ``components_driver``: numpy over one Arrow collect) is driver-side
     at either threshold; ``k_core`` and ``components_loop`` force the
     distributed loop (``SMALL_GRAPH_EDGES=0``)."""
-    from graphdb_for_drones_spark import traversal
+    from graphdb_for_drones_spark.operators import _pin
     from graphdb_for_drones_spark.operators import graph_algorithms as ga
 
     if threshold is not None:
-        monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", threshold)
+        monkeypatch.setattr(_pin, "COLLECT_THRESHOLD", threshold)
     if kernel in ("k_core", "components_loop"):
         monkeypatch.setattr(ga, "SMALL_GRAPH_EDGES", 0)
     size, call, read, expect = _leak_cases()[kernel]

@@ -106,11 +106,11 @@ def test_release_frees_a_pinned_frames_blocks(spark):
 
 
 def test_release_leaves_unpinned_and_local_frames_alone(spark, monkeypatch):
-    from graphdb_for_drones_spark.traversal import _local_df
+    from graphdb_for_drones_spark.local_frame import local_rows
 
     monkeypatch.setenv("SPARK_GRAFT_NO_PIN", "1")
     unpinned = pin(spark.range(5))
-    local = _local_df(spark, [(1,), (2,)], "id long")
+    local = local_rows(spark, [(1,), (2,)], "id long")
     before = _persisted(spark)
     release(unpinned)
     release(local)

@@ -75,7 +75,7 @@ def test_trade_keys_dedup_runs_after_the_exchange(cat):
 @pytest.mark.parametrize("entry", ["trade_trust_from_anchor", "supplier_pagerank"])
 def test_trade_entry_leaves_no_pinned_blocks(cat, entry):
     """An entry's answer is driver-local here (both are far below
-    ``traversal.COLLECT_THRESHOLD`` at sf0.01), so once the entry
+    ``_pin.COLLECT_THRESHOLD`` at sf0.01), so once the entry
     returns no pin it took may hold blocks: not the pair list, the
     degree-annotated edges, the vertex list or a mid-loop state."""
     spark = cat.spark

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from graphdb_for_drones_spark import traversal
+from graphdb_for_drones_spark.operators import _pin
 from graphdb_for_drones_spark.traversal import (
     path_count_to,
     reachable,
@@ -15,7 +15,7 @@ from graphdb_for_drones_spark.traversal import (
 def distributed(monkeypatch):
     """Every frontier (and seed DataFrame) "too big" for the driver: the
     BFS runs the distributed continuation from the first level."""
-    monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", 0)
+    monkeypatch.setattr(_pin, "COLLECT_THRESHOLD", 0)
 
 
 @pytest.fixture(scope="module")
@@ -192,11 +192,11 @@ def test_distributed_df_seeds_duplicates_path(spark, diamond, distributed):
     assert got == {("b", 1): 2, ("c", 1): 2}
 
 
-@pytest.mark.parametrize("threshold", [traversal.COLLECT_THRESHOLD, 0])
+@pytest.mark.parametrize("threshold", [_pin.COLLECT_THRESHOLD, 0])
 def test_integer_ids(spark, monkeypatch, threshold):
     # integer-typed edges answer like their string twins, driver levels
     # and distributed continuation alike
-    monkeypatch.setattr(traversal, "COLLECT_THRESHOLD", threshold)
+    monkeypatch.setattr(_pin, "COLLECT_THRESHOLD", threshold)
     e = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 4), (3, 4)], "src long, dst long"
     ).localCheckpoint()

@@ -11,6 +11,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from graphdb_for_drones_spark import traversal
+from graphdb_for_drones_spark.operators import _pin
 
 NODES = list("abcdefg")
 
@@ -64,7 +65,7 @@ def _strategy(mp, strategy):
             functools.partial(traversal.reachable_counts, collect_edges=True),
         )
     elif strategy == "distributed":
-        mp.setattr(traversal, "COLLECT_THRESHOLD", 0)
+        mp.setattr(_pin, "COLLECT_THRESHOLD", 0)
 
 
 @pytest.mark.slow

@@ -59,7 +59,7 @@ def test_measure_under_workload(spark, delegation):
 def test_no_driver_key_materialization(spark, monkeypatch):
     # the scale contract: only bucket COUNTERS reach the driver, never
     # the key list (collect row counts stay <= RANK_BUCKETS per call)
-    from graphdb_for_drones_spark.workloads import RANK_BUCKETS
+    from graphdb_for_drones_spark.mutation import RANK_BUCKETS
 
     sizes = []
     big = flat_delegation(spark, n=1000, hq_id="HQ1")
