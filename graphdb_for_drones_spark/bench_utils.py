@@ -56,6 +56,16 @@ class BenchResult:
         return r
 
 
+def percentiles(xs: list[float]) -> tuple[float, float, float]:
+    """(p50, p95, p99) of a non-empty sample: ``statistics.quantiles(xs,
+    n=100)`` positions 49/94/98 (the reference's indices); a single
+    sample is all three."""
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    qs = statistics.quantiles(xs, n=100)
+    return qs[49], qs[94], qs[98]
+
+
 def benchmark_query(
     run,
     iterations: int = 100,
@@ -79,11 +89,7 @@ def benchmark_query(
         latencies.append(time.time() - t0)
     total = time.time() - t_start
     resources = mon.stop() if mon is not None else {}
-    if len(latencies) >= 2:
-        qs = statistics.quantiles(latencies, n=100)
-        p50, p95, p99 = qs[49], qs[94], qs[98]
-    else:
-        p50 = p95 = p99 = latencies[0]
+    p50, p95, p99 = percentiles(latencies)
     return BenchResult(
         scenario=scenario,
         scale_up=scale_up,

@@ -24,8 +24,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdb_for_drones_spark.bench_utils import percentiles
 from graphdb_for_drones_spark.local_frame import local_frame
-from graphdb_for_drones_spark.operators._pin import pin_state
+from graphdb_for_drones_spark.operators._pin import pin_state, release
 from graphdb_for_drones_spark.streaming.cdc import (
     apply_cdc_batch,
     encode_envelope,
@@ -43,16 +44,16 @@ def _stats(xs: list[float]) -> dict:
     Never feed this per-event data — use ``_stats_distributed``."""
     if not xs:
         return {"count": 0}
-    qs = statistics.quantiles(xs, n=100) if len(xs) >= 2 else [xs[0]] * 99
+    p50, p95, p99 = percentiles(xs)
     return {
         "count": len(xs),
         "avg": statistics.mean(xs),
         "min": min(xs),
         "max": max(xs),
         "stddev": statistics.stdev(xs) if len(xs) >= 2 else 0.0,
-        "p50": qs[49],
-        "p95": qs[94],
-        "p99": qs[98],
+        "p50": p50,
+        "p95": p95,
+        "p99": p99,
     }
 
 
@@ -178,11 +179,15 @@ def bench_recovery(spark: SparkSession, backlog: int = 5_000) -> dict:
         rows = chunk.select(F.max("change_id").alias("m"), F.count(F.lit(1)).alias("n")).first()
         if not rows.n:
             break
-        state = pin_state(apply_cdc_batch(state, chunk, seq_col="ts_ms"))
+        # the new state is materialized from the old one, which no
+        # later batch reads: free its blocks now
+        old, state = state, pin_state(apply_cdc_batch(state, chunk, seq_col="ts_ms"))
+        release(old)
         applied += rows.n
         last_id = rows.m
     wall = time.time() - t0
     assert state.count() == backlog
+    release(state)
     return {
         "bench": "recovery_drain",
         "backlog": backlog,

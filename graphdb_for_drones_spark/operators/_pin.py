@@ -4,8 +4,8 @@ ReuseExchange dedups only the SHUFFLE below an aggregate: each plan
 consumer re-executes the post-shuffle aggregation, so posting/bucket
 tables with 3-4 consumers pay the aggregate 3-4× (PERF.md round 8,
 simhash family 5.2 → 3.9 s isolated).  Pinning materializes the rows
-once so every consumer is a scan.  Row-based checkpoints, NOT
-``.persist()`` — the columnar cache is ~20× slower on array columns.
+once so every consumer is a scan.  Row-based checkpoints, NOT the
+columnar cache (``persist``), which is ~20× slower on array columns.
 
 Which call a frame gets depends on why it is materialized:
 

@@ -573,7 +573,7 @@ def k_core(
 
 def temporal_reach(
     edges: DataFrame,
-    anchor: str,
+    anchor: str | int,
     max_hops: int = 3,
     ts_col: str = "ts",
 ) -> DataFrame:
@@ -592,11 +592,12 @@ def temporal_reach(
     is reduction-order-independent — so this iterative algorithm is
     driver-hash-checkable like the fixed-point pagerank.
 
-    Input edges are (src, dst, ``ts_col``); the anchor departs at
-    -infinity (any first edge qualifies).  Returns (id, arrival,
-    hops) for reached nodes (anchor excluded), where ``hops`` is the
-    hop count of the earliest-arrival path (MIN tiebreak on hops at
-    equal arrival).  Each superstep is one frontier⋈edges join with the
+    Input edges are (src, dst, ``ts_col``), ids of any one type (the
+    ``anchor`` and the answer's ``id`` take ``src``'s); the anchor
+    departs at -infinity (any first edge qualifies).  Returns (id,
+    arrival, hops) for reached nodes (anchor excluded), where ``hops``
+    is the hop count of the earliest-arrival path (MIN tiebreak on hops
+    at equal arrival).  Each superstep is one frontier⋈edges join with the
     time predicate fused (Catalyst pushes it into the join), one
     min-aggregation keyed on dst — shuffle bounded by reached nodes,
     never path multiplicity.  Levels and the anchor-free answer hold
@@ -614,8 +615,9 @@ def temporal_reach(
     # shuffles + settles a hop.  Each level settles once (it is
     # referenced twice: next hop + final merge).
     depart = -(1 << 62)  # the anchor's departure: -infinity
+    t = edges.schema["src"].dataType.simpleString()
     levels = [local_rows(
-        edges.sparkSession, [(anchor, depart, 0)], "id string, arrival long, hops int"
+        edges.sparkSession, [(anchor, depart, 0)], f"id {t}, arrival long, hops int"
     )]
     # the first hop reads the lone anchor row as literals: a filter on
     # the edges, no broadcast job
@@ -745,7 +747,6 @@ def cooccurrence_similarity(
     group_col: str,
     item_col: str,
     k: int = 20,
-    broadcast_degrees: bool = True,
     dense_items_threshold: int = 2048,
     n_items_hint: int | None = None,
     max_pairs: int | None = EXACT_PAIRS_BUDGET,
@@ -859,19 +860,16 @@ def cooccurrence_similarity(
     # common is the pair stream — broadcast both sides of the rejoin or
     # Spark sort-merges the multi-million-row pair table twice (the
     # aggregated deg frame has no size stats, so AQE alone won't pick
-    # the broadcast).  F.broadcast is an UNCONDITIONAL hint: pass
-    # broadcast_degrees=False when the item dimension itself is huge
-    # (beyond ~10M items the hint trades a slow sort-merge for an OOM)
-    def maybe_bcast(d):
-        return F.broadcast(d) if broadcast_degrees else d
-
+    # the broadcast).  F.broadcast is an UNCONDITIONAL hint: beyond
+    # ~10M items it would trade a slow sort-merge for an OOM, a scale
+    # no caller's item dimension comes near
     joined = common.join(
-        maybe_bcast(
+        F.broadcast(
             deg.select(F.col("__i").alias("id_a"), F.col("deg").alias("__da"))
         ),
         "id_a",
     ).join(
-        maybe_bcast(
+        F.broadcast(
             deg.select(F.col("__i").alias("id_b"), F.col("deg").alias("__db"))
         ),
         "id_b",
@@ -906,14 +904,17 @@ def auto_dimsum_gamma(n_items: int) -> float:
     return 4.0 * max(8, (n_items - 1).bit_length())
 
 
+# the md5 seed prefix of the sampling coin; the oracle twin
+# (plans/extra_queries._dimsum_oracle_sql) spells the same literal
+DIMSUM_TAG = "dimsum:"
+
+
 def cooccurrence_similarity_sampled(
     edges: DataFrame,
     group_col: str,
     item_col: str,
     k: int = 20,
     gamma: float | None = None,
-    tag: str = "dimsum",
-    broadcast_degrees: bool = True,
 ) -> DataFrame:
     """DIMSUM-style SAMPLED co-occurrence (Zadeh & Goel 2013,
     "Dimension Independent Matrix Square using MapReduce") — the scale
@@ -952,8 +953,8 @@ def cooccurrence_similarity_sampled(
     kneeing on a constant; pass an explicit γ to pin it (the fixed32
     oracle twin).
 
-    ``broadcast_degrees`` mirrors the exact op's contract: the degree
-    table is item-dimension-sized; pass False beyond ~10M items.
+    The degree table is item-dimension-sized and always broadcast, as
+    in the exact op.
 
     Input contract matches the exact op: DISTINCT (group, item) rows.
     Returns top-``k`` by (est_common DESC, item_a, item_b):
@@ -980,7 +981,7 @@ def cooccurrence_similarity_sampled(
         # cannot corrupt counts).
         safe = F.coalesce(col, F.lit(" "))
         return F.pmod(
-            _md5_60bit(F.concat(F.lit(tag + ":"), safe)), F.lit(1 << 31)
+            _md5_60bit(F.concat(F.lit(DIMSUM_TAG), safe)), F.lit(1 << 31)
         )
 
     # one scan of the (possibly expensive, e.g. join+distinct) edge
@@ -1009,9 +1010,7 @@ def cooccurrence_similarity_sampled(
         # from COUNT(*) in SQL
         deg = pin(deg)
         gamma = auto_dimsum_gamma(deg.count())
-    ed = e.join(
-        F.broadcast(deg) if broadcast_degrees else deg, "__i"
-    ).select(
+    ed = e.join(F.broadcast(deg), "__i").select(
         "__g",
         seed31(F.col("__g").cast("string")).alias("__gx"),
         F.struct(
@@ -1062,7 +1061,7 @@ def cooccurrence_similarity_sampled(
     )
 
 
-def weighted_sssp(edges: DataFrame, source: str, rounds: int = 4) -> DataFrame:
+def weighted_sssp(edges: DataFrame, source: str | int, rounds: int = 4) -> DataFrame:
     """Single-source shortest paths with nonnegative integer weights by
     bounded Bellman-Ford relaxation: ``rounds`` supersteps of
     d_k(v) = min(d_{k-1}(v), min over edges (d_{k-1}(u) + w(u,v))) —
@@ -1071,7 +1070,9 @@ def weighted_sssp(edges: DataFrame, source: str, rounds: int = 4) -> DataFrame:
     shortest-path hop diameter this is the exact SSSP).
 
     Input: (src, dst, w long) DIRECTED edges (symmetrize upstream for
-    undirected graphs).  Returns (id, cost long) for reached nodes.
+    undirected graphs), ids of any one type (``source`` and the
+    answer's ``id`` take ``src``'s).  Returns (id, cost long) for
+    reached nodes.
     Integer costs + MIN reductions are order-independent, so the whole
     iterative computation is driver-hash-checkable against an unrolled
     SQL twin (the fixed-point-pagerank treatment).  Each superstep is
@@ -1096,7 +1097,8 @@ def weighted_sssp(edges: DataFrame, source: str, rounds: int = 4) -> DataFrame:
         eager=False,
     )
     bound = e.select("dst").distinct().count() + 1
-    best = local_rows(edges.sparkSession, [(source, 0)], "id string, cost long")
+    t = edges.schema["src"].dataType.simpleString()
+    best = local_rows(edges.sparkSession, [(source, 0)], f"id {t}, cost long")
     # the first relaxation reads the lone source row as literals: a
     # filter on the edges, no broadcast job
     relaxed = e.filter(F.col("src") == source).select(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from graphdb_for_drones_spark.operators._index_store import build_once
 from graphdb_for_drones_spark.operators._pin import pin
+from graphdb_for_drones_spark.operators.dedup import quote_ident
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -62,13 +63,6 @@ def _vec_lit(vec) -> Column:
     return F.array(*[F.lit(float(v)) for v in vec])
 
 
-def _quote_ident(name: str) -> str:
-    """Single-home quoting logic lives in dedup.quote_ident."""
-    from graphdb_for_drones_spark.operators.dedup import quote_ident
-
-    return quote_ident(name)
-
-
 def _dot_sql(name: str, vec) -> str:
     """``dot(F.col(name), _vec_lit(vec))`` as SQL TEXT — the same fold
     tree after parsing (bit-identical results), but one py4j call
@@ -76,7 +70,7 @@ def _dot_sql(name: str, vec) -> str:
     repr roundtrip, so the doubles are exactly ``F.lit(float(v))``'s)."""
     arr = "array(" + ",".join(f"{float(v)!r}D" for v in vec) + ")"
     return (
-        f"aggregate(zip_with({_quote_ident(name)}, {arr}, "
+        f"aggregate(zip_with({quote_ident(name)}, {arr}, "
         f"(x, y) -> cast(x as double) * cast(y as double)), "
         f"0.0D, (acc, x) -> acc + x)"
     )
@@ -1005,7 +999,7 @@ def _sub_sq_dist_sql(sub_name: str, codeword: list) -> str:
     plan at m=8, ksub=16 (thousands of py4j round-trips), dominating
     the whole query."""
     arr = "array(" + ",".join(_lit_d(c) for c in codeword) + ")"
-    sub_name = _quote_ident(sub_name)
+    sub_name = quote_ident(sub_name)
     return (
         f"cast(floor(aggregate(zip_with({sub_name}, {arr}, "
         f"(x, y) -> (cast(x as double) - y) * (cast(x as double) - y)), "

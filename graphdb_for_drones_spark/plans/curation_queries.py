@@ -419,13 +419,10 @@ def q_embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = blocked_pairs_open(
         spark, cat.embeddings, path, block_col="label", threshold=0.3, dim=64
-    ).select(
-        F.lpad(F.col("id_a").cast("string"), 12, "0").alias("src"),
-        F.lpad(F.col("id_b").cast("string"), 12, "0").alias("dst"),
-    )
+    ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     comp = connected_components(pairs)
     return (
-        comp.groupBy(F.col("component").cast("long").alias("cluster_id"))
+        comp.groupBy(F.col("component").alias("cluster_id"))
         .agg(F.count(F.lit(1)).alias("n_vecs"))
         .filter(F.col("n_vecs") > 1)
     )

@@ -348,15 +348,7 @@ def q_supplier_shared_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     cat = Catalog(spark, sf_dir)
-    e = (
-        cat.orders.select("o_orderkey", "o_custkey")
-        .join(
-            cat.lineitem.select("l_orderkey", "l_suppkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
+    e = _trade_lines(cat).distinct()
     # supplier-table cardinality bounds the item dimension: asserting
     # it routes the similarity through the dense-matrix branch (no
     # 12.5M-row pair stream; see cooccurrence_similarity)
@@ -396,25 +388,13 @@ ORDER BY n_common DESC, supp_a ASC, supp_b ASC LIMIT 20
 _DIMSUM_GAMMA_FIXED = 32.0
 
 
-def _dimsum_edges(cat: Catalog) -> DataFrame:
-    return (
-        cat.orders.select("o_orderkey", "o_custkey")
-        .join(
-            cat.lineitem.select("l_orderkey", "l_suppkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-
-
 def _q_dimsum(spark: SparkSession, sf_dir: str, gamma: float | None) -> DataFrame:
     from graphdb_for_drones_spark.operators.graph_algorithms import (
         cooccurrence_similarity_sampled,
     )
 
     return cooccurrence_similarity_sampled(
-        _dimsum_edges(Catalog(spark, sf_dir)),
+        _trade_lines(Catalog(spark, sf_dir)).distinct(),
         group_col="o_custkey",
         item_col="l_suppkey",
         k=20,
@@ -955,35 +935,34 @@ def q_trade_cheapest_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-bounded relaxation loop — hash-checkable because integer MIN
     reductions are order-independent; the oracle unrolls the 4 rounds
     as CTEs (a recursive path enumeration would explode on this dense
-    graph — relaxation cannot)."""
+    graph — relaxation cannot).
+
+    The relaxation runs on :func:`_trade_keys`' long vertex ids (the
+    trade lines are counted per encoded pair, c1 is id 2) and only the
+    reached nodes are decoded by :func:`_trade_id`."""
     from graphdb_for_drones_spark.operators.graph_algorithms import (
         weighted_sssp,
     )
 
     cat = Catalog(spark, sf_dir)
-    n_lines = (
-        cat.orders.select("o_orderkey", "o_custkey")
-        .join(
-            cat.lineitem.select("l_orderkey", "l_suppkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
+    pairs = (
+        _trade_lines(cat)
+        .groupBy(*_trade_ends())
+        .agg(
+            F.greatest(F.lit(1).cast("long"), F.lit(10) - F.count(F.lit(1)))
+            .cast("long")
+            .alias("w")
         )
-        .groupBy("o_custkey", "l_suppkey")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    pairs = n_lines.select(
-        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        F.greatest(F.lit(1).cast("long"), F.lit(10) - F.col("n"))
-        .cast("long")
-        .alias("w"),
     )
     edges = pairs.unionByName(
         pairs.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
         )
     )
-    best = weighted_sssp(edges, "c1", rounds=4)
-    return best.filter(F.col("id") != "c1")
+    best = weighted_sssp(edges, 2, rounds=4)
+    return best.filter(F.col("id") != 2).select(
+        _trade_id("id").alias("id"), "cost"
+    )
 
 
 def _sssp_oracle_sql(rounds: int = 4) -> str:
@@ -1674,13 +1653,16 @@ def q_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative-algorithm entry the driver gate can HASH-CHECK: integer
     sums are reduction-order-independent, so the oracle unrolls the
     identical supersteps as CTE stages and matches bit-for-bit (a
-    floating-point PageRank could only ever be rows-only)."""
+    floating-point PageRank could only ever be rows-only).  The
+    supersteps run on :func:`_trade_keys`' long ids; only the ranked
+    vertices are decoded."""
     from graphdb_for_drones_spark.operators.graph_algorithms import (
         pagerank_fixed_point,
     )
 
     cat = Catalog(spark, sf_dir)
-    return pagerank_fixed_point(_trade_pairs(cat), iterations=3)
+    ranks = pagerank_fixed_point(_trade_keys(cat), iterations=3)
+    return ranks.select(_trade_id("id").alias("id"), "rank_fp", "rank")
 
 
 def _pagerank_oracle_sql(
@@ -1732,11 +1714,15 @@ def q_trade_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph_algorithms.degrees): out-degree = distinct
     suppliers a customer bought from, in-degree = distinct customers a
     supplier sold to — the issuer-fan-out / signer-fan-in analysis of
-    the web-of-trust surface on TPC-H-shaped data."""
+    the web-of-trust surface on TPC-H-shaped data.  Counted on
+    :func:`_trade_keys`' long ids; only the per-vertex rows are
+    decoded."""
     from graphdb_for_drones_spark.operators.graph_algorithms import degrees
 
     cat = Catalog(spark, sf_dir)
-    return degrees(_trade_pairs(cat))
+    return degrees(_trade_keys(cat)).select(
+        _trade_id("id").alias("id"), "out_degree", "in_degree"
+    )
 
 
 ORACLE_TRADE_GRAPH_DEGREES = """
@@ -1777,16 +1763,19 @@ def q_trade_trust_from_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # symmetrizing union so the orders⋈lineitem+distinct derivation
     # runs once, not once per union leg.  Measured 4.9 → 3.6 s at
     # sf0.1, identical (id, trust) rows.
-    pairs = pin(_trade_pairs(cat))
+    pairs = pin(_trade_keys(cat))
     edges = pairs.unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    r = reachable_counts(edges, ["c1"], 4, mode="node", include_seed=True)
+    # seed c1 is long id 2; the BFS keys its rows by str(), so `node` is
+    # cast back to the long id before it is decoded
+    r = reachable_counts(edges, [2], 4, mode="node", include_seed=True)
     # the levels are a local frame or pinned, so `pairs` is never read
     # again
     release(pairs)
+    r = r.select(F.col("node").cast("long").alias("id"), "level")
     return r.select(
-        F.col("node").alias("id"),
+        _trade_id("id").alias("id"),
         F.expr(
             "1.0 / cast(shiftleft(cast(1 as bigint), level) as double)"
         ).alias("trust"),
@@ -1813,11 +1802,35 @@ SELECT id, 1.0 / (1 << d) AS trust FROM m
 """
 
 
-def _trade_keys(cat: Catalog) -> DataFrame:
-    """Distinct customer→supplier pairs of the trade graph on long
-    vertex ids: customer k → 2k, supplier k → 2k+1 (injective, and an
-    even id never equals an odd one, so the pairs are canonical with no
-    self-loops; :func:`_trade_id` maps an id back to its string).
+def _trade_lines(cat: Catalog, *extra: str | Column) -> DataFrame:
+    """Every orders⋈lineitem row as ``(o_custkey, l_suppkey, *extra)``:
+    the one place the trade family writes that join.  ``extra`` are
+    orders columns or expressions over them, computed before the join
+    (e.g. an order date as epoch seconds)."""
+    orders = cat.orders.select("o_orderkey", "o_custkey", *extra)
+    return orders.join(
+        cat.lineitem.select("l_orderkey", "l_suppkey"),
+        F.col("l_orderkey") == F.col("o_orderkey"),
+    ).select("o_custkey", "l_suppkey", *orders.columns[2:])
+
+
+def _trade_ends() -> list[Column]:
+    """A :func:`_trade_lines` row's endpoints on the trade graph's long
+    vertex ids: customer k → ``src`` 2k, supplier k → ``dst`` 2k+1
+    (injective, and an even id never equals an odd one, so the pairs
+    are canonical with no self-loops; :func:`_trade_id` maps an id back
+    to its string)."""
+    return [
+        (F.col("o_custkey") * 2).alias("src"),
+        (F.col("l_suppkey") * 2 + 1).alias("dst"),
+    ]
+
+
+def _trade_keys(cat: Catalog, *extra: str | Column) -> DataFrame:
+    """Distinct ``(src, dst, *extra)`` rows of the trade graph on long
+    vertex ids (:func:`_trade_ends`), the edge base of every trade
+    graph entry; each entry decodes only its answer rows with
+    :func:`_trade_id`.
 
     The join output is hash-partitioned on (src, dst) before the
     distinct, so the dedup runs once, in parallel, after one exchange.
@@ -1827,39 +1840,22 @@ def _trade_keys(cat: Catalog) -> DataFrame:
     r14: trade_kcore 1.34 → 1.17 s median against a plain distinct on
     the same long ids (local[4] on a 4-core host, sf0.1, 8 interleaved
     rounds)."""
+    lines = _trade_lines(cat, *extra)
     return (
-        cat.orders.select("o_orderkey", "o_custkey")
-        .join(
-            cat.lineitem.select("l_orderkey", "l_suppkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
+        lines.select(*_trade_ends(), *lines.columns[2:])
         .repartition("src", "dst")
         .distinct()
     )
 
 
 def _trade_id(col: str) -> Column:
-    """A :func:`_trade_keys` vertex id back to its string: 'c{key}' for
-    even ids, 's{key}' for odd ones."""
+    """A :func:`_trade_ends` vertex id back to its string: 'c{key}' for
+    even ids, 's{key}' for odd ones.  The only place the trade family
+    builds its string ids; entries decode answer rows, never pairs."""
     return F.concat(
         F.when(F.col(col) % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
         F.shiftright(F.col(col), 1).cast("string"),
     )
-
-
-def _trade_pairs(cat: Catalog) -> DataFrame:
-    """Distinct customer→supplier pairs of the trade graph ('c{key}',
-    's{key}'), the edge base of the trade_* graph entries that report
-    string ids: :func:`_trade_keys` with both ids decoded.  Dedup on the
-    numeric pair, not the strings, moves 16 fixed bytes per row through
-    the exchange (measured 1.10 → 0.72 s at sf0.1); the decode is
-    injective, so the distinct sets are identical."""
-    keys = _trade_keys(cat)
-    return keys.select(_trade_id("src").alias("src"), _trade_id("dst").alias("dst"))
 
 
 def q_trade_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1884,9 +1880,10 @@ def q_trade_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     perfbench ``graph_traversal`` (local[4] on a 4-core host, 20
     interleaved pairs) went 1.14 → 0.82 s per pass, median.
 
-    The peel runs on :func:`_trade_keys`' long ids, and only the ~8k
-    answer rows are decoded to 'c'/'s' strings: the pinned pair list,
-    the doubled list each round groups and semi-joins, and the
+    The peel runs on :func:`_trade_keys`' long ids (the edge base
+    every trade graph entry shares), and only the ~8k answer rows are
+    decoded to 'c'/'s' strings by :func:`_trade_id`: the pinned pair
+    list, the doubled list each round groups and semi-joins, and the
     survivor sets all hold fixed-width keys instead of strings.  r14
     (local[4] on a 4-core host, sf0.1, 8 interleaved rounds, medians):
     1.69 s on string ids, 1.34 s on long ids, 1.17 s with the key-hash
@@ -1947,51 +1944,34 @@ def q_trade_temporal_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     order cannot carry influence received in 1997).  MIN over integer
     epoch-seconds arrivals is reduction-order-independent, so the
     iterative algorithm is driver-hash-checked; the oracle unrolls the
-    three supersteps with the same per-layer MIN."""
+    three supersteps with the same per-layer MIN.
+
+    The edges are the distinct ``(src, dst, ts)`` rows of
+    :func:`_trade_keys` (long vertex ids, c1 is id 2, deduped after the
+    key-hash exchange); only the reached nodes are decoded."""
+    from graphdb_for_drones_spark.operators._pin import pin, release
     from graphdb_for_drones_spark.operators.graph_algorithms import (
         temporal_reach,
     )
 
     cat = Catalog(spark, sf_dir)
-    # numeric-keys-first distinct, same rationale as _trade_pairs
-    pairs = (
-        cat.orders.select("o_orderkey", "o_custkey", "o_orderdate")
-        .join(
-            cat.lineitem.select("l_orderkey", "l_suppkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(
-            "o_custkey",
-            "l_suppkey",
-            F.unix_timestamp("o_orderdate").alias("ts"),
-        )
-        .distinct()
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "src"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "dst"
-            ),
-            "ts",
-        )
-    )
     # r12 (guide §2.4): pin before the symmetrizing union — the kernel's
     # edge pin materializes BOTH legs, which re-ran the join+distinct
     # derivation twice; the pin runs it once and the union reads rows.
     # Lazy: the kernel's first count materializes it, and the answer is
     # settled, so the pin goes when the kernel returns.
-    from graphdb_for_drones_spark.operators._pin import pin, release
-
-    pairs = pin(pairs, eager=False)
+    pairs = pin(
+        _trade_keys(cat, F.unix_timestamp("o_orderdate").alias("ts")),
+        eager=False,
+    )
     edges = pairs.unionByName(
         pairs.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "ts"
         )
     )
-    reach = temporal_reach(edges, anchor="c1", max_hops=3)
+    reach = temporal_reach(edges, anchor=2, max_hops=3)
     release(pairs)
-    return reach
+    return reach.select(_trade_id("id").alias("id"), "arrival", "hops")
 
 
 # chained stages AS MATERIALIZED (each l_k feeds both l_{k+1} and u,
@@ -2806,15 +2786,12 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     cat = Catalog(spark, sf_dir)
-    # zero-pad: label propagation takes MIN over string labels, which
-    # must order like the numeric doc ids
     pairs = _ngram_pairs_for_sf(spark, sf_dir, cat).select(
-        F.lpad(F.col("id_a").cast("string"), 12, "0").alias("src"),
-        F.lpad(F.col("id_b").cast("string"), 12, "0").alias("dst"),
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
     comp = connected_components(pairs)
     return (
-        comp.groupBy(F.col("component").cast("long").alias("cluster_id"))
+        comp.groupBy(F.col("component").alias("cluster_id"))
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .filter(F.col("n_docs") > 1)
     )
@@ -2880,12 +2857,10 @@ def q_dedup_cluster_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = Catalog(spark, sf_dir)
     pairs = _ngram_pairs_for_sf(spark, sf_dir, cat).select(
-        F.lpad(F.col("id_a").cast("string"), 12, "0").alias("src"),
-        F.lpad(F.col("id_b").cast("string"), 12, "0").alias("dst"),
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
     comp = connected_components(pairs).select(
-        F.col("component").cast("long").alias("cluster_id"),
-        F.col("id").cast("long").alias("doc_id"),
+        F.col("component").alias("cluster_id"), F.col("id").alias("doc_id")
     )
     toks = cat.documents.select(
         "doc_id", token_count(F.col("text")).alias("n_tokens")

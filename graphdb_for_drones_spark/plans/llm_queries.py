@@ -1520,13 +1520,10 @@ def _dbscan_over_pairs(pairs: DataFrame, min_pts: int = 3) -> DataFrame:
         .join(core.select(F.col("vid").alias("id_b")), "id_b", "left_semi")
     )
     comp = connected_components(
-        cc.select(
-            F.lpad(F.col("id_a").cast("string"), 12, "0").alias("src"),
-            F.lpad(F.col("id_b").cast("string"), 12, "0").alias("dst"),
-        )
+        cc.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
     return (
-        comp.groupBy(F.col("component").cast("long").alias("cluster_id"))
+        comp.groupBy(F.col("component").alias("cluster_id"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_core"))
     )
 

@@ -227,8 +227,10 @@ def reachable_counts(
         return local_rows(spark, driver_rows, out_schema)
 
     # distributed continuation (one job per level, eager pin_state,
-    # broadcast frontier under threshold — see the module docstring)
-    edges = edges.persist()
+    # broadcast frontier under threshold — see the module docstring);
+    # every level re-reads the edges, so they are pinned lazily (the
+    # first level's join materializes them) and released at the end
+    edges = _pin.pin(edges, eager=False)
     parts = [local_rows(spark, driver_rows, out_schema)]
     if frontier is not None:
         f_df = local_rows(spark, sorted(frontier.items()), _FRONTIER)
@@ -269,7 +271,7 @@ def reachable_counts(
             nxt.select("node", F.lit(dl).alias("level"), F.col("cnt").cast("long"))
         )
         f_df = nxt
-    edges.unpersist()
+    _pin.release(edges)
     return reduce(DataFrame.unionByName, parts)
 
 

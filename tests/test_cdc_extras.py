@@ -77,6 +77,16 @@ def test_cdc_protocol_benches(spark):
     r = bench_recovery(spark, backlog=200)
     assert r["batches"] == 1 and r["drain_ev_s"] > 0
 
+    # a multi-batch drain frees each replaced state and the last one:
+    # nothing it pinned is left persisted
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    r = bench_recovery(spark, backlog=1_500)
+    assert r["batches"] == 3
+    assert persisted() - before == set()
+
 
 def test_stats_distributed_scalar_only(spark):
     # engine-side stat aggregation: one scalar row reaches the driver and

@@ -168,7 +168,8 @@ def test_connected_components_driver_matches_loop_on_random_graphs(
     differently as strings and as numbers ("10" < "9"): the driver step
     (codes in sorted id order) and the distributed loop both label each
     node with the string-min id of its component, as a Python
-    union-find does."""
+    union-find does.  The same graph on long ids gives the same
+    components, each labelled with its numeric min."""
     import random
 
     from graphdb_for_drones_spark.operators import graph_algorithms as ga
@@ -189,13 +190,21 @@ def test_connected_components_driver_matches_loop_on_random_graphs(
             parent[rb] = ra
         expect = {x: find(x) for x in list(parent)}
         assert expect["10"] == expect["9"] <= "10"
-        e = edges_df(spark, pairs)
-        driver = ga.connected_components(e).collect()
-        with monkeypatch.context() as mp:
-            mp.setattr(ga, "SMALL_GRAPH_EDGES", 0)
-            loop = ga.connected_components(e).collect()
-        for out in (driver, loop):
-            assert {r.id: r.component for r in out} == expect, (n, m)
+        members = {}
+        for x, root in expect.items():
+            members.setdefault(root, []).append(int(x))
+        expect_long = {x: min(ms) for ms in members.values() for x in ms}
+        assert expect_long[10] == expect_long[9] == 9
+        longs = spark.createDataFrame(
+            [(int(a), int(b)) for a, b in pairs], "src long, dst long"
+        ).localCheckpoint()
+        for e, want in ((edges_df(spark, pairs), expect), (longs, expect_long)):
+            driver = ga.connected_components(e).collect()
+            with monkeypatch.context() as mp:
+                mp.setattr(ga, "SMALL_GRAPH_EDGES", 0)
+                loop = ga.connected_components(e).collect()
+            for out in (driver, loop):
+                assert {r.id: r.component for r in out} == want, (n, m)
 
 
 def test_pagerank_fixed_point_matches_double_path(spark):
@@ -671,7 +680,9 @@ def test_temporal_reach_matches_python_reference_on_random_graphs(
     """Differential: engine earliest-arrival reachability vs a
     label-correcting Python reference on seeded random temporal
     graphs (multi-edges, cycles, duplicate timestamps), under each
-    knob the answer must not depend on."""
+    knob the answer must not depend on.  Each graph also runs on long
+    ids (node ``n{k}`` is ``k``): the answer keeps the long type and
+    maps back to the same rows."""
     import random
 
     from graphdb_for_drones_spark.operators.graph_algorithms import (
@@ -717,6 +728,13 @@ def test_temporal_reach_matches_python_reference_on_random_graphs(
             for r in temporal_reach(e, anchor, hops).collect()
         }
         assert got == expect, trial
+        longs = spark.createDataFrame(
+            [(int(a[1:]), int(b[1:]), t) for a, b, t in triples],
+            "src long, dst long, ts long",
+        ).localCheckpoint()
+        out = temporal_reach(longs, 0, hops)
+        assert out.schema["id"].dataType.simpleString() == "bigint"
+        assert {f"n{r.id}": (r.arrival, r.hops) for r in out.collect()} == expect
     if knob == "collect_threshold_1":
         assert pins  # the executor-side branch ran
 
@@ -725,7 +743,9 @@ def test_temporal_reach_matches_python_reference_on_random_graphs(
 def test_weighted_sssp_matches_python_bellman_ford(spark, monkeypatch, knob):
     """Differential: bounded-relaxation SSSP vs a python reference on
     random weighted digraphs (cycles, multi-edges, unreachable nodes),
-    under each knob the answer must not depend on."""
+    under each knob the answer must not depend on.  Each graph also
+    runs on long ids (node ``nodes[k]`` is ``k``): the answer keeps the
+    long type and maps back to the same costs."""
     import random
 
     from graphdb_for_drones_spark.operators.graph_algorithms import (
@@ -757,6 +777,13 @@ def test_weighted_sssp_matches_python_bellman_ford(spark, monkeypatch, knob):
                     nxt[d] = best[s] + w
             best = nxt
         assert got == best, (trial, edges)
+        longs = spark.createDataFrame(
+            [(nodes.index(s), nodes.index(d), w) for s, d, w in edges],
+            "src long, dst long, w long",
+        ).localCheckpoint()
+        out = weighted_sssp(longs, 0, rounds=rounds)
+        assert out.schema["id"].dataType.simpleString() == "bigint"
+        assert {nodes[r.id]: r.cost for r in out.collect()} == best, (trial, edges)
     if knob == "collect_threshold_1":
         assert pins  # the executor-side branch ran
 

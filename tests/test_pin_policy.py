@@ -7,8 +7,8 @@ or under ``SPARK_GRAFT_NO_PIN``.  A direct ``.localCheckpoint()`` or
 ``.checkpoint()`` anywhere else bypasses that policy, and so does the
 columnar cache (``.persist()`` / ``.cache()``), which ``_pin.py`` rules
 out (~20× slower on array columns).  These tests parse every module of
-the package and fail on any such attribute outside ``_pin.py`` (or the
-cache allowlist), naming each file and line.  Pure AST — no SparkSession.
+the package and fail on any such attribute outside ``_pin.py``, naming
+each file and line.  Pure AST — no SparkSession.
 """
 
 import ast
@@ -18,15 +18,6 @@ import graphdb_for_drones_spark
 
 PACKAGE_DIR = os.path.dirname(graphdb_for_drones_spark.__file__)
 POLICY = os.path.join("operators", "_pin.py")
-
-#: modules still on the columnar cache, each with the reason it is left
-CACHE_ALLOWED = {
-    "traversal.py": (
-        "reachable_counts' distributed continuation caches its edges; it "
-        "is on the write_path benchmark's read, left for a later change"
-    ),
-}
-
 
 def _modules():
     for root, _dirs, files in os.walk(PACKAGE_DIR):
@@ -38,13 +29,11 @@ def _modules():
                     yield rel, path
 
 
-def _hits(banned, allowed=()):
+def _hits(banned):
     """``file:line .attr`` for every attribute named in ``banned``,
-    outside ``_pin.py`` and the ``allowed`` modules."""
+    outside ``_pin.py``."""
     hits = []
     for rel, path in _modules():
-        if rel in allowed:
-            continue
         with open(path) as fh:
             tree = ast.parse(fh.read(), filename=rel)
         hits += [
@@ -64,9 +53,8 @@ def test_only_the_pin_policy_checkpoints():
 
 
 def test_no_columnar_cache_outside_the_allowlist():
-    hits = _hits({"persist", "cache"}, CACHE_ALLOWED)
+    hits = _hits({"persist", "cache"})
     assert not hits, (
-        "pin through operators/_pin.py instead of the columnar cache "
-        "(or add the module to CACHE_ALLOWED with its reason):\n"
+        "pin through operators/_pin.py instead of the columnar cache:\n"
         + "\n".join(hits)
     )
