@@ -25,10 +25,12 @@ Which call a frame gets depends on why it is materialized:
 ``settle`` is the one place a result is brought back to the driver
 instead: a frame that fits ``COLLECT_THRESHOLD`` rows comes back in one
 Arrow collect as a ``local_frame`` (the driver-local case above, no
-pin); a larger one is state and gets ``pin_state``.  Every loop that
-carries state between rounds and every guard reference settles
-through it, so the threshold lives here once (Pregelix's choice of
-physical plan by the size of the active state).
+pin); a larger one is state and gets ``pin_state``.  With no row bound
+known, its collect is ``collect_within``, the package's one bounded
+Arrow probe (the driver-side graph step sizes its edge list with it
+too).  Every loop that carries state between rounds and every guard
+reference settles through it, so the threshold lives here once
+(Pregelix's choice of physical plan by the size of the active state).
 
 No module outside this one calls ``localCheckpoint`` or ``checkpoint``
 (``tests/test_pin_policy.py`` enforces it).  A ``scoped()`` block
@@ -42,10 +44,14 @@ import contextlib
 import os
 from collections.abc import Iterator
 from contextvars import ContextVar
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
 from graphdb_for_drones_spark.local_frame import local_frame
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # rows a settled frame (a frontier, a superstep state, a guard's
 # reference) may hold and still come back to the driver
@@ -111,6 +117,16 @@ def pin_state(df: DataFrame) -> DataFrame:
     return _held(df.localCheckpoint())
 
 
+def collect_within(df: DataFrame, limit: int) -> pa.Table | None:
+    """``df``'s rows as one Arrow table if it holds at most ``limit``
+    rows, else None.  One ``limit(limit + 1)`` collect is both the size
+    probe and, when it fits, the answer: no count job runs first.  When
+    it does not fit, its rows are dropped and the caller's own path runs
+    ``df``'s plan once more.  The package's only bounded Arrow probe."""
+    tbl = df.limit(limit + 1).toArrow()
+    return tbl if tbl.num_rows <= limit else None
+
+
 def settle(df: DataFrame, bound: int | None = None) -> tuple[DataFrame, int, bool]:
     """Materialize ``df`` once: ``(frame, n_rows, local)``.
 
@@ -119,16 +135,17 @@ def settle(df: DataFrame, bound: int | None = None) -> tuple[DataFrame, int, boo
     in one ``toArrow()`` collect and return as a ``local_frame``
     (``local=True``: broadcast it into the next superstep); the collect
     is both the materialization and the halt signal, so no count job
-    runs.  With no bound, one ``limit(COLLECT_THRESHOLD + 1)`` collect
-    is the probe and, when it fits, the answer.  Otherwise the rows
-    stay executor-side: ``pin_state`` (every reader sees the same rows)
-    plus one ``count()``."""
-    if bound is None or bound <= COLLECT_THRESHOLD:
-        probe = df if bound is not None else df.limit(COLLECT_THRESHOLD + 1)
-        tbl = probe.toArrow()
-        if tbl.num_rows <= COLLECT_THRESHOLD:
-            local = local_frame(df.sparkSession, df.schema, *tbl.columns)
-            return local, tbl.num_rows, True
+    runs.  With no bound, ``collect_within`` is the probe and, when it
+    fits, the answer.  Otherwise the rows stay executor-side:
+    ``pin_state`` (every reader sees the same rows) plus one
+    ``count()``."""
+    if bound is None:
+        tbl = collect_within(df, COLLECT_THRESHOLD)
+    else:
+        tbl = df.toArrow() if bound <= COLLECT_THRESHOLD else None
+    if tbl is not None and tbl.num_rows <= COLLECT_THRESHOLD:
+        local = local_frame(df.sparkSession, df.schema, *tbl.columns)
+        return local, tbl.num_rows, True
     df = pin_state(df)
     return df, df.count(), False
 

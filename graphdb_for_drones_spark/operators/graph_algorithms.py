@@ -25,12 +25,13 @@ degenerates to a local combine.
 
 Dimension-sized graphs skip the supersteps altogether (Pregelix's
 choice of physical plan by the size of the active state, applied to
-the whole graph).  ``k_core`` and ``connected_components`` count their
-pinned edge list anyway; at most ``SMALL_GRAPH_EDGES`` rows go to the
-driver-side graph step instead: one ``toArrow()`` collect
-(``_driver_graph``: ids encoded to dense int codes in sorted id order),
-the loop vectorised in numpy, and the answer back as a local Arrow
-frame (``local_frame``).  No Row objects, no per-edge Python loop.
+the whole graph).  ``k_core`` and ``connected_components`` fetch an
+edge list of at most ``SMALL_GRAPH_EDGES`` rows in one bounded Arrow
+collect (``_pin.collect_within``, also the size probe: no pin, no
+count) for the driver-side graph step (``_driver_graph``: dense int
+codes in sorted id order), the loop vectorised in numpy, and the
+answer back as a local Arrow frame (``local_frame``).  No Row objects,
+no per-edge Python loop.
 Short literal tables (a seed row, the dense co-occurrence answer) are
 ``local_rows`` frames.
 """
@@ -47,7 +48,9 @@ from pyspark.sql import types as T
 
 from graphdb_for_drones_spark import traversal
 from graphdb_for_drones_spark.local_frame import local_frame, local_rows
-from graphdb_for_drones_spark.operators._pin import pin, pin_state, release, settle
+from graphdb_for_drones_spark.operators._pin import (
+    collect_within, pin, pin_state, release, settle,
+)
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -215,10 +218,11 @@ def pagerank_fixed_point(
 
 
 # The driver-side graph step (``_driver_graph``) takes an edge list of
-# at most this many rows: ONE ``toArrow()`` collect, ids encoded to
-# dense int codes, and the whole loop in numpy on the driver instead of
-# a Spark job (or several) per superstep.  The distributed loops stay
-# the continuation above it.  Sized from a measurement, not from any
+# at most this many rows: ONE bounded Arrow collect
+# (``_pin.collect_within``) is both the size probe and the step's input,
+# so no pin and no count run first; ids are encoded to dense int codes
+# and the whole loop runs in numpy on the driver instead of a Spark job
+# (or several) per superstep.  Sized from a measurement, not from any
 # one entry: seeded random graphs (xxhash64 endpoints over m/4 long
 # ids, so average degree 8; ``k_core`` at k=4), the driver step against
 # the distributed loop, local[4] on a 4-core host, median of 3 calls
@@ -232,25 +236,22 @@ def pagerank_fixed_point(
 #   2M      2.30 / 6.05            1.94 / 30.20               176 / 211 MB
 #   4M      4.68 / 11.77           4.09 / 40.18               320 / 443 MB
 #
-# (The loop's 0.5M row is slower than its 1M row: its 125k-node
-# survivor sets fit ``settle``'s collect threshold and come back as
-# Rows, the larger ones stay pinned.)  The driver step wins at every
-# measured size (2.5x and 10x at 4M), so no crossover was found: the
-# bound is the largest size measured, where the driver holds under half
-# a GB, not a measured break-even.  The distributed loops are kept only
-# as the capacity path for edge lists too large for the driver.  No
-# benchmark workload runs above the bound, so the bound and the loops
-# stay as they are until one does and the crossover is measured there.
+# The driver step wins at every size, so the bound is the largest size
+# measured (under half a GB of driver memory), not a break-even.  Above
+# it the distributed loops are the capacity path, and pay for the probe:
+# its rows are dropped and the upstream plan runs once more before the
+# pin (``k_core`` on 0.5M edges over a 250k bound: 5.0 → 6.0 s a call).
+# No benchmark workload runs above the bound, so the bound and the
+# loops stay until one does and the crossover is measured there.
 SMALL_GRAPH_EDGES = 4_000_000
 
 
-def _driver_graph(edges: DataFrame):
-    """The driver-side graph step's input: a two-column edge list
-    (pinned by the caller and already counted, so this reads its
-    blocks) comes back in ONE ``toArrow()`` collect.  Returns ``(ids,
-    u, v)``: ``ids`` the distinct vertex ids as an Arrow array in
-    sorted order, ``u``/``v`` int64 numpy codes of each edge's
-    endpoints.  Codes follow the sorted id order (Spark's ordering:
+def _driver_graph(tbl):
+    """The driver-side graph step's input: a two-column edge list,
+    collected by the caller as one Arrow table (``collect_within``).
+    Returns ``(ids, u, v)``: ``ids`` the distinct vertex ids as an
+    Arrow array in sorted order, ``u``/``v`` int64 numpy codes of each
+    edge's endpoints.  Codes follow the sorted id order (Spark's ordering:
     numeric, or byte-wise for strings), so the min code of a set is
     the code of its min id.  An edge with a null endpoint is dropped:
     null is no vertex."""
@@ -258,7 +259,6 @@ def _driver_graph(edges: DataFrame):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    tbl = edges.toArrow()
     a, b = tbl.column(0), tbl.column(1).cast(tbl.column(0).type)
     if a.null_count or b.null_count:
         ok = pc.and_(pc.is_valid(a), pc.is_valid(b))
@@ -272,18 +272,18 @@ def _driver_graph(edges: DataFrame):
     return enc.dictionary.take(order), codes[: len(a)], codes[len(a):]
 
 
-def _components_driver(edges: DataFrame) -> DataFrame:
-    """Connected components of a dimension-sized edge list on the
-    driver; the same answer as the distributed loop (component = min
-    reachable node id).  Vectorised min-label hooking with pointer
-    jumping over ``_driver_graph``'s codes: every edge whose endpoints
-    sit in different trees hooks the larger root under the smaller
-    one, then every node jumps to its root, until no edge spans two
-    trees.  A parent's code never exceeds its node's, so each root is
-    its tree's min code, which is the min id."""
+def _components_driver(edges: DataFrame, tbl) -> DataFrame:
+    """Connected components of ``tbl``, the collected ``edges`` (whose
+    types the answer keeps), on the driver; the same answer as the
+    distributed loop (component = min reachable node id).  Vectorised
+    min-label hooking with pointer jumping over ``_driver_graph``'s
+    codes: every edge whose endpoints sit in different trees hooks the
+    larger root under the smaller one, then every node jumps to its
+    root, until no edge spans two trees.  A parent's code never exceeds
+    its node's, so each root is its tree's min code, which is the min id."""
     import numpy as np
 
-    ids, u, v = _driver_graph(edges)
+    ids, u, v = _driver_graph(tbl)
     parent = np.arange(len(ids), dtype=np.int64)
     while True:
         ru, rv = parent[u], parent[v]
@@ -316,18 +316,17 @@ def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFram
     convergence check.  Returns (id, component).
 
     Edge sets ≤ ``SMALL_GRAPH_EDGES`` go to the driver-side graph step
-    (``_components_driver``: one Arrow collect, numpy pointer jumping)
-    — identical result, none of the per-superstep job overhead that
-    dominates dimension-sized pair graphs.  The loop settles each
-    round's labels with the node count as the bound."""
-    # materialize once BEFORE the size probe: edges are typically an
-    # expensive pair-join output, and both the probe and whichever path
-    # wins would otherwise re-execute that plan (scalar-typed rows — the
-    # no-array-cache rule doesn't apply); the first count materializes
-    # the pin
-    edges = pin(edges.select("src", "dst"), eager=False)
-    if edges.count() <= SMALL_GRAPH_EDGES:
-        return _settled(_components_driver(edges), edges)
+    (``_components_driver`` over the ``collect_within`` probe's table:
+    numpy pointer jumping, no pin, no count) — identical result, none of
+    the per-superstep job overhead.  Above it the loop pins the edges
+    (null endpoints dropped, as on the driver) and settles each round
+    with the node count as the bound."""
+    edges = edges.select("src", "dst")
+    tbl = collect_within(edges, SMALL_GRAPH_EDGES)
+    if tbl is not None:
+        return _components_driver(edges, tbl)
+    # the capacity path: the edges' plan runs again, into a pin
+    edges = pin(edges.dropna(), eager=False)
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -439,16 +438,17 @@ def _settled(answer: DataFrame, *spent: DataFrame) -> DataFrame:
     return answer
 
 
-def _k_core_driver(sym: DataFrame, k: int, max_rounds: int) -> DataFrame:
+def _k_core_driver(sym: DataFrame, tbl, k: int, max_rounds: int) -> DataFrame:
     """``k_core``'s rounds on the driver, over ``_driver_graph``'s codes
-    of the canonical pair list ``sym`` (a, b): the same degree filter,
-    fixpoint test and ``max_rounds`` answer as the distributed loop.
+    of ``tbl``, the collected canonical pair list ``sym`` (a, b): the
+    same degree filter, fixpoint test and ``max_rounds`` answer as the
+    distributed loop.
     Each round is one ``np.bincount`` of the edges whose two endpoints
     are alive.  A node is kept, as in the loop's ``groupBy``, only
     while at least one edge survives at it."""
     import numpy as np
 
-    ids, u, v = _driver_graph(sym)
+    ids, u, v = _driver_graph(tbl)
     n_ids = len(ids)
 
     def degrees(alive):
@@ -501,22 +501,23 @@ def k_core(
     surviving nodes, where core_degree is the node's degree WITHIN the
     k-core.
 
-    The edge list is pinned once (``_pin.pin``) and counted.  Within
-    ``SMALL_GRAPH_EDGES`` the rounds run on the driver-side graph step
-    (``_k_core_driver``: one Arrow collect, numpy rounds, the same
-    answer).  Above it the count bounds the first round's survivors of
-    the distributed loop; each peel round is one
-    semi-join of the doubled list against the survivors plus one
-    neighbor count, settled by :func:`settle` with the previous round's
-    count as the bound (driver-sized survivor sets broadcast into the
-    next round).  Survivors carry their degree, so at the fixpoint the
-    last round's rows ARE the answer.  Every round removes the whole
-    sub-threshold shell: peeling converges in a handful of rounds.  If
-    ``max_rounds`` runs out first, the answer is the last survivor set
-    with its degrees within that set, unfiltered.  Pinned blocks do not
-    outlive the call: each survivor set is released
-    (``_pin.release``) once the next one is settled, and the edge pin
-    when the answer is; the answer keeps its own block.
+    One bounded Arrow collect (``_pin.collect_within``) fetches the
+    pair list: within ``SMALL_GRAPH_EDGES`` it feeds the driver-side
+    graph step (``_k_core_driver``: numpy rounds, the same answer, no
+    pin, no count).  Above it the pair list is pinned (``_pin.pin``)
+    and counted, the count bounding the first round's survivors of the
+    distributed loop; each peel round is one semi-join of the doubled
+    list against the survivors plus one neighbor count, settled by
+    :func:`settle` with the previous round's count as the bound
+    (driver-sized survivor sets broadcast into the next round).
+    Survivors carry their degree, so at the fixpoint the last round's
+    rows ARE the answer.  Every round removes the whole sub-threshold
+    shell: peeling converges in a handful of rounds.  If ``max_rounds``
+    runs out first, the answer is the last survivor set with its
+    degrees within that set, unfiltered.  Pinned blocks do not outlive
+    the call: each survivor set is released (``_pin.release``) once the
+    next one is settled, and the edge pin when the answer is; the
+    answer keeps its own block.
 
     ``canonical=True`` asserts the input is ALREADY canonical (each
     undirected edge exactly once, no self-loops, no parallel edges —
@@ -534,10 +535,11 @@ def k_core(
             .filter(F.col("a") != F.col("b"))
             .distinct()
         )
+    tbl = collect_within(sym, SMALL_GRAPH_EDGES)
+    if tbl is not None:
+        return _k_core_driver(sym, tbl, k, max_rounds)
     sym = pin(sym, eager=False)  # materialized by the count below
     m = sym.count()
-    if m <= SMALL_GRAPH_EDGES:
-        return _settled(_k_core_driver(sym, k, max_rounds), sym)
     und = sym.unionByName(
         sym.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -808,10 +810,8 @@ def cooccurrence_similarity(
         # BOUNDED probe, which is also the item list: a hint lying about
         # a 50M-item column must fall back without pulling the item set
         # (or anything item-sized) onto the driver
-        head = (
-            e.select("__i").distinct().limit(dense_items_threshold + 1).toArrow()
-        )
-        if head.num_rows <= dense_items_threshold:
+        head = collect_within(e.select("__i").distinct(), dense_items_threshold)
+        if head is not None:
             items = sorted(head.column(0).to_pylist())
             return _cooccurrence_dense(
                 e, k, items, e.schema["__i"].dataType

@@ -1869,21 +1869,26 @@ def q_trade_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     is reached in <= 2 on this graph and re-peeling a fixpoint is
     idempotent, asserted in tests/test_graph_algorithms.py).
 
-    Plan build runs the kernel: one count of the pair list (which also
-    pins it), then, the pair list being within the kernel's
-    ``SMALL_GRAPH_EDGES`` (587k pairs at sf0.1), one ``toArrow()``
-    collect of it and the degree filter and peel rounds in numpy on
-    the driver; the answer (~8k rows at sf0.1) is a local Arrow frame,
-    so the collect only scans those rows.  Five Spark jobs per call,
-    all in plan build (four to build, pin and count the pair list, one
-    Arrow collect), down from nine when the peel ran as Spark rounds;
-    perfbench ``graph_traversal`` (local[4] on a 4-core host, 20
-    interleaved pairs) went 1.14 → 0.82 s per pass, median.
+    Plan build runs the kernel: the pair list being within the kernel's
+    ``SMALL_GRAPH_EDGES`` (587k pairs at sf0.1), one bounded
+    ``toArrow()`` collect of it (``_pin.collect_within``, which is also
+    the size probe: no pin, no count) and the degree filter and peel
+    rounds in numpy on the driver; the answer (~8k rows at sf0.1) is a
+    local Arrow frame, so the collect only scans those rows.  Three
+    Spark jobs per call, all in plan build and all that one collect
+    (AQE runs its query stages as jobs), down from five with a lazy pin
+    and a two-job count before it, and nine when the peel ran as Spark
+    rounds (``tests/test_trade_keys.py`` holds the ceiling).  perfbench
+    ``graph_traversal`` (local[4] on a 4-core host, 10 interleaved
+    pairs, medians) went 1.17 → 0.92 s per pass without the pin and the
+    count.  Pinning the pair list lazily before the probe was slower
+    than the parent: build + collect 1.36 s against 1.19 s (and 1.06 s
+    for the probe alone), medians of 15 warm calls at sf0.1.
 
     The peel runs on :func:`_trade_keys`' long ids (the edge base
     every trade graph entry shares), and only the ~8k answer rows are
-    decoded to 'c'/'s' strings by :func:`_trade_id`: the pinned pair
-    list, the doubled list each round groups and semi-joins, and the
+    decoded to 'c'/'s' strings by :func:`_trade_id`: the pair list,
+    the doubled list each round groups and semi-joins, and the
     survivor sets all hold fixed-width keys instead of strings.  r14
     (local[4] on a 4-core host, sf0.1, 8 interleaved rounds, medians):
     1.69 s on string ids, 1.34 s on long ids, 1.17 s with the key-hash

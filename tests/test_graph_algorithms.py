@@ -534,38 +534,102 @@ def test_k_core_max_rounds_exhaustion_returns_unfiltered_degrees(spark):
     assert core0 == {"A": 2, "B": 2, "C": 2, "D": 1, "X": 3, "Y": 2, "Z": 2}
 
 
-def test_k_core_pins_only_through_pin_policy(spark, monkeypatch):
-    """Pin-policy guard: on a driver-sized graph, k_core materializes
-    only through ``_pin.pin`` — no direct localCheckpoint, which would
-    bypass the policy that is safe on a cluster."""
-    import sys
+_PEEL_EDGES = [
+    ("A", "B"), ("B", "C"), ("C", "D"), ("D", "E"),
+    ("X", "Y"), ("Y", "Z"), ("Z", "X"), ("A", "X"),
+]
 
-    from graphdb_for_drones_spark.operators import _pin
-    from graphdb_for_drones_spark.operators.graph_algorithms import k_core
 
-    e = edges_df(
-        spark,
-        [
-            ("A", "B"), ("B", "C"), ("C", "D"), ("D", "E"),
-            ("X", "Y"), ("Y", "Z"), ("Z", "X"), ("A", "X"),
-        ],
-    )
+def _local_checkpoints(monkeypatch, e):
+    """The list every later ``localCheckpoint`` call on a frame of
+    ``e``'s class appends to, whoever makes it (``_pin`` or not)."""
     cls = type(e)
     real = cls.localCheckpoint
-    bypass = []
+    calls = []
 
     def counting(self, *args, **kwargs):
-        f = sys._getframe(1)
-        while f is not None and f.f_code is not _pin.pin.__code__:
-            f = f.f_back
-        if f is None:
-            bypass.append(1)
+        calls.append(1)
         return real(self, *args, **kwargs)
 
     monkeypatch.setattr(cls, "localCheckpoint", counting)
+    return calls
+
+
+def test_k_core_pins_only_through_pin_policy(spark, monkeypatch):
+    """Pin-policy guard: on a driver-sized graph, k_core takes no pin
+    at all — no localCheckpoint through ``_pin`` or around it: the
+    bounded Arrow collect is both the size probe and the driver-side
+    step's input."""
+    from graphdb_for_drones_spark.operators.graph_algorithms import k_core
+
+    e = edges_df(spark, _PEEL_EDGES)
+    calls = _local_checkpoints(monkeypatch, e)
     core = {r.id: r.core_degree for r in k_core(e, k=2).collect()}
     assert core == {"X": 2, "Y": 2, "Z": 2}
-    assert bypass == []
+    assert calls == []
+
+
+def test_connected_components_takes_no_pin_within_the_bound(spark, monkeypatch):
+    """The same guard for components: within ``SMALL_GRAPH_EDGES`` no
+    localCheckpoint runs, through ``_pin`` or around it."""
+    e = edges_df(spark, _PEEL_EDGES)
+    calls = _local_checkpoints(monkeypatch, e)
+    comp = {r.id: r.component for r in connected_components(e).collect()}
+    assert comp == dict.fromkeys("ABCDEXYZ", "A")
+    assert calls == []
+
+
+# a triangle with a tail, plus a parallel edge, a self-loop and a
+# null-endpoint row
+_PROBE_EDGES = [
+    ("A", "B"), ("B", "C"), ("C", "A"), ("C", "D"),
+    ("B", "A"), ("D", "D"), (None, "E"),
+]
+
+
+def _probe_cases():
+    """kernel -> (rows the size probe reads, call, answer reader,
+    expected answer) on ``_PROBE_EDGES``."""
+    from graphdb_for_drones_spark.operators import graph_algorithms as ga
+
+    return {
+        # the canonical pairs A-B, B-C, A-C, C-D: the parallel edge, the
+        # self-loop and the null-endpoint row drop out before the probe
+        "k_core": (
+            4,
+            lambda e: ga.k_core(e, k=2),
+            lambda rows: {r.id: r.core_degree for r in rows},
+            {"A": 2, "B": 2, "C": 2},
+        ),
+        # every row; the null-endpoint one is dropped on either path
+        "components": (
+            7,
+            ga.connected_components,
+            lambda rows: {r.id: r.component for r in rows},
+            dict.fromkeys("ABCD", "A"),
+        ),
+    }
+
+
+@pytest.mark.parametrize("over", [0, 1])
+@pytest.mark.parametrize("kernel", ["k_core", "components"])
+def test_graph_step_probe_boundary(spark, monkeypatch, kernel, over):
+    """The size probe's boundary: an edge list of exactly
+    ``SMALL_GRAPH_EDGES`` probed rows takes the driver-side graph step
+    (no pin), one row more takes the distributed loop (its edge pin),
+    and both give the same answer."""
+    from graphdb_for_drones_spark.operators import graph_algorithms as ga
+
+    rows, call, read, expect = _probe_cases()[kernel]
+    monkeypatch.setattr(ga, "SMALL_GRAPH_EDGES", rows - over)
+    real_pin = ga.pin
+    pins = []
+    monkeypatch.setattr(
+        ga, "pin", lambda df, **kw: pins.append(1) or real_pin(df, **kw)
+    )
+    e = edges_df(spark, _PROBE_EDGES)
+    assert read(call(e).collect()) == expect
+    assert bool(pins) == bool(over)
 
 
 def _leak_graph(spark, n):

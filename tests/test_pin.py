@@ -7,7 +7,12 @@ from __future__ import annotations
 
 import pytest
 
-from graphdb_for_drones_spark.operators._pin import pin, pin_state, release
+from graphdb_for_drones_spark.operators._pin import (
+    collect_within,
+    pin,
+    pin_state,
+    release,
+)
 
 
 def test_pin_local_mode_checkpoints(spark):
@@ -117,3 +122,14 @@ def test_release_leaves_unpinned_and_local_frames_alone(spark, monkeypatch):
     assert _persisted(spark) == before
     assert sorted(r.id for r in unpinned.collect()) == list(range(5))
     assert sorted(r.id for r in local.collect()) == [1, 2]
+
+
+@pytest.mark.parametrize("rows", [0, 3, 4])
+def test_collect_within_is_the_bounded_probe(spark, rows):
+    # at most the limit (3): the rows, as one Arrow table; one more: None
+    tbl = collect_within(spark.range(rows), 3)
+    if rows > 3:
+        assert tbl is None
+    else:
+        assert tbl.column_names == ["id"]
+        assert sorted(tbl.column("id").to_pylist()) == list(range(rows))

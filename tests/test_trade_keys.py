@@ -2,9 +2,12 @@
 the decoded pairs are the string pairs the trade entries always used,
 the 40-core computed on long ids equals the one on strings, and the
 dedup runs after the exchange, not map-side.  The trade graph entries
-leave no pinned blocks behind."""
+leave no pinned blocks behind, and ``trade_kcore`` keeps under its
+Spark job ceiling."""
 
 from __future__ import annotations
+
+import threading
 
 import pytest
 from conftest import SF_DIR_ORACLE
@@ -96,3 +99,30 @@ def test_trade_entry_leaves_no_pinned_blocks(cat, entry):
     out = getattr(eq, f"q_{entry}")(spark, cat.sf_dir)
     assert persisted() - before == set()
     assert out.count() > 0
+
+
+# Spark jobs of a warm trade_kcore call, plan build and collect: all
+# three are the kernel's one bounded Arrow collect of the pair list (the
+# size probe and the driver step's input), whose query stages AQE runs
+# as jobs of their own; the answer is a local frame, so its collect runs
+# none.  A lazy pin and a count before that collect made it 5.
+TRADE_KCORE_JOBS = 3
+
+
+def test_trade_kcore_stays_under_its_job_ceiling(cat):
+    spark = cat.spark
+    eq.q_trade_kcore(spark, cat.sf_dir).collect()  # warm-up
+    group = "trade-kcore-job-ceiling"
+    answers = []
+
+    def call():
+        # the group is a local property of this thread only
+        spark.sparkContext.setJobGroup(group, group)
+        answers.append(eq.q_trade_kcore(spark, cat.sf_dir).collect())
+
+    th = threading.Thread(target=call)
+    th.start()
+    th.join(300)
+    assert not th.is_alive() and answers and answers[0]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= TRADE_KCORE_JOBS, sorted(jobs)
