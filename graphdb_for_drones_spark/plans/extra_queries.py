@@ -3642,18 +3642,21 @@ def q_event_funnel_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful trackers): drains the events table through the STREAMING
     frontier funnel (streaming/stateful.streaming_funnel — per-user
     state is exactly (completed-prefix length, last-step time), never an
-    event buffer) and rebuilds the funnel report from the FINAL
-    frontiers, gated against the IDENTICAL SQL oracle as the batch
-    `event_funnel` entry, so the frontier state machine's equivalence to
-    the batch first-reach recurrence is driver-attested rather than
-    pytest-only.
+    event buffer, kept in 64-id user blocks: one Python call per block,
+    24 for the 1,500 users at sf0.1) and rebuilds the funnel report from
+    the FINAL frontiers, gated against the IDENTICAL SQL oracle as the
+    batch `event_funnel` entry, so the frontier state machine's
+    equivalence to the batch first-reach recurrence is driver-attested
+    rather than pytest-only.
 
     Event times feed the tracker as unix MICROS: the oracle compares raw
     timestamps (microsecond precision in the testdata), so a
     millisecond truncation could chain two same-ms events differently.
     The availableNow drain lands the staged file(s) in one micro-batch
     (≤1000 files), inside which the tracker sorts by time — the ordered
-    -ingest contract under which stream == batch holds exactly.
+    -ingest contract under which stream == batch holds exactly.  Events
+    of other types are dropped before the shuffle: they never move a
+    frontier (2 of 5 types, 40% of the rows at sf0.1).
 
     Report shape: each user's final frontier explodes into one row per
     completed stage, so n_users(k) = COUNT(frontier ≥ k+1) is one
@@ -3669,13 +3672,20 @@ def q_event_funnel_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("user_id").alias("user"),
             F.unix_micros(_stream_ts(stream)).alias("ms"),
             F.col("event_type").alias("step"),
-        ).filter(F.col("user").isNotNull() & F.col("ms").isNotNull())
-        return streaming_funnel(events.groupBy("user"), steps)
+        ).filter(
+            F.col("user").isNotNull()
+            & F.col("ms").isNotNull()
+            & F.col("step").isin(*steps)
+        )
+        return streaming_funnel(events, steps)
 
     # r13: measured with input-derived state partitions (the KS/W1
-    # drains' win) — 2.31 s @32 parts vs 4.16 s @1 vs 2.66 s @8: the
-    # applyInPandasWithState tracker is per-user PYTHON work that wants
-    # the cores, so the session partitioning stays
+    # drains' win) — 2.31 s @32 parts vs 4.16 s @1 vs 2.66 s @8, when the
+    # tracker ran one Python call per user.  Re-measured with user blocks
+    # (24 calls at sf0.1; local[4], 4 shuffle partitions, build +
+    # collect medians of 6 calls in 3 alternating processes): sized
+    # 1.69 / 1.47 / 1.55 s vs session 1.75 / 1.45 / 1.73 s, inside the
+    # runs' spread, so the session partitioning stays
     updates = drain(spark, sf_dir, "events", frontiers, output_mode="update")
     # memory sink keeps every frontier update; stage only advances, so
     # latest-wins == MAX per user
@@ -3724,9 +3734,9 @@ def q_user_retention_cohorts_streamed(
     `event_funnel_streamed` pattern applied to the second stateful
     tracker): drains events through streaming/stateful.
     streaming_retention — per-user state is exactly (cohort period,
-    emitted-offset bitmask), two longs — and rebuilds the weekly
-    retention matrix from the exactly-once (cohort, offset, user)
-    emissions, gated against the batch `user_retention_cohorts` oracle
+    emitted-offset bitmask), two longs plus the id, kept in 64-id user
+    blocks — and rebuilds the weekly retention matrix from the
+    exactly-once (cohort, offset, user) emissions, gated against the batch `user_retention_cohorts` oracle
     VERBATIM.  The testdata spans 4 weekly periods, far inside the
     64-offset bitmask horizon, and the availableNow drain lands all
     files in one micro-batch — the ordered-ingest contract under which
@@ -3744,13 +3754,13 @@ def q_user_retention_cohorts_streamed(
             F.col("user_id").alias("user"),
             F.unix_millis(_stream_ts(stream)).alias("ms"),
         ).filter(F.col("user").isNotNull() & F.col("ms").isNotNull())
-        return streaming_retention(
-            events.groupBy("user"), period_ms=604800000
-        )
+        return streaming_retention(events, period_ms=604800000)
 
     # r13: measured with input-derived state partitions (the KS/W1
-    # drains' win) — 1.92 s @32 parts vs 3.57 s @1 vs 2.20 s @8: the
-    # tracker is per-user Python work; session partitioning stays
+    # drains' win) — 1.92 s @32 parts vs 3.57 s @1 vs 2.20 s @8, with one
+    # Python call per user.  With user blocks (as for the funnel): sized
+    # 1.30 / 1.14 / 1.24 s vs session 1.38 / 1.17 / 1.32 s, inside the
+    # runs' spread; session partitioning stays
     cells = (
         drain(spark, sf_dir, "events", emissions, output_mode="append")
         .groupBy("cohort_period", "period_offset")

@@ -196,7 +196,7 @@ def _funnel_drain(spark, tmp_path, batches):
         .json(str(sdir))
     )
     rows = _drain(
-        streaming_funnel(stream.groupBy("user"), FUNNEL_STEPS),
+        streaming_funnel(stream, FUNNEL_STEPS),
         tmp_path,
         "update",
     )
@@ -309,7 +309,7 @@ def test_streaming_retention_equals_batch(spark, tmp_path):
         .json(str(sdir))
     )
     rows = _drain(
-        streaming_retention(stream.groupBy("user"), WK), tmp_path, "append"
+        streaming_retention(stream, WK), tmp_path, "append"
     )
     assert len(rows) == len({(r.user, r.period_offset) for r in rows})
     stream_counts = {}
@@ -355,6 +355,246 @@ def test_streaming_retention_cohort_is_pinned_by_first_batch(spark, tmp_path):
         .json(str(sdir))
     )
     rows = _drain(
-        streaming_retention(stream.groupBy("user"), WK), tmp_path, "append"
+        streaming_retention(stream, WK), tmp_path, "append"
     )
     assert {(r.cohort_period, r.period_offset) for r in rows} == {(1, 0)}
+
+
+def _per_user_funnel(batches, steps):
+    """The reference: the per-user tracker's loop, one call per user per
+    batch, returning every (user, stage, t_stage) it would emit."""
+    front, emitted = {}, []
+    for rows in batches:
+        by_user = {}
+        for r in rows:
+            by_user.setdefault(r["user"], []).append(r)
+        for user, evs in by_user.items():
+            stage, t = front.get(user, (0, None))
+            changed = False
+            for e in sorted(evs, key=lambda e: e["ms"]):
+                if stage >= len(steps):
+                    break
+                if e["step"] == steps[stage] and (stage == 0 or e["ms"] > t):
+                    stage, t, changed = stage + 1, e["ms"], True
+            if changed:
+                front[user] = (stage, t)
+                emitted.append((user, stage, t))
+    return emitted
+
+
+def _random_funnel_batches(seed, n_batches=4, rows_per_batch=300):
+    """Ordered multi-batch events over dense, sparse and negative ids and
+    both sides of a block boundary (63, 64), with times from a narrow
+    range so same-instant ties are common.  User 900 completes the funnel
+    in the first batch and user 901 views and clicks at one instant
+    there; both keep sending events afterwards."""
+    import random
+
+    rng = random.Random(seed)
+    users = (
+        list(range(130))
+        + [-1, -64, -65, -200]
+        + [u * 2**20 + 7 for u in range(20)]
+    )
+    first = [
+        {"user": u, "ms": t, "step": s}
+        for u, t, s in [
+            (900, 1, "view"), (900, 2, "click"), (900, 3, "purchase"),
+            (901, 1, "view"), (901, 1, "click"),
+            (63, 5, "view"), (64, 5, "view"), (-1, 5, "view"),
+            (-65, 5, "view"), (7, 5, "view"),
+        ]
+    ]
+    kinds = FUNNEL_STEPS + ("home", "cart")
+    return [
+        (first if b == 0 else [])
+        + [
+            {
+                "user": rng.choice(users + ([900, 901] if b else [])),
+                "ms": 100 * b + rng.randrange(40),
+                "step": rng.choice(kinds),
+            }
+            for _ in range(rows_per_batch)
+        ]
+        for b in range(n_batches)
+    ]
+
+
+@pytest.mark.slow
+def test_streaming_funnel_blocks_match_per_user_reference(spark, tmp_path):
+    """The block tracker emits exactly the per-user loop's rows, batch by
+    batch, on seeded random ordered ingest."""
+    batches = _random_funnel_batches(seed=16)
+    from graphdb_for_drones_spark.streaming.stateful import streaming_funnel
+
+    sdir = _write_batches(tmp_path, batches)
+    stream = (
+        spark.readStream.schema(FUNNEL_IN_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(sdir))
+    )
+    rows = _drain(streaming_funnel(stream, FUNNEL_STEPS), tmp_path, "update")
+    want = _per_user_funnel(batches, FUNNEL_STEPS)
+    assert sorted((r.user, r.stage, r.t_stage) for r in rows) == sorted(want)
+    assert {(900, 3, 3), (901, 1, 1)} <= set(want)
+    assert {63, 64, -1, -65, 7} <= {u for u, _, _ in want}
+
+
+def test_block_steps_match_per_user_loops():
+    """Both trackers' numpy block steps against the per-user loops, over
+    many seeded batches (no Spark): ids on both sides of block and sign
+    boundaries, ties, non-step events, a mask that reaches bit 63."""
+    import random
+
+    import numpy as np
+    import pandas as pd
+
+    from graphdb_for_drones_spark.streaming.stateful import (
+        BLOCK_BITS,
+        _advance_funnel,
+        _advance_retention,
+    )
+
+    def run_blocks(state, rows, advance):
+        out = []
+        for blk in {r[0] >> BLOCK_BITS for r in rows}:
+            cols = [np.array(c, np.int64) for c in zip(
+                *[r for r in rows if r[0] >> BLOCK_BITS == blk]
+            )]
+            got = advance(state.get(blk, np.empty((3, 0), np.int64)), *cols)
+            if got is None:
+                continue
+            kept, emitted = got
+            packed = np.stack(kept).astype("<i8").tobytes()
+            state[blk] = np.frombuffer(packed, "<i8").reshape(3, -1)
+            assert (state[blk][0] >> BLOCK_BITS == blk).all()
+            assert (np.diff(state[blk][0]) > 0).all()
+            out += [tuple(int(v) for v in e) for e in zip(*emitted)]
+        return out
+
+    index = pd.Index(list(FUNNEL_STEPS))
+    want = index.get_indexer(list(FUNNEL_STEPS))
+    kinds = list(FUNNEL_STEPS) + ["home", None]
+    ids = [-65, -64, -1, 0, 1, 62, 63, 64, 65, 127, 128, 7 * 2**20 + 7]
+    for seed in range(200):
+        rng = random.Random(seed)
+        users = rng.sample(ids, 6)
+        state, batches, got = {}, [], []
+        for b in range(4):
+            rows = [
+                (rng.choice(users), 10 * b + rng.randrange(12), rng.choice(kinds))
+                for _ in range(rng.randrange(40))
+            ]
+            batches.append([{"user": u, "ms": t, "step": s} for u, t, s in rows])
+            got += run_blocks(
+                state,
+                [(u, t, index.get_indexer([s])[0]) for u, t, s in rows],
+                lambda st, u, t, c: _advance_funnel(st, u, t, c, want),
+            )
+        assert sorted(got) == sorted(_per_user_funnel(batches, FUNNEL_STEPS))
+
+    for seed in range(200):
+        rng = random.Random(seed)
+        users, horizon = rng.sample(ids, 4), rng.choice([1, 5, 64])
+        state, seen, got, ref = {}, {}, [], []
+        for b in range(5):
+            rows = [
+                (rng.choice(users), rng.randrange(-2, 70))
+                for _ in range(rng.randrange(1, 30))
+            ]
+            got += run_blocks(
+                state, rows,
+                lambda st, u, p: _advance_retention(st, u, p, horizon),
+            )
+            periods = {}
+            for u, p in rows:
+                periods.setdefault(u, set()).add(p)
+            for u, ps in periods.items():  # the per-user tracker's loop
+                cohort, emitted = seen.get(u, (min(ps), 0))
+                for off in sorted(p - cohort for p in ps):
+                    if 0 <= off < horizon and not (emitted >> off) & 1:
+                        emitted |= 1 << off
+                        ref.append((cohort, off, u))
+                seen[u] = (cohort, emitted)
+        assert sorted(got) == sorted(ref)
+
+
+@pytest.mark.slow
+def test_streaming_funnel_state_rows_are_packed_blocks(spark, tmp_path):
+    """Read the checkpoint's state back: one row per user block, whose
+    packed bytes decode as little-endian int64 (user, stage, t) columns
+    of at most 64 users of that block, ids sorted, every stage >= 1."""
+    import numpy as np
+
+    from graphdb_for_drones_spark.streaming.stateful import (
+        BLOCK_BITS,
+        streaming_funnel,
+    )
+
+    batches = _random_funnel_batches(seed=7, n_batches=2)
+    sdir = _write_batches(tmp_path, batches)
+    stream = (
+        spark.readStream.schema(FUNNEL_IN_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(sdir))
+    )
+    _drain(streaming_funnel(stream, FUNNEL_STEPS), tmp_path, "update")
+    state = (
+        spark.read.format("statestore")
+        .load(str(tmp_path / "ckpt"))
+        .select("key.user_block", "value.groupState.packed")
+        .collect()
+    )
+    front = {}
+    for u, s, t in _per_user_funnel(batches, FUNNEL_STEPS):
+        front[u] = (s, t)
+    assert len(state) == len({u >> BLOCK_BITS for u in front})
+    decoded = {}
+    for block, packed in state:
+        assert len(packed) % 24 == 0
+        cols = np.frombuffer(packed, "<i8").reshape(3, -1)
+        users = cols[0].tolist()
+        assert 0 < len(users) <= 2**BLOCK_BITS
+        assert users == sorted(users)
+        assert all(u >> BLOCK_BITS == block for u in users)
+        assert (cols[1] >= 1).all()
+        decoded.update(
+            {u: (int(s), int(t)) for u, s, t in zip(users, cols[1], cols[2])}
+        )
+    assert decoded == front
+
+
+@pytest.mark.slow
+def test_streaming_retention_keeps_offset_63(spark, tmp_path):
+    """horizon=64 means offset 63 is the mask's sign bit: it must survive
+    the state round trip, so a repeat of week 63 is not re-emitted and the
+    next batch runs (a long bitmask that overflowed came back null)."""
+    from graphdb_for_drones_spark.streaming.stateful import (
+        streaming_retention,
+    )
+
+    batches = [
+        [{"user": 1, "ms": 0}],
+        [{"user": 1, "ms": 63 * WK}],
+        [{"user": 1, "ms": 63 * WK + 1}, {"user": 1, "ms": 5 * WK}],
+    ]
+    sdir = _write_batches(tmp_path, batches)
+    stream = (
+        spark.readStream.schema(RETENTION_IN_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(sdir))
+    )
+    q = (
+        streaming_retention(stream, WK, horizon=64)
+        .writeStream.format("memory")
+        .queryName("sink_offset_63")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    rows = spark.sql("SELECT * FROM sink_offset_63").collect()
+    got = [(r.cohort_period, r.period_offset) for r in rows if r.user == 1]
+    assert sorted(got) == [(0, 0), (0, 5), (0, 63)]
